@@ -1,0 +1,1 @@
+"""Extraction benchmark package; the entry point is ``perfbench/run.py``."""
