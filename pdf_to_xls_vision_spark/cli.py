@@ -28,6 +28,16 @@ import shutil
 import sys
 
 
+def _positive_int(value: str) -> int:
+    """argparse type for counts: a bucket count, commit-group size or
+    partition width below 1 must stop the job before it starts, not
+    plan no commit and report success."""
+    n = int(value)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="pdf-to-xls-vision-spark",
@@ -43,14 +53,16 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--partitions",
-        type=int,
+        type=_positive_int,
         default=None,
         help="page-relation repartition width (default: 2x parallelism)",
     )
-    p.add_argument("--buckets", type=int, default=64, help="commit buckets")
+    p.add_argument(
+        "--buckets", type=_positive_int, default=64, help="commit buckets"
+    )
     p.add_argument(
         "--commit-group-size",
-        type=int,
+        type=_positive_int,
         default=None,
         help="buckets per atomic commit (default: all pending in one)",
     )

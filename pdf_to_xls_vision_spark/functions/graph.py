@@ -58,8 +58,8 @@ def pagerank_fixed(
     derivation re-executes per lineage path (AQE exchange reuse
     recovers only the identical-exchange subtrees). At deployment
     scale do what GraphX does — cache the per-iteration constants:
-    pass ``persisted_sink`` (the repo's leak-guard pattern,
-    ``operators/pipeline.py``) and both are persisted MEMORY_AND_DISK
+    pass ``persisted_sink`` (the repo's leak-guard pattern) and both
+    are persisted MEMORY_AND_DISK
     and appended for the caller to unpersist after materializing. The
     registered query takes this path (round 4's audit measured the
     recompute form at 104 exchanges / 28 scans); bench.py rebuilds per

@@ -15,7 +15,9 @@ Output is a uniform "extraction row" relation::
 
 with one sentinel row per page (``is_table=false``) so page-level
 metrics (pages_parsed, rotation_corrections) survive pages that yield
-no table, plus one row per extracted table.
+no table, plus one row per extracted table. A text page's sentinel also
+carries the page's source ``media_ref`` and validation numbers, which is
+all the merge needs to re-run that page through the vision stage (R2).
 """
 
 from __future__ import annotations
@@ -118,22 +120,25 @@ def _page_text(kind: str, text: str) -> str:
     return " ".join(w.get("t", "") for w in words)
 
 
-def _sentinel(doc_id: str, page: int, rot: int, page_numbers: list[str]) -> list:
-    return [doc_id, page, 0, "", None, [], rot, False, page_numbers]
+def _sentinel(
+    doc_id: str, page: int, rot: int, page_numbers: list[str], media_ref: str = ""
+) -> list:
+    return [doc_id, page, 0, media_ref, None, [], rot, False, page_numbers]
 
 
 def extract_text_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Text-path layout parse per page (table_extraction.py:402-474).
 
     Quality heuristics run per table here (T4); the document-level
-    retry decision is a later aggregate. Non-text spans inside a
+    retry decision is made in the doc-keyed merge. Non-text spans inside a
     text-routed document yield no tables — a scanned page gives
     pdfplumber nothing, matching reference behavior.
     """
     for batch in batches:
         out = []
-        for doc_id, page, kind, text in zip(
-            batch["doc_id"], batch["page"], batch["kind"], batch["text"]
+        for doc_id, page, kind, text, media_ref in zip(
+            batch["doc_id"], batch["page"], batch["kind"], batch["text"],
+            batch["media_ref"],
         ):
             page = int(page)
             # decode the payload ONCE per page; the word list feeds both
@@ -146,7 +151,9 @@ def extract_text_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
                 except Exception:
                     words = []
             page_text = " ".join(w.get("t", "") for w in words)
-            out.append(_sentinel(doc_id, page, 0, extract_numbers(page_text)))
+            out.append(
+                _sentinel(doc_id, page, 0, extract_numbers(page_text), media_ref)
+            )
             if not words:
                 continue
             # list-form kernels: the grid is already str|None cells, so

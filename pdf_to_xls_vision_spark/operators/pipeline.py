@@ -4,16 +4,20 @@ Shape (SURVEY.md §4.3)::
 
     scan(docs)
       -> route = classifier exprs (no UDF)
-      -> posexplode(spans) -> pages                 (pages are the work unit)
+      -> explode(spans) -> pages                    (pages are the work unit)
       -> repartition(pages)                         (skew leveler: round-robin)
       -> [route=text]   mapInPandas(layout parse)   T1-T4, Q1-Q6
-      -> doc-level quality aggregate -> retry ids   R2 (converter.py:117-132)
-      -> [route=vision | retried] mapInPandas(vision stage)  V1-V7, C1-C3
+         [route=vision] mapInPandas(vision stage)   V1-V7, C1-C3
       -> unionByName
-      -> groupBy(doc_id).applyInPandas(merge + serialize)    M1 + A1/A3 + W1
+      -> repartition(doc_id) + sortWithinPartitions(doc_id)
+      -> mapInPandas(R2 decision, inline vision retry, merge + serialize)
+                                    R2 (converter.py:117-132), M1, A1/A3, W1
+      -> from_json(spans_json)
 
-The merge and span serialization run inside the same per-document group
-the final shuffle already created, so M1 costs no extra exchange.
+The R2 retry decision, the retry itself and the merge all run inside
+the per-document group the one doc-keyed shuffle already created, so
+each text page is parsed once per plan execution and R2/M1 cost no
+extra exchange, aggregate or join.
 """
 
 from __future__ import annotations
@@ -22,7 +26,6 @@ import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 import pandas as pd
 
@@ -63,7 +66,7 @@ _RAW_RESULT_SCHEMA = RESULT_SCHEMA.replace(
 )
 
 
-def _finish_result(raw: DataFrame, keep: list | None = None) -> DataFrame:
+def _finish_result(raw: DataFrame) -> DataFrame:
     """JVM-side restore of the public result schema from the raw merge
     output: parse spans_json into the typed span array (Jackson parse
     inside whole-stage codegen) and re-project the column order.
@@ -87,7 +90,6 @@ def _finish_result(raw: DataFrame, keep: list | None = None) -> DataFrame:
         "doc_id",
         F.from_json("spans_json", _SPANS_TYPE).alias("spans"),
         *scalars,
-        *(keep or []),
     )
 
 
@@ -147,21 +149,29 @@ def _doc_validation(page_number_lists, grids) -> dict:
 #: operators/extract.EXTRACTION_SCHEMA for the measured rationale)
 _MERGE_COLS = [
     "doc_id", "page", "table_id", "media_ref", "grid",
-    "rotation_corrected", "is_table", "page_numbers", "quality_retried",
+    "rotation_corrected", "is_table", "page_numbers",
 ]
 
 
-def _merge_doc_arrays(cols: dict, s: int, e: int) -> dict:
+def _merge_doc_arrays(
+    cols: dict,
+    s: int,
+    e: int,
+    quality_retried: int = 0,
+    page_numbers: list | None = None,
+) -> dict:
     """Per-document reduce over column-array slices [s:e): rebuild
     table records, M1-merge, serialize the ordered span sequence, and
-    compute per-doc metrics."""
+    compute per-doc metrics. ``page_numbers`` overrides the sentinels'
+    validation numbers (one list per page)."""
     is_table = cols["is_table"]
-    quality_retried = int(max(cols["quality_retried"][i] for i in range(s, e)))
     sent_idx = [i for i in range(s, e) if not is_table[i]]
     pages_parsed = len(sent_idx)
     rotation_corrections = int(
         sum(cols["rotation_corrected"][i] for i in sent_idx)
     )
+    if page_numbers is None:
+        page_numbers = [cols["page_numbers"][i] for i in sent_idx]
 
     tbl_idx = sorted(
         (i for i in range(s, e) if is_table[i]),
@@ -184,7 +194,7 @@ def _merge_doc_arrays(cols: dict, s: int, e: int) -> dict:
     rollups = sum(grid_rollup_rows(r.header, r.rows) for r in merged)
     notes = sum(len(grid_notes(r.header, r.rows)) for r in merged)
     validation = _doc_validation(
-        [list(cols["page_numbers"][i]) for i in sent_idx],
+        [list(p) for p in page_numbers],
         [(r.header, r.rows) for r in merged],
     )
     return {
@@ -202,53 +212,58 @@ def _merge_doc_arrays(cols: dict, s: int, e: int) -> dict:
     }
 
 
-#: dummy result row emitted for a document the merge kernel decides to
-#: send to the retry pass (single_parse strategy); every field but
-#: doc_id/needs_retry is discarded by the downstream filter
-_FLAG_ROW = {
-    "spans_json": "",
-    "n_tables": 0,
-    "pages_parsed": 0,
-    "rotation_corrections": 0,
-    "quality_retried": 0,
-    "rollup_rows": 0,
-    "n_notes": 0,
-    "validation_status": "",
-    "pdf_numbers": 0,
-    "table_numbers": 0,
-    "matched_numbers": 0,
-    "accuracy_pct": 0.0,
-    "n_missing": 0,
-    "n_extra": 0,
-    "needs_retry": 1,
-}
-
-#: extra columns the fold-retry merge kernel needs beyond _MERGE_COLS
-_FOLD_COLS = ["is_vision", "has_issue"]
+def _needs_retry(cols: dict, s: int, e: int) -> bool:
+    """R2 (converter.py:117-132) from the doc's own rows: a text-routed
+    document goes back through vision when any table has a quality
+    issue or when it yields no table at all."""
+    if cols["is_vision"][s]:
+        return False
+    return bool(cols["has_issue"][s:e].any()) or not cols["is_table"][s:e].any()
 
 
-def _fold_merge_doc(cols: dict, s: int, e: int) -> dict:
-    """Single-parse retry fold: decide R2 (converter.py:117-132) from
-    the doc's own rows — any table-quality issue, or zero tables on a
-    text-routed doc — and short-circuit to a flag row instead of
-    merging; the retried doc's real result comes from the vision retry
-    pass."""
-    if not cols["is_vision"][s]:
-        has_table = False
-        for i in range(s, e):
-            if cols["has_issue"][i]:
-                return {**_FLAG_ROW, "doc_id": cols["doc_id"][s]}
-            has_table = has_table or cols["is_table"][i]
-        if not has_table:
-            return {**_FLAG_ROW, "doc_id": cols["doc_id"][s]}
-    d = _merge_doc_arrays(cols, s, e)
-    d["needs_retry"] = 0
-    return d
+def _retry_doc(cols: dict, s: int, e: int, vision_extractor) -> dict:
+    """Re-extract a retried document's text pages through the vision
+    stage, as one batch, and merge that output instead of the parse's.
+
+    Each text page's sentinel brings the page's source ``media_ref``
+    (the vision stage's input) and its validation numbers. The page
+    text itself does not cross the exchange: the vision stage would
+    derive the same numbers from the same word tokens, so the
+    sentinels' ``page_numbers`` are used as they are."""
+    sent_idx = [i for i in range(s, e) if not cols["is_table"][i]]
+    batch = pd.DataFrame(
+        {
+            "doc_id": cols["doc_id"][sent_idx],
+            "route": "text",
+            "page": cols["page"][sent_idx],
+            "kind": None,
+            "text": None,
+            "media_ref": cols["media_ref"][sent_idx],
+        }
+    )
+    out = pd.concat(vision_extractor(iter([batch])), ignore_index=True)
+    return _merge_doc_arrays(
+        {c: out[c].to_numpy() for c in _MERGE_COLS},
+        0,
+        len(out),
+        quality_retried=1,
+        page_numbers=[cols["page_numbers"][i] for i in sent_idx],
+    )
 
 
-def _merge_frame(
-    b: pd.DataFrame, kernel=_merge_doc_arrays, extra_cols: list | None = None
-) -> pd.DataFrame:
+def _make_merge_kernel(vision_extractor):
+    """The per-document merge kernel: R2 decision, inline vision retry
+    for the documents that need it, then merge + serialize."""
+
+    def merge_doc(cols: dict, s: int, e: int) -> dict:
+        if _needs_retry(cols, s, e):
+            return _retry_doc(cols, s, e, vision_extractor)
+        return _merge_doc_arrays(cols, s, e)
+
+    return merge_doc
+
+
+def _merge_frame(b: pd.DataFrame, kernel) -> pd.DataFrame:
     """Merge every complete document group in one pandas frame whose
     rows are contiguous by doc_id."""
     import numpy as np
@@ -257,13 +272,13 @@ def _merge_frame(
     bounds = np.flatnonzero(ids[1:] != ids[:-1]) + 1
     starts = [0, *bounds.tolist()]
     ends = [*bounds.tolist(), len(ids)]
-    cols = {c: b[c].to_numpy() for c in _MERGE_COLS + (extra_cols or [])}
+    cols = {c: b[c].to_numpy() for c in b.columns}
     return pd.DataFrame(
         [kernel(cols, s, e) for s, e in zip(starts, ends)]
     )
 
 
-def _make_merge_partition(kernel=_merge_doc_arrays, extra_cols=None):
+def _make_merge_partition(kernel):
     """Build the per-partition merge driver: rows arrive
     hash-partitioned by doc_id and sorted within the partition, so
     each document is a contiguous run — but Arrow batches don't
@@ -290,14 +305,11 @@ def _make_merge_partition(kernel=_merge_doc_arrays, extra_cols=None):
             pending = b.iloc[start_last:]
             body = b.iloc[:start_last]
             if len(body):
-                yield _merge_frame(body, kernel, extra_cols)
+                yield _merge_frame(body, kernel)
         if pending is not None and len(pending):
-            yield _merge_frame(pending, kernel, extra_cols)
+            yield _merge_frame(pending, kernel)
 
     return _merge_partition
-
-
-_merge_partition = _make_merge_partition()
 
 
 def explode_pages(docs: DataFrame, force_vision: bool = False) -> DataFrame:
@@ -325,13 +337,17 @@ def run_extraction(
     force_vision: bool = False,
     backend: VisionBackend | None = None,
     page_partitions: int | None = None,
-    persist_pages: bool = False,
-    persisted_sink: list | None = None,
-    merge_strategy: str = "map_batches",
-    retry_strategy: str = "reaggregate",
 ) -> DataFrame:
     """The full extraction pipeline; returns the result relation
     ``(doc_id, spans, …metrics)``.
+
+    One linear DAG: pages are parsed (text route) or run through the
+    vision stage (vision route), the two outputs meet in one doc-keyed
+    exchange, and the merge UDF makes the R2 retry decision from each
+    document's own rows. A retried document's text pages run through
+    the vision stage inside its merge task, once. So every UDF runs
+    once per input row per plan execution, with no aggregate, join or
+    cache on the side.
 
     **Why every page shuffles** (SURVEY.md §4.2 — AQE cannot see UDF
     compute skew, so the leveling is ours): the round-robin
@@ -344,233 +360,56 @@ def run_extraction(
     skew_threshold``) and parsed small docs in their scan partitions
     was measured 25-50% SLOWER on the skewed corpus: the no-shuffle
     branch collapsed onto the input's few byte-balanced splits and ran
-    the parse near-serial. At the 100 TB design point the same holds —
-    the page shuffle is one pass over the corpus and buys a
-    fully-level, core-sized work distribution for the expensive stage;
-    revisit only if the input is pre-bucketed into core-sized files.
+    the parse near-serial.
 
-    ``persist_pages``: the retry pass (R2) re-reads the text pages of
-    low-quality docs, and the parse output feeds both the retry
-    aggregate and the kept branch — persisting either
-    (MEMORY_AND_DISK) trades recompute for cache serialization.
-    Through round 3 (slower parse kernels) persisting won; after the
-    round-4 kernel vectorization the A/B FLIPPED — on the 8000-doc
-    corpus persist costs MORE executor time than the recompute it
-    saves (interleaved min-of-2 runs: no-persist 244/269 core-s vs
-    persist 411/302, wall 12.2/13.5s vs 18.0/13.6s), so the default
-    is now False. This is also the 100 TB-right default: recomputing
-    from the columnar scan beats caching the corpus. Pass True (or
-    "text_ext_only") to restore caching for retry-heavy workloads
-    with expensive parse backends.
+    **The skew trade-off of the inline retry**: the vision pages of a
+    retried document are not levelled — they run in the one merge task
+    that owns the document. Retried documents are few, so this costs
+    less than the second pass over every text page that a separate
+    retry decision needs. Measured with one 800-page retried document
+    in a 220-document corpus at local[4]: the longest merge task went
+    from 0.7-1.0 s to 1.2-1.7 s while the job's wall time fell. A
+    corpus dominated by long retried documents would want those pages
+    salted back through the page shuffle.
 
-    ``persisted_sink``: callers that invoke this repeatedly (the
-    checkpointed commit loop, streaming micro-batches) pass a list to
-    receive the persisted DataFrames and MUST unpersist them after the
-    result is materialized — disk-backed cached blocks are not
-    LRU-evicted, so leaking one per micro-batch grows local disk
-    without bound.
-
-    ``retry_strategy``: how the R2 doc-level retry decision
-    (converter.py:117-132) is wired into the DAG.
-
-    - ``"reaggregate"`` (default): broadcast-anti/semi joins against a
-      separately aggregated retry-id relation; the anti-join's build
-      side re-executes the text parse (one extra full parse pass —
-      accumulator-verified 2x parse-input pages) unless
-      ``persist_pages`` caches it, but NOTHING is materialized.
-    - ``"single_parse"``: the retry decision is folded into the merge
-      kernel itself (the doc's rows are already co-located there), so
-      parse, vision, and merge each execute exactly once; the
-      doc-level merge output is persisted (MEMORY_AND_DISK) and fans
-      out to the kept-results filter and the retry-id filter.
-      Repeated callers (checkpoint loop, streaming) must pass
-      ``persisted_sink`` and unpersist after materializing.
-
-    Why recompute is the default (quiet-window measurements,
-    local[32]): at 8k docs single_parse wins narrowly (311 vs 355
-    exec core-s); at 32k docs it LOSES ~2x (1,957 vs 1,080) with
-    high variance (1,726-3,676 across runs, 500-1,000 GC-s) — the
-    cache fill + two cache scans of the span-payload result cost more
-    than the one parse pass they save, and the typed-span columnar
-    build allocation-storms the heap regardless of placement. Plain
-    reaggregate streams every stage with ~15 GC-s total and scales
-    linearly 8k->32k. Same lesson as ``persist_pages``: for
-    page/span-sized payloads, recompute from the scan beats any
-    materialization. Prefer single_parse only for small bounded
-    batches (hundreds of docs) where the cache is trivially small and
-    the saved parse pass is the larger term.
+    **Why the merge partitions explicitly**: ``repartition(n, doc_id)``
+    + in-partition sort + ``mapInPandas`` with cross-batch group
+    stitching keeps the Python-bound merge at full parallelism. AQE's
+    byte-based coalescing shrank a ``groupBy().applyInPandas`` exchange
+    to 23 partitions on the 8000-doc corpus (33 MB looks tiny to AQE,
+    but the stage cost is Python compute, not bytes).
     """
-    if merge_strategy not in ("apply_in_pandas", "map_batches"):
-        raise ValueError(
-            f"merge_strategy must be 'apply_in_pandas' or 'map_batches', "
-            f"got {merge_strategy!r}"
-        )
-    if retry_strategy not in ("single_parse", "reaggregate"):
-        raise ValueError(
-            f"retry_strategy must be 'single_parse' or 'reaggregate', "
-            f"got {retry_strategy!r}"
-        )
+    if page_partitions is not None and page_partitions < 1:
+        raise ValueError(f"page_partitions must be >= 1, got {page_partitions}")
     spark = docs.sparkSession
     n_parts = page_partitions or spark.sparkContext.defaultParallelism * 2
+    # resolved through this module's names at plan-build time, so a
+    # caller can wrap either stage here (probes, tests)
     vision_extractor = make_vision_extractor(backend)
-
-    persist_page_rel = persist_pages is True
-    persist_text_ext = bool(persist_pages)  # True or "text_ext_only"
-
     pages = explode_pages(docs, force_vision).repartition(n_parts)
-    if persist_page_rel:
-        pages = pages.persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_sink is not None:
-            persisted_sink.append(pages)
 
-    text_pages = pages.filter(F.col("route") == "text")
-    vision_pages = pages.filter(F.col("route") == "vision")
-
-    text_ext = text_pages.mapInPandas(extract_text_pages, EXTRACTION_SCHEMA)
-    if persist_text_ext:
-        # the parse output feeds BOTH the retry aggregate and the kept
-        # branch — persisting it halves the layout-parse UDF work (the
-        # single most expensive stage). At the 100 TB design point the
-        # same flag disables it: recompute beats caching the corpus.
-        text_ext = text_ext.persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_sink is not None:
-            persisted_sink.append(text_ext)
-
-    # Per-doc reduce. Two equivalent strategies (identical kernels and
-    # output; A/B re-measured round 6 after the shuffle-writer fix):
-    # - map_batches (default since round 6): explicit hash repartition
-    #   to n_parts + in-partition sort + mapInPandas with cross-batch
-    #   group stitching. The explicit partition count keeps the
-    #   Python-bound merge at full parallelism — AQE's byte-based
-    #   coalescing shrank the applyInPandas exchange to 23 partitions
-    #   on the 8000-doc corpus (33 MB looks tiny to AQE, but the
-    #   stage cost is Python compute, not bytes). Interleaved min-of-
-    #   reps: 8.1-7.2s vs 9.6-10.0s wall.
-    # - apply_in_pandas: groupBy().applyInPandas with the same
-    #   array-based per-group kernel; subject to AQE coalescing.
-    def _apply_merge(
-        ext: DataFrame,
-        pre_partitioned: bool = False,
-        fold_retry: bool = False,
-    ) -> DataFrame:
-        kernel = _fold_merge_doc if fold_retry else _merge_doc_arrays
-        extra = _FOLD_COLS if fold_retry else []
-        schema = (
-            _RAW_RESULT_SCHEMA + ", needs_retry int"
-            if fold_retry
-            else _RAW_RESULT_SCHEMA
-        )
-        if merge_strategy == "apply_in_pandas":
-            def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-                cols = {c: pdf[c].to_numpy() for c in _MERGE_COLS + extra}
-                return pd.DataFrame([kernel(cols, 0, len(pdf))])
-
-            return ext.groupBy("doc_id").applyInPandas(_merge_group, schema)
-        grouped = ext.select(*_MERGE_COLS, *extra)
-        if not pre_partitioned:
-            grouped = grouped.repartition(n_parts, "doc_id")
-        return grouped.sortWithinPartitions("doc_id").mapInPandas(
-            _make_merge_partition(kernel, extra), schema
-        )
-
-    # R2 — document-level retry: any quality issue on any table, or zero
-    # tables for the whole document (converter.py:117-132). Sentinel rows
-    # guarantee every text-routed doc appears in the aggregate.
-    if retry_strategy == "single_parse":
-        base_cols = [c for c in _MERGE_COLS if c != "quality_retried"]
-
-        def _fold_cols(ext: DataFrame, is_vision: bool) -> DataFrame:
-            # `quality` collapses to one boolean before the shuffle —
-            # the merge kernel's retry decision needs only "any issue
-            # on this table", so the exchange carries 1 bit instead of
-            # an array<string> per table row.
-            return ext.select(
-                *base_cols,
-                F.lit(0).alias("quality_retried"),
-                (F.col("is_table") & (F.size("quality") > 0)).alias(
-                    "has_issue"
-                ),
-                F.lit(is_vision).alias("is_vision"),
+    def _extract(route: str, udf) -> DataFrame:
+        # `quality` collapses to one "any issue" bit before the
+        # exchange: the R2 decision needs nothing more of it
+        return (
+            pages.filter(F.col("route") == route)
+            .mapInPandas(udf, EXTRACTION_SCHEMA)
+            .select(
+                *_MERGE_COLS,
+                (F.size("quality") > 0).alias("has_issue"),
+                F.lit(route == "vision").alias("is_vision"),
             )
-
-        vision_ext = vision_pages.mapInPandas(
-            vision_extractor, EXTRACTION_SCHEMA
-        )
-        # Linear plan: parse + vision shuffle ONCE (the merge group's
-        # own doc_id exchange) into the fold-merge, whose kernel also
-        # makes the per-doc retry decision (flag row instead of a
-        # result). The doc-level output — ~1 row/doc of spans_json,
-        # output-scale not page-scale — is persisted and fans out to
-        # the kept-results filter and the retry-id filter.
-        #
-        # The persist is NOT optional sugar: every materialization-
-        # free formulation of "one computed relation, two consumers"
-        # was measured to re-execute the expensive subtree, because
-        # Spark's exchange reuse requires canonically IDENTICAL
-        # exchange subtrees and the optimizer makes the consumers
-        # differ: an anti-join gets pushed below the page exchange by
-        # PushDownLeftSemiAntiJoin; a flag filter over a doc-level
-        # repartition gets pushed below it by PushDownPredicates; and
-        # a JVM retry-aggregate reading the same page exchange gets
-        # COLUMN-PRUNED to 4 columns, so its exchange no longer
-        # matches the merge's full-width one (all three observed in
-        # executed plans with stage-attributed UDF row counts, see
-        # NOTES_ROUND4). Caching the small doc-level relation is the
-        # one formulation that runs parse, vision, and merge exactly
-        # once. In the checkpointed sink / streaming loops the cache
-        # is bucket-scoped and released via ``persisted_sink``.
-        #
-        # The cached relation is the FINISHED result (typed spans, via
-        # _finish_result BEFORE the persist), not the raw spans_json:
-        # the from_json parse then runs inside the merge stage, where
-        # the Python UDF's Arrow batching throttles its allocation
-        # rate (see _finish_result's placement note — parsing in the
-        # downstream cache-scan stage measured ~3x the executor time
-        # at 32k docs from GC alone). Flag rows carry spans_json="",
-        # which parses to null and is discarded by the kept filter.
-        merged = _finish_result(
-            _apply_merge(
-                _fold_cols(text_ext, False).unionByName(
-                    _fold_cols(vision_ext, True)
-                ),
-                fold_retry=True,
-            ),
-            keep=["needs_retry"],
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_sink is not None:
-            persisted_sink.append(merged)
-        kept = merged.filter(F.col("needs_retry") == 0).drop("needs_retry")
-        retry_ids = merged.filter(F.col("needs_retry") == 1).select("doc_id")
-        retry_ext = (
-            text_pages.join(retry_ids, "doc_id", "left_semi")
-            .mapInPandas(vision_extractor, EXTRACTION_SCHEMA)
-            .withColumn("quality_retried", F.lit(1))
-            .select(*_MERGE_COLS)
-        )
-        return kept.unionByName(
-            _finish_result(_apply_merge(retry_ext, pre_partitioned=False))
         )
 
-    doc_stats = text_ext.groupBy("doc_id").agg(
-        F.max(
-            F.when(F.col("is_table") & (F.size("quality") > 0), 1).otherwise(0)
-        ).alias("has_quality_issue"),
-        F.sum(F.when(F.col("is_table"), 1).otherwise(0)).alias("n_raw_tables"),
+    extracted = _extract("text", extract_text_pages).unionByName(
+        _extract("vision", vision_extractor)
     )
-    retry_ids = doc_stats.filter(
-        (F.col("has_quality_issue") == 1) | (F.col("n_raw_tables") == 0)
-    ).select("doc_id")
-
-    text_kept = text_ext.join(retry_ids, "doc_id", "left_anti").withColumn(
-        "quality_retried", F.lit(0)
+    merged = (
+        extracted.repartition(n_parts, "doc_id")
+        .sortWithinPartitions("doc_id")
+        .mapInPandas(
+            _make_merge_partition(_make_merge_kernel(vision_extractor)),
+            _RAW_RESULT_SCHEMA,
+        )
     )
-    retry_pages = text_pages.join(retry_ids, "doc_id", "left_semi")
-    retry_ext = retry_pages.mapInPandas(
-        vision_extractor, EXTRACTION_SCHEMA
-    ).withColumn("quality_retried", F.lit(1))
-    vision_ext = vision_pages.mapInPandas(
-        vision_extractor, EXTRACTION_SCHEMA
-    ).withColumn("quality_retried", F.lit(0))
-
-    all_ext = text_kept.unionByName(vision_ext).unionByName(retry_ext)
-    return _finish_result(_apply_merge(all_ext, pre_partitioned=False))
+    return _finish_result(merged)

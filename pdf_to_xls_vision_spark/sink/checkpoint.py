@@ -54,6 +54,15 @@ def _manifest_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "manifest")
 
 
+def require_positive(**params) -> None:
+    """Fail fast on a count parameter below 1 (``None`` means "use the
+    default"): a zero or negative bucket count or commit-group size
+    would otherwise plan no commit at all and report success."""
+    for name, value in params.items():
+        if value is not None and value < 1:
+            raise ValueError(f"{name} must be >= 1, got {value}")
+
+
 def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     return df.withColumn(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
@@ -118,6 +127,7 @@ def write_checkpointed(
 
     Returns ``{"committed": [...], "skipped": [...], "attempt": n}``.
     """
+    require_positive(n_buckets=n_buckets, commit_group_size=commit_group_size)
     spark = result.sparkSession
     already = committed_buckets(spark, out_dir)
     attempt = _next_attempt(spark, out_dir)
@@ -227,6 +237,7 @@ def run_checkpointed_extraction(
     """
     from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
 
+    require_positive(n_buckets=n_buckets, commit_group_size=commit_group_size)
     spark = docs.sparkSession
     already = committed_buckets(spark, out_dir)
     attempt = _next_attempt(spark, out_dir)
@@ -245,19 +256,9 @@ def run_checkpointed_extraction(
                 f"simulated failure before group {g_idx} (committed {committed})"
             )
         sub = bucketed_docs.filter(F.col("bucket").isin(group)).drop("bucket")
-        persisted: list = []
-        result = run_extraction(
-            sub,
-            force_vision=force_vision,
-            backend=backend,
-            persisted_sink=persisted,
-        )
+        result = run_extraction(sub, force_vision=force_vision, backend=backend)
         chunk = with_bucket(result, n_buckets)
         _commit_group(chunk, group, out_dir, input_snapshot, attempt)
-        # each group's cache is consumed exactly once — release it so a
-        # many-group backfill doesn't accumulate disk-backed blocks
-        for df in persisted:
-            df.unpersist()
         committed.extend(group)
 
     return {"committed": committed, "skipped": sorted(already), "attempt": attempt}

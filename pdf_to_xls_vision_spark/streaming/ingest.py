@@ -31,7 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
-from pdf_to_xls_vision_spark.sink.checkpoint import DEFAULT_BUCKETS, with_bucket
+from pdf_to_xls_vision_spark.sink.checkpoint import (
+    DEFAULT_BUCKETS,
+    require_positive,
+    with_bucket,
+)
 from pdf_to_xls_vision_spark.sources.span_docs import stream_span_docs
 
 STREAM_MANIFEST_SCHEMA = (
@@ -57,8 +61,7 @@ def _commit_micro_batch(
     input_snapshot: str,
     backend=None,
 ) -> None:
-    persisted: list = []
-    result = run_extraction(batch_df, backend=backend, persisted_sink=persisted)
+    result = run_extraction(batch_df, backend=backend)
     chunk = with_bucket(result, n_buckets).withColumn(
         "ingest_batch", F.lit(batch_id).cast("long")
     )
@@ -70,15 +73,13 @@ def _commit_micro_batch(
         .save(_spans_dir(out_dir))
     )
     # Aggregate the manifest metrics from the parquet JUST WRITTEN, not
-    # from `chunk`: the extraction plan is lazy, so `chunk.groupBy`
-    # would re-execute the whole UDF pipeline a second time per
-    # micro-batch (with persist_pages=False nothing is cached — this
-    # exact re-execution was the dominant per-batch fixed cost behind
-    # the 47-vs-451 docs/sec streaming gap in BENCH_r03). The read-back
-    # is a column-pruned scan of the five small metric columns of this
-    # batch's partition only; the data is identical by construction.
-    for df in persisted:  # the spans write was the only plan execution
-        df.unpersist()
+    # from `chunk`: the extraction plan is lazy and caches nothing, so
+    # `chunk.groupBy` would re-execute the whole UDF pipeline a second
+    # time per micro-batch (this exact re-execution was the dominant
+    # per-batch fixed cost behind the 47-vs-451 docs/sec streaming gap
+    # in BENCH_r03). The read-back is a column-pruned scan of the five
+    # small metric columns of this batch's partition only; the data is
+    # identical by construction.
     spark = batch_df.sparkSession
     batch_part = os.path.join(
         _spans_dir(out_dir), f"ingest_batch={batch_id}"
@@ -135,6 +136,7 @@ def stream_extraction(
 
     Callers ``.awaitTermination()`` it (availableNow drains and stops).
     """
+    require_positive(n_buckets=n_buckets)
     docs = stream_span_docs(
         spark, input_dir, max_files_per_trigger=max_files_per_trigger
     )

@@ -1,9 +1,9 @@
-"""Extraction-pipeline profiling: wall time + shuffle bytes per variant.
+"""Extraction-pipeline profiling: wall time + shuffle bytes.
 
-Usage: PYTHONPATH=. python scripts/profile_extraction.py [variant ...]
-Variants: baseline (persist pages+text_ext), no_pages_persist,
-no_persist. Each runs min-of-2 on the 8000-doc skewed corpus at
-local[32] and reports total shuffle read/write from the status store.
+Usage: PYTHONPATH=. python scripts/profile_extraction.py
+Runs ``run_extraction`` into a noop sink min-of-2 on the 8000-doc
+skewed corpus at local[32] and reports total shuffle read/write from
+the status store.
 """
 
 from __future__ import annotations
@@ -43,8 +43,6 @@ def main() -> None:
     from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
     from pdf_to_xls_vision_spark.session import get_spark
 
-    variants = sys.argv[1:] or ["baseline", "no_pages_persist"]
-
     corpus_path = f"/tmp/ptxv_bench_corpus_{DOCS}.parquet"
     if not os.path.exists(corpus_path):
         write_corpus_parquet(corpus_path, DOCS)
@@ -63,30 +61,21 @@ def main() -> None:
     corpus = spark.read.parquet(corpus_path)
     corpus.select("doc_id").write.format("noop").mode("overwrite").save()  # warm
 
-    for variant in variants:
-        kwargs = {}
-        if variant == "no_pages_persist":
-            kwargs = {"persist_pages": "text_ext_only"}
-        elif variant == "no_persist":
-            kwargs = {"persist_pages": False}
-        times = []
-        for _ in range(2):
-            spark.catalog.clearCache()
-            w0, r0 = shuffle_totals(spark)
-            t0 = time.perf_counter()
-            run_extraction(corpus, **kwargs).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = time.perf_counter() - t0
-            w1, r1 = shuffle_totals(spark)
-            times.append((dt, w1 - w0, r1 - r0))
-        best = min(times)
-        print(
-            f"{variant}: best {best[0]:.2f}s  "
-            f"shuffle_write {best[1] / 1e6:.1f}MB  "
-            f"shuffle_read {best[2] / 1e6:.1f}MB  "
-            f"(all: {[(round(t, 2)) for t, _, _ in times]})"
-        )
+    times = []
+    for _ in range(2):
+        w0, r0 = shuffle_totals(spark)
+        t0 = time.perf_counter()
+        run_extraction(corpus).write.format("noop").mode("overwrite").save()
+        dt = time.perf_counter() - t0
+        w1, r1 = shuffle_totals(spark)
+        times.append((dt, w1 - w0, r1 - r0))
+    best = min(times)
+    print(
+        f"best {best[0]:.2f}s  "
+        f"shuffle_write {best[1] / 1e6:.1f}MB  "
+        f"shuffle_read {best[2] / 1e6:.1f}MB  "
+        f"(all: {[(round(t, 2)) for t, _, _ in times]})"
+    )
     spark.stop()
 
 

@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Profile the merge/serialize kernel and the vision-page kernel
+"""Profile the merge/serialize kernel (which also runs the R2 vision
+retry of the documents it decides to retry) and the vision-page kernel
 standalone (no Spark) — the two dominant executor-cost stages per
 scripts/profile_stage_breakdown.py. Usage:
 
@@ -24,7 +25,10 @@ from pdf_to_xls_vision_spark.operators.extract import (
     make_vision_extractor,
 )
 from pdf_to_xls_vision_spark.operators.classify import route_expr  # noqa: F401
-from pdf_to_xls_vision_spark.operators.pipeline import _merge_frame
+from pdf_to_xls_vision_spark.operators.pipeline import (
+    _make_merge_kernel,
+    _merge_frame,
+)
 
 
 def build_pages(n_docs: int) -> pd.DataFrame:
@@ -94,8 +98,9 @@ def main() -> None:
         )
 
     text_ext = run_text()
-    for df in (text_ext, vis_ext):
-        df["quality_retried"] = 0
+    for df, is_vision in ((text_ext, False), (vis_ext, True)):
+        df["has_issue"] = df["quality"].map(len) > 0
+        df["is_vision"] = is_vision
 
     merged_in = (
         pd.concat([text_ext, vis_ext], ignore_index=True)
@@ -104,8 +109,10 @@ def main() -> None:
     )
     print(f"merge input: {len(merged_in)} extraction rows")
 
+    merge_kernel = _make_merge_kernel(vision_fn)
+
     def run_merge():
-        return _merge_frame(merged_in)
+        return _merge_frame(merged_in, merge_kernel)
 
     run_merge()  # warm
     if prof_target == "merge":

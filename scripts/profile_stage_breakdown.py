@@ -5,16 +5,17 @@ Runs successive PREFIXES of the pipeline to a noop sink and reports
 the executor-run-time delta of each added stage (REST stages endpoint,
 min over reps — contention-immune on this shared VM):
 
-    scan_explode_shuffle   scan -> classify -> posexplode -> repartition
+    scan_explode_shuffle   scan -> classify -> explode -> repartition
     + text_parse_udf       mapInPandas layout parse (T1-T4, Q1-Q6)
-    + retry_and_vision     doc-quality agg, anti/semi routing, vision UDF
-    + merge_serialize      groupBy(doc).applyInPandas merge+spans+metrics
+    + vision_udf           mapInPandas vision stage over vision-routed pages
+    + full_pipeline        doc-keyed exchange, then one mapInPandas that
+                           decides R2, runs the vision retry inline for
+                           retried docs, and merges + serializes
 
 The deltas attribute the pipeline's executor cost to its stages; wall
 time is reported for reference but the shared-VM noise makes executor
-time the comparable figure. Prefixes persist nothing (each is one
-linear plan); the full pipeline runs with bench defaults, so its
-"full_pipeline" row also prices the persist/reuse machinery.
+time the comparable figure. Every prefix and the full pipeline are
+one linear plan that persists nothing.
 
 Usage: python scripts/profile_stage_breakdown.py [docs]
 """
@@ -106,33 +107,15 @@ def main() -> None:
 
     def all_ext_plan():
         p = pages_plan()
-        text_pages = p.filter(F.col("route") == "text")
-        vision_pages = p.filter(F.col("route") == "vision")
-        text_ext = text_pages.mapInPandas(extract_text_pages, EXTRACTION_SCHEMA)
-        doc_stats = text_ext.groupBy("doc_id").agg(
-            F.max(
-                F.when(F.col("is_table") & (F.size("quality") > 0), 1).otherwise(0)
-            ).alias("has_quality_issue"),
-            F.sum(F.when(F.col("is_table"), 1).otherwise(0)).alias("n_raw_tables"),
+        text_ext = p.filter(F.col("route") == "text").mapInPandas(
+            extract_text_pages, EXTRACTION_SCHEMA
         )
-        retry_ids = doc_stats.filter(
-            (F.col("has_quality_issue") == 1) | (F.col("n_raw_tables") == 0)
-        ).select("doc_id")
-        text_kept = text_ext.join(retry_ids, "doc_id", "left_anti").withColumn(
-            "quality_retried", F.lit(0)
-        )
-        retry_ext = (
-            text_pages.join(retry_ids, "doc_id", "left_semi")
-            .mapInPandas(vision, EXTRACTION_SCHEMA)
-            .withColumn("quality_retried", F.lit(1))
-        )
-        vision_ext = vision_pages.mapInPandas(
+        vision_ext = p.filter(F.col("route") == "vision").mapInPandas(
             vision, EXTRACTION_SCHEMA
-        ).withColumn("quality_retried", F.lit(0))
-        return text_kept.unionByName(vision_ext).unionByName(retry_ext)
+        )
+        return text_ext.unionByName(vision_ext)
 
     def full_plan():
-        spark.catalog.clearCache()
         return run_extraction(corpus)
 
     rows = []
@@ -140,13 +123,12 @@ def main() -> None:
     for name, mk in (
         ("scan_explode_shuffle", pages_plan),
         ("+ text_parse_udf", text_plan),
-        ("+ retry_and_vision", all_ext_plan),
-        ("full_pipeline(+merge_serialize, bench persists)", full_plan),
+        ("+ vision_udf", all_ext_plan),
+        ("full_pipeline(+R2 retry, merge_serialize)", full_plan),
     ):
         wall, ex = measure(spark, mk)
         rows.append((name, wall, ex, ex - prev_exec))
         prev_exec = ex
-    spark.catalog.clearCache()
 
     print(f"\n{docs_n} docs, local[{CPUS}], min of 2 reps after warm-up")
     print(f"{'stage':<50} {'wall_s':>8} {'exec_s':>9} {'delta_s':>9}")

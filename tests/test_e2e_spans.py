@@ -113,42 +113,6 @@ def test_order_is_dense_and_zero_based(engine_result):
         assert [s[3] for s in seq] == list(range(len(seq))), doc_id
 
 
-@pytest.mark.slow
-def test_merge_strategies_equivalent(spark, tiny_corpus_path):
-    """map_batches (repartition+sort+stitching) must produce exactly
-    the apply_in_pandas default's output — same shuffle, different
-    Python-side batching."""
-    from pyspark.sql import functions as F
-
-    from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
-
-    docs = spark.read.parquet(tiny_corpus_path)
-
-    def snap(strategy):
-        res = run_extraction(docs, merge_strategy=strategy)
-        return {
-            tuple(r)
-            for r in res.select(
-                "doc_id", F.to_json("spans").alias("sj"), "n_tables",
-                "pages_parsed", "rotation_corrections", "quality_retried",
-                "rollup_rows", "n_notes", "validation_status", "accuracy_pct",
-            ).collect()
-        }
-
-    assert snap("apply_in_pandas") == snap("map_batches")
-
-
-def test_unknown_merge_strategy_rejected(spark, tiny_corpus_path):
-    """Typos must fail fast, not silently fall into map_batches."""
-    import pytest as _pytest
-
-    from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
-
-    docs = spark.read.parquet(tiny_corpus_path)
-    with _pytest.raises(ValueError, match="merge_strategy"):
-        run_extraction(docs, merge_strategy="apply_in_pandaz")
-
-
 def test_wide_corpus_spans_equal_oracle(spark, tmp_path):
     """30–50-column tables (col_range=(28, 48)): the fused layout
     kernel, header promotion, quality gates, and grid-JSON contract

@@ -1,0 +1,148 @@
+"""One pass per UDF: every text page enters the layout parse once per
+plan execution, and a retried document's text pages enter the vision
+stage once, inside the doc-keyed merge that makes the R2 decision.
+
+The two stages are wrapped under the names ``operators.pipeline``
+resolves them by when it builds the plan, with accumulators counting
+the rows that go in."""
+
+from __future__ import annotations
+
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from pdf_to_xls_vision_spark.corpus import corpus_to_arrow
+from pdf_to_xls_vision_spark.operators import pipeline
+from pdf_to_xls_vision_spark.operators.pipeline import explode_pages, run_extraction
+from tests.oracle import oracle_corpus, oracle_document_metrics
+
+_ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+@pytest.fixture
+def counters(spark, monkeypatch):
+    """Row counters on the text parse and on the vision stage, split by
+    route (``route="text"`` rows entering vision are R2 retries)."""
+    sc = spark.sparkContext
+    counts = {k: sc.accumulator(0) for k in ("text", "vision", "retry")}
+    orig_text = pipeline.extract_text_pages
+    orig_make = pipeline.make_vision_extractor
+
+    def extract_text_pages(batches):
+        def counted():
+            for b in batches:
+                counts["text"].add(len(b))
+                yield b
+
+        return orig_text(counted())
+
+    def make_vision_extractor(backend=None):
+        inner = orig_make(backend)
+
+        def extract_vision_pages(batches):
+            def counted():
+                for b in batches:
+                    n_retry = int((b["route"] == "text").sum())
+                    counts["retry"].add(n_retry)
+                    counts["vision"].add(len(b) - n_retry)
+                    yield b
+
+            return inner(counted())
+
+        return extract_vision_pages
+
+    monkeypatch.setattr(pipeline, "extract_text_pages", extract_text_pages)
+    monkeypatch.setattr(pipeline, "make_vision_extractor", make_vision_extractor)
+    return counts
+
+
+def _pages_by_route(docs, force_vision=False) -> dict:
+    rows = explode_pages(docs, force_vision).groupBy("route").count().collect()
+    return {r.route: r["count"] for r in rows}
+
+
+def test_each_page_parsed_once_and_retried_once(
+    spark, tiny_corpus_path, tiny_corpus, counters
+):
+    docs = spark.read.parquet(tiny_corpus_path)
+    res = run_extraction(docs).collect()
+    pages = _pages_by_route(docs)
+    retried = {
+        doc_id: len(spans)
+        for doc_id, spans in tiny_corpus
+        if oracle_document_metrics(doc_id, spans)["quality_retried"]
+    }
+    assert retried, "the tiny corpus must exercise R2"
+    assert {r.doc_id for r in res if r.quality_retried} == set(retried)
+
+    assert counters["text"].value == pages["text"]
+    assert counters["retry"].value == sum(retried.values())
+    assert counters["vision"].value == pages["vision"]
+
+
+def test_force_vision_parses_nothing(spark, tiny_corpus_path, counters):
+    docs = spark.read.parquet(tiny_corpus_path)
+    res = run_extraction(docs, force_vision=True)
+    assert res.filter(F.col("quality_retried") == 1).count() == 0
+    assert counters["text"].value == 0
+    assert counters["retry"].value == 0
+    assert counters["vision"].value == _pages_by_route(docs, True)["vision"]
+
+
+def _multi_page(doc_id: str, *pages: dict) -> tuple:
+    return (
+        doc_id,
+        [{**span, "offset": i} for i, span in enumerate(pages)],
+    )
+
+
+def test_merge_stitching_with_one_row_arrow_batches(spark, tiny_corpus, tmp_path):
+    """With one row per Arrow batch every multi-row document straddles
+    batch boundaries in the merge, so the held-back trailing group must
+    be stitched whole before R2 is decided and the retry runs. Two
+    multi-page retried documents are added to the tiny corpus: a
+    zero-table one and one whose first page has a quality issue."""
+    by_id = dict(tiny_corpus)
+    empty = next(s for d, s in tiny_corpus if d.startswith("doc-pin-empty"))
+    docs = tiny_corpus + [
+        _multi_page("doc-stitch-empty", *empty * 3),
+        _multi_page(
+            "doc-stitch-q1", *by_id["doc-pin-q1"], *by_id["doc-pin-continuation"]
+        ),
+    ]
+    path = str(tmp_path / "stitch.parquet")
+    pq.write_table(corpus_to_arrow(docs), path)
+
+    old = spark.conf.get(_ARROW_BATCH)
+    spark.conf.set(_ARROW_BATCH, "1")
+    try:
+        rows = {r.doc_id: r for r in run_extraction(spark.read.parquet(path)).collect()}
+    finally:
+        spark.conf.set(_ARROW_BATCH, old)
+
+    want = oracle_corpus(docs)
+    got = {
+        doc_id: [
+            {"kind": s.kind, "text": s.text, "media_ref": s.media_ref, "order": s.order}
+            for s in row.spans
+        ]
+        for doc_id, row in rows.items()
+    }
+    assert got == want
+
+    pinned = [
+        (d, s)
+        for d, s in docs
+        if d.startswith(("doc-pin-empty", "doc-pin-q", "doc-stitch-"))
+    ]
+    assert len(pinned) == 9
+    for doc_id, spans in pinned:
+        exp = oracle_document_metrics(doc_id, spans)
+        row = rows[doc_id]
+        assert row.quality_retried == 1, doc_id
+        for k in (
+            "n_tables", "pages_parsed", "rotation_corrections",
+            "validation_status", "accuracy_pct",
+        ):
+            assert row[k] == exp[k], (doc_id, k)
