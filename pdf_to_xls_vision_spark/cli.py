@@ -294,6 +294,7 @@ def main(argv: list[str] | None = None) -> int:
         read_manifest,
         run_checkpointed_extraction,
     )
+    from pdf_to_xls_vision_spark.sources.span_docs import read_span_docs
 
     if args.compact and args.no_resume:
         raise SystemExit(
@@ -361,17 +362,15 @@ def main(argv: list[str] | None = None) -> int:
             return 0
         if args.stream:
             return _run_stream(spark, args)
-        docs = spark.read.parquet(args.input)
-        if args.partitions:
-            docs = docs.repartition(args.partitions)
         summary = run_checkpointed_extraction(
-            docs,
+            read_span_docs(spark, args.input),
             args.output,
             n_buckets=args.buckets,
             commit_group_size=args.commit_group_size,
             input_snapshot=args.snapshot or args.input,
             force_vision=args.force_vision,
             backend=_vision_backend(args),
+            page_partitions=args.partitions,
         )
         manifest = read_manifest(spark, args.output)
         totals = manifest.groupBy().sum(

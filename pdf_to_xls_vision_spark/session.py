@@ -87,6 +87,14 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # PySpark's DataFrame debugging records the Python call site of
+        # every Column/DataFrame API call (extra py4j round trips and a
+        # stack walk each, plus an IPython import on the first), ~0.9 s
+        # of serial driver time before a job's first stage. Off, error
+        # messages lose that call-site context; pass
+        # {"spark.python.sql.dataFrameDebugging.enabled": "true"} in
+        # extra_conf to get it back.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if shuffle_partitions is not None:
         builder = builder.config(

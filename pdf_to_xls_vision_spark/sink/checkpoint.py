@@ -152,6 +152,17 @@ def write_checkpointed(
     return {"committed": committed, "skipped": sorted(already), "attempt": attempt}
 
 
+#: (manifest column, column of the extraction result it sums)
+_METRIC_SUMS = (
+    ("pages_parsed", "pages_parsed"),
+    ("tables_found", "n_tables"),
+    ("rotation_corrections", "rotation_corrections"),
+    ("quality_retries", "quality_retried"),
+)
+#: the manifest columns summed per bucket; `docs` sums a 1 per real row
+_SUM_COLS = ("docs", *(name for name, _ in _METRIC_SUMS))
+
+
 def _commit_group(
     chunk: DataFrame,
     group: list[int],
@@ -159,9 +170,18 @@ def _commit_group(
     input_snapshot: str,
     attempt: int,
 ) -> None:
-    """Commit one bucket group: data (atomic per-bucket dynamic
-    overwrite) then manifest (append). A crash between the two leaves
-    the bucket uncommitted and the rerun's overwrite is idempotent."""
+    """Commit one bucket group in two actions: the span rows (atomic
+    per-bucket dynamic overwrite), then the manifest (append). A crash
+    between the two leaves the group uncommitted, and the rerun's
+    overwrite is idempotent.
+
+    The manifest is one aggregate over ``chunk``'s metric columns
+    unioned with one zero row per bucket of the group, built in the JVM,
+    so every bucket gets its row, empty ones included, without a
+    driver-side round trip. ``docs`` counts only real rows, the sums
+    default to 0, and ``accuracy_pct`` averages the ``completed`` docs
+    (null for an empty bucket). The aggregate re-runs the extraction
+    plan once more; the spans write is the other run."""
     spark = chunk.sparkSession
     (
         chunk.write.format("parquet")
@@ -170,46 +190,32 @@ def _commit_group(
         .partitionBy("bucket")
         .save(_spans_dir(out_dir))
     )
-    now = int(time.time())
+    real = chunk.select(
+        "bucket",
+        F.lit(1).alias("docs"),
+        *(F.col(src).alias(name) for name, src in _METRIC_SUMS),
+        F.when(
+            F.col("validation_status") == "completed", F.col("accuracy_pct")
+        ).alias("accuracy_pct"),
+    )
+    zeros = spark.range(1).select(
+        F.explode(F.lit(group).cast("array<int>")).alias("bucket"),
+        *(F.lit(0).alias(name) for name in _SUM_COLS),
+        F.lit(None).cast("double").alias("accuracy_pct"),
+    )
     metrics = (
-        chunk.groupBy("bucket")
+        real.unionByName(zeros)
+        .groupBy("bucket")
         .agg(
-            F.count("*").alias("docs"),
-            F.sum("pages_parsed").alias("pages_parsed"),
-            F.sum("n_tables").alias("tables_found"),
-            F.sum("rotation_corrections").alias("rotation_corrections"),
-            F.sum("quality_retried").alias("quality_retries"),
-            F.round(
-                F.avg(
-                    F.when(
-                        F.col("validation_status") == "completed",
-                        F.col("accuracy_pct"),
-                    )
-                ),
-                2,
-            ).alias("accuracy_pct"),
-        )
-        .withColumn(
-            "lineage",
+            *(F.sum(name).cast("long").alias(name) for name in _SUM_COLS),
+            F.round(F.avg("accuracy_pct"), 2).alias("accuracy_pct"),
             F.struct(
                 F.lit(input_snapshot).alias("input_snapshot"),
-                F.lit(attempt).alias("attempt"),
-                F.lit(now).alias("committed_at_ts"),
-            ),
+                F.lit(attempt).cast("int").alias("attempt"),
+                F.lit(int(time.time())).cast("long").alias("committed_at_ts"),
+            ).alias("lineage"),
         )
     )
-    # buckets with zero docs still need a manifest row to count as done
-    present = {r.bucket for r in metrics.select("bucket").collect()}
-    missing = [b for b in group if b not in present]
-    if missing:
-        empty = spark.createDataFrame(
-            [
-                (b, 0, 0, 0, 0, 0, None, (input_snapshot, attempt, now))
-                for b in missing
-            ],
-            MANIFEST_SCHEMA,
-        )
-        metrics = metrics.unionByName(empty)
     metrics.write.format("parquet").mode("append").save(_manifest_dir(out_dir))
 
 
@@ -222,9 +228,15 @@ def run_checkpointed_extraction(
     force_vision: bool = False,
     backend=None,
     fail_after_groups: int | None = None,
+    page_partitions: int | None = None,
 ) -> dict:
     """Resume-pruned checkpointed extraction: bucket the INPUT docs and
     extract one commit group at a time.
+
+    Each group is one ``run_extraction`` plan (``page_partitions`` is
+    its page-relation repartition width) committed by
+    ``_commit_group``, which executes the plan twice: once for the
+    spans write and once for the manifest aggregate.
 
     Unlike ``write_checkpointed`` (which filters the *extracted*
     relation — the bucket predicate sits above the pandas UDFs, so a
@@ -237,7 +249,11 @@ def run_checkpointed_extraction(
     """
     from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
 
-    require_positive(n_buckets=n_buckets, commit_group_size=commit_group_size)
+    require_positive(
+        n_buckets=n_buckets,
+        commit_group_size=commit_group_size,
+        page_partitions=page_partitions,
+    )
     spark = docs.sparkSession
     already = committed_buckets(spark, out_dir)
     attempt = _next_attempt(spark, out_dir)
@@ -256,7 +272,12 @@ def run_checkpointed_extraction(
                 f"simulated failure before group {g_idx} (committed {committed})"
             )
         sub = bucketed_docs.filter(F.col("bucket").isin(group)).drop("bucket")
-        result = run_extraction(sub, force_vision=force_vision, backend=backend)
+        result = run_extraction(
+            sub,
+            force_vision=force_vision,
+            backend=backend,
+            page_partitions=page_partitions,
+        )
         chunk = with_bucket(result, n_buckets)
         _commit_group(chunk, group, out_dir, input_snapshot, attempt)
         committed.extend(group)

@@ -50,10 +50,11 @@ SPAN_DOC_SCHEMA = StructType(
 def read_span_docs(
     spark: SparkSession, path: str, fmt: str = "parquet"
 ) -> DataFrame:
-    """Batch scan of the span-document corpus. Selecting only
-    (doc_id, spans) keeps column pruning effective however wide the
-    physical table is."""
-    return spark.read.format(fmt).load(path).select("doc_id", "spans")
+    """Batch scan of the span-document corpus. The declared schema
+    reads only (doc_id, spans) however wide the physical table is, and
+    spares the footer-inference job Spark would otherwise run before
+    the first stage."""
+    return spark.read.schema(SPAN_DOC_SCHEMA).format(fmt).load(path)
 
 
 def stream_span_docs(

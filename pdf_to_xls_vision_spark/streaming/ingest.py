@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
 from pdf_to_xls_vision_spark.sink.checkpoint import (
     DEFAULT_BUCKETS,
+    _path_missing,
     require_positive,
     with_bucket,
 )
@@ -84,7 +85,7 @@ def _commit_micro_batch(
     batch_part = os.path.join(
         _spans_dir(out_dir), f"ingest_batch={batch_id}"
     )
-    if not os.path.isdir(batch_part.removeprefix("file:")):
+    if _path_missing(spark, batch_part):
         return  # empty micro-batch: nothing written, nothing to commit
     written = (
         spark.read.option("basePath", _spans_dir(out_dir))

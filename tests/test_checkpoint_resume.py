@@ -1,11 +1,15 @@
 """W2 semantics: idempotent bucket commits, kill-and-rerun resume,
 manifest metrics + lineage (FIXTURES.md §5)."""
 
+from collections import Counter, defaultdict
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
 from pdf_to_xls_vision_spark.sink.checkpoint import (
+    MANIFEST_SCHEMA,
     CheckpointAbort,
     committed_buckets,
     read_committed,
@@ -94,6 +98,47 @@ def test_manifest_metrics_and_lineage(result_df, tmp_path):
     assert all(r.lineage.input_snapshot == "corpus@tiny" for r in rows)
     assert all(r.lineage.attempt == 1 for r in rows)
     assert all(r.lineage.committed_at_ts > 0 for r in rows)
+
+
+@pytest.mark.parametrize("n_buckets", [1, 64])
+def test_manifest_rows_match_committed_spans(result_df, tmp_path, n_buckets):
+    """One bucket holds every doc; 64 buckets over the tiny corpus
+    leave some empty. Either way the manifest has exactly
+    MANIFEST_SCHEMA and one row per bucket whose metrics are the sums
+    over that bucket's committed span rows."""
+    spark = result_df.sparkSession
+    out_dir = str(tmp_path / f"schema{n_buckets}")
+    write_checkpointed(result_df, out_dir, n_buckets=n_buckets)
+    manifest = read_manifest(spark, out_dir)
+    assert manifest.schema == StructType.fromDDL(MANIFEST_SCHEMA)
+
+    sums = defaultdict(Counter)
+    accuracy = defaultdict(list)
+    for r in read_committed(spark, out_dir).collect():
+        sums[r.bucket].update(
+            docs=1,
+            pages_parsed=r.pages_parsed,
+            tables_found=r.n_tables,
+            rotation_corrections=r.rotation_corrections,
+            quality_retries=r.quality_retried,
+        )
+        if r.validation_status == "completed":
+            accuracy[r.bucket].append(r.accuracy_pct)
+    rows = {r.bucket: r for r in manifest.collect()}
+    assert sorted(rows) == list(range(n_buckets))
+    empty = set(rows) - set(sums)
+    assert bool(empty) == (n_buckets > 1)
+    for bucket, row in rows.items():
+        for col in ("docs", "pages_parsed", "tables_found",
+                    "rotation_corrections", "quality_retries"):
+            assert row[col] == sums[bucket][col], (bucket, col)
+        acc = accuracy[bucket]
+        if acc:
+            assert row.accuracy_pct == pytest.approx(sum(acc) / len(acc), abs=0.006)
+        else:
+            assert row.accuracy_pct is None, bucket
+    for bucket in empty:
+        assert rows[bucket].docs == 0
 
 
 def test_doc_validation_metrics(result_df):

@@ -63,6 +63,28 @@ def test_cli_arg_errors():
         main(["in.parquet", "-o", "out", "--read-snapshot", "3", "--no-resume"])
 
 
+def test_cli_partitions_set_page_partitions(
+    spark, small_corpus_path, tmp_path, monkeypatch
+):
+    """--partitions is the page-relation repartition width: it reaches
+    run_extraction as page_partitions."""
+    from pdf_to_xls_vision_spark.operators import pipeline
+
+    class Planned(Exception):
+        pass
+
+    seen = {}
+
+    def run_extraction(docs, **kwargs):
+        seen.update(kwargs)
+        raise Planned
+
+    monkeypatch.setattr(pipeline, "run_extraction", run_extraction)
+    with pytest.raises(Planned):
+        main([small_corpus_path, "-o", str(tmp_path / "out"), "--partitions", "3"])
+    assert seen["page_partitions"] == 3
+
+
 @pytest.mark.slow
 def test_cli_stream_mode(spark, tiny_corpus, tmp_path):
     """--stream drains the input dir via Structured Streaming and

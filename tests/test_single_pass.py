@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pdf_to_xls_vision_spark.corpus import corpus_to_arrow
 from pdf_to_xls_vision_spark.operators import pipeline
 from pdf_to_xls_vision_spark.operators.pipeline import explode_pages, run_extraction
+from pdf_to_xls_vision_spark.sink.checkpoint import run_checkpointed_extraction
 from tests.oracle import oracle_corpus, oracle_document_metrics
 
 _ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -88,6 +89,25 @@ def test_force_vision_parses_nothing(spark, tiny_corpus_path, counters):
     assert counters["text"].value == 0
     assert counters["retry"].value == 0
     assert counters["vision"].value == _pages_by_route(docs, True)["vision"]
+
+
+def test_checkpointed_commit_runs_the_plan_twice(
+    spark, tiny_corpus_path, tiny_corpus, counters, tmp_path
+):
+    """The CLI path commits a group with two plan executions, the spans
+    write and the manifest aggregate, so each UDF sees each of its
+    pages twice."""
+    docs = spark.read.parquet(tiny_corpus_path)
+    run_checkpointed_extraction(docs, str(tmp_path / "out"), n_buckets=4)
+    pages = _pages_by_route(docs)
+    retried = sum(
+        len(spans)
+        for doc_id, spans in tiny_corpus
+        if oracle_document_metrics(doc_id, spans)["quality_retried"]
+    )
+    assert counters["text"].value == 2 * pages["text"]
+    assert counters["vision"].value == 2 * pages["vision"]
+    assert counters["retry"].value == 2 * retried
 
 
 def _multi_page(doc_id: str, *pages: dict) -> tuple:

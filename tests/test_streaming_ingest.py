@@ -116,3 +116,28 @@ def test_replayed_micro_batch_manifest_idempotent(spark, tiny_corpus, tmp_path):
     assert man.count() == man.select("ingest_batch", "bucket").distinct().count()
     docs = read_stream_committed(spark, out_dir)
     assert docs.count() == docs.select("doc_id").distinct().count() == 10
+
+
+def test_micro_batch_commit_probes_the_spark_filesystem(
+    spark, tiny_corpus, tmp_path, monkeypatch
+):
+    """Whether a micro-batch wrote anything is asked of the filesystem
+    Spark writes to (the Hadoop-FS probe), not of the driver's local
+    disk, which never holds an hdfs:// or s3a:// output: a probe that
+    reports the batch partition missing means no manifest row."""
+    from pdf_to_xls_vision_spark.streaming import ingest
+
+    in_path = str(tmp_path / "in.parquet")
+    out_dir = str(tmp_path / "out")
+    pq.write_table(corpus_to_arrow(tiny_corpus[:4]), in_path)
+    probed = []
+
+    def missing(spark_, path):
+        probed.append(path)
+        return True
+
+    monkeypatch.setattr(ingest, "_path_missing", missing)
+    ingest._commit_micro_batch(spark.read.parquet(in_path), 3, out_dir, 4, in_path)
+    assert probed == [os.path.join(ingest._spans_dir(out_dir), "ingest_batch=3")]
+    assert os.path.isdir(probed[0])
+    assert not os.path.exists(ingest._manifest_dir(out_dir))
