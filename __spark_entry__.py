@@ -3,10 +3,11 @@
 ``entry(spark)`` runs the flagship extraction pipeline (classify ->
 page-level mapInPandas extraction -> retry -> merge+serialize) on the
 deterministic interleaved-span corpus and returns the exploded span
-relation. ``queries()`` exposes every SQL-expressible operator family
-from SURVEY.md §2 plus the training-data-pipeline operators;
-``oracle_sql()`` carries the DuckDB equivalents (names and aliases
-match column-for-column).
+relation. ``queries()`` exposes the 15 SURVEY.md §2 stage queries
+(routing, quality heuristics, validation, the M1 window, rollup scan,
+sheet naming and the extraction pipeline itself); ``oracle_sql()``
+carries their DuckDB equivalents (names and aliases match
+column-for-column).
 """
 
 from __future__ import annotations
@@ -25,9 +26,9 @@ def entry(spark: SparkSession) -> DataFrame:
     kind,text,media_ref,offset>>``), which the driver's TPC-H-ish
     tables do not carry — per the brief it is synthesised
     deterministically (corpus.py, seed 42) rather than read from
-    sf0.001. The sf-dir-driven queries live in ``queries()`` — every
-    entry with a DuckDB oracle (plans/queries.py documents each
-    oracle's provenance class; ``len(QUERIES) == len(ORACLES)``).
+    sf0.001. The sf-dir-driven queries live in ``queries()``, each
+    with a DuckDB oracle (``QUERIES`` and ``ORACLES`` share their
+    keys).
     """
     from pdf_to_xls_vision_spark.plans.queries import q_extraction_spans
 

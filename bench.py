@@ -1,10 +1,11 @@
 #!/usr/bin/env python3
 """Headline benchmark harness (driver contract).
 
-Runs the flagship extraction pipeline plus the heavy relational /
-dedup / similarity queries from the driver registry at
-``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) on
-``local[$SPARK_GRAFT_CPUS]`` and prints exactly ONE JSON line::
+Runs the flagship extraction pipeline plus the heaviest SURVEY-stage
+queries from the driver registry at ``$SPARK_GRAFT_SF_DIR`` (default
+``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]``, then the
+streaming-ingest curve and one big extraction run with peak heap, and
+prints exactly ONE JSON line::
 
     {"metric": "...", "value": N, "unit": "sec",
      "queries": {"q1": sec, ...}, "sf": 0.1, ...}
@@ -37,74 +38,12 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # scaling corpus measured 420 docs/sec steady-state.
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "8000"))
 
-# Headline relational queries from the driver registry (plans/queries.py).
-# dedup_lsh_pairs_capped is the production default (the uncapped
-# variant exists only for oracle parity and is quadratic on hot
-# buckets by design — not a representative number).
+# Headline SURVEY-stage queries from the driver registry
+# (plans/queries.py): the validation multiset/join and the M1 window.
 HEADLINE = [
-    "agg_pricing_summary",
-    "join_nation_revenue",
     "x4_multiset_counts",
     "x5_discrepancy_join",
     "m1_sessionize_window",
-    "dedup_exact",
-    "dedup_minhash_signatures",
-    "dedup_lsh_pairs_capped",
-    "dedup_clusters",
-    "dedup_simhash",
-    "dedup_embedding_cosine_lsh",
-    "ann_topk_ivf",
-    "ann_topk_ivf_kmeans",
-    "ann_topk_ivf_probe_aware",
-    "ann_topk_ivf_pq",
-    "ann_topk_ivf_pq_residual",
-    "text_quality_score",
-    "text_lang_id",
-    "text_bpe_merge_tokens",
-    "text_repetition_filters",
-    "dedup_paragraph_chunks",
-    "join_asof_purchase_view",
-    "join_range_error_context",
-    "window_topk_per_segment",
-    "index_postings",
-    "index_search_topk",
-    "dedup_ngram_spans",
-    "text_quality_classifier",
-    "text_lm_score",
-    "curation_temperature_mix",
-    "layout_zorder_keys",
-    "graph_pagerank_parts",
-    "graph_triangle_parts",
-    "dedup_jaccard_prefix_join",
-    "dedup_corpus_lines",
-    "cdc_merge_upsert",
-    "events_retention_cohorts",
-    "join_bloom_prefilter",
-    "join_salted_skew",
-    "ann_embedding_outliers",
-    "graph_components_parts",
-    "dedup_source_overlap",
-    "window_sliding_24h",
-    "events_user_rfm",
-    "profile_events_stats",
-    "dedup_simhash_near_dups",
-    "join_asof_nearest",
-    "window_ewma_value",
-    "curation_dataset_card",
-    "text_pmi_bigrams",
-    "dedup_minhash_estimate",
-    "profile_equidepth_histogram",
-    "curation_dsir_select",
-    "graph_label_propagation",
-    "events_json_stats",
-    "text_quality_ensemble",
-    "graph_kcore",
-    "dedup_containment_join",
-    "profile_winsorize_value",
-    "window_forward_fill",
-    "events_conversion_labels",
-    "agg_revenue_contribution",
-    "curation_negative_samples",
 ]
 
 
@@ -167,35 +106,16 @@ def _run_best(df, reps: int = 2, warmup: int = 1) -> tuple[float, float | None]:
 
     The plan is built ONCE and re-executed: every ``.write`` fully
     re-runs the plan (no cross-job shuffle reuse), so the measured
-    region is identical to rebuild-per-rep, while builder-side
-    training jobs (k-means collects, CC rounds — excluded from both
-    wall and the executor delta by protocol) run once instead of
-    warmup+reps times. That build-per-rep cost was the bench's
-    stall-amplification hot spot: dozens of tiny sequential driver
-    jobs, each exposed to the host's 10-20s random stalls.
-
-    ``df`` may instead be a zero-arg callable returning ``(DataFrame,
-    persisted_handles)`` — used for query plans that persist internally:
-    each rep gets a fresh plan and its caches are dropped after the
-    rep, so every measured run executes the full plan.
+    region is identical to rebuild-per-rep.
 
     Returns (best wall sec, best executor-run-time sec or None)."""
-    def _once():
-        if callable(df):
-            d, sink = df()
-            wall = _run(d)
-            for c in sink:
-                c.unpersist(blocking=True)
-            return wall
-        return _run(df)
-
     for _ in range(warmup):
-        _once()
+        _run(df)
     walls: list[float] = []
     execs: list[float] = []
     for _ in range(reps):
         e0 = _executor_run_time_ms()
-        walls.append(_once())
+        walls.append(_run(df))
         e1 = _executor_run_time_ms()
         if e0 is not None and e1 is not None:
             execs.append((e1 - e0) / 1000.0)
@@ -259,138 +179,9 @@ def main() -> None:
 
     for name in HEADLINE:
         _log(f"query {name}")
-        probe = QUERIES[name](spark, SF_DIR)
-        probe_sink = getattr(probe, "_ptxv_persisted", None)
-        if probe_sink is None:
-            w, e = _run_best(probe)
-        else:
-            # plans that persist internally (graphs' iteration
-            # constants, the jaccard-prefix token/prefix relations):
-            # rebuild per rep and unpersist after, so each measured
-            # run pays the real compute-once-probe-many cost and
-            # nothing leaks across queries (extraction thunk pattern)
-            for c in probe_sink:
-                c.unpersist(blocking=True)
-
-            def _q_thunk(nm=name):
-                d = QUERIES[nm](spark, SF_DIR)
-                return d, list(getattr(d, "_ptxv_persisted", []))
-
-            w, e = _run_best(_q_thunk)
+        w, e = _run_best(QUERIES[name](spark, SF_DIR))
         timings[name] = round(w, 3)
         exec_secs[name] = round(e, 3) if e is not None else None
-
-    # IVF quality: recall@5 of trained-kmeans IVF vs exact brute force
-    # over the bench embeddings (quantized scores on both sides)
-    from pyspark.sql import functions as F
-
-    from pdf_to_xls_vision_spark.functions.ann import (
-        kmeans_train_balanced,
-        make_blob_embeddings,
-        topk_dot_quantized,
-        topk_ivf_kmeans,
-    )
-
-    _log("IVF recall section")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    probes = emb.filter(F.col("vec_id") < 25)
-    brute = {
-        (r.query_id, r.nbr_id)
-        for r in topk_dot_quantized(emb, probes, k=5).collect()
-    }
-
-    def _recall(nprobe: int) -> float:
-        ivf = {
-            (r.query_id, r.nbr_id)
-            for r in topk_ivf_kmeans(emb, probes, k=5, nprobe=nprobe).collect()
-        }
-        return round(len(brute & ivf) / max(len(brute), 1), 4)
-
-    recall = {f"nprobe{n}": _recall(n) for n in (1, 2)}
-
-    # Recall-vs-nprobe curve on CLUSTERABLE data (the honest IVF
-    # fixture — the driver embeddings are near-orthogonal noise, where
-    # neighbors are random across cells and recall says nothing about
-    # the quantizer). 16 cells, nprobe << n_cells.
-    blobs = make_blob_embeddings(
-        spark, n=2000, d=16, n_clusters=12,
-        sizes=[0.45] + [0.05] * 11, seed=7,
-    ).drop("label").cache()
-    bprobes = blobs.filter(F.col("vec_id") % 100 == 0)
-    bbrute = {
-        (r.query_id, r.nbr_id)
-        for r in topk_dot_quantized(blobs, bprobes, k=5).collect()
-    }
-    bal_cents = kmeans_train_balanced(
-        blobs, k=16, iterations=4, balance_factor=1.5, max_splits=8
-    )
-
-    def _blob_recall(nprobe: int) -> float:
-        got = {
-            (r.query_id, r.nbr_id)
-            for r in topk_ivf_kmeans(
-                blobs, bprobes, k=5, nprobe=nprobe, centroids=bal_cents
-            ).collect()
-        }
-        return round(len(got & bbrute) / max(len(bbrute), 1), 4)
-
-    blob_recall = {f"nprobe{n}": _blob_recall(n) for n in (1, 2, 4, 8)}
-
-    # Probe-aware pruning effect on the same fixture: the bound-pruned
-    # search returns bit-identical rows to nprobe=4 while scanning
-    # fewer cells; report avg cells actually scanned per probe (the
-    # budget is 4) plus its identity with the fixed fan-out.
-    from pdf_to_xls_vision_spark.functions.ann import topk_ivf_probe_aware
-
-    _log("probe-aware stats")
-    sink: list = []
-    aware_rows = sorted(
-        tuple(r)
-        for r in topk_ivf_probe_aware(
-            blobs, bprobes, k=5, nprobe_max=4,
-            centroids=bal_cents, scanned_cells_sink=sink,
-        ).collect()
-    )
-    fixed_rows = sorted(
-        tuple(r)
-        for r in topk_ivf_kmeans(
-            blobs, bprobes, k=5, nprobe=4, centroids=bal_cents
-        ).collect()
-    )
-    scanned = {r.query_id: r.cells_scanned for r in sink[0].collect()}
-    n_bprobes = bprobes.count()
-    # probes absent from the sink had every extra cell pruned -> 1 cell
-    total_cells = sum(scanned.values()) + (n_bprobes - len(scanned))
-    probe_aware = {
-        "identical_to_nprobe4": aware_rows == fixed_rows,
-        "cells_scanned_avg": round(total_cells / max(n_bprobes, 1), 3),
-        "cells_budget": 4,
-    }
-    blobs.unpersist()
-
-    # Dedup effect metrics: what the production path (capped LSH ->
-    # connected components -> canonical mapping) actually removes from
-    # the SF documents corpus — the yield number a curation run reports
-    # next to its throughput.
-    _log("dedup yield")
-    clusters_df = QUERIES["dedup_clusters"](spark, SF_DIR).cache()
-    n_docs = clusters_df.count()
-    n_canonical = int(
-        clusters_df.filter(F.col("is_canonical") == 1).count()
-    )
-    n_multi_clusters = int(
-        clusters_df.groupBy("cluster_rep")
-        .agg(F.count("*").alias("sz"))
-        .filter(F.col("sz") > 1)
-        .count()
-    )
-    clusters_df.unpersist()
-    dedup_yield = {
-        "n_docs": int(n_docs),
-        "docs_removed": int(n_docs - n_canonical),
-        "removed_pct": round(100.0 * (n_docs - n_canonical) / max(n_docs, 1), 2),
-        "dup_clusters": n_multi_clusters,
-    }
 
     # Streaming-ingest amortization curve: the corpus streamed
     # availableNow through foreachBatch with exactly-once
@@ -505,10 +296,6 @@ def main() -> None:
         "sf": sf_val,
         "docs_per_sec": round(BENCH_DOCS / t_ext, 2),
         "bench_docs": BENCH_DOCS,
-        "ivf_kmeans_recall_at_5": recall,
-        "ivf_balanced_recall_at_5_blobs": blob_recall,
-        "ivf_probe_aware": probe_aware,
-        "dedup_yield": dedup_yield,
         "streaming_ingest_docs_per_sec": round(stream_docs / t_stream, 2),
         "streaming_ingest_docs": stream_docs,
         # docs/sec vs micro-batch size (maxFilesPerTrigger over an
@@ -549,17 +336,7 @@ def main() -> None:
         "timing_protocol": "warmup1_bestof2",
         "full_payload": full_path,
     }
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:  # belt-and-braces vs the 2000-char tail capture
-        compact["queries"] = {
-            k: v
-            for k, v in sorted(
-                timings.items(), key=lambda kv: -kv[1]
-            )[:25]
-        }
-        compact["queries_note"] = "slowest 25; full set in full_payload"
-        line = json.dumps(compact, separators=(",", ":"))
-    print(line)
+    print(json.dumps(compact, separators=(",", ":")))
     spark.stop()
 
 

@@ -1018,7 +1018,7 @@ def embedding_outliers(
     exact two-phase salted top-k (functions/relational.topk_per_group)
     so a giant group never funnels one reducer.
     """
-    from pdf_to_xls_vision_spark.functions.relational import topk_per_group
+    from operator_zoo.functions.relational import topk_per_group
 
     if dim is None:
         # metadata-scale probe, same pattern as topk_ivf_pq_residual:

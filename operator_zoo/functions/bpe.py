@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.functions.text import BPE_TOKEN_PATTERN
+from operator_zoo.functions.text import BPE_TOKEN_PATTERN
 
 _PRETOKEN_RE = re.compile(BPE_TOKEN_PATTERN)
 

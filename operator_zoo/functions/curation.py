@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from pdf_to_xls_vision_spark.functions.text import (
+from operator_zoo.functions.text import (
     quality_score_expr,
     token_count_expr,
 )
@@ -113,7 +113,7 @@ def budget_sample_composite(
 # independent of task scheduling (rand()-based sampling breaks this).
 
 def _h60_of(id_col: str, salt: str):
-    from pdf_to_xls_vision_spark.functions.hashing import h60
+    from operator_zoo.functions.hashing import h60
 
     return h60(F.col(id_col).cast("string"), salt)
 
@@ -174,7 +174,7 @@ def quota_sample(
     into a single reducer; the per-stratum quota is applied to the
     global rank afterwards via a broadcast join.
     """
-    from pdf_to_xls_vision_spark.functions.relational import topk_per_group
+    from operator_zoo.functions.relational import topk_per_group
 
     k_max = max([default_quota, *quotas.values()], default=0)
     if k_max <= 0:
@@ -276,7 +276,7 @@ def chunk_documents(
     """
     if overlap < 0 or chunk_chars <= overlap:
         raise ValueError("need 0 <= overlap < chunk_chars")
-    from pdf_to_xls_vision_spark.functions.hashing import h60
+    from operator_zoo.functions.hashing import h60
 
     step = chunk_chars - overlap
     length = F.length(F.col(text_col))
@@ -329,7 +329,7 @@ def pack_sequences(
         raise ValueError("ctx_tokens must be positive")
     if n_shards <= 0:
         raise ValueError("n_shards must be positive")
-    from pdf_to_xls_vision_spark.functions.text import token_count_expr
+    from operator_zoo.functions.text import token_count_expr
 
     d = docs.select(
         F.col(id_col).alias("doc_id"),
@@ -390,8 +390,8 @@ def decontaminate(
     every training document (docs shorter than ``n`` words have 0
     grams and are clean by definition).
     """
-    from pdf_to_xls_vision_spark.functions.dedup import _tokens
-    from pdf_to_xls_vision_spark.functions.hashing import h60
+    from operator_zoo.functions.dedup import _tokens
+    from operator_zoo.functions.hashing import h60
 
     if n < 1:
         raise ValueError("n must be >= 1")
@@ -557,7 +557,7 @@ def domain_filter(
     Plan: doc scoring is the classifier's map-only pass + doc
     aggregate; the source rollup is a second metadata-scale aggregate.
     """
-    from pdf_to_xls_vision_spark.functions.scoring import score_documents
+    from operator_zoo.functions.scoring import score_documents
 
     scored = score_documents(
         docs, id_col=id_col, text_col=text_col
@@ -620,8 +620,8 @@ def weighted_sample(
     """
     if k <= 0:
         raise ValueError("k must be positive")
-    from pdf_to_xls_vision_spark.functions.hashing import h60
-    from pdf_to_xls_vision_spark.functions.relational import topk_per_group
+    from operator_zoo.functions.hashing import h60
+    from operator_zoo.functions.relational import topk_per_group
 
     gcols = list(group_cols) or ["_g"]
     w_ok = F.when(
@@ -716,7 +716,7 @@ def dsir_select(
 
     Returns ``(dsir_rank, doc_id, n_bigrams, score_ppm)``.
     """
-    from pdf_to_xls_vision_spark.functions.hashing import h60
+    from operator_zoo.functions.hashing import h60
 
     words = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
     pair_expr = (
@@ -827,8 +827,8 @@ def negative_samples(
         raise ValueError("k must be >= 1")
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
-    from pdf_to_xls_vision_spark.functions.hashing import h60
-    from pdf_to_xls_vision_spark.functions.relational import topk_per_group
+    from operator_zoo.functions.hashing import h60
+    from operator_zoo.functions.relational import topk_per_group
 
     base = docs.select(
         F.col(id_col).cast("long").alias("id"),

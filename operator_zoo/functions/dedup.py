@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.functions.hashing import h60
+from operator_zoo.functions.hashing import h60
 
 MINHASH_SEEDS = 8
 LSH_BAND_ROWS = 2  # 8 seeds / 2 rows -> 4 bands

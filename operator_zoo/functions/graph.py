@@ -62,8 +62,8 @@ def pagerank_fixed(
     are persisted MEMORY_AND_DISK
     and appended for the caller to unpersist after materializing. The
     registered query takes this path (round 4's audit measured the
-    recompute form at 104 exchanges / 28 scans); bench.py rebuilds per
-    rep and unpersists between reps, so nothing leaks across queries.
+    recompute form at 104 exchanges / 28 scans); the caller unpersists
+    after collecting, so nothing leaks across queries.
 
     Round 6: out-degree rides the one src-keyed window shuffle
     instead of a separate aggregate + join, the edge input needs no
@@ -228,7 +228,7 @@ def triangle_counts(
     the caller unpersists after materializing. The registered query
     takes this path (round 4's audit measured the recompute form at
     154 exchanges / 60 scans — AQE exchange reuse did NOT bound it);
-    bench.py rebuilds per rep and unpersists between reps.
+    the caller unpersists after collecting.
     """
     if assume_canonical:
         e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))

@@ -8,8 +8,8 @@ reader (parquet row-group stats, Iceberg file bounds) skips most of
 the table for a 2-D box predicate — where a single-key sort only
 prunes on its leading column. At the 10^12-row design point layout IS
 the difference between a selective query reading gigabytes or reading
-everything; see ``scripts/demo_zorder_layout.py`` for the measured
-row-group-pruning evidence on real parquet footers.
+everything; COVERAGE.md records the measured row-group-pruning
+evidence on real parquet footers.
 
 The key is pure integer bit-interleaving (no UDF, no float), identical
 in Spark and DuckDB, so the registered query oracles bit-for-bit.

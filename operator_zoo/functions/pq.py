@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.functions.ann import (
+from operator_zoo.functions.ann import (
     KMEANS_ITERS,
     KMEANS_K,
     _attach_codebook,

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.functions.hashing import h60
+from operator_zoo.functions.hashing import h60
 
 N_BUCKETS = 256
 _WEIGHT_SPAN = 17  # weights in [-8, 8]

@@ -25,7 +25,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.functions.hashing import h60
+from operator_zoo.functions.hashing import h60
 
 #: remainder field width after the bucket prefix (60-bit hash)
 _HASH_BITS = 60
@@ -376,7 +376,7 @@ def quantile_sketch(
     """
     if k <= 0:
         raise ValueError("k must be positive")
-    from pdf_to_xls_vision_spark.functions.relational import topk_per_group
+    from operator_zoo.functions.relational import topk_per_group
 
     gcols = list(group_cols) or ["_g"]
     base = df.select(

@@ -12,7 +12,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.functions.hashing import h60
+from operator_zoo.functions.hashing import h60
 
 #: per-language stopword inventories for the heuristic classifier;
 #: scores are plain token-membership counts. ASCII-safe word choices

@@ -95,7 +95,7 @@ def line_dedup_stream(
     """
     from pyspark.sql import functions as F
 
-    from pdf_to_xls_vision_spark.functions.hashing import h60
+    from operator_zoo.functions.hashing import h60
 
     if line_words < 1:
         raise ValueError("line_words must be >= 1")

@@ -10,8 +10,9 @@ tables of interleaved text+media document spans:
 The engine is Spark-first: classification is higher-order column
 expressions, extraction is page-level ``mapInPandas`` (vectorized Arrow
 batches, skew-proof because pages — not documents — are the unit of
-work), continuation-merge + span serialization run per-document in
-``applyInPandas``, validation is plain DataFrame aggregates + a full
+work), the R2 retry decision, continuation-merge + span serialization
+run per-document in one ``mapInPandas`` over a doc-keyed
+``repartition``, validation is plain DataFrame aggregates + a full
 outer join, and the sink is an idempotent, resumable, bucket-committed
 parquet/Iceberg writer with per-partition lineage and metrics.
 

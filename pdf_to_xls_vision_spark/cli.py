@@ -101,27 +101,6 @@ def build_parser() -> argparse.ArgumentParser:
         "draining what's present and stopping (availableNow)",
     )
     p.add_argument(
-        "--stream-op",
-        choices=("ingest", "sessionize", "windowed"),
-        default="ingest",
-        help="with --stream: which streaming operator to run — "
-        "'ingest' (span-doc extraction with exactly-once commits), "
-        "'sessionize' (stateful event-time sessions over an events "
-        "stream), or 'windowed' (watermarked window counts)",
-    )
-    p.add_argument(
-        "--session-gap",
-        type=int,
-        default=None,
-        help="sessionize inactivity gap in seconds (default 1800)",
-    )
-    p.add_argument(
-        "--session-watermark",
-        default=None,
-        help="event-time watermark for sessionize/windowed, e.g. "
-        "'30 minutes' — how long to wait for stragglers",
-    )
-    p.add_argument(
         "--read-snapshot",
         type=int,
         default=None,
@@ -191,63 +170,6 @@ def _vision_backend(args):
     return AnthropicVisionBackend(media_loader=loader)
 
 
-def _run_event_stream(spark, args) -> int:
-    """--stream --stream-op {sessionize,windowed}: run the event-time
-    streaming operators over a growing directory of events parquet
-    (user_id long, ts timestamp, event_type string, value double) into
-    a parquet sink. Gap/watermark are deployment knobs (SURVEY §2.12 /
-    streaming/aggregate.py)."""
-    import os
-
-    from pdf_to_xls_vision_spark.streaming.aggregate import (
-        SESSION_GAP_SECONDS,
-        SESSION_WATERMARK,
-        sessionize_stream,
-        windowed_event_counts,
-    )
-
-    ckpt = args.stream_checkpoint or os.path.join(
-        args.output, "_stream_checkpoint"
-    )
-    events = spark.readStream.schema(
-        "user_id long, ts timestamp, event_type string, value double"
-    ).parquet(args.input)
-    if args.stream_op == "sessionize":
-        plan = sessionize_stream(
-            events,
-            watermark=args.session_watermark or SESSION_WATERMARK,
-            gap_seconds=args.session_gap or SESSION_GAP_SECONDS,
-        )
-    else:
-        plan = windowed_event_counts(
-            events, watermark=args.session_watermark or "1 hour"
-        )
-    writer = (
-        plan.writeStream.format("parquet")
-        .option("path", args.output)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-    )
-    if not args.continuous:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    q.awaitTermination()
-    out = spark.read.parquet(args.output)
-    print(
-        json.dumps(
-            {
-                "mode": f"stream:{args.stream_op}",
-                "rows": out.count(),
-                "output": args.output,
-                "checkpoint": ckpt,
-                "gap_seconds": args.session_gap or SESSION_GAP_SECONDS,
-                "watermark": args.session_watermark or SESSION_WATERMARK,
-            }
-        )
-    )
-    return 0
-
-
 def _run_stream(spark, args) -> int:
     import os
 
@@ -255,9 +177,6 @@ def _run_stream(spark, args) -> int:
         read_stream_committed,
         stream_extraction,
     )
-
-    if args.stream_op != "ingest":
-        return _run_event_stream(spark, args)
 
     ckpt = args.stream_checkpoint or os.path.join(
         args.output, "_stream_checkpoint"

@@ -111,47 +111,6 @@ def _next_attempt(spark: SparkSession, out_dir: str) -> int:
         return 1
 
 
-def write_checkpointed(
-    result: DataFrame,
-    out_dir: str,
-    n_buckets: int = DEFAULT_BUCKETS,
-    commit_group_size: int | None = None,
-    input_snapshot: str = "",
-    fail_after_groups: int | None = None,
-) -> dict:
-    """Write the extraction result with resumable per-bucket commits.
-
-    ``commit_group_size`` buckets commit together per job (None = all
-    remaining in one commit). ``fail_after_groups`` is a test hook that
-    aborts after N committed groups to exercise kill-and-rerun.
-
-    Returns ``{"committed": [...], "skipped": [...], "attempt": n}``.
-    """
-    require_positive(n_buckets=n_buckets, commit_group_size=commit_group_size)
-    spark = result.sparkSession
-    already = committed_buckets(spark, out_dir)
-    attempt = _next_attempt(spark, out_dir)
-    todo = sorted(set(range(n_buckets)) - already)
-    if not todo:
-        return {"committed": [], "skipped": sorted(already), "attempt": attempt}
-
-    bucketed = with_bucket(result, n_buckets)
-    group_size = commit_group_size or len(todo)
-    groups = [todo[i : i + group_size] for i in range(0, len(todo), group_size)]
-
-    committed: list[int] = []
-    for g_idx, group in enumerate(groups):
-        if fail_after_groups is not None and g_idx >= fail_after_groups:
-            raise CheckpointAbort(
-                f"simulated failure before group {g_idx} (committed {committed})"
-            )
-        chunk = bucketed.filter(F.col("bucket").isin(group))
-        _commit_group(chunk, group, out_dir, input_snapshot, attempt)
-        committed.extend(group)
-
-    return {"committed": committed, "skipped": sorted(already), "attempt": attempt}
-
-
 #: (manifest column, column of the extraction result it sums)
 _METRIC_SUMS = (
     ("pages_parsed", "pages_parsed"),
@@ -237,15 +196,6 @@ def run_checkpointed_extraction(
     its page-relation repartition width) committed by
     ``_commit_group``, which executes the plan twice: once for the
     spans write and once for the manifest aggregate.
-
-    Unlike ``write_checkpointed`` (which filters the *extracted*
-    relation — the bucket predicate sits above the pandas UDFs, so a
-    resume still re-extracts committed documents and discards them),
-    this filters the input scan, so a resume after a crash pays zero
-    extraction work for committed buckets. On a real Iceberg corpus
-    partitioned by ``bucket(doc_id)`` the same predicate prunes
-    manifests/files at the source (partition pruning); on plain parquet
-    it prunes every UDF/shuffle stage, which is where the cost lives.
     """
     from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
 

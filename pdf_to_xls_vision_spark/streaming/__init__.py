@@ -1,4 +1,3 @@
-from pdf_to_xls_vision_spark.streaming.dedup import dedup_stream  # noqa: F401
 from pdf_to_xls_vision_spark.streaming.ingest import (  # noqa: F401
     read_stream_committed,
     stream_extraction,

@@ -33,7 +33,9 @@ from pyspark.sql import functions as F
 from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
 from pdf_to_xls_vision_spark.sink.checkpoint import (
     DEFAULT_BUCKETS,
+    _manifest_dir,
     _path_missing,
+    _spans_dir,
     require_positive,
     with_bucket,
 )
@@ -44,14 +46,6 @@ STREAM_MANIFEST_SCHEMA = (
     "tables_found long, rotation_corrections long, quality_retries long, "
     "lineage struct<input_snapshot string, committed_at_ts long>"
 )
-
-
-def _spans_dir(out_dir: str) -> str:
-    return os.path.join(out_dir, "spans")
-
-
-def _manifest_dir(out_dir: str) -> str:
-    return os.path.join(out_dir, "manifest")
 
 
 def _commit_micro_batch(
@@ -105,7 +99,7 @@ def _commit_micro_batch(
             "lineage",
             F.struct(
                 F.lit(input_snapshot).alias("input_snapshot"),
-                F.lit(now).alias("committed_at_ts"),
+                F.lit(now).cast("long").alias("committed_at_ts"),
             ),
         )
     )

@@ -118,47 +118,6 @@ code. Series 5 is the counter-example that validates the recompute-
 over-materialize defaults: the one variant that cached results is the
 one variant that failed the efficiency bar.
 
-## Probe-aware IVF at 256 cells (round 4, session 7)
-
-`scripts/demo_probe_aware_256.py` (25,600 blob vectors, 256 trained
-cells, 64 probes, nprobe_max=8, quiet window):
-
-    {"wall_fixed_min": 2.6, "wall_aware_min": 9.47,
-     "avg_cells_scanned": 3.09, "cells_budget": 8,
-     "identical_results": true}
-
-The bound pruning is lossless (bit-identical to the fixed fan-out)
-and scans 3.09 of 8 budget cells on average — a 2.6x cut in scan
-volume. Wall clock still favors the fixed fan-out at this scale:
-with ~100 vectors per cell, the saved scans are ~500 dot products
-per probe while the two-phase plan adds a frontier job. The
-crossover needs cell populations where scan dominates planning
-(at the 10^12-vector design point a cell holds ~10^9 vectors and
-scan cost IS the query cost); the sandbox cannot train a corpus
-that size, so the scanned-cells metric — not wall — is the
-scale-relevant evidence, and it is reported unspun alongside the
-unfavorable small-scale wall.
-
-## Z-order layout: measured row-group pruning (round 4, session 8)
-
-`scripts/demo_zorder_layout.py` (2M uniform 2-D points, 32 files,
-256 KB row groups, pruning computed from the real parquet footer
-min/max stats — the same bounds an Iceberg/Delta reader consumes):
-
-    box query (x in [100,180], y in [200,280], 12,506 rows):
-      random   192/192 row groups scanned
-      linear_x  17/198
-      zorder    10/199
-    y-band query (y in [500,540]):
-      random   192/192
-      linear_x 198/198   <- single-key sort prunes NOTHING on y
-      zorder    32/199   <- 6x fewer, bounded on BOTH dims
-
-All three layouts return identical query results (asserted in Spark).
-This is the write-side layout step `functions/layout.zorder_layout`
-performs; the morton key itself is the oracled query
-`layout_zorder_keys`.
-
 ## Payload-width A/B for the JSON-string contracts (round 4, session 8)
 
 `scripts/ab_payload_width.py` (2,000 docs x 480 cells, width 5/20/48,
@@ -179,23 +138,6 @@ shipped contracts (grid + spans_json as single string columns) are
 the right call across the whole width range, with no crossover where
 nested Arrow would win. Results verified identical between
 representations at each width.
-
-## Co-located join via bucketing (round 4, session 3)
-
-`scripts/demo_bucketed_join.py` (sf0.01, broadcast disabled to force
-the sort-merge path a 100 TB fact-fact join takes):
-
-    {"plain_join_exchanges": 4, "bucketed_join_exchanges": 0,
-     "plain_full_exchanges": 6, "bucketed_full_exchanges": 2,
-     "rows_match": true, "n_groups": 5}
-
-Writing lineitem/orders `bucketBy(16, key).sortBy(key)` makes the join
-itself ZERO-shuffle (the bucket layout is the hash partitioning, the
-per-bucket sort order feeds SortMergeJoin directly); only the final
-small groupBy exchanges. Identical results to the plain join. This is
-the write-once/join-many pre-payment a recurring 10^12-row fact-fact
-join wants, and the same keyed-output discipline the ingest sink's
-bucket commits follow.
 
 ## Wide-corpus full-pipeline bench (round 5, session 1)
 
@@ -222,50 +164,6 @@ width A/B above (JSON form wins at every width, no crossover), the
 round-4 contract decision is RE-CONFIRMED on the wide regime it was
 aimed at. Throughput line for the record: 215.5 docs/sec at ~1,309
 cells/doc ~= 282k table cells/sec end-to-end.
-
-## Operator scaling vs data volume (round 5, session 1)
-
-`scripts/bench_operator_scaling.py` (sf0.1 documents replicated 1x /
-8x / 32x -> 5k / 40k / 160k docs, ~5% of replicas token-perturbed so
-duplicate mass grows realistically; warmup 1 + best-of-2, local[32]):
-
-    operator              t(1x)   t(32x)  wall ratio  output ratio
-    dedup_exact           0.23 s  0.26 s   1.1x        2.6x
-    dedup_minhash         0.30 s  0.35 s   1.2x       32x
-    dedup_lsh_pairs       0.55 s  2.27 s   4.1x        8.7x
-    dedup_chunks          0.09 s  0.07 s   0.8x       32x
-    text_lang_id          0.08 s  0.06 s   0.75x      32x
-    dedup_jaccard_prefix  1.58 s  30.9 s  19.5x    10,711x (pairs!)
-
-Reading: at 32x the data, the map-only / single-aggregate operators
-(exact, minhash, chunks, lang-id) are STILL fixed-cost-bound (wall
-~1x) — their toy-SF bench lines measure stage latency, not volume,
-exactly as the plan audits argue. LSH candidate pairs grow 4.1x wall
-for 8.7x output (sublinear per candidate). The exact Jaccard prefix
-join's 19.5x wall bought 10,711x more QUALIFYING pairs (each doc
-gains ~31 near-identical replicas -> ~496 true pairs per original,
-2.74M total): wall per emitted pair fell ~550x. No operator shows
-superlinear cost against its own output volume — the shapes scale
-with work, not with input size squared.
-
-Session-3 additions (same protocol, re-run 2026-08-20; the legacy
-rows re-measured within noise of the table above):
-
-    operator               t(1x)   t(32x)  wall ratio  output ratio
-    dedup_containment      2.66 s  81.1 s  30.5x    10,902x (pairs!)
-    curation_dsir          1.00 s   2.23 s  2.2x         1x (top-k)
-    text_quality_ensemble  0.33 s   0.19 s  0.6x        32x
-
-Reading: the containment join tracks the Jaccard-prefix pattern —
-30.5x wall against 32x data while its QUALIFYING pair output grows
-10,902x (the replica corpus is quadratic in duplicates by
-construction); wall per emitted pair fell ~350x, and the wall ratio
-stays at the data ratio, not the pair ratio — the prefix+posting
-candidate shape never goes all-pairs. DSIR (2.2x for 32x data) is
-aggregate-bound: two passes over the gram relation into a bounded
-2048-row weight table; the fixed top-k output keeps the tail
-constant. The ensemble scorer stays fixed-cost-bound like the other
-map-only operators.
 
 ## Measurement lineage (round 5)
 

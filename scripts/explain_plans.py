@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Physical-plan audit for the headline queries.
+"""Physical-plan audit for the registered queries.
 
 Dumps ``explain("formatted")`` for every registered query plus the
 extraction pipeline into PLANS.md and greps for the scale signals that
@@ -40,24 +40,13 @@ def audit(name: str, df, out: io.StringIO) -> dict:
     n_bhj = len(re.findall(r"BroadcastHashJoin", txt))
     n_smj = len(re.findall(r"SortMergeJoin", txt))
     n_scan = len(re.findall(r"Scan parquet", txt))
-    n_imts = len(re.findall(r"InMemoryTableScan", txt))
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", txt)
     schemas = re.findall(r"ReadSchema: (.*)", txt)
     out.write(f"\n## {name}\n\n")
     out.write(
         f"exchanges={n_exchange} broadcast_joins={n_bhj} "
-        f"sortmerge_joins={n_smj} parquet_scans={n_scan} "
-        f"inmemory_scans={n_imts}\n\n"
+        f"sortmerge_joins={n_smj} parquet_scans={n_scan}\n\n"
     )
-    if n_imts:
-        out.write(
-            "NOTE: this plan persists internal relations "
-            "(`_ptxv_persisted`); every InMemoryTableScan probes a "
-            "cache built ONCE, and the parquet_scans/exchanges counts "
-            "above overcount — explain nests the cached derivation's "
-            "plan under each InMemoryRelation reference for display, "
-            "but at runtime that subtree executes a single time.\n\n"
-        )
     for i, (p, s) in enumerate(zip(pushed, schemas)):
         out.write(f"- scan{i}: PushedFilters=[{p}] ReadSchema={s.strip()}\n")
     out.write("\n```\n" + txt.strip()[:4000] + "\n```\n")
@@ -96,18 +85,11 @@ def main() -> None:
         "extraction_pipeline", run_extraction(corpus), out
     )
     for name, fn in QUERIES.items():
-        # extraction/multimodal plans are audited via the pipeline
-        # entry above; streaming_* builders RUN an availableNow job and
-        # return a sink read, so their batch "plan" is just that scan —
-        # the streaming plans are exercised by the parity queries and
-        # pytest, not audited here.
-        if name.startswith(("extraction", "multimodal", "streaming_")):
+        # the extraction queries are audited via the pipeline entry above
+        if name.startswith("extraction"):
             continue
         try:
-            df = fn(spark, sf_dir)
-            summary[name] = audit(name, df, out)
-            for c in getattr(df, "_ptxv_persisted", []):
-                c.unpersist()
+            summary[name] = audit(name, fn(spark, sf_dir), out)
         except Exception as e:  # pragma: no cover
             out.write(f"\n## {name}\n\nERROR: {e}\n")
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:

@@ -1,5 +1,7 @@
-"""Materialize expected outputs for the non-SQL-expressible driver
-queries, so every ``queries()`` entry gets a hard DuckDB oracle
+"""Materialize expected outputs for the non-SQL-expressible registry
+entries (the engine's ``extraction_*`` pair in plans/queries.py and the
+zoo's winnow/BPE/HTML/multimodal entries in operator_zoo/queries.py),
+so each gets a hard DuckDB oracle
 (``SELECT ... FROM read_parquet('<expected>')``) instead of a weak
 rows-only check.
 
@@ -35,7 +37,7 @@ oracle SQL selects the block matching the live ``documents`` view.
 Blocks are generated for every SF the driver can target (sf0.001,
 sf0.01, sf0.1) — an unknown SF selects zero oracle rows, which shows
 up as an unambiguous all-rows mismatch, and the supported list is
-documented at the oracle definitions (plans/queries.py).
+documented at the oracle definitions (operator_zoo/queries.py).
 """
 
 from __future__ import annotations
@@ -258,7 +260,7 @@ def gen_winnow() -> None:
 
 
 def gen_html_main_content() -> None:
-    from pdf_to_xls_vision_spark.functions.html import (
+    from operator_zoo.functions.html import (
         main_content_of,
         synthesize_html,
     )
@@ -284,7 +286,7 @@ def _independent_train(texts):
         independent_learn_merges,
     )
 
-    from pdf_to_xls_vision_spark.functions.bpe import (
+    from operator_zoo.functions.bpe import (
         MAX_TRAIN_WORDS,
         N_MERGES,
         _PRETOKEN_RE,
@@ -304,7 +306,7 @@ def gen_bpe_merge_tokens() -> None:
     # independent learner + one-at-a-time encoder (see docstring)
     from independent_kernels import independent_encode_word
 
-    from pdf_to_xls_vision_spark.functions.bpe import _PRETOKEN_RE
+    from operator_zoo.functions.bpe import _PRETOKEN_RE
 
     out = {"corpus_sig": [], "doc_id": [], "bpe_tokens": []}
     for sf_dir in SF_DIRS:
@@ -343,7 +345,7 @@ def gen_bpe_token_ids() -> None:
     # independent learner + vocab + one-at-a-time encoder (see docstring)
     from independent_kernels import independent_encode_word
 
-    from pdf_to_xls_vision_spark.functions.bpe import _PRETOKEN_RE
+    from operator_zoo.functions.bpe import _PRETOKEN_RE
 
     out = {"corpus_sig": [], "doc_id": [], "pos": [], "token_id": []}
     for sf_dir in SF_DIRS:

@@ -6,11 +6,6 @@ floats rounded to 9 places). Prints one line per query and a final
 summary; exits non-zero on any mismatch.
 
 Usage: python scripts/rehearse_correctness.py [sf_dir] [only_prefix]
-       python scripts/rehearse_correctness.py [sf_dir] --first N
-
-``--first N`` runs the first N registry entries in INSERTION order —
-the exact window the correctness driver hard-checks (positions 0..N-1)
-— instead of a sorted prefix filter.
 """
 
 from __future__ import annotations
@@ -61,11 +56,7 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')"
         )
-    if prefix == "--first":
-        n_first = int(sys.argv[3]) if len(sys.argv) > 3 else 50
-        names = list(QUERIES)[:n_first]
-    else:
-        names = sorted(n for n in QUERIES if n.startswith(prefix))
+    names = sorted(n for n in QUERIES if n.startswith(prefix))
     fails = []
     for name in names:
         t0 = time.time()
@@ -73,24 +64,19 @@ def main() -> int:
             sdf = QUERIES[name](spark, sf_dir)
             s_cols = sdf.columns
             s_rows = [tuple(r) for r in sdf.collect()]
-            for c in getattr(sdf, "_ptxv_persisted", []):
-                c.unpersist()
-            if name not in ORACLES:
-                status = f"rows-only ({len(s_rows)})"
+            res = con.execute(ORACLES[name])
+            d_cols = [d[0] for d in res.description]
+            d_rows = res.fetchall()
+            if sorted(s_cols) != sorted(d_cols):
+                status = f"SCHEMA MISMATCH {s_cols} vs {d_cols}"
+                fails.append(name)
+            elif _rowset(s_cols, s_rows) != _rowset(d_cols, d_rows):
+                status = (
+                    f"VALUE MISMATCH ({len(s_rows)} vs {len(d_rows)} rows)"
+                )
+                fails.append(name)
             else:
-                res = con.execute(ORACLES[name])
-                d_cols = [d[0] for d in res.description]
-                d_rows = res.fetchall()
-                if sorted(s_cols) != sorted(d_cols):
-                    status = f"SCHEMA MISMATCH {s_cols} vs {d_cols}"
-                    fails.append(name)
-                elif _rowset(s_cols, s_rows) != _rowset(d_cols, d_rows):
-                    status = (
-                        f"VALUE MISMATCH ({len(s_rows)} vs {len(d_rows)} rows)"
-                    )
-                    fails.append(name)
-                else:
-                    status = f"ok ({len(s_rows)} rows)"
+                status = f"ok ({len(s_rows)} rows)"
         except Exception as exc:  # surface, keep going
             status = f"ERROR {type(exc).__name__}: {exc}"
             fails.append(name)

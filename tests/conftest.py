@@ -7,9 +7,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: Parametrized oracle checks whose Spark side replays multi-step
-#: training or a streaming job — marked slow here because the slow
-#: marker cannot be attached to a single parametrization inline.
+#: Parametrized oracle checks whose Spark side runs the full
+#: extraction pipeline, or replays multi-step training or a streaming
+#: job — marked slow here because the slow marker cannot be attached
+#: to a single parametrization inline.
 _SLOW_QUERY_PARAMS = (
     "[ann_kmeans_cells]",
     "[ann_topk_ivf_kmeans]",

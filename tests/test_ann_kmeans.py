@@ -23,7 +23,7 @@ def _blob_df(spark, k=3, per=20, dim=8, seed=7):
 
 
 def test_kmeans_recovers_separated_blobs(spark):
-    from pdf_to_xls_vision_spark.functions.ann import assign_cells, kmeans_train
+    from operator_zoo.functions.ann import assign_cells, kmeans_train
 
     df = _blob_df(spark)
     cents = kmeans_train(df, k=3, iterations=4)
@@ -37,7 +37,7 @@ def test_kmeans_recovers_separated_blobs(spark):
 
 
 def test_kmeans_deterministic(spark):
-    from pdf_to_xls_vision_spark.functions.ann import kmeans_train
+    from operator_zoo.functions.ann import kmeans_train
 
     df = _blob_df(spark, seed=11)
     a = kmeans_train(df, k=3, iterations=3)
@@ -48,7 +48,7 @@ def test_kmeans_deterministic(spark):
 def test_kmeans_empty_cell_keeps_centroid(spark):
     """With k larger than the number of distinct points, surplus cells
     must keep their init centroid instead of crashing or drifting."""
-    from pdf_to_xls_vision_spark.functions.ann import kmeans_train
+    from operator_zoo.functions.ann import kmeans_train
 
     rows = [(i, [1.0, 1.0]) for i in range(3)] + [(10 + i, [5.0, 5.0]) for i in range(3)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
@@ -61,7 +61,7 @@ def test_kmeans_empty_cell_keeps_centroid(spark):
 def test_ivf_kmeans_topk_matches_in_cell_brute(spark):
     """Within a cell, IVF ranking must equal brute force restricted to
     that cell (the IVF approximation is only the cell restriction)."""
-    from pdf_to_xls_vision_spark.functions.ann import (
+    from operator_zoo.functions.ann import (
         assign_cells,
         kmeans_train,
         topk_dot_quantized,
@@ -92,7 +92,7 @@ def test_ivf_kmeans_topk_matches_in_cell_brute(spark):
 def test_nprobe_full_equals_brute(spark):
     """nprobe == n_cells scans every cell, so IVF must equal exact
     brute force — the strongest multi-probe correctness check."""
-    from pdf_to_xls_vision_spark.functions.ann import (
+    from operator_zoo.functions.ann import (
         topk_dot_quantized,
         topk_ivf_kmeans,
     )
@@ -108,7 +108,7 @@ def test_nprobe_full_equals_brute(spark):
 
 def test_nprobe_monotone_recall(spark):
     """Recall vs brute is non-decreasing in nprobe."""
-    from pdf_to_xls_vision_spark.functions.ann import (
+    from operator_zoo.functions.ann import (
         topk_dot_quantized,
         topk_ivf_kmeans,
     )
@@ -132,7 +132,7 @@ def test_nprobe_monotone_recall(spark):
 
 
 def _cell_sizes(spark, df, cents):
-    from pdf_to_xls_vision_spark.functions.ann import assign_cells
+    from operator_zoo.functions.ann import assign_cells
 
     return {
         int(r.cell): int(r.n)
@@ -147,7 +147,7 @@ def test_balanced_training_bounds_hot_cell(spark):
     """On a heavily skewed corpus (one cluster holds ~2/3 of the
     points) the balanced trainer must split the hot cell below the
     balance bound while keeping the cell count at k."""
-    from pdf_to_xls_vision_spark.functions.ann import (
+    from operator_zoo.functions.ann import (
         kmeans_train,
         kmeans_train_balanced,
         make_blob_embeddings,
@@ -177,7 +177,7 @@ def test_balanced_training_bounds_hot_cell(spark):
 def test_blob_recall_curve_high_at_small_nprobe(spark):
     """On clusterable data (the honest fixture for IVF quality) the
     trained quantizer reaches recall@5 >= 0.9 with nprobe << n_cells."""
-    from pdf_to_xls_vision_spark.functions.ann import (
+    from operator_zoo.functions.ann import (
         make_blob_embeddings,
         topk_dot_quantized,
         topk_ivf_kmeans,
@@ -206,7 +206,7 @@ def test_cosine_lsh_recall_on_tight_blobs(spark):
     random-hyperplane LSH must recover nearly all true near-dup pairs
     — P(bit match) = 1 - theta/pi ~ 0.97, so each 8-bit band collides
     w.p. ~0.8 and any-of-3 ~0.99."""
-    from pdf_to_xls_vision_spark.functions.ann import (
+    from operator_zoo.functions.ann import (
         cosine_lsh_pairs,
         make_blob_embeddings,
     )
@@ -220,7 +220,7 @@ def test_cosine_lsh_recall_on_tight_blobs(spark):
     }
     # exact truth: same-blob pairs all have cosine >= 0.99 by
     # construction (noise 0.02 on unit centers)
-    from pdf_to_xls_vision_spark.functions.ann import embedding_near_dups
+    from operator_zoo.functions.ann import embedding_near_dups
 
     truth = {
         (r.vec_a, r.vec_b)
@@ -244,7 +244,7 @@ def test_cosine_lsh_bucket_cap_and_determinism(spark):
     """Degenerate buckets (here: every vector identical, so all
     signatures collide) are dropped by the cap instead of exploding
     quadratically; results are deterministic."""
-    from pdf_to_xls_vision_spark.functions.ann import cosine_lsh_pairs
+    from operator_zoo.functions.ann import cosine_lsh_pairs
 
     rows = [(i, [1.0, 0.5, -0.25, 2.0]) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
@@ -260,7 +260,7 @@ def test_cosine_lsh_bucket_cap_and_determinism(spark):
 def test_balanced_centroids_plug_into_ivf(spark):
     """Pre-trained balanced centroids drop into topk_ivf_kmeans and
     keep recall on the skewed corpus."""
-    from pdf_to_xls_vision_spark.functions.ann import (
+    from operator_zoo.functions.ann import (
         kmeans_train_balanced,
         make_blob_embeddings,
         topk_dot_quantized,
@@ -292,7 +292,7 @@ def test_probe_aware_equals_fixed_nprobe_and_prunes(spark):
     """Bound-pruned search is LOSSLESS: identical rows to the fixed
     nprobe_max fan-out, while visiting fewer cells on clusterable data
     (the nearest cell usually settles the top-k)."""
-    from pdf_to_xls_vision_spark.functions.ann import (
+    from operator_zoo.functions.ann import (
         kmeans_train,
         make_blob_embeddings,
         topk_ivf_kmeans,
@@ -333,7 +333,7 @@ def test_probe_aware_keeps_boundary_ties(spark):
     """On the driver-shaped near-orthogonal noise the bound rarely
     prunes — the result must STILL be identical to the fixed fan-out
     (the lossless claim is unconditional)."""
-    from pdf_to_xls_vision_spark.functions.ann import (
+    from operator_zoo.functions.ann import (
         kmeans_train,
         topk_ivf_kmeans,
         topk_ivf_probe_aware,

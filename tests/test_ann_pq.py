@@ -28,7 +28,7 @@ def _blob_df(spark, k=4, per=25, dim=8, seed=3, interleave=False):
 
 
 def test_pq_train_deterministic(spark):
-    from pdf_to_xls_vision_spark.functions.pq import pq_train
+    from operator_zoo.functions.pq import pq_train
 
     df = _blob_df(spark)
     a = pq_train(df, m=2, k_codes=4, iterations=2, dim=8)
@@ -39,7 +39,7 @@ def test_pq_train_deterministic(spark):
 
 
 def test_pq_geometry_validation(spark):
-    from pdf_to_xls_vision_spark.functions.pq import pq_subspace_bounds
+    from operator_zoo.functions.pq import pq_subspace_bounds
 
     assert pq_subspace_bounds(8, 2) == [(1, 4), (5, 4)]
     with pytest.raises(ValueError):
@@ -47,7 +47,7 @@ def test_pq_geometry_validation(spark):
 
 
 def test_pq_encode_codes_in_range(spark):
-    from pdf_to_xls_vision_spark.functions.pq import pq_encode, pq_train
+    from operator_zoo.functions.pq import pq_encode, pq_train
 
     df = _blob_df(spark)
     books = pq_train(df, m=2, k_codes=4, iterations=2, dim=8)
@@ -61,8 +61,8 @@ def test_pq_reconstruction_beats_random(spark):
     """The trained reconstruction must be much closer to the original
     vector than the worst codebook entry — i.e. encode really picks
     the argmin and training really adapts the codebooks."""
-    from pdf_to_xls_vision_spark.functions.ann import _qvec
-    from pdf_to_xls_vision_spark.functions.pq import (
+    from operator_zoo.functions.ann import _qvec
+    from operator_zoo.functions.pq import (
         pq_code_exprs,
         pq_reconstruct_expr,
         pq_train,
@@ -90,7 +90,7 @@ def test_ivf_pq_recall_on_blobs(spark):
     """Recall@5 of IVF-PQ vs exact quantized-L2 brute force on
     clusterable blobs — the ADC approximation must keep most true
     neighbors when codes are informative."""
-    from pdf_to_xls_vision_spark.functions.pq import topk_ivf_pq
+    from operator_zoo.functions.pq import topk_ivf_pq
 
     df = _blob_df(spark, k=4, per=25)
     probes = df.filter(F.col("vec_id").isin([0, 25, 50, 75]))
@@ -112,8 +112,8 @@ def test_ivf_pq_recall_on_blobs(spark):
 
 
 def test_residual_pq_train_deterministic(spark):
-    from pdf_to_xls_vision_spark.functions.ann import kmeans_train
-    from pdf_to_xls_vision_spark.functions.pq import pq_train_residual
+    from operator_zoo.functions.ann import kmeans_train
+    from operator_zoo.functions.pq import pq_train_residual
 
     df = _blob_df(spark)
     coarse = kmeans_train(df, k=4, iterations=3)
@@ -124,8 +124,8 @@ def test_residual_pq_train_deterministic(spark):
 
 
 def test_residual_encode_carries_cell_and_codes(spark):
-    from pdf_to_xls_vision_spark.functions.ann import kmeans_train
-    from pdf_to_xls_vision_spark.functions.pq import (
+    from operator_zoo.functions.ann import kmeans_train
+    from operator_zoo.functions.pq import (
         pq_encode_residual,
         pq_train_residual,
     )
@@ -148,8 +148,8 @@ def test_residual_pq_tightens_reconstruction(spark):
     are centered with smaller spread. Measured on this deterministic
     fixture: 372,405 vs 507,429 (27% lower); on the sf0.001 corpus
     embeddings at the default 4x16 geometry: 6.8% lower."""
-    from pdf_to_xls_vision_spark.functions.ann import _qvec, kmeans_train
-    from pdf_to_xls_vision_spark.functions.pq import (
+    from operator_zoo.functions.ann import _qvec, kmeans_train
+    from operator_zoo.functions.pq import (
         _codes_from_qv,
         _sqdist_cols,
         pq_code_exprs,
@@ -185,7 +185,7 @@ def test_residual_pq_tightens_reconstruction(spark):
 def test_ivf_pq_residual_recall_on_blobs(spark):
     """Recall@5 of residual IVF-PQ vs exact neighbors on clusterable
     blobs — at least as good as the direct-PQ bar."""
-    from pdf_to_xls_vision_spark.functions.pq import topk_ivf_pq_residual
+    from operator_zoo.functions.pq import topk_ivf_pq_residual
 
     df = _blob_df(spark, k=4, per=25)
     probes = df.filter(F.col("vec_id").isin([0, 25, 50, 75]))
@@ -207,7 +207,7 @@ def test_ivf_pq_residual_recall_on_blobs(spark):
 
 def test_ivf_pq_multiprobe_dedups_pairs(spark):
     """nprobe > 1 must not emit duplicate (query, neighbor) rows."""
-    from pdf_to_xls_vision_spark.functions.pq import topk_ivf_pq
+    from operator_zoo.functions.pq import topk_ivf_pq
 
     df = _blob_df(spark, k=3, per=20)
     probes = df.filter(F.col("vec_id") < 3)

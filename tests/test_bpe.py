@@ -4,7 +4,7 @@ from pyspark.sql import functions as F
 
 
 def test_learn_merges_classic_example():
-    from pdf_to_xls_vision_spark.functions.bpe import learn_merges_from_freqs
+    from operator_zoo.functions.bpe import learn_merges_from_freqs
 
     # Sennrich's canonical toy corpus (word-level freqs)
     wf = [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)]
@@ -18,7 +18,7 @@ def test_learn_merges_classic_example():
 
 
 def test_encode_word_applies_rank_order():
-    from pdf_to_xls_vision_spark.functions.bpe import encode_word
+    from operator_zoo.functions.bpe import encode_word
 
     ranks = {("e", "s"): 0, ("es", "t"): 1, ("l", "o"): 2, ("lo", "w"): 3}
     assert encode_word("newest", ranks) == ["n", "e", "w", "est"]
@@ -27,14 +27,14 @@ def test_encode_word_applies_rank_order():
 
 
 def test_encode_stops_below_min_count():
-    from pdf_to_xls_vision_spark.functions.bpe import learn_merges_from_freqs
+    from operator_zoo.functions.bpe import learn_merges_from_freqs
 
     # all pairs unique -> no merge reaches count 2 -> empty table
     assert learn_merges_from_freqs([("abc", 1)], n_merges=10) == []
 
 
 def test_distributed_counts_match_sequential(spark):
-    from pdf_to_xls_vision_spark.functions.bpe import (
+    from operator_zoo.functions.bpe import (
         bpe_token_counts,
         encode_text,
         learn_merges,
@@ -57,7 +57,7 @@ def test_distributed_counts_match_sequential(spark):
 
 
 def test_merge_reduces_token_count(spark):
-    from pdf_to_xls_vision_spark.functions.bpe import bpe_token_counts, learn_merges
+    from operator_zoo.functions.bpe import bpe_token_counts, learn_merges
 
     docs = spark.createDataFrame(
         [(i, "hello hello hello world world") for i in range(4)],

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import random
 
-from pdf_to_xls_vision_spark.functions.cdc import cdc_apply
+from operator_zoo.functions.cdc import cdc_apply
 
 
 def _model(base, changes):

@@ -14,7 +14,7 @@ from pdf_to_xls_vision_spark.sink.checkpoint import (
     committed_buckets,
     read_committed,
     read_manifest,
-    write_checkpointed,
+    run_checkpointed_extraction,
 )
 
 pytestmark = pytest.mark.slow  # multi-minute module; fast path skips it
@@ -23,8 +23,12 @@ N_BUCKETS = 8
 
 
 @pytest.fixture(scope="module")
-def result_df(spark, tiny_corpus_path):
-    docs = spark.read.parquet(tiny_corpus_path)
+def docs(spark, tiny_corpus_path):
+    return spark.read.parquet(tiny_corpus_path)
+
+
+@pytest.fixture(scope="module")
+def result_df(docs):
     return run_extraction(docs).cache()
 
 
@@ -36,52 +40,56 @@ def _span_set(df):
     }
 
 
-def test_kill_and_rerun_equals_uninterrupted(result_df, tmp_path):
+def test_kill_and_rerun_equals_uninterrupted(docs, result_df, tmp_path):
+    """Kill after 2 of 4 commit groups, rerun: the resume commits only
+    the uncommitted buckets and the committed table equals both an
+    uninterrupted run and the plain extraction result."""
+    spark = docs.sparkSession
     clean_dir = str(tmp_path / "clean")
     crash_dir = str(tmp_path / "crash")
 
-    write_checkpointed(result_df, clean_dir, n_buckets=N_BUCKETS, input_snapshot="tiny")
+    run_checkpointed_extraction(
+        docs, clean_dir, n_buckets=N_BUCKETS, input_snapshot="tiny"
+    )
 
-    # crash after 2 of 4 commit groups
     with pytest.raises(CheckpointAbort):
-        write_checkpointed(
-            result_df,
+        run_checkpointed_extraction(
+            docs,
             crash_dir,
             n_buckets=N_BUCKETS,
             commit_group_size=2,
             fail_after_groups=2,
             input_snapshot="tiny",
         )
-    spark = result_df.sparkSession
     partial = committed_buckets(spark, crash_dir)
     assert len(partial) == 4
 
-    # resume: only uncommitted buckets are rewritten
-    out = write_checkpointed(
-        result_df, crash_dir, n_buckets=N_BUCKETS, input_snapshot="tiny"
+    out = run_checkpointed_extraction(
+        docs, crash_dir, n_buckets=N_BUCKETS, input_snapshot="tiny"
     )
     assert set(out["skipped"]) == partial
     assert set(out["committed"]) == set(range(N_BUCKETS)) - partial
     assert out["attempt"] == 2
 
-    assert _span_set(read_committed(spark, crash_dir)) == _span_set(
-        read_committed(spark, clean_dir)
-    )
+    committed = _span_set(read_committed(spark, crash_dir))
+    assert committed == _span_set(read_committed(spark, clean_dir))
+    assert committed == _span_set(result_df.select("doc_id", "spans"))
 
 
-def test_rerun_is_noop(result_df, tmp_path):
+def test_rerun_is_noop(docs, tmp_path):
     out_dir = str(tmp_path / "noop")
-    write_checkpointed(result_df, out_dir, n_buckets=N_BUCKETS)
-    before = _span_set(read_committed(result_df.sparkSession, out_dir))
-    out = write_checkpointed(result_df, out_dir, n_buckets=N_BUCKETS)
+    run_checkpointed_extraction(docs, out_dir, n_buckets=N_BUCKETS)
+    before = _span_set(read_committed(docs.sparkSession, out_dir))
+    out = run_checkpointed_extraction(docs, out_dir, n_buckets=N_BUCKETS)
     assert out["committed"] == []
-    assert _span_set(read_committed(result_df.sparkSession, out_dir)) == before
+    assert set(out["skipped"]) == set(range(N_BUCKETS))
+    assert _span_set(read_committed(docs.sparkSession, out_dir)) == before
 
 
-def test_manifest_metrics_and_lineage(result_df, tmp_path):
+def test_manifest_metrics_and_lineage(docs, result_df, tmp_path):
     out_dir = str(tmp_path / "metrics")
-    write_checkpointed(
-        result_df, out_dir, n_buckets=N_BUCKETS, input_snapshot="corpus@tiny"
+    run_checkpointed_extraction(
+        docs, out_dir, n_buckets=N_BUCKETS, input_snapshot="corpus@tiny"
     )
     spark = result_df.sparkSession
     m = read_manifest(spark, out_dir)
@@ -101,14 +109,14 @@ def test_manifest_metrics_and_lineage(result_df, tmp_path):
 
 
 @pytest.mark.parametrize("n_buckets", [1, 64])
-def test_manifest_rows_match_committed_spans(result_df, tmp_path, n_buckets):
+def test_manifest_rows_match_committed_spans(docs, tmp_path, n_buckets):
     """One bucket holds every doc; 64 buckets over the tiny corpus
     leave some empty. Either way the manifest has exactly
     MANIFEST_SCHEMA and one row per bucket whose metrics are the sums
     over that bucket's committed span rows."""
-    spark = result_df.sparkSession
+    spark = docs.sparkSession
     out_dir = str(tmp_path / f"schema{n_buckets}")
-    write_checkpointed(result_df, out_dir, n_buckets=n_buckets)
+    run_checkpointed_extraction(docs, out_dir, n_buckets=n_buckets)
     manifest = read_manifest(spark, out_dir)
     assert manifest.schema == StructType.fromDDL(MANIFEST_SCHEMA)
 
@@ -154,36 +162,28 @@ def test_doc_validation_metrics(result_df):
     assert cont.accuracy_pct > 0
 
 
-def test_input_pruned_resume_matches_full_run(spark, tiny_corpus_path, result_df, tmp_path):
-    """run_checkpointed_extraction: kill-and-rerun with the bucket
-    filter on the INPUT scan produces the identical committed table."""
-    from pdf_to_xls_vision_spark.sink.checkpoint import run_checkpointed_extraction
-
-    docs = spark.read.parquet(tiny_corpus_path)
+def test_input_pruned_resume_matches_full_run(docs, result_df, tmp_path):
+    """Kill after the first commit group of 3 buckets (a crash point off
+    the half-way mark), rerun: the bucket filter on the input scan
+    re-extracts only the 5 uncommitted buckets, and the committed table
+    equals the plain extraction result."""
+    spark = docs.sparkSession
     crash_dir = str(tmp_path / "crash_pruned")
-    clean_dir = str(tmp_path / "clean_pruned")
-
-    run_checkpointed_extraction(docs, clean_dir, n_buckets=N_BUCKETS)
 
     with pytest.raises(CheckpointAbort):
         run_checkpointed_extraction(
             docs,
             crash_dir,
             n_buckets=N_BUCKETS,
-            commit_group_size=2,
-            fail_after_groups=2,
+            commit_group_size=3,
+            fail_after_groups=1,
         )
     partial = committed_buckets(spark, crash_dir)
-    assert len(partial) == 4
+    assert len(partial) == 3
 
     out = run_checkpointed_extraction(docs, crash_dir, n_buckets=N_BUCKETS)
     assert set(out["skipped"]) == partial
     assert set(out["committed"]) == set(range(N_BUCKETS)) - partial
-
     assert _span_set(read_committed(spark, crash_dir)) == _span_set(
-        read_committed(spark, clean_dir)
+        result_df.select("doc_id", "spans")
     )
-    # and the pruned-input path agrees with the result-level writer
-    assert _span_set(read_committed(spark, clean_dir)) == _span_set(result_df.select(
-        "doc_id", "spans"
-    ))

@@ -135,63 +135,3 @@ def test_cli_stream_mode(spark, tiny_corpus, tmp_path):
         rc = main([in_dir, "-o", out_dir, "--read-snapshot", "99"])
     assert rc == 0
     assert json.loads(buf.getvalue().strip().splitlines()[-1])["docs"] == 20
-
-
-@pytest.mark.slow
-def test_cli_stream_sessionize_with_custom_gap(spark, tmp_path):
-    """--stream --stream-op sessionize wires gap/watermark end-to-end:
-    a 60s gap splits events two minutes apart into separate sessions."""
-    import io
-    import json
-    import os
-    from contextlib import redirect_stdout
-    from datetime import datetime, timedelta
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pdf_to_xls_vision_spark.cli import main
-
-    t0 = datetime(2024, 1, 1, 10, 0, 0)
-    in_dir = str(tmp_path / "ev_in")
-    out_dir = str(tmp_path / "ev_out")
-    os.makedirs(in_dir)
-    rows = [
-        (5, t0, "c", 1.0),
-        (5, t0 + timedelta(minutes=2), "c", 2.0),
-        (5, t0 + timedelta(hours=5), "c", 0.0),  # watermark advancer
-    ]
-    pq.write_table(
-        pa.table(
-            {
-                "user_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                "event_type": pa.array([r[2] for r in rows], pa.string()),
-                "value": pa.array([r[3] for r in rows], pa.float64()),
-            }
-        ),
-        f"{in_dir}/f1.parquet",
-    )
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        rc = main(
-            [
-                in_dir, "-o", out_dir, "--stream",
-                "--stream-op", "sessionize",
-                "--session-gap", "60",
-                "--session-watermark", "2 minutes",
-            ]
-        )
-    assert rc == 0
-    summary = json.loads(buf.getvalue().strip().splitlines()[-1])
-    assert summary["mode"] == "stream:sessionize"
-    assert summary["gap_seconds"] == 60
-    sessions = sorted(
-        (r.session_start, r.session_end, r.n_events)
-        for r in spark.read.parquet(out_dir).collect()
-    )
-    assert sessions == [
-        (t0, t0, 1),
-        (t0 + timedelta(minutes=2), t0 + timedelta(minutes=2), 1),
-    ]

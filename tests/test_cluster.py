@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 
 def _cc(spark, edges):
-    from pdf_to_xls_vision_spark.functions.cluster import connected_components
+    from operator_zoo.functions.cluster import connected_components
 
     df = spark.createDataFrame(edges, "doc_a string, doc_b string")
     out = connected_components(df)
@@ -42,7 +42,7 @@ def test_two_components_and_self_loop(spark):
 
 
 def test_dedup_clusters_includes_singletons(spark):
-    from pdf_to_xls_vision_spark.functions.cluster import dedup_clusters
+    from operator_zoo.functions.cluster import dedup_clusters
 
     docs = spark.createDataFrame(
         [("a",), ("b",), ("c",), ("lonely",)], "doc_id string"
@@ -61,7 +61,7 @@ def test_converges_in_logarithmic_rounds(spark):
     """A 64-node chain must resolve well within MAX_CC_ROUNDS — the
     O(log n) property that makes this the 100 TB design (naive
     propagation needs 64 rounds here)."""
-    from pdf_to_xls_vision_spark.functions.cluster import connected_components
+    from operator_zoo.functions.cluster import connected_components
 
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(63)]
     df = spark.createDataFrame(edges, "doc_a string, doc_b string")
@@ -75,7 +75,7 @@ def test_raises_loudly_without_fixpoint(spark):
     partially-merged component mapping is a silently wrong answer."""
     import pytest as _pytest
 
-    from pdf_to_xls_vision_spark.functions.cluster import connected_components
+    from operator_zoo.functions.cluster import connected_components
 
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(63)]
     df = spark.createDataFrame(edges, "doc_a string, doc_b string")

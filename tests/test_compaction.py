@@ -2,13 +2,14 @@
 else does — rows, manifest, and resume state are all invariant, and a
 second pass is a no-op."""
 
+import shutil
+
 import pytest
-from pyspark.sql import functions as F
 
 from pdf_to_xls_vision_spark.sink.checkpoint import (
     committed_buckets,
     read_manifest,
-    write_checkpointed,
+    run_checkpointed_extraction,
 )
 from pdf_to_xls_vision_spark.sink.compaction import (
     compact_spans,
@@ -19,22 +20,25 @@ from pdf_to_xls_vision_spark.sink.compaction import (
 N_BUCKETS = 4
 
 
-@pytest.fixture()
-def populated(spark, tmp_path):
-    out = str(tmp_path / "ckpt")
-    rows = [
-        (f"doc{i:04d}", i % 7 + 1, 1, i % 3 == 0, 0, "completed", 90.0 + i % 10)
-        for i in range(400)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "doc_id string, pages_parsed long, n_tables long, "
-        "rotation_corrections boolean, quality_retried long, "
-        "validation_status string, accuracy_pct double",
-    ).withColumn("rotation_corrections", F.col("rotation_corrections").cast("long"))
+@pytest.fixture(scope="module")
+def committed_table(spark, tiny_corpus_path, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("compaction") / "ckpt")
     # 8 writer tasks x 4 buckets -> every bucket directory collects
     # multiple small files, the state a long ingest run accumulates
-    write_checkpointed(df.repartition(8), out, n_buckets=N_BUCKETS)
+    run_checkpointed_extraction(
+        spark.read.parquet(tiny_corpus_path),
+        out,
+        n_buckets=N_BUCKETS,
+        page_partitions=8,
+    )
+    return out
+
+
+@pytest.fixture()
+def populated(committed_table, tmp_path):
+    """A private copy of the committed table: compaction rewrites it."""
+    out = str(tmp_path / "ckpt")
+    shutil.copytree(committed_table, out)
     return out
 
 

@@ -22,7 +22,7 @@ def test_composite_totals_match_per_lang_on_proportional_budgets(spark):
     """With budgets proportionally allocated (budget/n_buckets per
     bucket) and bucket-independent quality, the composite-shard run
     keeps exactly the same totals as the per-language run."""
-    from pdf_to_xls_vision_spark.functions.curation import (
+    from operator_zoo.functions.curation import (
         budget_sample,
         budget_sample_composite,
     )
@@ -48,7 +48,7 @@ def test_composite_totals_match_per_lang_on_proportional_budgets(spark):
 def test_composite_respects_per_bucket_budget_and_ranking(spark):
     """Within every (shard, bucket) the kept set is the greedy quality
     prefix and never exceeds budget/n_buckets tokens."""
-    from pdf_to_xls_vision_spark.functions.curation import (
+    from operator_zoo.functions.curation import (
         budget_sample_composite,
     )
 
@@ -77,7 +77,7 @@ def test_composite_respects_per_bucket_budget_and_ranking(spark):
 
 
 def test_decontaminate_flags_exact_gram_overlap(spark):
-    from pdf_to_xls_vision_spark.functions.curation import decontaminate
+    from operator_zoo.functions.curation import decontaminate
 
     bench_text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = [
@@ -105,7 +105,7 @@ def test_decontaminate_flags_exact_gram_overlap(spark):
 
 
 def test_decontaminate_counts_distinct_shared_grams(spark):
-    from pdf_to_xls_vision_spark.functions.curation import decontaminate
+    from operator_zoo.functions.curation import decontaminate
 
     # a doc repeating the benchmark phrase twice still counts the
     # shared grams once (distinct per-doc gram set)

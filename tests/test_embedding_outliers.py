@@ -9,7 +9,7 @@ import math
 
 import numpy as np
 
-from pdf_to_xls_vision_spark.functions.ann import embedding_outliers
+from operator_zoo.functions.ann import embedding_outliers
 
 
 def _model(rows, k=5):

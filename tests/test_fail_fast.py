@@ -10,10 +10,7 @@ import pytest
 
 from pdf_to_xls_vision_spark.cli import build_parser
 from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
-from pdf_to_xls_vision_spark.sink.checkpoint import (
-    run_checkpointed_extraction,
-    write_checkpointed,
-)
+from pdf_to_xls_vision_spark.sink.checkpoint import run_checkpointed_extraction
 from pdf_to_xls_vision_spark.streaming.ingest import stream_extraction
 
 _BAD_COUNTS = [
@@ -34,14 +31,6 @@ def test_checkpointed_extraction_rejects(docs, tmp_path, kwargs, name):
     out_dir = str(tmp_path / "out")
     with pytest.raises(ValueError, match=name):
         run_checkpointed_extraction(docs, out_dir, **kwargs)
-    assert not os.path.exists(out_dir)
-
-
-@pytest.mark.parametrize("kwargs,name", _BAD_COUNTS)
-def test_write_checkpointed_rejects(docs, tmp_path, kwargs, name):
-    out_dir = str(tmp_path / "out")
-    with pytest.raises(ValueError, match=name):
-        write_checkpointed(docs, out_dir, **kwargs)
     assert not os.path.exists(out_dir)
 
 

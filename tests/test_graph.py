@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from pdf_to_xls_vision_spark.functions.graph import PR_SCALE, pagerank_fixed
+from operator_zoo.functions.graph import PR_SCALE, pagerank_fixed
 
 
 def _model(edges, iters=3, damping_pct=85, scale=PR_SCALE):
@@ -99,7 +99,7 @@ def test_pagerank_persisted_sink_same_results(spark):
 
 from itertools import combinations
 
-from pdf_to_xls_vision_spark.functions.graph import triangle_counts
+from operator_zoo.functions.graph import triangle_counts
 
 
 def _tri_model(edges):

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import re
 
-from pdf_to_xls_vision_spark.functions.html import (
+from operator_zoo.functions.html import (
     main_content_of,
     strip_tags_expr,
     synthesize_html,
@@ -61,7 +61,7 @@ def test_strip_tags_expr_spark(spark):
 
 def test_block_thresholds_are_documented_values():
     # pin the public-heuristic constants the corpus generator relies on
-    from pdf_to_xls_vision_spark.functions import html as H
+    from operator_zoo.functions import html as H
 
     assert (H.MIN_BLOCK_CHARS, H.MAX_LINK_DENSITY, H.MIN_TEXT_DENSITY) == (
         40,

@@ -36,7 +36,7 @@ def _texts(sf_dir):
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
 def test_winnow_engine_equals_independent_on_corpus(sf_dir):
-    from pdf_to_xls_vision_spark.functions.text import _winnow
+    from operator_zoo.functions.text import _winnow
 
     for text in _texts(sf_dir):
         toks = text.split()
@@ -44,7 +44,7 @@ def test_winnow_engine_equals_independent_on_corpus(sf_dir):
 
 
 def test_winnow_micro_cases():
-    from pdf_to_xls_vision_spark.functions.text import _winnow
+    from operator_zoo.functions.text import _winnow
 
     cases = [
         [],                                # empty
@@ -66,7 +66,7 @@ def test_winnow_micro_cases():
 
 
 def _corpus_word_freq(sf_dir):
-    from pdf_to_xls_vision_spark.functions.bpe import (
+    from operator_zoo.functions.bpe import (
         MAX_TRAIN_WORDS,
         _PRETOKEN_RE,
     )
@@ -81,7 +81,7 @@ def _corpus_word_freq(sf_dir):
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
 def test_bpe_learning_and_encoding_equal_on_corpus(sf_dir):
-    from pdf_to_xls_vision_spark.functions.bpe import (
+    from operator_zoo.functions.bpe import (
         N_MERGES,
         _PRETOKEN_RE,
         build_vocab,
@@ -110,7 +110,7 @@ def test_bpe_learning_and_encoding_equal_on_corpus(sf_dir):
 
 
 def test_bpe_learning_micro_tie_breaks():
-    from pdf_to_xls_vision_spark.functions.bpe import (
+    from operator_zoo.functions.bpe import (
         encode_word,
         learn_merges_from_freqs,
     )

@@ -11,16 +11,16 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.functions.index import (
+from operator_zoo.functions.index import (
     SEARCH_SCALE,
     posting_table,
     search_topk,
 )
-from pdf_to_xls_vision_spark.functions.profile import (
+from operator_zoo.functions.profile import (
     numeric_histogram,
     profile_numeric_columns,
 )
-from pdf_to_xls_vision_spark.functions.scoring import score_documents
+from operator_zoo.functions.scoring import score_documents
 
 DOCS = [
     (1, "the cat sat on the mat"),
@@ -167,7 +167,7 @@ def test_bigram_lm_scores_hand_model(spark):
     model c(a,b)=2 c(b,a)=1 c(a,c)=1; contexts c(a)=3 c(b)=1.
     ratios (<<20, div): (a,b)=699050 -> 19 bits; (b,a)=2^20 -> 20;
     (a,c)=349525 -> 18. Single-token and empty docs are excluded."""
-    from pdf_to_xls_vision_spark.functions.scoring import bigram_lm_scores
+    from operator_zoo.functions.scoring import bigram_lm_scores
 
     df = spark.createDataFrame(
         [(1, "a b a c"), (2, "a b"), (3, "z"), (4, "")],
@@ -185,7 +185,7 @@ def test_bigram_lm_probable_text_scores_higher(spark):
     """The perplexity-filter property: text made of frequent
     transitions outscores text with rare transitions from the same
     contexts."""
-    from pdf_to_xls_vision_spark.functions.scoring import bigram_lm_scores
+    from operator_zoo.functions.scoring import bigram_lm_scores
 
     rows = [(i, "u v") for i in range(10)] + [(99, "u w")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -194,7 +194,7 @@ def test_bigram_lm_probable_text_scores_higher(spark):
 
 
 def test_bigram_lm_partitioning_independent(spark):
-    from pdf_to_xls_vision_spark.functions.scoring import bigram_lm_scores
+    from operator_zoo.functions.scoring import bigram_lm_scores
 
     rows = [(i, f"w{i % 3} w{(i + 1) % 4} w{i % 5} end") for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")

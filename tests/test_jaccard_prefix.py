@@ -11,7 +11,7 @@ import random
 
 import pytest
 
-from pdf_to_xls_vision_spark.functions.dedup import jaccard_prefix_join
+from operator_zoo.functions.dedup import jaccard_prefix_join
 
 
 def _shingles(text, n):

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from pdf_to_xls_vision_spark.functions.dedup import corpus_line_dedup
+from operator_zoo.functions.dedup import corpus_line_dedup
 
 
 def _model(docs, lw=5, min_total=3, min_docs=2):

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from pdf_to_xls_vision_spark.functions.dedup import duplicate_ngram_spans
+from operator_zoo.functions.dedup import duplicate_ngram_spans
 
 
 def _model(rows: list[tuple[int, str]], n: int) -> set[tuple[int, int, int, int]]:

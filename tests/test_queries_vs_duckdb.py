@@ -1,6 +1,8 @@
 """Driver-contract mirror: every queries()/oracle_sql() pair must match
 DuckDB on row count, column names, and order-insensitive values —
-exactly what the round driver records in CORRECTNESS_r{N}.json."""
+exactly what the round driver records in CORRECTNESS_r{N}.json. The
+operator zoo's registry (operator_zoo/queries.py) is held to the same
+check."""
 
 import math
 
@@ -44,15 +46,18 @@ def _rowset(cols, rows):
     )
 
 
-def _pairs():
-    from pdf_to_xls_vision_spark.plans.queries import ORACLES, QUERIES
+def _registry():
+    """The engine's registry plus the zoo's: (builders, oracles)."""
+    from operator_zoo import queries as zoo
+    from pdf_to_xls_vision_spark.plans import queries as engine
 
-    return sorted(ORACLES.keys()), QUERIES, ORACLES
+    assert not set(engine.QUERIES) & set(zoo.QUERIES)
+    return {**engine.QUERIES, **zoo.QUERIES}, {**engine.ORACLES, **zoo.ORACLES}
 
 
-@pytest.mark.parametrize("name", _pairs()[0])
+@pytest.mark.parametrize("name", sorted(_registry()[1]))
 def test_query_matches_duckdb(name, spark, ddb):
-    from pdf_to_xls_vision_spark.plans.queries import ORACLES, QUERIES
+    QUERIES, ORACLES = _registry()
 
     sdf = QUERIES[name](spark, SF_DIR)
     s_cols = sdf.columns
@@ -75,9 +80,17 @@ def test_query_matches_duckdb(name, spark, ddb):
         raise AssertionError(f"{name}: value mismatch, first diffs {diffs}")
 
 
+def test_every_query_has_an_oracle():
+    """The driver contract pairs each ``queries()`` entry with an
+    ``oracle_sql()`` entry of the same name."""
+    import __spark_entry__
+
+    assert set(__spark_entry__.queries()) == set(__spark_entry__.oracle_sql())
+
+
 def test_rows_only_queries_run(spark):
     """Entries without an oracle still execute and return stable schemas."""
-    from pdf_to_xls_vision_spark.plans.queries import ORACLES, QUERIES
+    QUERIES, ORACLES = _registry()
 
     for name in sorted(set(QUERIES) - set(ORACLES)):
         df = QUERIES[name](spark, SF_DIR)
@@ -108,7 +121,7 @@ def test_sessionize_timezone_independent(spark, ddb):
 def test_lang_id_multilingual_fixture(spark):
     """Broadened lang-ID over hand-built sentences in all 11 supported
     languages plus an undetermined string."""
-    from pdf_to_xls_vision_spark.functions.text import lang_id_expr
+    from operator_zoo.functions.text import lang_id_expr
 
     samples = {
         "de": "der hund ist nicht mit der katze und das haus",

@@ -11,9 +11,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.functions.ann import semdedup_prune
-from pdf_to_xls_vision_spark.functions.dedup import banded_hamming_pairs
-from pdf_to_xls_vision_spark.functions.temporal import asof_join_nearest
+from operator_zoo.functions.ann import semdedup_prune
+from operator_zoo.functions.dedup import banded_hamming_pairs
+from operator_zoo.functions.temporal import asof_join_nearest
 
 
 # ---------------------------------------------------------------------------
@@ -187,7 +187,7 @@ def test_ewma_query_model(spark, tmp_path):
     )
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")  # Spark rejects NANOS
     pdf.to_parquet(tmp_path / "events.parquet")
-    from pdf_to_xls_vision_spark.plans.queries import EWMA_DEPTH, q_ewma_value
+    from operator_zoo.queries import EWMA_DEPTH, q_ewma_value
 
     got = {
         r["event_id"]: r["ewma_value"]
@@ -212,7 +212,7 @@ def test_ewma_query_model(spark, tmp_path):
 def test_pmi_bigrams_model(spark):
     from collections import Counter
 
-    from pdf_to_xls_vision_spark.functions.text import pmi_bigrams
+    from operator_zoo.functions.text import pmi_bigrams
 
     texts = [
         "new york is a big city",
@@ -249,7 +249,7 @@ def test_pmi_bigrams_model(spark):
 # ---------------------------------------------------------------------------
 
 def test_equidepth_histogram_balanced_and_total(spark):
-    from pdf_to_xls_vision_spark.functions.profile import equidepth_histogram
+    from operator_zoo.functions.profile import equidepth_histogram
 
     # 800 distinct values -> perfectly balanced 8 x 100
     df = spark.createDataFrame(
@@ -265,7 +265,7 @@ def test_equidepth_histogram_balanced_and_total(spark):
 
 
 def test_equidepth_histogram_ties_lower_bucket(spark):
-    from pdf_to_xls_vision_spark.functions.profile import equidepth_histogram
+    from operator_zoo.functions.profile import equidepth_histogram
 
     # massive tie at one value: the tied mass lands in ONE bucket
     df = spark.createDataFrame(
@@ -296,7 +296,7 @@ def test_minhash_estimate_identical_docs(spark, tmp_path):
             "n_chars": [22] * 3,
         }
     ).to_parquet(tmp_path / "documents.parquet")
-    from pdf_to_xls_vision_spark.plans.queries import q_minhash_estimate
+    from operator_zoo.queries import q_minhash_estimate
 
     rows = {(r["doc_a"], r["doc_b"]): r for r in q_minhash_estimate(spark, str(tmp_path)).collect()}
     assert (1, 2) in rows

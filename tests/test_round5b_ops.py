@@ -12,8 +12,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.functions.curation import dsir_select
-from pdf_to_xls_vision_spark.functions.graph import label_propagation
+from operator_zoo.functions.curation import dsir_select
+from operator_zoo.functions.graph import label_propagation
 
 
 # ---------------------------------------------------------------------------
@@ -228,7 +228,7 @@ def _ensemble_model(docs, n_bins):
 
 
 def test_quality_ensemble_matches_model(spark):
-    from pdf_to_xls_vision_spark.functions.scoring import quality_ensemble
+    from operator_zoo.functions.scoring import quality_ensemble
 
     docs = [
         (1, "a a a a a a"),
@@ -245,7 +245,7 @@ def test_quality_ensemble_matches_model(spark):
 
 
 def test_quality_ensemble_rejects_bad_bins(spark):
-    from pdf_to_xls_vision_spark.functions.scoring import quality_ensemble
+    from operator_zoo.functions.scoring import quality_ensemble
 
     df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
     with pytest.raises(ValueError):
@@ -273,7 +273,7 @@ def _kcore_model(edges, k):
 
 
 def test_kcore_matches_model(spark):
-    from pdf_to_xls_vision_spark.functions.graph import kcore_membership
+    from operator_zoo.functions.graph import kcore_membership
 
     # a 4-clique (3-core) with a pendant path hanging off it, plus a
     # triangle (2-core only) — peeling must strip the path AND the
@@ -293,7 +293,7 @@ def test_kcore_matches_model(spark):
 
 
 def test_kcore_fixpoint_early_exit_equals_full_unroll(spark):
-    from pdf_to_xls_vision_spark.functions.graph import kcore_membership
+    from operator_zoo.functions.graph import kcore_membership
 
     # long chain into a triangle: k=2 peels one chain node per round,
     # so rounds larger than needed must not change the answer
@@ -309,7 +309,7 @@ def test_kcore_fixpoint_early_exit_equals_full_unroll(spark):
 
 
 def test_kcore_rejects_bad_params(spark):
-    from pdf_to_xls_vision_spark.functions.graph import kcore_membership
+    from operator_zoo.functions.graph import kcore_membership
 
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
     with pytest.raises(ValueError):
@@ -346,7 +346,7 @@ def _containment_model(docs, t_pct, shingle):
 
 @pytest.mark.parametrize("t_pct", [70, 90, 100])
 def test_containment_join_matches_brute_force(spark, t_pct):
-    from pdf_to_xls_vision_spark.functions.dedup import (
+    from operator_zoo.functions.dedup import (
         containment_prefix_join,
     )
 
@@ -375,7 +375,7 @@ def test_containment_join_matches_brute_force(spark, t_pct):
 
 
 def test_containment_join_rejects_bad_threshold(spark):
-    from pdf_to_xls_vision_spark.functions.dedup import (
+    from operator_zoo.functions.dedup import (
         containment_prefix_join,
     )
 
@@ -389,7 +389,7 @@ def test_containment_join_rejects_bad_threshold(spark):
 # ---------------------------------------------------------------------------
 
 def test_winsorize_stats_matches_model(spark):
-    from pdf_to_xls_vision_spark.functions.profile import winsorize_stats
+    from operator_zoo.functions.profile import winsorize_stats
 
     vals = {
         "a": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 100.0],  # spike at top
@@ -429,7 +429,7 @@ def test_winsorize_stats_matches_model(spark):
 
 
 def test_winsorize_stats_rejects_bad_cuts(spark):
-    from pdf_to_xls_vision_spark.functions.profile import winsorize_stats
+    from operator_zoo.functions.profile import winsorize_stats
 
     df = spark.createDataFrame([("a", 1.0)], "grp string, value double")
     with pytest.raises(ValueError):
@@ -441,7 +441,7 @@ def test_winsorize_stats_rejects_bad_cuts(spark):
 # ---------------------------------------------------------------------------
 
 def test_forward_fill_matches_model(spark):
-    from pdf_to_xls_vision_spark.functions.temporal import forward_fill
+    from operator_zoo.functions.temporal import forward_fill
 
     rows = [
         # (id, key, t, v)
@@ -466,7 +466,7 @@ def test_forward_fill_matches_model(spark):
 
 
 def test_forward_fill_tiebreak_deterministic(spark):
-    from pdf_to_xls_vision_spark.functions.temporal import forward_fill
+    from operator_zoo.functions.temporal import forward_fill
 
     # two observations at the SAME timestamp: the tiebreak column
     # decides which one a later row inherits, independent of
@@ -490,7 +490,7 @@ def test_forward_fill_tiebreak_deterministic(spark):
 def test_streaming_heavy_hitters_batch_parity(spark, tmp_path):
     from pyspark.sql import functions as SF
 
-    from pdf_to_xls_vision_spark.streaming.heavy_hitters import (
+    from operator_zoo.streaming.heavy_hitters import (
         token_heavy_hitters,
     )
 
@@ -552,7 +552,7 @@ def test_streaming_heavy_hitters_batch_parity(spark, tmp_path):
 
 
 def test_streaming_heavy_hitters_rejects_bad_min_count(spark):
-    from pdf_to_xls_vision_spark.streaming.heavy_hitters import (
+    from operator_zoo.streaming.heavy_hitters import (
         token_heavy_hitters,
     )
 
@@ -566,7 +566,7 @@ def test_streaming_heavy_hitters_rejects_bad_min_count(spark):
 # ---------------------------------------------------------------------------
 
 def test_conversion_labels_leakage_and_window_rules(spark):
-    from pdf_to_xls_vision_spark.plans.queries import (
+    from operator_zoo.queries import (
         q_events_conversion_labels,
     )
     import tempfile, os
@@ -619,7 +619,7 @@ def test_conversion_labels_leakage_and_window_rules(spark):
 # ---------------------------------------------------------------------------
 
 def test_revenue_contribution_shares(spark):
-    from pdf_to_xls_vision_spark.plans.queries import (
+    from operator_zoo.queries import (
         q_agg_revenue_contribution,
     )
 
@@ -670,7 +670,7 @@ def _neg_model(rows, k, n_buckets, exclude_same_source=True):
 
 
 def test_negative_samples_matches_model(spark):
-    from pdf_to_xls_vision_spark.functions.curation import negative_samples
+    from operator_zoo.functions.curation import negative_samples
 
     rows = [(i, f"src{i % 4}") for i in range(60)]
     df = spark.createDataFrame(rows, "doc_id long, source string")
@@ -685,7 +685,7 @@ def test_negative_samples_matches_model(spark):
 
 
 def test_negative_samples_partitioning_independent(spark):
-    from pdf_to_xls_vision_spark.functions.curation import negative_samples
+    from operator_zoo.functions.curation import negative_samples
 
     rows = [(i, f"src{i % 3}") for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, source string")
@@ -695,7 +695,7 @@ def test_negative_samples_partitioning_independent(spark):
 
 
 def test_negative_samples_guards(spark):
-    from pdf_to_xls_vision_spark.functions.curation import negative_samples
+    from operator_zoo.functions.curation import negative_samples
 
     df = spark.createDataFrame([(1, "a")], "doc_id long, source string")
     with pytest.raises(ValueError):

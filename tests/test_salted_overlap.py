@@ -9,8 +9,8 @@ from itertools import combinations
 
 import pytest
 
-from pdf_to_xls_vision_spark.functions.dedup import pairwise_set_similarity
-from pdf_to_xls_vision_spark.functions.relational import salted_join
+from operator_zoo.functions.dedup import pairwise_set_similarity
+from operator_zoo.functions.relational import salted_join
 
 
 def _skewed(spark):

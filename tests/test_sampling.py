@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.functions.curation import (
+from operator_zoo.functions.curation import (
     hash_sample,
     quota_sample,
     shuffle_order,
@@ -87,7 +87,7 @@ def test_shuffle_order_rejects_bad_buckets(spark, docs):
 # ---------------------------------------------------------------------------
 
 def test_chunk_documents_covers_text_with_overlap(spark):
-    from pdf_to_xls_vision_spark.functions.curation import chunk_documents
+    from operator_zoo.functions.curation import chunk_documents
 
     rows = [
         (1, "a" * 2000),   # (2000-100+699)//700 = 3 chunks
@@ -112,7 +112,7 @@ def test_chunk_documents_covers_text_with_overlap(spark):
 
 
 def test_chunk_documents_rejects_bad_overlap(spark):
-    from pdf_to_xls_vision_spark.functions.curation import chunk_documents
+    from operator_zoo.functions.curation import chunk_documents
 
     df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     with pytest.raises(ValueError):
@@ -120,7 +120,7 @@ def test_chunk_documents_rejects_bad_overlap(spark):
 
 
 def test_pack_sequences_token_ranges_are_exact(spark):
-    from pdf_to_xls_vision_spark.functions.curation import pack_sequences
+    from operator_zoo.functions.curation import pack_sequences
 
     rows = [(i, " ".join(["tok"] * (30 + i))) for i in range(20)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -144,7 +144,7 @@ def test_pack_sequences_token_ranges_are_exact(spark):
 
 
 def test_assign_splits_partition_invariant_and_total(spark, docs):
-    from pdf_to_xls_vision_spark.functions.curation import assign_splits
+    from operator_zoo.functions.curation import assign_splits
 
     weights = [("train", 0.8), ("val", 0.1), ("test", 0.1)]
     a = {r["doc_id"]: r["split"] for r in assign_splits(docs, weights).collect()}
@@ -165,7 +165,7 @@ def test_assign_splits_partition_invariant_and_total(spark, docs):
 def test_assign_splits_rejects_bad_weights(spark, docs):
     import pytest as _pytest
 
-    from pdf_to_xls_vision_spark.functions.curation import assign_splits
+    from operator_zoo.functions.curation import assign_splits
 
     with _pytest.raises(ValueError):
         assign_splits(docs, [("train", 1.0), ("val", 0.0)])
@@ -174,7 +174,7 @@ def test_assign_splits_rejects_bad_weights(spark, docs):
 
 
 def test_isqrt_expr_exact_on_boundaries(spark):
-    from pdf_to_xls_vision_spark.functions.curation import _isqrt_expr
+    from operator_zoo.functions.curation import _isqrt_expr
 
     import math
 
@@ -192,7 +192,7 @@ def test_temperature_mix_upweights_small_sources(spark):
     its raw proportional share. Weights 100 vs 10000 -> isqrt 10 vs
     100 -> small share 10/110 = 9.1% of the budget (proportional
     would be ~1%)."""
-    from pdf_to_xls_vision_spark.functions.curation import temperature_mix
+    from operator_zoo.functions.curation import temperature_mix
 
     rows = [(i, "small", 1) for i in range(100)] + [
         (1000 + i, "big", 1) for i in range(10000)
@@ -208,7 +208,7 @@ def test_temperature_mix_upweights_small_sources(spark):
 
 
 def test_temperature_mix_deterministic_and_validated(spark):
-    from pdf_to_xls_vision_spark.functions.curation import temperature_mix
+    from operator_zoo.functions.curation import temperature_mix
 
     rows = [(i, f"s{i % 5}", (i % 7) + 1) for i in range(500)]
     df = spark.createDataFrame(rows, "doc_id long, source string, n_chars long")
@@ -227,8 +227,8 @@ def test_domain_filter_verdicts_match_doc_scores(spark):
     verdicts."""
     from collections import defaultdict
 
-    from pdf_to_xls_vision_spark.functions.curation import domain_filter
-    from pdf_to_xls_vision_spark.functions.scoring import score_documents
+    from operator_zoo.functions.curation import domain_filter
+    from operator_zoo.functions.scoring import score_documents
 
     rows = [
         (i, f"src{i % 3}", f"alpha beta w{i % 11} w{i % 5} gamma")
@@ -274,7 +274,7 @@ def _sps_model(rows, k, salt="wsample"):
 
 
 def test_weighted_sample_matches_sequential_model(spark):
-    from pdf_to_xls_vision_spark.functions.curation import weighted_sample
+    from operator_zoo.functions.curation import weighted_sample
 
     rows = [(i, (i % 7) + 1) for i in range(500)]
     df = spark.createDataFrame(rows, "doc_id long, weight long")
@@ -290,7 +290,7 @@ def test_weighted_sample_matches_sequential_model(spark):
 def test_weighted_sample_inclusion_tracks_weight(spark):
     """Across independent salts, weight-4 items should be sampled
     ~4x as often as weight-1 items (πps property, loose band)."""
-    from pdf_to_xls_vision_spark.functions.curation import weighted_sample
+    from operator_zoo.functions.curation import weighted_sample
 
     rows = [(i, 4 if i < 250 else 1) for i in range(500)]
     df = spark.createDataFrame(rows, "doc_id long, weight long")
@@ -309,7 +309,7 @@ def test_weighted_sample_inclusion_tracks_weight(spark):
 
 
 def test_weighted_sample_grouped_partitioning_independent(spark):
-    from pdf_to_xls_vision_spark.functions.curation import weighted_sample
+    from operator_zoo.functions.curation import weighted_sample
 
     rows = [(("a" if i % 2 else "b"), i, i % 5 + 1) for i in range(300)]
     df = spark.createDataFrame(rows, "g string, doc_id long, weight long")
@@ -333,7 +333,7 @@ def test_weighted_sample_validation(spark):
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import SparkRuntimeException
 
-    from pdf_to_xls_vision_spark.functions.curation import weighted_sample
+    from operator_zoo.functions.curation import weighted_sample
 
     df = spark.createDataFrame(
         [(1, 2), (2, 0)], "doc_id long, weight long"

@@ -8,8 +8,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.functions.hashing import h60
-from pdf_to_xls_vision_spark.functions.sketches import (
+from operator_zoo.functions.hashing import h60
+from operator_zoo.functions.sketches import (
     bloom_words,
     hll_estimate_row,
     hll_registers,
@@ -92,7 +92,7 @@ def test_bloom_rejects_bad_params(spark):
 def test_countmin_never_underestimates_and_is_exact_without_collisions(spark):
     from collections import Counter
 
-    from pdf_to_xls_vision_spark.functions.sketches import (
+    from operator_zoo.functions.sketches import (
         countmin_estimates,
         countmin_table,
     )
@@ -129,7 +129,7 @@ def test_countmin_never_underestimates_and_is_exact_without_collisions(spark):
 
 
 def test_countmin_shard_merge_is_cell_addition(spark):
-    from pdf_to_xls_vision_spark.functions.sketches import countmin_table
+    from operator_zoo.functions.sketches import countmin_table
 
     a = _ids(spark, 300)
     b = _ids(spark, 500)
@@ -148,7 +148,7 @@ def test_countmin_shard_merge_is_cell_addition(spark):
 
 
 def test_countmin_rejects_bad_params(spark):
-    from pdf_to_xls_vision_spark.functions.sketches import countmin_table
+    from operator_zoo.functions.sketches import countmin_table
 
     with pytest.raises(ValueError):
         countmin_table(_ids(spark, 10), F.col("v"), width=0)
@@ -157,7 +157,7 @@ def test_countmin_rejects_bad_params(spark):
 # --------------------------------------------------------------- KMV
 
 def _kmv_rows(df, k=64):
-    from pdf_to_xls_vision_spark.functions.sketches import kmv_sketch
+    from operator_zoo.functions.sketches import kmv_sketch
 
     return [
         (r["rank"], r["kmv_hash"])
@@ -167,7 +167,7 @@ def _kmv_rows(df, k=64):
 
 @pytest.mark.parametrize("n", [200, 2000])
 def test_kmv_estimate_within_expected_error(spark, n):
-    from pdf_to_xls_vision_spark.functions.sketches import (
+    from operator_zoo.functions.sketches import (
         kmv_estimate_row,
         kmv_sketch,
     )
@@ -180,7 +180,7 @@ def test_kmv_estimate_within_expected_error(spark, n):
 
 
 def test_kmv_exact_below_k(spark):
-    from pdf_to_xls_vision_spark.functions.sketches import (
+    from operator_zoo.functions.sketches import (
         kmv_estimate_row,
         kmv_sketch,
     )
@@ -193,7 +193,7 @@ def test_kmv_exact_below_k(spark):
 def test_kmv_union_merge_lossless(spark):
     # bottom-k over the union of two shard sketches == sketch of the
     # concatenated input (the distributed-merge property)
-    from pdf_to_xls_vision_spark.functions.sketches import kmv_sketch
+    from operator_zoo.functions.sketches import kmv_sketch
 
     a, b = _ids(spark, 300), _ids(spark, 500)  # overlapping prefixes
     sa = kmv_sketch(a, F.col("v"), k=64).select("kmv_hash")
@@ -212,7 +212,7 @@ def test_kmv_partitioning_independent_and_duplicates_ignored(spark):
 
 
 def test_kmv_rejects_bad_k(spark):
-    from pdf_to_xls_vision_spark.functions.sketches import kmv_sketch
+    from operator_zoo.functions.sketches import kmv_sketch
 
     with pytest.raises(ValueError):
         kmv_sketch(_ids(spark, 10), F.col("v"), k=0)
@@ -224,7 +224,7 @@ def test_kmv_rejects_bad_k(spark):
 # --------------------------------------------------------------------------
 
 def test_bloom_prefilter_join_equals_plain_join(spark):
-    from pdf_to_xls_vision_spark.functions.relational import (
+    from operator_zoo.functions.relational import (
         bloom_prefilter_join,
     )
 
@@ -243,8 +243,8 @@ def test_bloom_prefilter_join_equals_plain_join(spark):
 
 
 def test_bloom_prefilter_sheds_rows_before_join(spark):
-    from pdf_to_xls_vision_spark.functions.hashing import h60
-    from pdf_to_xls_vision_spark.functions.sketches import bloom_words
+    from operator_zoo.functions.hashing import h60
+    from operator_zoo.functions.sketches import bloom_words
     from pyspark.sql import functions as F
 
     n_bits, k = 4032, 3
@@ -272,7 +272,7 @@ def test_bloom_prefilter_sheds_rows_before_join(spark):
 
 
 def test_bloom_prefilter_join_semi_and_validation(spark):
-    from pdf_to_xls_vision_spark.functions.relational import (
+    from operator_zoo.functions.relational import (
         bloom_prefilter_join,
     )
 
@@ -289,7 +289,7 @@ def test_bloom_prefilter_join_semi_and_validation(spark):
 def test_hll_grouped_registers_merge_to_global(spark):
     from pyspark.sql import functions as F
 
-    from pdf_to_xls_vision_spark.functions.sketches import (
+    from operator_zoo.functions.sketches import (
         hll_registers,
         hll_registers_grouped,
     )
@@ -321,7 +321,7 @@ def test_kmv_estimate_rejects_smaller_k_than_build(spark):
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import SparkRuntimeException
 
-    from pdf_to_xls_vision_spark.functions.sketches import (
+    from operator_zoo.functions.sketches import (
         kmv_estimate_row,
         kmv_sketch,
     )
@@ -355,7 +355,7 @@ def _qsk_model(rows, k, percents):
 
 
 def test_quantile_sketch_matches_sequential_model(spark):
-    from pdf_to_xls_vision_spark.functions.sketches import (
+    from operator_zoo.functions.sketches import (
         quantile_estimate,
         quantile_sketch,
     )
@@ -380,7 +380,7 @@ def test_quantile_sketch_matches_sequential_model(spark):
 def test_quantile_sketch_union_merge_lossless(spark):
     """Bottom-k property: re-sketching the union of two shard sketches
     equals the sketch of the concatenated input."""
-    from pdf_to_xls_vision_spark.functions.sketches import quantile_sketch
+    from operator_zoo.functions.sketches import quantile_sketch
 
     rows1 = [("g", i, i * 3) for i in range(0, 300, 2)]
     rows2 = [("g", i, i * 3) for i in range(1, 300, 2)]
@@ -409,7 +409,7 @@ def test_quantile_sketch_union_merge_lossless(spark):
 
 
 def test_quantile_sketch_global_and_validation(spark):
-    from pdf_to_xls_vision_spark.functions.sketches import (
+    from operator_zoo.functions.sketches import (
         quantile_estimate,
         quantile_sketch,
     )
@@ -438,7 +438,7 @@ def _kmv_model_hashes(values, salt="kmv"):
 
 
 def test_kmv_intersection_estimate_and_exact_path(spark):
-    from pdf_to_xls_vision_spark.functions.sketches import (
+    from operator_zoo.functions.sketches import (
         kmv_intersection_row,
         kmv_sketch,
     )

@@ -53,7 +53,7 @@ def _run(spark, df, out_dir, ckpt):
 
 @pytest.mark.slow
 def test_windowed_counts_drop_too_late_rows(spark, tmp_path):
-    from pdf_to_xls_vision_spark.streaming.aggregate import windowed_event_counts
+    from operator_zoo.streaming.aggregate import windowed_event_counts
 
     in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ck"))
     os.makedirs(in_dir)
@@ -103,7 +103,7 @@ def test_windowed_counts_drop_too_late_rows(spark, tmp_path):
 
 
 def test_merge_events_pure_kernel():
-    from pdf_to_xls_vision_spark.streaming.aggregate import (
+    from operator_zoo.streaming.aggregate import (
         SESSION_GAP_SECONDS as GAP,
         merge_events_into_sessions,
     )
@@ -135,7 +135,7 @@ def test_merge_events_pure_kernel():
 def test_sessionize_stream_closes_on_gap_across_batches(spark, tmp_path):
     """State survives a query restart via the checkpoint; the session
     closes when the WATERMARK (not wall clock) passes end + gap."""
-    from pdf_to_xls_vision_spark.streaming.aggregate import sessionize_stream
+    from operator_zoo.streaming.aggregate import sessionize_stream
 
     in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ck"))
     os.makedirs(in_dir)
@@ -170,7 +170,7 @@ def test_sessionize_stream_closes_on_gap_across_batches(spark, tmp_path):
 def test_sessionize_late_event_merges_without_shrinking(spark, tmp_path):
     """A late-but-admissible event (>= watermark) merges into the held
     session: end stays at the max event time, count/value grow."""
-    from pdf_to_xls_vision_spark.streaming.aggregate import sessionize_stream
+    from operator_zoo.streaming.aggregate import sessionize_stream
 
     in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ck"))
     os.makedirs(in_dir)
@@ -206,7 +206,7 @@ def test_sessionize_late_event_merges_without_shrinking(spark, tmp_path):
 def test_sessionize_bridge_event_fuses_held_sessions(spark, tmp_path):
     """An admissible event landing within one gap of two held sessions
     fuses them into a single session."""
-    from pdf_to_xls_vision_spark.streaming.aggregate import sessionize_stream
+    from operator_zoo.streaming.aggregate import sessionize_stream
 
     in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ck"))
     os.makedirs(in_dir)
@@ -255,7 +255,7 @@ def _replay_fixture_files():
 
 
 def _sessionize_run_rows(spark, tmp_path, tag, batched):
-    from pdf_to_xls_vision_spark.streaming.aggregate import sessionize_stream
+    from operator_zoo.streaming.aggregate import sessionize_stream
 
     in_dir, out_dir, ckpt = (
         str(tmp_path / f"{tag}_{d}") for d in ("in", "out", "ck")
@@ -308,7 +308,7 @@ def test_sessionize_replay_deterministic_across_batchings(spark, tmp_path):
 
 
 def test_merge_events_custom_gap():
-    from pdf_to_xls_vision_spark.streaming.aggregate import (
+    from operator_zoo.streaming.aggregate import (
         merge_events_into_sessions,
     )
 
@@ -322,7 +322,7 @@ def test_sessionize_custom_gap_splits_sooner(spark, tmp_path):
     """gap_seconds is a real operator knob: with a 60s gap, events two
     minutes apart land in separate sessions (the default 30-min gap
     would fuse them)."""
-    from pdf_to_xls_vision_spark.streaming.aggregate import sessionize_stream
+    from operator_zoo.streaming.aggregate import sessionize_stream
 
     in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ck"))
     os.makedirs(in_dir)
@@ -365,7 +365,7 @@ def test_sessionize_dst_fallback_hour_does_not_crash(spark, tmp_path):
     prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
-        from pdf_to_xls_vision_spark.streaming.aggregate import sessionize_stream
+        from operator_zoo.streaming.aggregate import sessionize_stream
 
         in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ck"))
         os.makedirs(in_dir)
@@ -407,7 +407,7 @@ def test_sessionize_non_utc_session_timezone(spark, tmp_path):
     prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
-        from pdf_to_xls_vision_spark.streaming.aggregate import sessionize_stream
+        from operator_zoo.streaming.aggregate import sessionize_stream
 
         in_dir, out_dir, ckpt = (
             str(tmp_path / d) for d in ("in", "out", "ck")

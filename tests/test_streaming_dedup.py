@@ -13,7 +13,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from pdf_to_xls_vision_spark.streaming.dedup import dedup_stream
+from operator_zoo.streaming.dedup import dedup_stream
 
 T0 = datetime(2024, 1, 1, 10, 0, 0)
 
@@ -137,8 +137,8 @@ def test_line_dedup_drops_boilerplate_across_batches(spark, tmp_path):
     surviving hash set equals batch DISTINCT over the same windows."""
     from pyspark.sql import functions as F
 
-    from pdf_to_xls_vision_spark.functions.hashing import h60
-    from pdf_to_xls_vision_spark.streaming.dedup import line_dedup_stream
+    from operator_zoo.functions.hashing import h60
+    from operator_zoo.streaming.dedup import line_dedup_stream
 
     in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ck"))
     os.makedirs(in_dir)

@@ -11,7 +11,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from pdf_to_xls_vision_spark.streaming.enrich import enrich_stream
+from operator_zoo.streaming.enrich import enrich_stream
 
 
 def _write(path, ids):

@@ -141,3 +141,71 @@ def test_micro_batch_commit_probes_the_spark_filesystem(
     assert probed == [os.path.join(ingest._spans_dir(out_dir), "ingest_batch=3")]
     assert os.path.isdir(probed[0])
     assert not os.path.exists(ingest._manifest_dir(out_dir))
+
+
+def _commit_files(spark, tmp_path, docs, batch_ids):
+    """Commit ``docs`` split evenly over ``batch_ids`` micro-batches."""
+    from pdf_to_xls_vision_spark.streaming.ingest import _commit_micro_batch
+
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    os.makedirs(in_dir)
+    step = len(docs) // len(batch_ids)
+    for i, batch_id in enumerate(batch_ids):
+        path = f"{in_dir}/part-{batch_id}.parquet"
+        pq.write_table(corpus_to_arrow(docs[i * step : (i + 1) * step]), path)
+        _commit_micro_batch(spark.read.parquet(path), batch_id, out_dir, 4, in_dir)
+    return out_dir
+
+
+def test_stream_manifest_matches_declared_schema(spark, tiny_corpus, tmp_path):
+    """The manifest files carry exactly STREAM_MANIFEST_SCHEMA (less the
+    ``ingest_batch`` partition column, which lives in the directory
+    name), so ``lineage.committed_at_ts`` is a long, not an int."""
+    from pyspark.sql.types import StructType
+
+    from pdf_to_xls_vision_spark.sink.checkpoint import _manifest_dir
+    from pdf_to_xls_vision_spark.streaming.ingest import STREAM_MANIFEST_SCHEMA
+
+    out_dir = _commit_files(spark, tmp_path, tiny_corpus[:6], [5])
+    declared = StructType.fromDDL(STREAM_MANIFEST_SCHEMA)
+    written = spark.read.parquet(os.path.join(_manifest_dir(out_dir), "ingest_batch=5"))
+    assert written.schema == StructType(
+        [f for f in declared.fields if f.name != "ingest_batch"]
+    )
+
+
+def test_mixed_width_manifest_still_reads(spark, tiny_corpus, tmp_path):
+    """A manifest directory where one batch was committed with an int32
+    ``committed_at_ts`` (as older commits wrote it) and one with a long
+    still reads through the committed-output gate."""
+    import shutil
+
+    from pdf_to_xls_vision_spark.sink.checkpoint import _manifest_dir
+
+    docs = tiny_corpus[:8]
+    out_dir = _commit_files(spark, tmp_path, docs, [0, 1])
+    old = os.path.join(_manifest_dir(out_dir), "ingest_batch=0")
+    narrowed = str(tmp_path / "narrowed")
+    spark.read.parquet(old).withColumn(
+        "lineage",
+        F.struct(
+            F.col("lineage.input_snapshot").alias("input_snapshot"),
+            F.col("lineage.committed_at_ts").cast("int").alias("committed_at_ts"),
+        ),
+    ).write.parquet(narrowed)
+    shutil.rmtree(old)
+    shutil.move(narrowed, old)
+
+    def ts_type(batch_dir):
+        part = next(f for f in os.listdir(batch_dir) if f.endswith(".parquet"))
+        return pq.read_schema(os.path.join(batch_dir, part)).field(
+            "lineage"
+        ).type.field("committed_at_ts").type
+
+    assert str(ts_type(old)) == "int32"
+    assert str(ts_type(old.replace("=0", "=1"))) == "int64"
+
+    committed = read_stream_committed(spark, out_dir)
+    assert committed.select("doc_id").distinct().count() == len(docs)
+    assert {r.ingest_batch for r in committed.select("ingest_batch").collect()} == {0, 1}

@@ -13,7 +13,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.streaming.interval_join import (
+from operator_zoo.streaming.interval_join import (
     interval_join_streams,
 )
 

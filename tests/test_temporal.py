@@ -10,8 +10,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.functions.relational import topk_per_group
-from pdf_to_xls_vision_spark.functions.temporal import (
+from operator_zoo.functions.relational import topk_per_group
+from operator_zoo.functions.temporal import (
     asof_join,
     banded_count_join,
     funnel_stages,
@@ -374,7 +374,7 @@ def _nullsafe(t):
 
 
 def _scd2_spark(spark, rows):
-    from pdf_to_xls_vision_spark.functions.temporal import scd2_from_changelog
+    from operator_zoo.functions.temporal import scd2_from_changelog
 
     df = spark.createDataFrame(rows, ["k", "attr", "ts", "tb"])
     got = scd2_from_changelog(df, key="k", attr="attr", ts="ts", tiebreak="tb")

@@ -121,7 +121,7 @@ def test_stub_vision_frame_cleanable():
 
 def test_resize_media_and_frame_sampling(spark, tiny_corpus_path):
     """Multimodal resize + frame-sample plumbing over the corpus refs."""
-    from pdf_to_xls_vision_spark.functions.multimodal import (
+    from operator_zoo.functions.multimodal import (
         corpus_media_refs,
         resize_media,
         sample_frames,
@@ -155,7 +155,7 @@ def test_resize_media_and_frame_sampling(spark, tiny_corpus_path):
 def test_ahash_bits_integer_exact():
     import numpy as np
 
-    from pdf_to_xls_vision_spark.functions.multimodal import ahash_bits
+    from operator_zoo.functions.multimodal import ahash_bits
 
     # flat raster: no block strictly above the mean -> all-zero hash
     assert ahash_bits(np.full((32, 32), 40, dtype=np.uint8)) == 0
@@ -194,7 +194,7 @@ def _crafted_decoder(specs):
 
 
 def test_phash_near_dups_complete_and_exact(spark):
-    from pdf_to_xls_vision_spark.functions.multimodal import phash_near_dups
+    from operator_zoo.functions.multimodal import phash_near_dups
 
     specs = {
         "A": set(range(10)),          # bits 0-9
@@ -227,7 +227,7 @@ def test_phash_near_dups_complete_and_exact(spark):
 
 
 def test_phash_near_dups_validation(spark):
-    from pdf_to_xls_vision_spark.functions.multimodal import phash_near_dups
+    from operator_zoo.functions.multimodal import phash_near_dups
 
     media = spark.createDataFrame([("x",)], ["media_ref"])
     import pytest as _pytest

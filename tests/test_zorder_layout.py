@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.functions.layout import (
+from operator_zoo.functions.layout import (
     morton_key_expr,
     zorder_layout,
 )
