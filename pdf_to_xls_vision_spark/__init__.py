@@ -10,11 +10,12 @@ tables of interleaved text+media document spans:
 The engine is Spark-first: classification is higher-order column
 expressions, extraction is page-level ``mapInPandas`` (vectorized Arrow
 batches, skew-proof because pages — not documents — are the unit of
-work), the R2 retry decision, continuation-merge + span serialization
-run per-document in one ``mapInPandas`` over a doc-keyed
-``repartition``, validation is plain DataFrame aggregates + a full
-outer join, and the sink is an idempotent, resumable, bucket-committed
-parquet/Iceberg writer with per-partition lineage and metrics.
+work), the R2 retry decision, number validation, continuation-merge +
+span serialization run per-document in one ``mapInPandas`` over a
+doc-keyed ``repartition``, and batch, streaming and compaction commit
+through one protocol (``sink/checkpoint.py``): an idempotent,
+resumable, partition-committed parquet/Iceberg writer with
+per-partition lineage and metrics.
 
 Nothing is ported from the reference's single-threaded Python; the
 per-cell *semantics* (cleaning, quality heuristics, merge conditions,

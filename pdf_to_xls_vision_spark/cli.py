@@ -71,7 +71,11 @@ def build_parser() -> argparse.ArgumentParser:
         action="store_true",
         help="wipe the output dir instead of resuming from its manifest",
     )
-    p.add_argument("--master", default=None, help="override spark master")
+    p.add_argument(
+        "--master",
+        default=None,
+        help="spark master (default: the launcher's, e.g. spark-submit --master)",
+    )
     p.add_argument(
         "--snapshot",
         default="",
@@ -210,6 +214,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from pdf_to_xls_vision_spark.session import get_spark
     from pdf_to_xls_vision_spark.sink.checkpoint import (
+        MANIFEST_SUMS,
         read_manifest,
         run_checkpointed_extraction,
     )
@@ -229,6 +234,7 @@ def main(argv: list[str] | None = None) -> int:
         shutil.rmtree(args.output, ignore_errors=True)
 
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
     # only stop the session on exit if this invocation created it —
     # embedded callers (tests, notebooks) keep theirs alive
@@ -292,9 +298,8 @@ def main(argv: list[str] | None = None) -> int:
             page_partitions=args.partitions,
         )
         manifest = read_manifest(spark, args.output)
-        totals = manifest.groupBy().sum(
-            "docs", "pages_parsed", "tables_found",
-            "rotation_corrections", "quality_retries",
+        totals = manifest.agg(
+            *(F.sum(name).alias(name) for name in MANIFEST_SUMS)
         ).collect()[0]
         print(
             json.dumps(
@@ -302,11 +307,7 @@ def main(argv: list[str] | None = None) -> int:
                     "committed_buckets": len(summary["committed"]),
                     "resumed_buckets": len(summary["skipped"]),
                     "attempt": summary["attempt"],
-                    "docs": totals[0],
-                    "pages_parsed": totals[1],
-                    "tables_found": totals[2],
-                    "rotation_corrections": totals[3],
-                    "quality_retries": totals[4],
+                    **totals.asDict(),
                     "output": args.output,
                 }
             )

@@ -1,4 +1,4 @@
-"""Document classification / routing — pure column expressions (S2-S4, R1).
+"""Document classification / routing — pure column expressions (S2, S4, R1).
 
 The reference's routing predicates probe only the first 3 pages
 (pdf_detection.py:18,38 — a LIMIT-3 sampling pushdown); here they are
@@ -12,10 +12,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: pdf_detection.py:18 — a page's stripped text must exceed this many
-#: chars for the PDF to count as text-bearing.
-TEXT_PROBE_MIN_CHARS = 50
-
 #: pdf_detection.py:18,38 — both probes look at the first 3 pages only.
 PROBE_PAGES = 3
 
@@ -24,16 +20,6 @@ def all_image_expr(spans: str = "spans") -> Column:
     """True when every span is an image — the reference's "image file"
     input class (converter.py:17-27 via extension; here via content)."""
     return F.forall(F.col(spans), lambda s: s["kind"] == F.lit("image"))
-
-
-def has_text_expr(spans: str = "spans") -> Column:
-    """``pdf_has_text`` (pdf_detection.py:7-24): any of the first 3
-    pages carries > 50 chars of stripped text."""
-    return F.exists(
-        F.slice(F.col(spans), 1, PROBE_PAGES),
-        lambda s: (s["kind"] == F.lit("text"))
-        & (F.length(F.trim(s["text"])) > TEXT_PROBE_MIN_CHARS),
-    )
 
 
 def is_image_based_expr(spans: str = "spans") -> Column:
@@ -54,17 +40,3 @@ def route_expr(force_vision: bool = False, spans: str = "spans") -> Column:
     if force_vision:
         vision = vision | F.lit(True)
     return F.when(vision, F.lit("vision")).otherwise(F.lit("text"))
-
-
-def doc_kind_expr(spans: str = "spans") -> Column:
-    """Diagnostic label mirroring the reference's three input classes."""
-    return (
-        F.when(all_image_expr(spans), F.lit("image"))
-        .when(is_image_based_expr(spans), F.lit("mixed"))
-        .otherwise(F.lit("text"))
-    )
-
-
-def est_pages_expr(spans: str = "spans") -> Column:
-    """Work estimate for skew-aware repartitioning (SURVEY.md §4.2)."""
-    return F.size(F.col(spans))

@@ -34,10 +34,7 @@ from pdf_to_xls_vision_spark.core.cleaning import (
 )
 from pdf_to_xls_vision_spark.core.layout import parse_words_to_grids, prune_grid
 from pdf_to_xls_vision_spark.core.numbers import extract_numbers
-from pdf_to_xls_vision_spark.core.quality import (
-    grid_quality_issues,
-    table_quality_issues,
-)
+from pdf_to_xls_vision_spark.core.quality import grid_quality_issues
 from pdf_to_xls_vision_spark.core.vision import (
     VisionBackend,
     correct_rotation,

@@ -1,4 +1,4 @@
-"""DataFrame-native validation operators (X1, X4-X7).
+"""DataFrame-native validation operators (X1, X4-X6).
 
 The reference's relational core — regex number extraction
 (validation.py:10-34), Counter multisets (:164-180), key-union
@@ -104,46 +104,3 @@ def accuracy(disc: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
         ),
     )
 
-
-def render_report(stats_row, missing: list, extra: list) -> str:
-    """X7 (validation.py:232-308): human-readable Markdown report from
-    the aggregate row — generated on demand from the metrics relation,
-    never on the job's hot path."""
-    lines = [
-        "# Data Validation Report",
-        "",
-        "## Summary",
-        "",
-        "| Metric | Count |",
-        "|--------|-------|",
-        f"| Total numbers in source | {stats_row['total_pdf_numbers']:,} |",
-        f"| Total numbers in tables | {stats_row['total_table_numbers']:,} |",
-        f"| Matching numbers | {stats_row['matches']:,} |",
-        f"| **Accuracy** | **{stats_row['accuracy_percent']:.2f}%** |",
-        "",
-    ]
-    for title, items, flip in (
-        ("Missing/Undercounted in Tables", missing, False),
-        ("Extra/Overcounted in Tables", extra, True),
-    ):
-        if items:
-            lines += [
-                f"## {title}",
-                "",
-                "| Number | Source Count | Table Count | Difference |",
-                "|--------|--------------|-------------|------------|",
-            ]
-            for it in items:
-                diff = (
-                    it["table_count"] - it["pdf_count"]
-                    if flip
-                    else it["pdf_count"] - it["table_count"]
-                )
-                lines.append(
-                    f"| {it['number_key']} | {it['pdf_count']} | "
-                    f"{it['table_count']} | {diff} |"
-                )
-            lines.append("")
-    if not missing and not extra:
-        lines += ["## Validation Passed", "", "No discrepancies detected.", ""]
-    return "\n".join(lines)

@@ -47,11 +47,15 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's tuned defaults."""
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
+    """Build (or fetch) a SparkSession with the engine's tuned defaults.
+
+    The master is set only when passed in or named by
+    ``SPARK_GRAFT_MASTER``: a master set in code outranks
+    ``spark-submit --master``, so otherwise the launcher's master wins
+    (``local[*]`` when launched without one)."""
+    master = master or os.environ.get("SPARK_GRAFT_MASTER")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -96,6 +100,8 @@ def get_spark(
         # extra_conf to get it back.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
+    if master:
+        builder = builder.master(master)
     if shuffle_partitions is not None:
         builder = builder.config(
             "spark.sql.shuffle.partitions", str(shuffle_partitions)

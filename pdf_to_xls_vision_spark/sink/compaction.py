@@ -17,9 +17,10 @@ Design (mirrors Iceberg's bin-packing rewrite):
   ``(bucket, slot)`` where ``slot = pmod(xxhash64(doc_id), files
   needed for that bucket)`` — per-bucket output file counts are
   controlled without a driver loop of per-bucket jobs;
-- the rewrite reuses the sink's dynamic partition overwrite, so each
-  bucket directory is replaced atomically-per-partition with the same
-  crash exposure as a normal commit (an Iceberg swap would make it a
+- the rewrite goes through the commit protocol's one writer
+  (``checkpoint.overwrite_partitions``), so each bucket directory is
+  replaced atomically-per-partition with the same crash exposure as a
+  normal commit (an Iceberg swap would make it a
   snapshot commit; semantics preserved);
 - the commit manifest is NOT touched — compaction changes layout, not
   lineage; ``committed_buckets`` and the metric sums stay exact. The
@@ -40,7 +41,10 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_to_xls_vision_spark.sink.checkpoint import _spans_dir
+from pdf_to_xls_vision_spark.sink.checkpoint import (
+    _spans_dir,
+    overwrite_partitions,
+)
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
@@ -139,14 +143,8 @@ def compact_spans(
         )
     )
     n_parts = sum(info["files_target"] for info in plan.values())
-    (
-        df.repartition(n_parts, "bucket", "slot")
-        .drop("slot")
-        .write.format("parquet")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .save(spans)
+    overwrite_partitions(
+        df.repartition(n_parts, "bucket", "slot").drop("slot"), spans, "bucket"
     )
 
     now = int(time.time())

@@ -1,6 +1,7 @@
 """The extraction engine stands alone: no module of the
 ``pdf_to_xls_vision_spark`` package, nor the driver entry point, imports
-the operator zoo."""
+the operator zoo; and it has one commit protocol, in
+``sink/checkpoint.py``."""
 
 import ast
 import os
@@ -17,10 +18,13 @@ def _imported_modules(path):
             yield node.module
 
 
-def test_engine_does_not_import_operator_zoo():
-    paths = [os.path.join(REPO, "__spark_entry__.py")]
+def _engine_modules():
     for root, _dirs, files in os.walk(os.path.join(REPO, "pdf_to_xls_vision_spark")):
-        paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
+        yield from (os.path.join(root, f) for f in files if f.endswith(".py"))
+
+
+def test_engine_does_not_import_operator_zoo():
+    paths = [os.path.join(REPO, "__spark_entry__.py"), *_engine_modules()]
     offenders = [
         (os.path.relpath(p, REPO), m)
         for p in paths
@@ -28,3 +32,15 @@ def test_engine_does_not_import_operator_zoo():
         if m.split(".")[0] == "operator_zoo"
     ]
     assert offenders == []
+
+
+def test_only_the_commit_protocol_overwrites_partitions():
+    """Every partition-overwriting write goes through
+    ``sink/checkpoint.py``, so batch, stream and compaction commits
+    cannot fork their own write protocol again."""
+    writers = sorted(
+        os.path.relpath(p, os.path.join(REPO, "pdf_to_xls_vision_spark"))
+        for p in _engine_modules()
+        if "partitionOverwriteMode" in open(p, encoding="utf-8").read()
+    )
+    assert writers == [os.path.join("sink", "checkpoint.py")]

@@ -1,21 +1,23 @@
 """W2 semantics: idempotent bucket commits, kill-and-rerun resume,
 manifest metrics + lineage (FIXTURES.md §5)."""
 
-from collections import Counter, defaultdict
+import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameReader
 from pyspark.sql.types import StructType
 
 from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
+from pdf_to_xls_vision_spark.sink import checkpoint
 from pdf_to_xls_vision_spark.sink.checkpoint import (
     MANIFEST_SCHEMA,
-    CheckpointAbort,
     committed_buckets,
     read_committed,
     read_manifest,
     run_checkpointed_extraction,
 )
+from tests.manifest_check import assert_manifest_matches_spans
 
 pytestmark = pytest.mark.slow  # multi-minute module; fast path skips it
 
@@ -32,6 +34,25 @@ def result_df(docs):
     return run_extraction(docs).cache()
 
 
+class SimulatedCrash(RuntimeError):
+    """A mid-run crash of the job between two commit groups."""
+
+
+def _crash_after_groups(monkeypatch, n_groups):
+    """Make ``run_checkpointed_extraction`` die before committing group
+    ``n_groups`` (0-based), after committing the groups before it."""
+    commit = checkpoint._commit_group
+    done = []
+
+    def commit_or_crash(*args, **kwargs):
+        if len(done) >= n_groups:
+            raise SimulatedCrash(f"before group {len(done)}")
+        commit(*args, **kwargs)
+        done.append(args[1])
+
+    monkeypatch.setattr(checkpoint, "_commit_group", commit_or_crash)
+
+
 def _span_set(df):
     rows = df.select("doc_id", F.explode_outer("spans").alias("s")).collect()
     return {
@@ -40,7 +61,7 @@ def _span_set(df):
     }
 
 
-def test_kill_and_rerun_equals_uninterrupted(docs, result_df, tmp_path):
+def test_kill_and_rerun_equals_uninterrupted(docs, result_df, tmp_path, monkeypatch):
     """Kill after 2 of 4 commit groups, rerun: the resume commits only
     the uncommitted buckets and the committed table equals both an
     uninterrupted run and the plain extraction result."""
@@ -52,13 +73,13 @@ def test_kill_and_rerun_equals_uninterrupted(docs, result_df, tmp_path):
         docs, clean_dir, n_buckets=N_BUCKETS, input_snapshot="tiny"
     )
 
-    with pytest.raises(CheckpointAbort):
+    with monkeypatch.context() as m, pytest.raises(SimulatedCrash):
+        _crash_after_groups(m, 2)
         run_checkpointed_extraction(
             docs,
             crash_dir,
             n_buckets=N_BUCKETS,
             commit_group_size=2,
-            fail_after_groups=2,
             input_snapshot="tiny",
         )
     partial = committed_buckets(spark, crash_dir)
@@ -108,45 +129,50 @@ def test_manifest_metrics_and_lineage(docs, result_df, tmp_path):
     assert all(r.lineage.committed_at_ts > 0 for r in rows)
 
 
+def test_resume_reads_the_manifest_once(docs, tmp_path, monkeypatch):
+    """A resumed run learns its committed buckets and its attempt
+    number from one read of the manifest."""
+    spark = docs.sparkSession
+    out_dir = str(tmp_path / "resume")
+    spark.createDataFrame(
+        [
+            (b, 1, 1, 0, 0, 0, None, ("x", 1 + b % 2, 0))
+            for b in range(N_BUCKETS)
+        ],
+        MANIFEST_SCHEMA,
+    ).write.parquet(checkpoint._manifest_dir(out_dir))
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def recording_parquet(self, *paths, **options):
+        reads.extend(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
+    out = run_checkpointed_extraction(docs, out_dir, n_buckets=N_BUCKETS)
+    assert out == {"committed": [], "skipped": list(range(N_BUCKETS)), "attempt": 3}
+    assert reads == [os.path.join(out_dir, "manifest")]
+
+
 @pytest.mark.parametrize("n_buckets", [1, 64])
 def test_manifest_rows_match_committed_spans(docs, tmp_path, n_buckets):
     """One bucket holds every doc; 64 buckets over the tiny corpus
-    leave some empty. Either way the manifest has exactly
+    leave some empty. Either way the manifest files have exactly
     MANIFEST_SCHEMA and one row per bucket whose metrics are the sums
     over that bucket's committed span rows."""
     spark = docs.sparkSession
     out_dir = str(tmp_path / f"schema{n_buckets}")
     run_checkpointed_extraction(docs, out_dir, n_buckets=n_buckets)
-    manifest = read_manifest(spark, out_dir)
-    assert manifest.schema == StructType.fromDDL(MANIFEST_SCHEMA)
+    written = spark.read.parquet(checkpoint._manifest_dir(out_dir))
+    assert written.schema == StructType.fromDDL(MANIFEST_SCHEMA)
 
-    sums = defaultdict(Counter)
-    accuracy = defaultdict(list)
-    for r in read_committed(spark, out_dir).collect():
-        sums[r.bucket].update(
-            docs=1,
-            pages_parsed=r.pages_parsed,
-            tables_found=r.n_tables,
-            rotation_corrections=r.rotation_corrections,
-            quality_retries=r.quality_retried,
-        )
-        if r.validation_status == "completed":
-            accuracy[r.bucket].append(r.accuracy_pct)
-    rows = {r.bucket: r for r in manifest.collect()}
-    assert sorted(rows) == list(range(n_buckets))
-    empty = set(rows) - set(sums)
+    rows = read_manifest(spark, out_dir).collect()
+    assert sorted(r.bucket for r in rows) == list(range(n_buckets))
+    empty = assert_manifest_matches_spans(
+        rows, read_committed(spark, out_dir).collect(), ["bucket"]
+    )
     assert bool(empty) == (n_buckets > 1)
-    for bucket, row in rows.items():
-        for col in ("docs", "pages_parsed", "tables_found",
-                    "rotation_corrections", "quality_retries"):
-            assert row[col] == sums[bucket][col], (bucket, col)
-        acc = accuracy[bucket]
-        if acc:
-            assert row.accuracy_pct == pytest.approx(sum(acc) / len(acc), abs=0.006)
-        else:
-            assert row.accuracy_pct is None, bucket
-    for bucket in empty:
-        assert rows[bucket].docs == 0
+    assert all(r.docs == 0 for r in rows if (r.bucket,) in empty)
 
 
 def test_doc_validation_metrics(result_df):
@@ -162,7 +188,7 @@ def test_doc_validation_metrics(result_df):
     assert cont.accuracy_pct > 0
 
 
-def test_input_pruned_resume_matches_full_run(docs, result_df, tmp_path):
+def test_input_pruned_resume_matches_full_run(docs, result_df, tmp_path, monkeypatch):
     """Kill after the first commit group of 3 buckets (a crash point off
     the half-way mark), rerun: the bucket filter on the input scan
     re-extracts only the 5 uncommitted buckets, and the committed table
@@ -170,13 +196,13 @@ def test_input_pruned_resume_matches_full_run(docs, result_df, tmp_path):
     spark = docs.sparkSession
     crash_dir = str(tmp_path / "crash_pruned")
 
-    with pytest.raises(CheckpointAbort):
+    with monkeypatch.context() as m, pytest.raises(SimulatedCrash):
+        _crash_after_groups(m, 1)
         run_checkpointed_extraction(
             docs,
             crash_dir,
             n_buckets=N_BUCKETS,
             commit_group_size=3,
-            fail_after_groups=1,
         )
     partial = committed_buckets(spark, crash_dir)
     assert len(partial) == 3

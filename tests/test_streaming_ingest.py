@@ -10,10 +10,18 @@ from pyspark.sql import functions as F
 
 from pdf_to_xls_vision_spark.corpus import corpus_to_arrow, generate_corpus
 from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
+from pdf_to_xls_vision_spark.sink import checkpoint
+from pdf_to_xls_vision_spark.sink.checkpoint import (
+    STREAM_MANIFEST_SCHEMA,
+    _manifest_dir,
+    _spans_dir,
+)
 from pdf_to_xls_vision_spark.streaming.ingest import (
+    _commit_micro_batch,
     read_stream_committed,
     stream_extraction,
 )
+from tests.manifest_check import assert_manifest_matches_spans
 
 N_BUCKETS = 8
 
@@ -92,19 +100,8 @@ def test_replayed_micro_batch_manifest_idempotent(spark, tiny_corpus, tmp_path):
     and the streaming-checkpoint commit must not duplicate manifest rows
     (metrics aggregations would double-count): commit the same batch_id
     twice and check one manifest row per (ingest_batch, bucket)."""
-    import pyarrow.parquet as pq
-
-    from pdf_to_xls_vision_spark.corpus import corpus_to_arrow
-    from pdf_to_xls_vision_spark.streaming.ingest import (
-        _commit_micro_batch,
-        _manifest_dir,
-        read_stream_committed,
-    )
-
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
-    import os
-
     os.makedirs(in_dir)
     pq.write_table(corpus_to_arrow(tiny_corpus[:10]), f"{in_dir}/part-1.parquet")
     batch = spark.read.parquet(in_dir).select("doc_id", "spans")
@@ -125,8 +122,6 @@ def test_micro_batch_commit_probes_the_spark_filesystem(
     Spark writes to (the Hadoop-FS probe), not of the driver's local
     disk, which never holds an hdfs:// or s3a:// output: a probe that
     reports the batch partition missing means no manifest row."""
-    from pdf_to_xls_vision_spark.streaming import ingest
-
     in_path = str(tmp_path / "in.parquet")
     out_dir = str(tmp_path / "out")
     pq.write_table(corpus_to_arrow(tiny_corpus[:4]), in_path)
@@ -136,17 +131,15 @@ def test_micro_batch_commit_probes_the_spark_filesystem(
         probed.append(path)
         return True
 
-    monkeypatch.setattr(ingest, "_path_missing", missing)
-    ingest._commit_micro_batch(spark.read.parquet(in_path), 3, out_dir, 4, in_path)
-    assert probed == [os.path.join(ingest._spans_dir(out_dir), "ingest_batch=3")]
+    monkeypatch.setattr(checkpoint, "_path_missing", missing)
+    _commit_micro_batch(spark.read.parquet(in_path), 3, out_dir, 4, in_path)
+    assert probed == [os.path.join(_spans_dir(out_dir), "ingest_batch=3")]
     assert os.path.isdir(probed[0])
-    assert not os.path.exists(ingest._manifest_dir(out_dir))
+    assert not os.path.exists(_manifest_dir(out_dir))
 
 
 def _commit_files(spark, tmp_path, docs, batch_ids):
     """Commit ``docs`` split evenly over ``batch_ids`` micro-batches."""
-    from pdf_to_xls_vision_spark.streaming.ingest import _commit_micro_batch
-
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
     os.makedirs(in_dir)
@@ -164,9 +157,6 @@ def test_stream_manifest_matches_declared_schema(spark, tiny_corpus, tmp_path):
     name), so ``lineage.committed_at_ts`` is a long, not an int."""
     from pyspark.sql.types import StructType
 
-    from pdf_to_xls_vision_spark.sink.checkpoint import _manifest_dir
-    from pdf_to_xls_vision_spark.streaming.ingest import STREAM_MANIFEST_SCHEMA
-
     out_dir = _commit_files(spark, tmp_path, tiny_corpus[:6], [5])
     declared = StructType.fromDDL(STREAM_MANIFEST_SCHEMA)
     written = spark.read.parquet(os.path.join(_manifest_dir(out_dir), "ingest_batch=5"))
@@ -180,8 +170,6 @@ def test_mixed_width_manifest_still_reads(spark, tiny_corpus, tmp_path):
     ``committed_at_ts`` (as older commits wrote it) and one with a long
     still reads through the committed-output gate."""
     import shutil
-
-    from pdf_to_xls_vision_spark.sink.checkpoint import _manifest_dir
 
     docs = tiny_corpus[:8]
     out_dir = _commit_files(spark, tmp_path, docs, [0, 1])
@@ -209,3 +197,18 @@ def test_mixed_width_manifest_still_reads(spark, tiny_corpus, tmp_path):
     committed = read_stream_committed(spark, out_dir)
     assert committed.select("doc_id").distinct().count() == len(docs)
     assert {r.ingest_batch for r in committed.select("ingest_batch").collect()} == {0, 1}
+
+
+def test_stream_manifest_rows_match_committed_spans(spark, tiny_corpus, tmp_path):
+    """Each (ingest_batch, bucket) has one manifest row whose metrics,
+    ``accuracy_pct`` included, are the sums over that partition's
+    committed span rows, as the batch manifest's are."""
+    out_dir = _commit_files(spark, tmp_path, tiny_corpus[:16], [0, 1])
+    rows = spark.read.parquet(_manifest_dir(out_dir)).collect()
+    assert any(r.accuracy_pct is not None for r in rows)
+    empty = assert_manifest_matches_spans(
+        rows,
+        read_stream_committed(spark, out_dir).collect(),
+        ["ingest_batch", "bucket"],
+    )
+    assert empty == set()
