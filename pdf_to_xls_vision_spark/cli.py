@@ -29,9 +29,9 @@ import sys
 
 
 def _positive_int(value: str) -> int:
-    """argparse type for counts: a bucket count, commit-group size or
-    partition width below 1 must stop the job before it starts, not
-    plan no commit and report success."""
+    """argparse type for counts: a bucket count, commit-group size,
+    partition width or compaction target below 1 must stop the job
+    before it starts, not plan no commit and report success."""
     n = int(value)
     if n < 1:
         raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
@@ -91,7 +91,8 @@ def build_parser() -> argparse.ArgumentParser:
         action="store_true",
         help="treat INPUT as a continuously-growing directory: run the "
         "Structured Streaming ingest (exactly-once per-micro-batch "
-        "commits) instead of the batch job",
+        "commits) instead of the batch job; --force-vision, --partitions "
+        "and --commit-group-size are batch-only",
     )
     p.add_argument(
         "--stream-checkpoint",
@@ -122,7 +123,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--target-file-mb",
-        type=int,
+        type=_positive_int,
         default=128,
         help="with --compact: target output file size in MiB",
     )
@@ -161,12 +162,16 @@ def _vision_backend(args):
         AnthropicVisionBackend,
     )
 
-    media_dir = args.media_dir
+    root = os.path.realpath(args.media_dir)
     _MIME = {".png": "image/png", ".jpg": "image/jpeg", ".jpeg": "image/jpeg",
              ".gif": "image/gif", ".webp": "image/webp"}
 
     def loader(ref: str) -> tuple[bytes, str]:
-        path = os.path.join(media_dir, ref)
+        # media refs come from the input table: an absolute or ../ ref
+        # must not read (and send out) a file outside --media-dir
+        path = os.path.realpath(os.path.join(root, ref))
+        if os.path.commonpath([root, path]) != root:
+            raise ValueError(f"media_ref {ref!r} resolves outside --media-dir")
         ext = os.path.splitext(ref)[1].lower()
         with open(path, "rb") as f:
             return f.read(), _MIME.get(ext, "image/png")
@@ -192,6 +197,7 @@ def _run_stream(spark, args) -> int:
         ckpt,
         n_buckets=args.buckets,
         available_now=not args.continuous,
+        backend=_vision_backend(args),
     )
     q.awaitTermination()
     committed = read_stream_committed(spark, args.output)
@@ -225,6 +231,22 @@ def main(argv: list[str] | None = None) -> int:
             "--compact maintains the existing output table; "
             "--no-resume would delete it first"
         )
+    if args.stream:
+        ignored = [
+            flag
+            for flag, given in (
+                ("--force-vision", args.force_vision),
+                ("--partitions", args.partitions is not None),
+                ("--commit-group-size", args.commit_group_size is not None),
+            )
+            if given
+        ]
+        if ignored:
+            raise SystemExit(
+                f"--stream does not support {', '.join(ignored)}: "
+                "each micro-batch commits as one group over the default "
+                "routing and page partitioning"
+            )
     if args.read_snapshot is not None and args.no_resume:
         raise SystemExit(
             "--read-snapshot reads the existing output table; "

@@ -56,19 +56,6 @@ def repair_cell(value):
     return v
 
 
-def repair_frame_cells(df: pd.DataFrame) -> pd.DataFrame:
-    """Apply :func:`repair_cell` to every non-null cell of the frame.
-
-    Vectorized over columns (``Series.map``) — equivalent to the
-    reference's per-cell ``df[col].apply`` (data_cleaning.py:66-67) but
-    batch-friendly.
-    """
-    for col in df.columns:
-        s = df[col]
-        df[col] = s.map(lambda x: repair_cell(x) if pd.notna(x) else x)
-    return df
-
-
 def _cascade_pass(cells: list) -> bool:
     """One left-to-right sweep of the cascade rules over a row's cells.
 
@@ -145,45 +132,11 @@ def _strip_pct_artifact(x):
     return x
 
 
-def cascade_frame(df: pd.DataFrame) -> pd.DataFrame:
-    """Row-wise cascading-parenthesis fixpoint over the whole frame.
-
-    The scan is inherently sequential within a row (a repaired cell can
-    re-trigger its right neighbour), so rows are materialized as lists,
-    fixed, and written back — batch-at-a-time, as the north rule's
-    "vectorized at Arrow-batch granularity" allows. Finishes with the
-    "%(" artifact strip (data_cleaning.py:165-171).
-    """
-    cols = list(df.columns)
-    if len(cols) >= 2:
-        rows = df[cols].to_numpy(dtype=object).tolist()
-        out = [cascade_row(r) for r in rows]
-        for j, col in enumerate(cols):
-            df[col] = [r[j] for r in out]
-    for col in cols:
-        df[col] = df[col].map(_strip_pct_artifact)
-    return df
-
-
-def is_cleanable(df: pd.DataFrame) -> bool:
-    """Frames the cleaners may touch: unique single-level axes.
-
-    The reference cleans via ``df.at`` scalar access, which pandas
-    rejects on duplicated or multi-level axes; those failures are
-    swallowed and the frame kept dirty (table_extraction.py:171-182).
-    This predicate makes that skip condition explicit and identical in
-    the engine and the test oracle.
-    """
-    return (
-        df.index.is_unique
-        and df.columns.is_unique
-        and df.index.nlevels == 1
-        and df.columns.nlevels == 1
-    )
-
-
 def grid_cleanable(header: list) -> bool:
-    """Grid mirror of :func:`is_cleanable`: CSV frames always have a
+    """Tables the cleaners may touch. The reference cleans via
+    ``df.at`` scalar access, which pandas rejects on duplicated or
+    multi-level axes; those failures are swallowed and the table kept
+    dirty (table_extraction.py:171-182). A CSV frame always has a
     unique RangeIndex and single-level axes, so the only live condition
     is column-name uniqueness (read_csv mangles duplicates, but a
     malformed fallback parse can still produce them)."""
@@ -191,7 +144,7 @@ def grid_cleanable(header: list) -> bool:
 
 
 def clean_vision_grid_rows(header: list, rows: list) -> list:
-    """Grid-form :func:`clean_vision_frame` over stringified cells.
+    """Full vision-path cleaning over stringified cells.
 
     Safe to run post-stringification: every cleaning rule keys on
     parenthesis/percent patterns that digit-only strings (the
@@ -226,13 +179,3 @@ def clean_vision_grid_rows(header: list, rows: list) -> list:
         )
     return out
 
-
-def clean_vision_frame(df: pd.DataFrame) -> pd.DataFrame:
-    """Full vision-path cleaning: cascade fixpoint, then per-cell repair
-    (order fixed by table_extraction.py:172-179). Uncleanable frames
-    pass through dirty, mirroring the reference's exception swallow."""
-    if not is_cleanable(df):
-        return df
-    df = cascade_frame(df)
-    df = repair_frame_cells(df)
-    return df

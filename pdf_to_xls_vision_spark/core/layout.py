@@ -31,10 +31,7 @@ so the distributed run and the sequential oracle agree bit-for-bit.
 
 from __future__ import annotations
 
-import json
 from bisect import bisect_right
-
-import pandas as pd
 
 SNAP_TOLERANCE = 3.0
 MIN_WORDS_VERTICAL = 3
@@ -93,8 +90,8 @@ def parse_page_words(words: list[dict]) -> list[list[list[str | None]]]:
     cell assembly run in the same sweep, and column lookup is a bisect
     over the ascending anchors instead of a linear scan. Semantics are
     identical to the spec composition ``band_rows`` + ``detect_columns``
-    + ``_column_of`` (kept above, exercised by tests/test_layout.py and
-    the sequential oracle): consecutive surviving anchors differ by
+    + ``_column_of`` (kept above, exercised by tests/test_layout.py):
+    consecutive surviving anchors differ by
     more than SNAP_TOLERANCE (the greedy cluster rule), so at most the
     two anchors flanking ``x0`` can match, and the lower index — the
     spec's first match — is checked first.
@@ -150,14 +147,13 @@ def parse_page_words(words: list[dict]) -> list[list[list[str | None]]]:
 def prune_grid(
     table: list[list[str | None]],
 ) -> tuple[list[str | None], list[list[str | None]]] | None:
-    """List-form header promotion + all-null row/column pruning with
-    ``grid_to_frame``'s exact semantics (table_extraction.py:438-439:
-    first row -> header, then ``dropna(how='all')`` on rows, then on
-    columns over the remaining rows) — but without constructing a
-    pandas DataFrame. The text path parses millions of small tables;
-    pandas object construction + reductions dominated its profile
-    (95% of CPU on 3-12-cell frames), so the hot path stays on plain
-    lists and pandas is reserved for the vision/CSV branch.
+    """Header promotion + all-null row/column pruning over plain lists
+    (table_extraction.py:438-439: first row -> header, then
+    ``dropna(how='all')`` on rows, then on columns over the remaining
+    rows). Both extraction UDFs call it: the text path on parsed grids,
+    the vision path on stringified CSV grids. No pandas DataFrame is
+    built: on the text path's millions of small tables, frame
+    construction + reductions were 95% of CPU (3-12-cell frames).
     """
     if not table:
         return None
@@ -188,48 +184,3 @@ def parse_words_to_grids(
         if g is not None:
             grids.append(g)
     return grids
-
-
-def parse_text_page_grids(
-    payload: str,
-) -> list[tuple[list[str | None], list[list[str | None]]]]:
-    """Decode a text-span JSON payload and parse to pruned (header,
-    rows) grids — the pandas-free twin of ``parse_text_page_payload``."""
-    try:
-        doc = json.loads(payload)
-        words = doc.get("words", [])
-    except Exception:
-        return []
-    return parse_words_to_grids(words)
-
-
-def grid_to_frame(table: list[list[str | None]]) -> pd.DataFrame | None:
-    """Header promotion + all-null row/column pruning
-    (table_extraction.py:438-439). Returns None for empty results."""
-    if not table:
-        return None
-    df = pd.DataFrame(table[1:], columns=table[0])
-    df = df.dropna(how="all").dropna(axis=1, how="all")
-    if df.empty:
-        return None
-    return df
-
-
-def parse_text_page_payload(payload: str) -> list[pd.DataFrame]:
-    """Decode a text-span JSON payload (FIXTURES.md §2) and parse it.
-
-    Payload shape: ``{"page": int, "words": [{"t","x0","x1","top","bottom"}]}``.
-    Malformed payloads yield no tables (per-page fault isolation,
-    converter.py:233-255).
-    """
-    try:
-        doc = json.loads(payload)
-        words = doc.get("words", [])
-    except Exception:
-        return []
-    frames = []
-    for table in parse_page_words(words):
-        df = grid_to_frame(table)
-        if df is not None:
-            frames.append(df)
-    return frames

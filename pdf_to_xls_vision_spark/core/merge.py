@@ -14,62 +14,32 @@ table i and absorbs table j while ALL of:
 Merging renames continuation columns to the first page's and
 concatenates all rows (excel_writer.py:84-96).
 
-In the engine this runs inside the per-document ``applyInPandas`` group
-— every page of a document is already co-located by the extraction
-shuffle, so the merge adds no extra exchange (SURVEY.md §4.3 fusion).
+In the engine this runs per document inside the merge ``mapInPandas``
+over the doc-keyed repartition (``operators/pipeline.py``): every page
+of a document is already co-located there, so the merge adds no extra
+exchange (SURVEY.md §4.3 fusion).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
-import pandas as pd
-
-
-@dataclass
-class TableRecord:
-    """One extracted table: the reference's ``{'dataframe','page','table'}``
-    dict (table_extraction.py:184-188) plus engine-side provenance."""
-
-    frame: pd.DataFrame
-    page: int
-    table_id: int
-    media_ref: str = ""  # source page's media ref for vision tables
-    quality_issues: list[str] = field(default_factory=list)
-
-
-def _starts_with_detail(df: pd.DataFrame) -> bool:
-    if len(df) > 0 and "Row_Type" in df.columns:
-        return str(df.iloc[0]["Row_Type"]).strip().upper() == "DETAIL"
-    return False
-
-
-def _has_generic_headers(df: pd.DataFrame) -> bool:
-    for col in (str(c) for c in df.columns):
-        if col in ("Row_Type", "Category"):
-            continue
-        if (col.startswith("Col") and col[3:].isdigit()) or (
-            col.startswith("Column") and col[6:].isdigit()
-        ):
-            return True
-    return False
+from dataclasses import dataclass
 
 
 @dataclass
 class GridRecord:
-    """Grid-form table record: ``header``/``rows`` of ``str | None``
-    cells instead of a pandas frame. The extraction UDFs already carry
-    tables in this shape across the Arrow boundary, and per-table
-    pandas construction dominated the merge stage's profile — so the
-    hot path (pipeline._merge_and_serialize) stays on grids while the
-    frame API above remains for the vision/CSV branch and tests."""
+    """One extracted table: the reference's ``{'dataframe','page','table'}``
+    dict (table_extraction.py:184-188) with ``header``/``rows`` of
+    ``str | None`` cells in place of the frame, plus engine-side
+    provenance. The extraction UDFs already carry tables in this shape
+    across the Arrow boundary, and per-table pandas construction
+    dominated the merge stage's profile, so the merge stays on grids
+    (``pipeline._merge_doc_arrays``)."""
 
     header: list
     rows: list
     page: int
     table_id: int
-    media_ref: str = ""
-    quality_issues: list[str] = field(default_factory=list)
+    media_ref: str = ""  # source page's media ref for vision tables
 
 
 def _grid_starts_with_detail(rec: GridRecord) -> bool:
@@ -91,9 +61,9 @@ def _grid_has_generic_headers(header: list) -> bool:
 
 
 def merge_grid_continuations(tables: list[GridRecord]) -> list[GridRecord]:
-    """Grid-form :func:`merge_continuations` — identical four-condition
-    greedy scan (excel_writer.py:28-113); "rename continuation columns
-    then concat" reduces to concatenating rows under the head's header."""
+    """Greedy forward merge of page-spanning tables (excel_writer.py:28-113):
+    the four-condition scan above; "rename continuation columns then
+    concat" reduces to concatenating rows under the head's header."""
     if len(tables) <= 1:
         return tables
 
@@ -127,7 +97,6 @@ def merge_grid_continuations(tables: list[GridRecord]) -> list[GridRecord]:
                     page=head.page,
                     table_id=head.table_id,
                     media_ref=head.media_ref,
-                    quality_issues=head.quality_issues,
                 )
             )
             i = j
@@ -136,51 +105,3 @@ def merge_grid_continuations(tables: list[GridRecord]) -> list[GridRecord]:
             i += 1
     return merged
 
-
-def merge_continuations(tables: list[TableRecord]) -> list[TableRecord]:
-    """Greedy forward merge of page-spanning tables (excel_writer.py:28-113)."""
-    if len(tables) <= 1:
-        return tables
-
-    merged: list[TableRecord] = []
-    i = 0
-    while i < len(tables):
-        head = tables[i]
-        run = [head]
-        j = i + 1
-        while j < len(tables):
-            nxt = tables[j]
-            consecutive = nxt.page == head.page + (j - i)
-            same_width = len(nxt.frame.columns) == len(head.frame.columns)
-            if (
-                consecutive
-                and same_width
-                and _starts_with_detail(nxt.frame)
-                and _has_generic_headers(nxt.frame)
-            ):
-                run.append(nxt)
-                j += 1
-            else:
-                break
-
-        if len(run) > 1:
-            combined = run[0].frame.copy()
-            for cont in run[1:]:
-                part = cont.frame.copy()
-                if len(part.columns) == len(combined.columns):
-                    part.columns = combined.columns
-                    combined = pd.concat([combined, part], ignore_index=True)
-            merged.append(
-                TableRecord(
-                    frame=combined,
-                    page=head.page,
-                    table_id=head.table_id,
-                    media_ref=head.media_ref,
-                    quality_issues=head.quality_issues,
-                )
-            )
-            i = j
-        else:
-            merged.append(head)
-            i += 1
-    return merged

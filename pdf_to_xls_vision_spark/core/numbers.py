@@ -5,18 +5,17 @@ with the exact pattern at validation.py:21, and the dataframe walk of
 ``extract_numbers_from_dataframe`` (validation.py:63-86) which skips the
 ``Row_Type``/``Category``/``Notes`` columns.
 
-The distributed counterparts (X4-X6) are plain DataFrame aggregates in
-:mod:`pdf_to_xls_vision_spark.operators.validation`; these kernels also
-serve the SQL-expressible driver-contract queries where the same regex
-runs JVM-side via ``regexp_extract_all``.
+The engine's per-document fold (X4-X6) runs on these kernels inside the
+merge UDF (``pipeline._doc_validation``). ``NUMBER_PATTERN`` also feeds
+the JVM-side ``regexp_extract_all`` of
+:mod:`pdf_to_xls_vision_spark.operators.validation` and the
+driver-contract queries.
 """
 
 from __future__ import annotations
 
 import re
 from functools import lru_cache
-
-import pandas as pd
 
 #: validation.py:21 — numbers with optional $, parens, thousands commas,
 #: decimals, and %.
@@ -44,19 +43,6 @@ def extract_numbers(text: str) -> list[str]:
     return [normalize_number_token(t) for t in _NUMBER_RE.findall(text)]
 
 
-def extract_numbers_from_frame(df: pd.DataFrame) -> list[str]:
-    """Number tokens from every non-null cell outside the label columns,
-    column-major in the reference's walk order (validation.py:74-86)."""
-    out: list[str] = []
-    for col in df.columns:
-        if col in NON_NUMERIC_COLUMNS:
-            continue
-        for val in df[col]:
-            if pd.notna(val):
-                out.extend(extract_numbers(str(val)))
-    return out
-
-
 @lru_cache(maxsize=1 << 16)
 def _cell_numbers(text: str) -> tuple[str, ...]:
     """Memoized per-cell extraction: table cells repeat heavily within
@@ -69,8 +55,9 @@ def _cell_numbers(text: str) -> tuple[str, ...]:
 
 
 def extract_numbers_from_grid(header: list, rows: list) -> list[str]:
-    """Grid-form :func:`extract_numbers_from_frame`: same column-major
-    walk and label-column skip over ``str | None`` cells."""
+    """Number tokens from every non-null cell outside the label columns,
+    column-major in the reference's walk order (validation.py:74-86),
+    over ``str | None`` cells."""
     out: list[str] = []
     for j, col in enumerate(header):
         if col in NON_NUMERIC_COLUMNS:

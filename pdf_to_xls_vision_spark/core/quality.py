@@ -14,8 +14,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-
 # Q6 patterns (quality_check.py:113,116): runs of non-printable /
 # out-of-alphabet chars, and runs of special chars in longer cells.
 _GARBLED_NONPRINT = re.compile(r"[^\x20-\x7E\u00A0-\u024F\u20A0-\u20CF]{3,}")
@@ -30,10 +28,17 @@ _GARBLED_PER_COLUMN = 20
 def grid_quality_issues(
     header: list[str | None], rows: list[list[str | None]]
 ) -> list[str]:
-    """Q1-Q6 over a plain (header, rows) grid of ``str | None`` cells —
-    semantics identical to :func:`table_quality_issues` (which stays
-    for the vision/CSV branch where pandas may infer numeric cells);
-    the text path calls this to avoid per-table pandas overhead.
+    """Return the list of quality-issue descriptions for one table, a
+    (header, rows) grid of ``str | None`` cells.
+
+    Semantics per heuristic (quality_check.py:46-125):
+
+    Q1 single-column trap, Q2 row explosion (>70 always; >50 with >12
+    cols), Q3 per-row non-null-count mode inconsistency >30%, Q4 empty
+    ratio >0.6 (<20 rows) else >0.5, Q5 stringified duplicate rows >20%
+    (only when >5 rows), Q6 garbled-text sample >10%. The reference
+    computes them over a pandas frame; the grid form builds none, since
+    per-table frame construction dominated the text-parse profile.
     """
     issues: list[str] = []
     if not rows or not header:
@@ -128,91 +133,3 @@ def grid_quality_issues(
 
     return issues
 
-
-def table_quality_issues(df: pd.DataFrame) -> list[str]:
-    """Return the list of quality-issue descriptions for one table.
-
-    Semantics per heuristic (quality_check.py:46-125):
-
-    Q1 single-column trap, Q2 row explosion (>70 always; >50 with >12
-    cols), Q3 per-row non-null-count mode inconsistency >30%, Q4 empty
-    ratio >0.6 (<20 rows) else >0.5, Q5 stringified duplicate rows >20%
-    (only when >5 rows), Q6 garbled-text sample >10%.
-    """
-    issues: list[str] = []
-    if df is None or df.empty:
-        return issues
-
-    n_rows = len(df)
-    n_cols = len(df.columns)
-
-    # Q1 — a 1-column table with >3 rows is almost always a parse failure.
-    if n_cols == 1 and n_rows > 3:
-        issues.append(
-            f"Single column table with {n_rows} rows (likely parsing error)"
-        )
-
-    # Q2 — row explosion.
-    if n_rows > 70:
-        issues.append(
-            f"Excessive row count ({n_rows} rows, likely incorrect parsing)"
-        )
-    elif n_rows > 50 and n_cols > 12:
-        issues.append(
-            f"Excessive row count ({n_rows} rows) with many columns ({n_cols}), "
-            "likely incorrect parsing"
-        )
-
-    # Q3 — effective column-count consistency via per-row non-null counts.
-    nn_per_row = df.notna().sum(axis=1)
-    if len(nn_per_row) > 0:
-        modes = nn_per_row.mode()
-        common = modes.iloc[0] if len(modes) > 0 else n_cols
-        ratio = float((nn_per_row != common).sum()) / len(nn_per_row)
-        if ratio > 0.3:
-            issues.append(
-                f"Inconsistent column counts ({ratio:.1%} of rows differ)"
-            )
-
-    # Q4 — empty-cell ratio, threshold looser for big tables.
-    total_cells = n_rows * n_cols
-    if total_cells > 0:
-        empty_ratio = float(df.isna().sum().sum()) / total_cells
-    else:
-        empty_ratio = 0.0
-    threshold = 0.6 if n_rows < 20 else 0.5
-    if empty_ratio > threshold:
-        issues.append(f"High empty cell ratio ({empty_ratio:.1%} empty cells)")
-
-    # Q5 — duplicate rows (string-compared so NaN == NaN).
-    if n_rows > 5:
-        dup = int(df.astype(str).duplicated(keep="first").sum())
-        dup_ratio = dup / n_rows
-        if dup_ratio > 0.2:
-            issues.append(
-                f"High duplicate row ratio ({dup_ratio:.1%} of rows are "
-                f"duplicates, {dup}/{n_rows} rows)"
-            )
-
-    # Q6 — garbled-text sampling: first 20 values per column, capped at
-    # 100 string cells total, column-major walk with early exit.
-    garbled = 0
-    checked = 0
-    cap = min(_GARBLED_SAMPLE_CAP, total_cells)
-    for col in df.columns:
-        for val in df[col].head(_GARBLED_PER_COLUMN):
-            if pd.notna(val) and isinstance(val, str):
-                checked += 1
-                s = str(val)
-                if _GARBLED_NONPRINT.search(s):
-                    garbled += 1
-                elif len(val) > 5 and _GARBLED_SPECIAL.search(s):
-                    garbled += 1
-            if checked >= cap:
-                break
-        if checked >= cap:
-            break
-    if checked > 0 and garbled / checked > 0.1:
-        issues.append(f"Garbled text detected ({garbled}/{checked} cells)")
-
-    return issues

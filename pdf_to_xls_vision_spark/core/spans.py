@@ -19,8 +19,6 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pdf_to_xls_vision_spark.core.merge import TableRecord
-
 ROLLUP_FALLBACK_MARKERS = (
     "total", "gross", "effective", "net operating income", "noi",
 )  # excel_writer.py:125
@@ -30,9 +28,9 @@ def cell_text(value) -> str:
     """Canonical textualization of a cell for span output.
 
     Nulls render as '' (the Excel writer emits empty cells for NaN);
-    everything else is ``str(value)`` — both the Spark UDFs and the test
-    oracle funnel through this single definition, so pandas dtype
-    inference (int64 vs str) can never split the two sides.
+    everything else is ``str(value)``. Grid cells are ``str | None``, so
+    the span writer only falls back to this for a null or non-str
+    cell; the test oracle renders cells the same way in its own ``_txt``.
     """
     if value is None or (isinstance(value, float) and value != value):
         return ""
@@ -41,48 +39,12 @@ def cell_text(value) -> str:
     return str(value)
 
 
-def count_rollup_rows(df: pd.DataFrame) -> int:
+def grid_rollup_rows(header: list, rows: list) -> int:
     """A1 (excel_writer.py:116-156): ``Row_Type == 'ROLLUP'`` rows, or —
     when no Row_Type column exists — rows whose first-column value
     contains a rollup marker. Used as a per-partition metric only (the
-    reference just logs the count, excel_writer.py:329-331)."""
-    if df.empty:
-        return 0
-    if "Row_Type" in df.columns:
-        s = df["Row_Type"]
-        return int(
-            s.map(
-                lambda v: pd.notna(v) and str(v).strip().upper() == "ROLLUP"
-            ).sum()
-        )
-    first = df.columns[0]
-    return int(
-        df[first]
-        .map(
-            lambda v: pd.notna(v)
-            and any(m in str(v).lower().strip() for m in ROLLUP_FALLBACK_MARKERS)
-        )
-        .sum()
-    )
-
-
-def general_notes(df: pd.DataFrame) -> list[str]:
-    """A3 (excel_writer.py:237-259): Notes-column values on HEADER rows."""
-    notes: list[str] = []
-    if "Notes" not in df.columns or "Row_Type" not in df.columns:
-        return notes
-    for _, row in df.iterrows():
-        note = row["Notes"]
-        if pd.notna(note):
-            rt = row["Row_Type"]
-            if pd.notna(rt) and str(rt).strip().upper() == "HEADER":
-                notes.append(cell_text(note))
-    return notes
-
-
-def grid_rollup_rows(header: list, rows: list) -> int:
-    """Grid-form :func:`count_rollup_rows` (cells are ``str | None``;
-    ``pd.notna`` reduces to ``is not None``)."""
+    reference just logs the count, excel_writer.py:329-331). Cells are
+    ``str | None``, so the reference's ``pd.notna`` is ``is not None``."""
     if not rows or not header:
         return 0
     if "Row_Type" in header:
@@ -101,7 +63,7 @@ def grid_rollup_rows(header: list, rows: list) -> int:
 
 
 def grid_notes(header: list, rows: list) -> list[str]:
-    """Grid-form :func:`general_notes`."""
+    """A3 (excel_writer.py:237-259): Notes-column values on HEADER rows."""
     if "Notes" not in header or "Row_Type" not in header:
         return []
     jn, jr = header.index("Notes"), header.index("Row_Type")
@@ -115,9 +77,9 @@ def grid_notes(header: list, rows: list) -> list[str]:
 
 
 def serialize_grid_spans(tables) -> list[dict]:
-    """Grid-form :func:`serialize_spans` over ``GridRecord`` values —
-    same emit order (per-table: start, header cells, row-major cells,
-    end; trailing notes), no pandas in the loop.
+    """Emit the document's ordered output span sequence (FIXTURES.md §4)
+    over ``GridRecord`` values: per table its start, header cells,
+    row-major cells and end, then the trailing notes.
 
     Hot path: one dict literal per span built in extend() generators
     (grid cells are ``str | None`` by the :func:`encode_grid` contract,
@@ -172,36 +134,3 @@ def serialize_grid_spans(tables) -> list[dict]:
         s["order"] = i
     return spans
 
-
-def serialize_spans(tables: list[TableRecord]) -> list[dict]:
-    """Emit the document's ordered output span sequence (FIXTURES.md §4)."""
-    spans: list[dict] = []
-    order = 0
-
-    def emit(kind: str, text: str, media_ref: str) -> None:
-        nonlocal order
-        spans.append(
-            {"kind": kind, "text": text, "media_ref": media_ref, "order": order}
-        )
-        order += 1
-
-    all_notes: list[str] = []
-    for rec in tables:
-        df = rec.frame
-        ref = rec.media_ref or ""
-        all_notes.extend(general_notes(df))
-        emit(
-            "table_start",
-            f"{rec.page}:{rec.table_id}:{len(df)}x{len(df.columns)}",
-            ref,
-        )
-        for col in df.columns:
-            emit("header_cell", cell_text(col), ref)
-        for row in df.itertuples(index=False, name=None):
-            for value in row:
-                emit("cell", cell_text(value), ref)
-        emit("table_end", "", ref)
-
-    for note in all_notes:
-        emit("note", note, "")
-    return spans

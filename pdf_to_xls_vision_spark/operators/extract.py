@@ -104,16 +104,24 @@ def _frame_payload(df: pd.DataFrame) -> tuple[list, list]:
     return header, rows
 
 
-def _page_text(kind: str, text: str) -> str:
+def _page_words(kind: str, text: str) -> list:
+    """Decode a text span's JSON payload (FIXTURES.md §2,
+    ``{"page": int, "words": [{"t","x0","x1","top","bottom"}]}``) to
+    its word boxes. Image pages have no text layer, and a malformed
+    payload yields no words (per-page fault isolation,
+    converter.py:233-255)."""
+    if kind != "text" or not text:
+        return []
+    try:
+        return json.loads(text).get("words", [])
+    except Exception:
+        return []
+
+
+def _page_text(words: list) -> str:
     """Source text of a page for validation (X2): the word tokens in
     payload order — the analog of pdfplumber ``page.extract_text()``
-    (validation.py:50-54). Image pages have no text layer."""
-    if kind != "text" or not text:
-        return ""
-    try:
-        words = json.loads(text).get("words", [])
-    except Exception:
-        return ""
+    (validation.py:50-54)."""
     return " ".join(w.get("t", "") for w in words)
 
 
@@ -141,15 +149,11 @@ def extract_text_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
             # decode the payload ONCE per page; the word list feeds both
             # the validation text/number pass and the layout parse (the
             # double json.loads was ~18% of this kernel's profile)
-            words: list = []
-            if kind == "text" and text:
-                try:
-                    words = json.loads(text).get("words", [])
-                except Exception:
-                    words = []
-            page_text = " ".join(w.get("t", "") for w in words)
+            words = _page_words(kind, text)
             out.append(
-                _sentinel(doc_id, page, 0, extract_numbers(page_text), media_ref)
+                _sentinel(
+                    doc_id, page, 0, extract_numbers(_page_text(words)), media_ref
+                )
             )
             if not words:
                 continue
@@ -197,7 +201,8 @@ def make_vision_extractor(backend: VisionBackend | None = None):
                 rotations.append(1 if applied != 0 else 0)
             responses = backend.infer_batch(refs)
             page_texts = [
-                _page_text(k, t) for k, t in zip(batch["kind"], batch["text"])
+                _page_text(_page_words(k, t))
+                for k, t in zip(batch["kind"], batch["text"])
             ]
 
             out = []

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pdf_to_xls_vision_spark.sink.checkpoint import (
     _spans_dir,
     overwrite_partitions,
+    require_positive,
 )
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
@@ -115,6 +116,7 @@ def compact_spans(
     Returns ``{"compacted": {bucket: info}, "skipped": [buckets]}``.
     Idempotent: a second run immediately after returns an empty plan.
     """
+    require_positive(target_file_bytes=target_file_bytes)
     listing = list_bucket_files(spark, out_dir)
     plan = plan_compaction(listing, target_file_bytes)
     skipped = sorted(set(listing) - set(plan))

@@ -1,7 +1,8 @@
 """The extraction engine stands alone: no module of the
 ``pdf_to_xls_vision_spark`` package, nor the driver entry point, imports
-the operator zoo; and it has one commit protocol, in
-``sink/checkpoint.py``."""
+the operator zoo; it has one commit protocol, in
+``sink/checkpoint.py``; and its grid kernels have no pandas-frame
+twins."""
 
 import ast
 import os
@@ -44,3 +45,17 @@ def test_only_the_commit_protocol_overwrites_partitions():
         if "partitionOverwriteMode" in open(p, encoding="utf-8").read()
     )
     assert writers == [os.path.join("sink", "checkpoint.py")]
+
+
+def test_grid_kernels_do_not_import_pandas():
+    """Layout, merge, quality and number kernels run on ``(header,
+    rows)`` grids only; a pandas import there means a frame twin (a
+    second implementation to keep in step) has come back."""
+    core = os.path.join(REPO, "pdf_to_xls_vision_spark", "core")
+    offenders = [
+        (name, m)
+        for name in ("layout.py", "merge.py", "quality.py", "numbers.py")
+        for m in _imported_modules(os.path.join(core, name))
+        if m.split(".")[0] == "pandas"
+    ]
+    assert offenders == []

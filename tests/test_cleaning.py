@@ -1,14 +1,13 @@
 """Unit goldens for the parenthesis cleaners (C1-C3) — examples taken
 from the reference's own docstrings and comments."""
 
-import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pdf_to_xls_vision_spark.core.cleaning import (
     cascade_row,
-    clean_vision_frame,
+    clean_vision_grid_rows,
     repair_cell,
 )
 
@@ -51,16 +50,16 @@ def test_cascade_empty_next():
 
 
 def test_pct_artifact_strip():
-    df = pd.DataFrame({"a": ["-3.34% ("], "b": ["x"]})
-    out = clean_vision_frame(df)
-    assert out["a"].iloc[0] == "-3.34%"
+    out = clean_vision_grid_rows(["a", "b"], [["-3.34% (", "x"]])
+    assert out[0][0] == "-3.34%"
 
 
 def test_vision_clean_order_cascade_then_repair():
     # cascade leaves "(173"; repair then closes it to "(173)"
-    df = pd.DataFrame([["10,947 (", "3,094)(", "578)(", "173"]], columns=list("abcd"))
-    out = clean_vision_frame(df)
-    assert list(out.iloc[0]) == ["10,947", "(3,094)", "(578)", "(173)"]
+    out = clean_vision_grid_rows(
+        list("abcd"), [["10,947 (", "3,094)(", "578)(", "173"]]
+    )
+    assert out[0] == ["10,947", "(3,094)", "(578)", "(173)"]
 
 
 @settings(max_examples=200, deadline=None)

@@ -85,6 +85,49 @@ def test_cli_partitions_set_page_partitions(
     assert seen["page_partitions"] == 3
 
 
+def test_cli_stream_passes_the_vision_backend(spark, tmp_path, monkeypatch):
+    """--stream --vision-backend anthropic reaches stream_extraction as
+    the live backend, not the stub."""
+    from pdf_to_xls_vision_spark.core.vision_client import AnthropicVisionBackend
+    from pdf_to_xls_vision_spark.streaming import ingest
+
+    class Started(Exception):
+        pass
+
+    seen = {}
+
+    def stream_extraction(spark, *args, **kwargs):
+        seen.update(kwargs)
+        raise Started
+
+    monkeypatch.setattr(ingest, "stream_extraction", stream_extraction)
+    monkeypatch.setenv("ANTHROPIC_API_KEY", "sk-test")
+    with pytest.raises(Started):
+        main([str(tmp_path / "in"), "-o", str(tmp_path / "out"), "--stream",
+              "--vision-backend", "anthropic", "--media-dir", str(tmp_path)])
+    assert isinstance(seen["backend"], AnthropicVisionBackend)
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [["--force-vision"], ["--partitions", "4"], ["--commit-group-size", "2"]],
+)
+def test_cli_stream_rejects_batch_only_flags(flags, tmp_path, monkeypatch):
+    """Batch-only flags are an error with --stream, raised before a
+    session starts or any extraction runs, not silently ignored."""
+    from pdf_to_xls_vision_spark import session
+    from pdf_to_xls_vision_spark.streaming import ingest
+
+    def ran(*args, **kwargs):
+        raise AssertionError("the job started")
+
+    monkeypatch.setattr(session, "get_spark", ran)
+    monkeypatch.setattr(ingest, "stream_extraction", ran)
+    with pytest.raises(SystemExit, match=flags[0]):
+        main([str(tmp_path / "in"), "-o", str(tmp_path / "out"), "--stream",
+              *flags])
+
+
 @pytest.mark.slow
 def test_cli_stream_mode(spark, tiny_corpus, tmp_path):
     """--stream drains the input dir via Structured Streaming and

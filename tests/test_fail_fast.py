@@ -1,6 +1,8 @@
 """Bad count parameters fail before any work: a bucket count,
 commit-group size or partition width below 1 would otherwise plan no
-commit (``range(0, n, -1)`` is empty) and report success."""
+commit (``range(0, n, -1)`` is empty) and report success, and a
+compaction target below 1 would divide by zero or rewrite every bucket
+to one file."""
 
 from __future__ import annotations
 
@@ -11,6 +13,7 @@ import pytest
 from pdf_to_xls_vision_spark.cli import build_parser
 from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
 from pdf_to_xls_vision_spark.sink.checkpoint import run_checkpointed_extraction
+from pdf_to_xls_vision_spark.sink.compaction import compact_spans
 from pdf_to_xls_vision_spark.streaming.ingest import stream_extraction
 
 _BAD_COUNTS = [
@@ -47,6 +50,14 @@ def test_stream_extraction_rejects(spark, tmp_path, n_buckets):
     assert spark.streams.active == []
 
 
+@pytest.mark.parametrize("target_file_bytes", [0, -1])
+def test_compact_spans_rejects(spark, tmp_path, target_file_bytes):
+    with pytest.raises(ValueError, match="target_file_bytes"):
+        compact_spans(
+            spark, str(tmp_path / "out"), target_file_bytes=target_file_bytes
+        )
+
+
 @pytest.mark.parametrize("page_partitions", [0, -2])
 def test_run_extraction_rejects(docs, page_partitions):
     with pytest.raises(ValueError, match="page_partitions"):
@@ -54,7 +65,7 @@ def test_run_extraction_rejects(docs, page_partitions):
 
 
 @pytest.mark.parametrize(
-    "flag", ["--buckets", "--commit-group-size", "--partitions"]
+    "flag", ["--buckets", "--commit-group-size", "--partitions", "--target-file-mb"]
 )
 @pytest.mark.parametrize("value", ["0", "-3"])
 def test_cli_rejects_counts_below_one(flag, value, capsys):

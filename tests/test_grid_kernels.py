@@ -1,37 +1,40 @@
-"""List-form kernel parity: the pandas-free grid kernels (the Spark
-hot path) must agree cell-for-cell and issue-for-issue with the pandas
-reference implementations on every text page of the deterministic
-corpus, plus targeted threshold/edge cases."""
+"""Grid-kernel parity: the engine's list-form kernels (the Spark hot
+path) must agree cell-for-cell with the sequential oracle's own
+pandas-frame functions (``tests/oracle.py``) on every text page of the
+deterministic corpus, on the stub vision responses, and on targeted
+threshold/edge cases. The oracle's quality check returns only the
+routing bool, so quality parity compares ``bool(issues)``."""
 
 from __future__ import annotations
 
 import pandas as pd
 
-from pdf_to_xls_vision_spark.core.layout import (
-    parse_text_page_grids,
-    parse_text_page_payload,
-)
+from pdf_to_xls_vision_spark.core.layout import parse_words_to_grids
 from pdf_to_xls_vision_spark.core.merge import (
     GridRecord,
-    TableRecord,
-    merge_continuations,
     merge_grid_continuations,
 )
-from pdf_to_xls_vision_spark.core.numbers import (
-    extract_numbers_from_frame,
-    extract_numbers_from_grid,
-)
-from pdf_to_xls_vision_spark.core.quality import (
-    grid_quality_issues,
-    table_quality_issues,
-)
+from pdf_to_xls_vision_spark.core.numbers import extract_numbers_from_grid
+from pdf_to_xls_vision_spark.core.quality import grid_quality_issues
 from pdf_to_xls_vision_spark.core.spans import (
-    count_rollup_rows,
-    general_notes,
     grid_notes,
     grid_rollup_rows,
     serialize_grid_spans,
-    serialize_spans,
+)
+from pdf_to_xls_vision_spark.operators.extract import (
+    _page_words,
+    decode_grid,
+    make_vision_extractor,
+)
+from tests.oracle import (
+    _doc_spans,
+    _has_quality_issues,
+    _merge,
+    _table_notes_m,
+    _table_numbers_m,
+    _table_rollup_rows_m,
+    _text_page_tables,
+    _vision_page_table,
 )
 
 
@@ -52,31 +55,34 @@ def test_corpus_wide_parity(tiny_corpus):
             if s["kind"] != "text":
                 continue
             pages += 1
-            old = [
-                (*_frame_to_grid(df), table_quality_issues(df))
-                for df in parse_text_page_payload(s["text"])
+            oracle = [
+                (*_frame_to_grid(df), _has_quality_issues(df))
+                for df in _text_page_tables(s["text"])
             ]
-            new = [
-                (h, r, grid_quality_issues(h, r))
-                for h, r in parse_text_page_grids(s["text"])
+            engine = [
+                (h, r, bool(grid_quality_issues(h, r)))
+                for h, r in parse_words_to_grids(_page_words("text", s["text"]))
             ]
-            assert old == new
+            assert oracle == engine
     assert pages > 100  # the corpus actually exercised the kernels
 
 
 def _records(kind, tables):
-    """Build paired frame/grid records from (page, header, rows) specs."""
-    frames = [
-        TableRecord(
-            frame=pd.DataFrame(rows, columns=header), page=p, table_id=1
-        )
-        for p, header, rows in tables
-    ]
-    grids = [
+    """Build paired oracle/grid records from (page, header, rows) specs."""
+    if kind == "oracle":
+        return [
+            {
+                "dataframe": pd.DataFrame(rows, columns=header),
+                "page": p,
+                "table": 1,
+                "media_ref": "",
+            }
+            for p, header, rows in tables
+        ]
+    return [
         GridRecord(header=list(header), rows=[list(r) for r in rows], page=p, table_id=1)
         for p, header, rows in tables
     ]
-    return frames if kind == "frame" else grids
 
 
 CONT_TABLES = [
@@ -88,10 +94,10 @@ CONT_TABLES = [
 
 
 def test_merge_parity_and_span_parity():
-    merged_f = merge_continuations(_records("frame", CONT_TABLES))
+    merged_o = _merge(_records("oracle", CONT_TABLES))
     merged_g = merge_grid_continuations(_records("grid", CONT_TABLES))
-    assert len(merged_f) == len(merged_g) == 2
-    assert serialize_spans(merged_f) == serialize_grid_spans(merged_g)
+    assert len(merged_o) == len(merged_g) == 2
+    assert _doc_spans(merged_o) == serialize_grid_spans(merged_g)
 
 
 def test_rollup_notes_numbers_parity():
@@ -103,16 +109,20 @@ def test_rollup_notes_numbers_parity():
         [None, "total gross", "7", None],
     ]
     df = pd.DataFrame(rows, columns=header)
-    assert grid_rollup_rows(header, rows) == count_rollup_rows(df)
-    assert grid_notes(header, rows) == general_notes(df)
-    assert extract_numbers_from_grid(header, rows) == extract_numbers_from_frame(df)
+    assert grid_rollup_rows(header, rows) == _table_rollup_rows_m(df)
+    assert len(grid_notes(header, rows)) == _table_notes_m(df)
+    assert extract_numbers_from_grid(header, rows) == _table_numbers_m(df)
+    # the note texts themselves: the trailing note spans
+    rec = GridRecord(header=header, rows=rows, page=1, table_id=1)
+    oracle = {"dataframe": df, "page": 1, "table": 1, "media_ref": ""}
+    assert serialize_grid_spans([rec]) == _doc_spans([oracle])
     # fallback marker path: no Row_Type column
     h2, r2 = ["Category", "Amt"], [["Total assets", "9"], ["rent", "1"]]
-    assert grid_rollup_rows(h2, r2) == count_rollup_rows(pd.DataFrame(r2, columns=h2))
+    assert grid_rollup_rows(h2, r2) == _table_rollup_rows_m(pd.DataFrame(r2, columns=h2))
 
 
 def test_quality_thresholds_parity():
-    # Q1/Q2/Q3/Q4/Q5 boundary grids, compared against the pandas kernel
+    # Q1/Q2/Q3/Q4/Q5 boundary grids, compared against the oracle
     cases = [
         (["A"], [["x"]] * 4),                                   # Q1 fires
         (["A"], [["x"]] * 3),                                   # Q1 holds
@@ -124,41 +134,40 @@ def test_quality_thresholds_parity():
     ]
     for header, rows in cases:
         df = pd.DataFrame(rows, columns=header)
-        assert grid_quality_issues(header, rows) == table_quality_issues(df), (
+        assert bool(grid_quality_issues(header, rows)) == _has_quality_issues(df), (
             header,
             rows[:3],
         )
 
 
 def test_vision_cleaning_parity():
-    """Stringify-then-grid-clean must equal clean-then-stringify on the
-    stub vision responses (incl. fence/malformed/cascade variants)."""
-    from pdf_to_xls_vision_spark.core.cleaning import (
-        clean_vision_frame,
-        clean_vision_grid_rows,
-        grid_cleanable,
-        is_cleanable,
-    )
-    from pdf_to_xls_vision_spark.core.vision import VisionBackend, parse_vision_csv
-
-    backend = VisionBackend()
+    """The engine's vision stage (grid fast path or CSV ladder, prune,
+    stringify-then-clean) must equal the oracle's clean-then-stringify
+    page table on the stub responses (incl. fence/malformed/cascade
+    variants)."""
     refs = [f"img://doc-{i:08d}/{p}" for i in range(150) for p in (1, 2)]
-    tables = 0
-    for csv in backend.infer_batch(refs):
-        df = parse_vision_csv(csv)
-        if df is None:
-            continue
-        df = df.dropna(how="all").dropna(axis=1, how="all")
-        if df.empty:
-            continue
-        header, rows = _frame_to_grid(df)
-        assert grid_cleanable(header) == is_cleanable(df)
-        new = clean_vision_grid_rows(header, rows) if grid_cleanable(header) else rows
-        old_h, old_r = _frame_to_grid(clean_vision_frame(df.copy()))
-        assert old_h == header
-        assert old_r == new
-        tables += 1
-    assert tables > 100
+    batch = pd.DataFrame(
+        {
+            "doc_id": [r.split("/")[2] for r in refs],
+            "page": [int(r.rsplit("/", 1)[1]) for r in refs],
+            "kind": "image",
+            "text": "",
+            "media_ref": refs,
+        }
+    )
+    (out,) = make_vision_extractor()(iter([batch]))
+    engine = {
+        ref: decode_grid(grid)
+        for ref, grid, is_table in zip(out["media_ref"], out["grid"], out["is_table"])
+        if is_table
+    }
+    oracle = {}
+    for ref in refs:
+        df = _vision_page_table(ref)
+        if df is not None:
+            oracle[ref] = _frame_to_grid(df)
+    assert engine == oracle
+    assert len(engine) > 100
 
 
 # ---------------------------------------------------------------------------
@@ -194,7 +203,7 @@ def _grids(draw):
 def test_quality_parity_random_grids(grid):
     header, rows = grid
     df = pd.DataFrame(rows, columns=header)
-    assert grid_quality_issues(header, rows) == table_quality_issues(df)
+    assert bool(grid_quality_issues(header, rows)) == _has_quality_issues(df)
 
 
 @settings(max_examples=120, deadline=None)
@@ -202,5 +211,5 @@ def test_quality_parity_random_grids(grid):
 def test_rollup_numbers_parity_random_grids(grid):
     header, rows = grid
     df = pd.DataFrame(rows, columns=header)
-    assert grid_rollup_rows(header, rows) == count_rollup_rows(df)
-    assert extract_numbers_from_grid(header, rows) == extract_numbers_from_frame(df)
+    assert grid_rollup_rows(header, rows) == _table_rollup_rows_m(df)
+    assert extract_numbers_from_grid(header, rows) == _table_numbers_m(df)

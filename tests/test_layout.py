@@ -5,10 +5,11 @@ import json
 from pdf_to_xls_vision_spark.core.layout import (
     band_rows,
     detect_columns,
-    grid_to_frame,
     parse_page_words,
-    parse_text_page_payload,
+    parse_words_to_grids,
+    prune_grid,
 )
+from pdf_to_xls_vision_spark.operators.extract import _page_words
 
 
 def _w(t, x0, top):
@@ -64,14 +65,14 @@ def test_missing_cells_are_none():
 
 def test_empty_rows_dropped_via_frame():
     grid = [["A", "B"], [None, None], ["1", "2"]]
-    df = grid_to_frame(grid)
-    assert len(df) == 1
+    _header, rows = prune_grid(grid)
+    assert len(rows) == 1
 
 
 def test_all_null_column_pruned():
     grid = [["A", "B"], ["1", None], ["2", None]]
-    df = grid_to_frame(grid)
-    assert list(df.columns) == ["A"]
+    header, _rows = prune_grid(grid)
+    assert header == ["A"]
 
 
 def test_single_band_no_table():
@@ -82,13 +83,13 @@ def test_single_band_no_table():
 def test_payload_roundtrip():
     words = _grid_words(["H1", "H2"], [["a", "b"], ["c", "d"]])
     payload = json.dumps({"page": 1, "words": words})
-    frames = parse_text_page_payload(payload)
-    assert len(frames) == 1 and list(frames[0].columns) == ["H1", "H2"]
+    grids = parse_words_to_grids(_page_words("text", payload))
+    assert len(grids) == 1 and grids[0][0] == ["H1", "H2"]
 
 
 def test_malformed_payload_isolated():
-    assert parse_text_page_payload("{not json") == []
-    assert parse_text_page_payload(json.dumps({"page": 1})) == []
+    assert _page_words("text", "{not json") == []
+    assert _page_words("text", json.dumps({"page": 1})) == []
 
 
 def test_band_rows_tie_breaks_stable():

@@ -1,10 +1,8 @@
 """X1 number extraction/normalization goldens (validation.py:10-34)."""
 
-import pandas as pd
-
 from pdf_to_xls_vision_spark.core.numbers import (
     extract_numbers,
-    extract_numbers_from_frame,
+    extract_numbers_from_grid,
     number_key,
 )
 
@@ -30,15 +28,9 @@ def test_unbalanced_parens_not_negative():
 
 
 def test_frame_skips_label_columns():
-    df = pd.DataFrame(
-        {
-            "Row_Type": ["DETAIL 9"],
-            "Category": ["Item 42"],
-            "Notes": ["see 7"],
-            "2024": ["1,000"],
-        }
-    )
-    assert extract_numbers_from_frame(df) == ["1000"]
+    header = ["Row_Type", "Category", "Notes", "2024"]
+    rows = [["DETAIL 9", "Item 42", "see 7", "1,000"]]
+    assert extract_numbers_from_grid(header, rows) == ["1000"]
 
 
 def test_number_key_folds_floats():

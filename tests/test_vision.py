@@ -2,7 +2,6 @@
 rotation detection + gate, resize plan."""
 
 import numpy as np
-import pandas as pd
 
 from pdf_to_xls_vision_spark.core.vision import (
     MAX_IMAGE_B64_BYTES,
@@ -101,7 +100,9 @@ def test_resize_plan_floor():
 def test_stub_vision_frame_cleanable():
     """Cascade-bearing stub responses round-trip the cleaners without
     error and leave no ')(' artifacts behind."""
-    from pdf_to_xls_vision_spark.core.cleaning import clean_vision_frame
+    from pdf_to_xls_vision_spark.core.cleaning import clean_vision_grid_rows
+    from pdf_to_xls_vision_spark.core.layout import prune_grid
+    from pdf_to_xls_vision_spark.operators.extract import _frame_payload
 
     found = 0
     for i in range(300):
@@ -109,12 +110,12 @@ def test_stub_vision_frame_cleanable():
         if not c or ")(" not in c:
             continue
         found += 1
-        df = parse_vision_csv(c)
-        df = df.dropna(how="all").dropna(axis=1, how="all")
-        out = clean_vision_frame(df)
-        for col in out.columns:
-            for v in out[col]:
-                if pd.notna(v) and isinstance(v, str):
+        header, rows = _frame_payload(parse_vision_csv(c))
+        header, rows = prune_grid([header, *rows])
+        out = clean_vision_grid_rows(header, rows)
+        for row in out:
+            for col, v in zip(header, row):
+                if v is not None:
                     assert ")(" not in v, (i, col, v)
     assert found > 0
 

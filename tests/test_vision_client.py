@@ -191,6 +191,42 @@ def test_cli_backend_wiring(tmp_path, monkeypatch):
         _vision_backend(args)
 
 
+def test_cli_loader_confined_to_media_dir(tmp_path, monkeypatch):
+    """media refs come from the input table: an absolute or ../ ref
+    must not read a file outside --media-dir, and infer_batch must not
+    send one to the API (the loader fault skips that page only)."""
+    from pdf_to_xls_vision_spark.cli import _vision_backend, build_parser
+
+    monkeypatch.setenv("ANTHROPIC_API_KEY", "sk-test")
+    media = tmp_path / "media"
+    media.mkdir()
+    (media / "pg1.png").write_bytes(b"RASTER")
+    secret = tmp_path / "secret.png"
+    secret.write_bytes(b"SECRET")
+    args = build_parser().parse_args(
+        ["in", "-o", "out", "--vision-backend", "anthropic",
+         "--media-dir", str(media)]
+    )
+    backend = _vision_backend(args)
+    escapes = [str(secret), "../secret.png"]
+    for ref in escapes:
+        with pytest.raises(ValueError, match="outside --media-dir"):
+            backend._media_loader(ref)
+
+    sent = []
+
+    def transport(url, headers, body):
+        sent.append(json.loads(body))
+        return 200, _ok_body("csv")
+
+    backend._transport = transport
+    backend._sleep = lambda s: None
+    assert backend.infer_batch([*escapes, "pg1.png"]) == [None, None, "csv"]
+    (body,) = sent
+    img = body["messages"][0]["content"][0]
+    assert base64.standard_b64decode(img["source"]["data"]) == b"RASTER"
+
+
 def test_misconfigured_loader_fails_loudly():
     def loader(ref):
         raise NotImplementedError("no media codec in this environment")
