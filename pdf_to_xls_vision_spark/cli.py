@@ -17,7 +17,9 @@ Usage::
 Resume is the default: committed buckets (per the output manifest) are
 pruned from the input scan before any extraction work runs. The job
 prints one JSON summary line (the reference's batch summary,
-``converter.py:257-265``).
+``converter.py:257-265``) from the run's own sums: the resumed buckets'
+from the resume's manifest read, the new ones' from their commits.
+Only ``--report`` reads the manifest again.
 """
 
 from __future__ import annotations
@@ -220,7 +222,6 @@ def main(argv: list[str] | None = None) -> int:
 
     from pdf_to_xls_vision_spark.session import get_spark
     from pdf_to_xls_vision_spark.sink.checkpoint import (
-        MANIFEST_SUMS,
         read_manifest,
         run_checkpointed_extraction,
     )
@@ -256,7 +257,6 @@ def main(argv: list[str] | None = None) -> int:
         shutil.rmtree(args.output, ignore_errors=True)
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     # only stop the session on exit if this invocation created it —
     # embedded callers (tests, notebooks) keep theirs alive
@@ -319,22 +319,19 @@ def main(argv: list[str] | None = None) -> int:
             backend=_vision_backend(args),
             page_partitions=args.partitions,
         )
-        manifest = read_manifest(spark, args.output)
-        totals = manifest.agg(
-            *(F.sum(name).alias(name) for name in MANIFEST_SUMS)
-        ).collect()[0]
         print(
             json.dumps(
                 {
                     "committed_buckets": len(summary["committed"]),
                     "resumed_buckets": len(summary["skipped"]),
                     "attempt": summary["attempt"],
-                    **totals.asDict(),
+                    **summary["totals"],
                     "output": args.output,
                 }
             )
         )
         if args.report:
+            manifest = read_manifest(spark, args.output)
             for row in manifest.orderBy("bucket").collect():
                 print(
                     f"bucket {row.bucket:>4}: docs={row.docs} "

@@ -23,6 +23,7 @@ extra exchange, aggregate or join.
 from __future__ import annotations
 
 import json
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,6 +44,9 @@ from pdf_to_xls_vision_spark.operators.extract import (
     make_vision_extractor,
 )
 from pdf_to_xls_vision_spark.core.vision import VisionBackend
+
+if TYPE_CHECKING:
+    from pdf_to_xls_vision_spark.sink.checkpoint import ManifestFold
 
 _SPANS_TYPE = (
     "array<struct<kind string, text string, media_ref string, order int>>"
@@ -66,7 +70,7 @@ _RAW_RESULT_SCHEMA = RESULT_SCHEMA.replace(
 )
 
 
-def _finish_result(raw: DataFrame) -> DataFrame:
+def _finish_result(raw: DataFrame, *passthrough: str) -> DataFrame:
     """JVM-side restore of the public result schema from the raw merge
     output: parse spans_json into the typed span array (Jackson parse
     inside whole-stage codegen) and re-project the column order.
@@ -79,7 +83,8 @@ def _finish_result(raw: DataFrame) -> DataFrame:
     Python-throttled merge stage (the merge UDF's Arrow batching caps
     how fast parse input arrives, so allocation stays inside the young
     gen). Callers should keep this select in the same stage as the
-    merge UDF, never in a cache-scan/union-only stage."""
+    merge UDF, never in a cache-scan/union-only stage. ``passthrough``
+    columns follow the result columns unchanged."""
     scalars = [
         "n_tables", "pages_parsed", "rotation_corrections",
         "quality_retried", "rollup_rows", "n_notes",
@@ -90,6 +95,7 @@ def _finish_result(raw: DataFrame) -> DataFrame:
         "doc_id",
         F.from_json("spans_json", _SPANS_TYPE).alias("spans"),
         *scalars,
+        *passthrough,
     )
 
 
@@ -265,7 +271,8 @@ def _make_merge_kernel(vision_extractor):
 
 def _merge_frame(b: pd.DataFrame, kernel) -> pd.DataFrame:
     """Merge every complete document group in one pandas frame whose
-    rows are contiguous by doc_id."""
+    rows are contiguous by doc_id; a ``bucket`` column passes through,
+    one value per document."""
     import numpy as np
 
     ids = b["doc_id"].to_numpy()
@@ -273,12 +280,13 @@ def _merge_frame(b: pd.DataFrame, kernel) -> pd.DataFrame:
     starts = [0, *bounds.tolist()]
     ends = [*bounds.tolist(), len(ids)]
     cols = {c: b[c].to_numpy() for c in b.columns}
-    return pd.DataFrame(
-        [kernel(cols, s, e) for s, e in zip(starts, ends)]
-    )
+    out = pd.DataFrame([kernel(cols, s, e) for s, e in zip(starts, ends)])
+    if "bucket" in cols:
+        out["bucket"] = cols["bucket"][starts]
+    return out
 
 
-def _make_merge_partition(kernel):
+def _make_merge_partition(kernel, fold=None):
     """Build the per-partition merge driver: rows arrive
     hash-partitioned by doc_id and sorted within the partition, so
     each document is a contiguous run — but Arrow batches don't
@@ -287,7 +295,14 @@ def _make_merge_partition(kernel):
     batch; a 3000-row document simply accumulates across batches until
     its run ends. This replaces a groupBy().applyInPandas whose
     pandas-frame-per-group overhead (~13ms/doc x one frame per
-    document) dominated the merge stage's executor time."""
+    document) dominated the merge stage's executor time. Each emitted
+    frame is added to ``fold`` when there is one."""
+
+    def _merged(body: pd.DataFrame) -> pd.DataFrame:
+        out = _merge_frame(body, kernel)
+        if fold is not None:
+            fold.add(out)
+        return out
 
     def _merge_partition(batches) -> pd.DataFrame:
         pending: pd.DataFrame | None = None
@@ -305,9 +320,9 @@ def _make_merge_partition(kernel):
             pending = b.iloc[start_last:]
             body = b.iloc[:start_last]
             if len(body):
-                yield _merge_frame(body, kernel)
+                yield _merged(body)
         if pending is not None and len(pending):
-            yield _merge_frame(pending, kernel)
+            yield _merged(pending)
 
     return _merge_partition
 
@@ -337,9 +352,16 @@ def run_extraction(
     force_vision: bool = False,
     backend: VisionBackend | None = None,
     page_partitions: int | None = None,
+    fold: ManifestFold | None = None,
 ) -> DataFrame:
     """The full extraction pipeline; returns the result relation
     ``(doc_id, spans, …metrics)``.
+
+    A commit passes ``fold`` (``sink/checkpoint.ManifestFold``): each
+    row then carries its ``bucket`` (``fold.bucket``, evaluated in the
+    JVM before the doc-keyed exchange) through the merge into the
+    result's last column, and the merge UDF adds every document's
+    manifest metrics to ``fold``. Without it the plan is unchanged.
 
     One linear DAG: pages are parsed (text route) or run through the
     vision stage (vision route), the two outputs meet in one doc-keyed
@@ -404,12 +426,16 @@ def run_extraction(
     extracted = _extract("text", extract_text_pages).unionByName(
         _extract("vision", vision_extractor)
     )
+    schema, passthrough = _RAW_RESULT_SCHEMA, ()
+    if fold is not None:
+        extracted = extracted.withColumn("bucket", fold.bucket)
+        schema, passthrough = f"{schema}, bucket int", ("bucket",)
     merged = (
         extracted.repartition(n_parts, "doc_id")
         .sortWithinPartitions("doc_id")
         .mapInPandas(
-            _make_merge_partition(_make_merge_kernel(vision_extractor)),
-            _RAW_RESULT_SCHEMA,
+            _make_merge_partition(_make_merge_kernel(vision_extractor), fold),
+            schema,
         )
     )
-    return _finish_result(merged)
+    return _finish_result(merged, *passthrough)

@@ -16,8 +16,10 @@ must be idempotent and resumable. This module:
   a task, job or trigger retry can never duplicate spans;
 - writes one manifest row per committed partition: the
   ``MANIFEST_METRICS`` (docs, pages_parsed, tables_found,
-  rotation_corrections, quality_retries, accuracy_pct) from one
-  projection + aggregate, plus each sink's own lineage and write mode;
+  rotation_corrections, quality_retries, accuracy_pct), summed per
+  bucket by the merge tasks that write the spans (``ManifestFold``),
+  so a commit runs the extraction plan once, plus each sink's own
+  lineage and write mode;
 - gates every read of committed output on the manifest, so data
   written without its manifest row is invisible;
 - resumes by anti-filtering committed buckets: only the manifest — a
@@ -32,9 +34,11 @@ here (per-partition atomic replace + manifest-gated reads). Swapping
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,10 +87,13 @@ def require_positive(**params) -> None:
             raise ValueError(f"{name} must be >= 1, got {value}")
 
 
+def bucket_of(n_buckets: int) -> Column:
+    """A row's commit bucket: ``pmod(xxhash64(doc_id), n_buckets)``."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
 def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn("bucket", bucket_of(n_buckets))
 
 
 def _path_missing(spark: SparkSession, path: str) -> bool:
@@ -119,52 +126,153 @@ def overwrite_partitions(df: DataFrame, path: str, *keys: str) -> None:
     )
 
 
-def _metric_rows(result: DataFrame, *keys: str) -> DataFrame:
-    """The manifest's per-document projection of extraction-result
-    rows: the partition ``keys``, one term per ``MANIFEST_SUMS`` column,
-    and ``accuracy_pct`` for ``completed`` documents only."""
-    return result.select(
-        *keys,
-        *(
-            (F.lit(1) if src is None else F.col(src)).alias(name)
-            for name, src in MANIFEST_SUMS.items()
-        ),
-        F.when(
-            F.col("validation_status") == "completed", F.col("accuracy_pct")
-        ).alias("accuracy_pct"),
+#: a bucket's summed terms: the ``MANIFEST_SUMS`` columns, then the sum
+#: and the count of its ``completed`` documents' ``accuracy_pct``
+_TERMS = (*MANIFEST_SUMS, "accuracy_sum", "completed")
+_TERMS_TYPE = (
+    "array<struct<bucket int, "
+    + ", ".join(f"{name} long" for name in MANIFEST_SUMS)
+    + ", accuracy_sum double, completed long>>"
+)
+
+
+class _BucketSums(AccumulatorParam):
+    """Accumulator of ``{bucket: [term, ...]}`` in ``_TERMS`` order."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, other):
+        for bucket, terms in other.items():
+            have = acc.get(bucket)
+            acc[bucket] = (
+                list(terms) if have is None else [a + b for a, b in zip(have, terms)]
+            )
+        return acc
+
+
+class ManifestFold:
+    """The manifest metrics of one commit, folded into the merge tasks
+    that write its spans.
+
+    ``run_extraction(..., fold=)`` carries each row's ``bucket``
+    through the doc-keyed exchange and calls :meth:`add` on every frame
+    the merge UDF emits. The merge runs in the spans write's result
+    stage, where Spark applies each partition's accumulator update once,
+    from the attempt whose files were committed, so after the write
+    :attr:`sums` holds exactly the written rows' terms, by bucket."""
+
+    def __init__(self, spark: SparkSession, n_buckets: int):
+        self.bucket = bucket_of(n_buckets)
+        self._acc = spark.sparkContext.accumulator({}, _BucketSums())
+
+    def __getstate__(self):
+        # executors need only the accumulator; a Column does not pickle
+        return {"_acc": self._acc}
+
+    def add(self, result) -> None:
+        """Add one pandas frame of merge output (with ``bucket``)."""
+        completed = result["validation_status"] == "completed"
+        frame = result[["bucket"]].assign(
+            **{
+                name: 1 if src is None else result[src]
+                for name, src in MANIFEST_SUMS.items()
+            },
+            accuracy_sum=result["accuracy_pct"].where(completed, 0.0),
+            completed=completed,
+        )
+        sums = frame.groupby("bucket").sum()
+        self._acc.add(
+            {
+                int(bucket): [
+                    *(int(v) for v in row[:-2]), float(row[-2]), int(row[-1])
+                ]
+                for bucket, row in zip(sums.index, sums.itertuples(index=False))
+            }
+        )
+
+    @property
+    def sums(self) -> dict:
+        """``{bucket: terms}`` for every bucket that got documents."""
+        return self._acc.value
+
+    def totals(self) -> dict:
+        """The ``MANIFEST_SUMS`` columns summed over every bucket."""
+        return {
+            name: sum(terms[i] for terms in self.sums.values())
+            for i, name in enumerate(MANIFEST_SUMS)
+        }
+
+
+def _manifest_rows(
+    spark: SparkSession, sums: dict, lineage: Column, *keys: Column
+) -> DataFrame:
+    """One manifest row per bucket of ``sums`` (``bucket -> terms``,
+    ``None`` for an empty bucket): the ``keys``, the bucket, the sums
+    as longs, ``accuracy_pct`` averaged over the ``completed`` docs
+    (null without one), then ``lineage``. One JVM-only literal relation
+    in one partition, parsed from one JSON literal."""
+    terms = json.dumps(
+        [
+            {"bucket": bucket, **dict(zip(_TERMS, t or [0] * len(_TERMS)))}
+            for bucket, t in sorted(sums.items())
+        ]
     )
-
-
-def _manifest_rows(rows: DataFrame, keys, lineage: Column) -> DataFrame:
-    """One manifest row per partition of ``_metric_rows`` output: the
-    sums as longs, ``accuracy_pct`` averaged over non-null terms (null
-    when the partition has no ``completed`` doc), then ``lineage``."""
-    return rows.groupBy(*keys).agg(
-        *(F.sum(name).cast("long").alias(name) for name in MANIFEST_SUMS),
-        F.round(F.avg("accuracy_pct"), 2).alias("accuracy_pct"),
+    rows = spark.range(0, 1, 1, 1).select(
+        F.inline(F.from_json(F.lit(terms), _TERMS_TYPE))
+    )
+    return rows.select(
+        *keys,
+        "bucket",
+        *MANIFEST_SUMS,
+        F.round(
+            F.when(
+                F.col("completed") > 0, F.col("accuracy_sum") / F.col("completed")
+            ),
+            2,
+        ).alias("accuracy_pct"),
         lineage.alias("lineage"),
     )
+
+
+def _delete_partitions(spark: SparkSession, path: str, buckets) -> None:
+    """Remove the ``bucket=`` partitions of ``path`` for ``buckets``,
+    present or not, through the Hadoop FileSystem Spark writes to."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    for bucket in buckets:
+        part = jvm.org.apache.hadoop.fs.Path(os.path.join(path, f"bucket={bucket}"))
+        part.getFileSystem(conf).delete(part, True)
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.schema(MANIFEST_SCHEMA).parquet(_manifest_dir(out_dir))
 
 
-def _resume_state(spark: SparkSession, out_dir: str) -> tuple[set[int], int]:
-    """The committed buckets and the next attempt number, from one read
-    of the manifest (none and 1 on a fresh ``out_dir``)."""
+def _resume_state(spark: SparkSession, out_dir: str) -> tuple[set[int], int, dict]:
+    """The committed buckets, the next attempt number and the committed
+    rows' ``MANIFEST_SUMS`` totals, from one read of the manifest (none,
+    1 and zeros on a fresh ``out_dir``)."""
+    fresh = set(), 1, dict.fromkeys(MANIFEST_SUMS, 0)
     if _path_missing(spark, _manifest_dir(out_dir)):
-        return set(), 1
+        return fresh
     try:
         rows = (
             read_manifest(spark, out_dir)
             .groupBy("bucket")
-            .agg(F.max("lineage.attempt").alias("attempt"))
+            .agg(
+                F.max("lineage.attempt").alias("attempt"),
+                *(F.sum(name).alias(name) for name in MANIFEST_SUMS),
+            )
             .collect()
         )
     except AnalysisException:  # missing after all: the probe failed
-        return set(), 1
-    return {r.bucket for r in rows}, 1 + max((r.attempt or 0 for r in rows), default=0)
+        return fresh
+    return (
+        {r.bucket for r in rows},
+        1 + max((r.attempt or 0 for r in rows), default=0),
+        {name: sum(r[name] or 0 for r in rows) for name in MANIFEST_SUMS},
+    )
 
 
 def committed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
@@ -177,62 +285,68 @@ def _commit_group(
     out_dir: str,
     input_snapshot: str,
     attempt: int,
+    fold: ManifestFold,
 ) -> None:
     """Commit one bucket group in two actions: the span rows, then the
     manifest (append). A crash between the two leaves the group
     uncommitted, and the rerun's overwrite is idempotent.
 
-    The manifest aggregates ``chunk``'s metric rows unioned with one
-    zero row per bucket of the group, built in the JVM, so every bucket
-    gets its row, empty ones included (``docs`` 0, ``accuracy_pct``
-    null), without a driver-side round trip. The aggregate re-runs the
-    extraction plan once more; the spans write is the other run."""
-    overwrite_partitions(chunk, _spans_dir(out_dir), "bucket")
-    zeros = chunk.sparkSession.range(1).select(
-        F.explode(F.lit(group).cast("array<int>")).alias("bucket"),
-        *(F.lit(0).alias(name) for name in MANIFEST_SUMS),
-        F.lit(None).cast("double").alias("accuracy_pct"),
-    )
+    ``chunk`` is the group's ``run_extraction(..., fold=fold)`` result,
+    so the spans write is the one run of the extraction plan and leaves
+    the group's metrics in ``fold``. Every bucket of the group gets a
+    manifest row, empty ones included (``docs`` 0, ``accuracy_pct``
+    null); before they are appended, the span partitions of the empty
+    buckets are deleted, because dynamic overwrite replaces only the
+    partitions that have rows and a crashed earlier attempt's files
+    would otherwise become committed."""
+    spark = chunk.sparkSession
+    spans = _spans_dir(out_dir)
+    overwrite_partitions(chunk, spans, "bucket")
+    sums = fold.sums
+    _delete_partitions(spark, spans, [b for b in group if b not in sums])
     lineage = F.struct(
         F.lit(input_snapshot).alias("input_snapshot"),
         F.lit(attempt).cast("int").alias("attempt"),
         F.lit(int(time.time())).cast("long").alias("committed_at_ts"),
     )
-    rows = _metric_rows(chunk, "bucket").unionByName(zeros)
-    manifest = _manifest_rows(rows, ["bucket"], lineage)
+    manifest = _manifest_rows(spark, {b: sums.get(b) for b in group}, lineage)
     manifest.write.format("parquet").mode("append").save(_manifest_dir(out_dir))
 
 
 def commit_stream_batch(
-    chunk: DataFrame, batch_id: int, out_dir: str, input_snapshot: str
+    chunk: DataFrame,
+    fold: ManifestFold,
+    batch_id: int,
+    out_dir: str,
+    input_snapshot: str,
 ) -> None:
-    """Commit one micro-batch's bucketed result under
+    """Commit one micro-batch's extraction result under
     ``(ingest_batch, bucket)``: the span rows, then the manifest rows,
     which replace the batch's ``ingest_batch`` manifest partition, so a
     micro-batch replayed after a failure before the streaming-checkpoint
     commit never leaves a duplicate row.
 
-    The metrics are read back from the partition just written — a
-    column-pruned scan of this batch's files — so the extraction plan
-    runs once per micro-batch. An empty micro-batch writes nothing and
-    gets no manifest row."""
+    ``chunk`` is ``run_extraction(..., fold=fold)``: the spans write is
+    the one run of the extraction plan, and the manifest rows, one per
+    bucket that got documents, come from ``fold``. A micro-batch that
+    commits no document gets no manifest row."""
     spark = chunk.sparkSession
-    spans = _spans_dir(out_dir)
     overwrite_partitions(
         chunk.withColumn("ingest_batch", F.lit(batch_id).cast("long")),
-        spans,
+        _spans_dir(out_dir),
         *_STREAM_KEYS,
     )
-    batch_part = os.path.join(spans, f"ingest_batch={batch_id}")
-    if _path_missing(spark, batch_part):
+    sums = fold.sums
+    if not sums:
         return
-    written = spark.read.option("basePath", spans).parquet(batch_part)
     lineage = F.struct(
         F.lit(input_snapshot).alias("input_snapshot"),
         F.lit(int(time.time())).cast("long").alias("committed_at_ts"),
     )
     overwrite_partitions(
-        _manifest_rows(_metric_rows(written, *_STREAM_KEYS), _STREAM_KEYS, lineage),
+        _manifest_rows(
+            spark, sums, lineage, F.lit(batch_id).cast("long").alias("ingest_batch")
+        ),
         _manifest_dir(out_dir),
         "ingest_batch",
     )
@@ -253,8 +367,14 @@ def run_checkpointed_extraction(
 
     Each group is one ``run_extraction`` plan (``page_partitions`` is
     its page-relation repartition width) committed by
-    ``_commit_group``, which executes the plan twice: once for the
-    spans write and once for the manifest aggregate.
+    ``_commit_group``, which executes the plan once: the spans write,
+    whose merge tasks fold the manifest metrics. When one group covers
+    every bucket (a fresh run's default) the input is not bucketed or
+    filtered at all.
+
+    Returns the committed and the skipped (resumed) buckets, the
+    attempt number and ``totals``: the ``MANIFEST_SUMS`` columns summed
+    over both, the skipped buckets' from the resume's one manifest read.
     """
     from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
 
@@ -263,28 +383,38 @@ def run_checkpointed_extraction(
         commit_group_size=commit_group_size,
         page_partitions=page_partitions,
     )
-    already, attempt = _resume_state(docs.sparkSession, out_dir)
+    spark = docs.sparkSession
+    already, attempt, totals = _resume_state(spark, out_dir)
     todo = sorted(set(range(n_buckets)) - already)
-    if not todo:
-        return {"committed": [], "skipped": sorted(already), "attempt": attempt}
-
-    bucketed_docs = with_bucket(docs, n_buckets)
-    group_size = commit_group_size or len(todo)
     committed: list[int] = []
+    # without a group size, all pending buckets commit as one group
+    group_size = commit_group_size or n_buckets
     for i in range(0, len(todo), group_size):
         group = todo[i : i + group_size]
-        sub = bucketed_docs.filter(F.col("bucket").isin(group)).drop("bucket")
+        if len(group) == n_buckets:
+            sub = docs
+        else:
+            sub = with_bucket(docs, n_buckets)
+            sub = sub.filter(F.col("bucket").isin(group)).drop("bucket")
+        fold = ManifestFold(spark, n_buckets)
         result = run_extraction(
             sub,
             force_vision=force_vision,
             backend=backend,
             page_partitions=page_partitions,
+            fold=fold,
         )
-        chunk = with_bucket(result, n_buckets)
-        _commit_group(chunk, group, out_dir, input_snapshot, attempt)
+        _commit_group(result, group, out_dir, input_snapshot, attempt, fold)
         committed.extend(group)
+        for name, value in fold.totals().items():
+            totals[name] += value
 
-    return {"committed": committed, "skipped": sorted(already), "attempt": attempt}
+    return {
+        "committed": committed,
+        "skipped": sorted(already),
+        "attempt": attempt,
+        "totals": totals,
+    }
 
 
 def _read_committed(

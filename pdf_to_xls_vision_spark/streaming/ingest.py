@@ -9,7 +9,9 @@ unseen files only, and each micro-batch is extracted once and committed
 through the shared commit protocol
 (``sink/checkpoint.commit_stream_batch``: replay-idempotent
 ``(ingest_batch, bucket)`` partitions plus manifest rows, read through
-the manifest-gated ``read_stream_committed``).
+the manifest-gated ``read_stream_committed``). The one run of the
+extraction plan is the spans write; its merge tasks fold the manifest
+metrics (``ManifestFold``), so nothing is read back.
 
 ``trigger(availableNow=True)`` drains everything present and stops —
 the batch-backfill mode; leaving it unset runs continuously.
@@ -22,10 +24,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
 from pdf_to_xls_vision_spark.sink.checkpoint import (  # noqa: F401
     DEFAULT_BUCKETS,
+    ManifestFold,
     commit_stream_batch,
     read_stream_committed,
     require_positive,
-    with_bucket,
 )
 from pdf_to_xls_vision_spark.sources.span_docs import stream_span_docs
 
@@ -39,10 +41,9 @@ def _commit_micro_batch(
     backend=None,
 ) -> None:
     """The ``foreachBatch`` body: extract the micro-batch, commit it."""
-    result = run_extraction(batch_df, backend=backend)
-    commit_stream_batch(
-        with_bucket(result, n_buckets), batch_id, out_dir, input_snapshot
-    )
+    fold = ManifestFold(batch_df.sparkSession, n_buckets)
+    result = run_extraction(batch_df, backend=backend, fold=fold)
+    commit_stream_batch(result, fold, batch_id, out_dir, input_snapshot)
 
 
 def stream_extraction(

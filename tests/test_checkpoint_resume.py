@@ -2,6 +2,9 @@
 manifest metrics + lineage (FIXTURES.md §5)."""
 
 import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
 from pyspark.sql import functions as F
@@ -150,7 +153,18 @@ def test_resume_reads_the_manifest_once(docs, tmp_path, monkeypatch):
 
     monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
     out = run_checkpointed_extraction(docs, out_dir, n_buckets=N_BUCKETS)
-    assert out == {"committed": [], "skipped": list(range(N_BUCKETS)), "attempt": 3}
+    assert out == {
+        "committed": [],
+        "skipped": list(range(N_BUCKETS)),
+        "attempt": 3,
+        "totals": {
+            "docs": N_BUCKETS,
+            "pages_parsed": N_BUCKETS,
+            "tables_found": 0,
+            "rotation_corrections": 0,
+            "quality_retries": 0,
+        },
+    }
     assert reads == [os.path.join(out_dir, "manifest")]
 
 
@@ -212,4 +226,105 @@ def test_input_pruned_resume_matches_full_run(docs, result_df, tmp_path, monkeyp
     assert set(out["committed"]) == set(range(N_BUCKETS)) - partial
     assert _span_set(read_committed(spark, crash_dir)) == _span_set(
         result_df.select("doc_id", "spans")
+    )
+
+
+def test_resume_drops_a_stale_partition_of_an_empty_bucket(docs, result_df, tmp_path):
+    """A crash between the spans write and the manifest append leaves a
+    bucket's span files without a manifest row. When the resumed input
+    has no docs in that bucket, dynamic overwrite writes nothing there,
+    so the commit must delete the stale files before the bucket's
+    ``docs`` 0 manifest row makes them committed."""
+    spark = docs.sparkSession
+    out_dir = str(tmp_path / "stale")
+    bucketed = checkpoint.with_bucket(result_df, N_BUCKETS)
+    stale = bucketed.groupBy("bucket").count().orderBy(F.desc("count")).first()
+    checkpoint.overwrite_partitions(
+        bucketed.filter(F.col("bucket") == stale.bucket),
+        checkpoint._spans_dir(out_dir),
+        "bucket",
+    )
+    changed = checkpoint.with_bucket(docs, N_BUCKETS).filter(
+        F.col("bucket") != stale.bucket
+    ).drop("bucket")
+
+    out = run_checkpointed_extraction(changed, out_dir, n_buckets=N_BUCKETS)
+    assert out["committed"] == list(range(N_BUCKETS))
+    committed = read_committed(spark, out_dir)
+    assert committed.filter(F.col("bucket") == stale.bucket).count() == 0
+    rows = read_manifest(spark, out_dir).collect()
+    empty = assert_manifest_matches_spans(rows, committed.collect(), ["bucket"])
+    assert (stale.bucket,) in empty
+    assert out["totals"]["docs"] == changed.count()
+
+
+_RETRY_FAILS_ONCE = textwrap.dedent(
+    """
+    import os, sys
+    from pyspark import TaskContext
+    from pdf_to_xls_vision_spark.operators import pipeline
+    from pdf_to_xls_vision_spark.session import get_spark
+    from pdf_to_xls_vision_spark.sink.checkpoint import run_checkpointed_extraction
+
+    corpus, out_dir, marker = sys.argv[1:]
+    make = pipeline.make_vision_extractor
+
+    def make_vision_extractor(backend=None):
+        inner = make(backend)
+
+        def extract(batches):
+            def failing_first_retry():
+                for b in batches:
+                    retry = (b["route"] == "text").any()
+                    if retry and TaskContext.get().attemptNumber() == 0:
+                        open(marker, "a").close()
+                        raise RuntimeError("injected R2 retry failure")
+                    yield b
+
+            return inner(failing_first_retry())
+
+        return extract
+
+    pipeline.make_vision_extractor = make_vision_extractor
+    spark = get_spark("retry-once", master="local[2,2]", shuffle_partitions=4)
+    spark.sparkContext.setLogLevel("ERROR")
+    run_checkpointed_extraction(spark.read.parquet(corpus), out_dir, n_buckets=4)
+    spark.stop()
+    """
+)
+
+
+def test_fold_counts_only_the_committed_task_attempt(
+    docs, tiny_corpus, tiny_corpus_path, tmp_path
+):
+    """A merge task that fails after folding some documents' metrics
+    and succeeds on its retry must leave each document committed once
+    and the manifest equal to the committed spans: Spark drops the
+    failed attempt's accumulator update along with its files. Run at
+    ``local[2,2]`` (task retries allowed) in a subprocess, with the
+    inline R2 retry raising on every task's first attempt."""
+    out_dir = str(tmp_path / "retried")
+    marker = str(tmp_path / "failed-once")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join(
+            p for p in (root, os.environ.get("PYTHONPATH")) if p
+        ),
+        "SPARK_DRIVER_MEM": "2g",
+    }
+    env.pop("SPARK_GRAFT_MASTER", None)
+    subprocess.run(
+        [sys.executable, "-c", _RETRY_FAILS_ONCE, tiny_corpus_path, out_dir, marker],
+        env=env,
+        check=True,
+        timeout=600,
+    )
+    assert os.path.exists(marker)
+
+    spark = docs.sparkSession
+    committed = read_committed(spark, out_dir).collect()
+    assert sorted(r.doc_id for r in committed) == sorted(d for d, _ in tiny_corpus)
+    assert_manifest_matches_spans(
+        read_manifest(spark, out_dir).collect(), committed, ["bucket"]
     )

@@ -15,7 +15,10 @@ from pyspark.sql import functions as F
 from pdf_to_xls_vision_spark.corpus import corpus_to_arrow
 from pdf_to_xls_vision_spark.operators import pipeline
 from pdf_to_xls_vision_spark.operators.pipeline import explode_pages, run_extraction
-from pdf_to_xls_vision_spark.sink.checkpoint import run_checkpointed_extraction
+from pdf_to_xls_vision_spark.sink.checkpoint import (
+    ManifestFold,
+    run_checkpointed_extraction,
+)
 from tests.oracle import oracle_corpus, oracle_document_metrics
 
 _ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -94,9 +97,11 @@ def test_force_vision_parses_nothing(spark, tiny_corpus_path, counters):
 def test_checkpointed_commit_runs_the_plan_twice(
     spark, tiny_corpus_path, tiny_corpus, counters, tmp_path
 ):
-    """The CLI path commits a group with two plan executions, the spans
-    write and the manifest aggregate, so each UDF sees each of its
-    pages twice."""
+    """The CLI path commits a group with one plan execution: the spans
+    write, whose merge tasks also fold the manifest metrics, so each
+    UDF sees each of its pages once, as in plain ``run_extraction``.
+    (The name is kept from when the manifest aggregate ran the plan a
+    second time.)"""
     docs = spark.read.parquet(tiny_corpus_path)
     run_checkpointed_extraction(docs, str(tmp_path / "out"), n_buckets=4)
     pages = _pages_by_route(docs)
@@ -105,9 +110,37 @@ def test_checkpointed_commit_runs_the_plan_twice(
         for doc_id, spans in tiny_corpus
         if oracle_document_metrics(doc_id, spans)["quality_retried"]
     )
-    assert counters["text"].value == 2 * pages["text"]
-    assert counters["vision"].value == 2 * pages["vision"]
-    assert counters["retry"].value == 2 * retried
+    assert counters["text"].value == pages["text"]
+    assert counters["vision"].value == pages["vision"]
+    assert counters["retry"].value == retried
+
+
+def _exchange_above_merge(node, above=False) -> list:
+    """For each merge ``MapInPandas`` (the one reading a ``Sort``) under
+    the physical plan ``node``: whether an ``Exchange`` sits between it
+    and the root."""
+    name = node.nodeName()
+    children = [node.children().apply(i) for i in range(node.children().size())]
+    if name == "MapInPandas" and any(c.nodeName() == "Sort" for c in children):
+        return [above]
+    above = above or "Exchange" in name
+    return [hit for c in children for hit in _exchange_above_merge(c, above)]
+
+
+def test_fold_merge_runs_in_the_writes_result_stage(spark, tiny_corpus_path):
+    """The manifest fold is exactly-once only because the merge UDF runs
+    in the stage that writes the spans: Spark applies a result task's
+    accumulator update once, from the attempt whose output it keeps. So
+    no exchange may sit above the merge in the written relation, the
+    stream's ``ingest_batch`` projection included."""
+    docs = spark.read.parquet(tiny_corpus_path)
+    result = run_extraction(docs, fold=ManifestFold(spark, 8))
+    assert result.columns[-1] == "bucket"
+    for written in (result, result.withColumn("ingest_batch", F.lit(3))):
+        plan = written._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.inputPlan()
+        assert _exchange_above_merge(plan) == [False]
 
 
 def _multi_page(doc_id: str, *pages: dict) -> tuple:

@@ -14,7 +14,6 @@ from pdf_to_xls_vision_spark.sink import checkpoint
 from pdf_to_xls_vision_spark.sink.checkpoint import (
     STREAM_MANIFEST_SCHEMA,
     _manifest_dir,
-    _spans_dir,
 )
 from pdf_to_xls_vision_spark.streaming.ingest import (
     _commit_micro_batch,
@@ -118,10 +117,11 @@ def test_replayed_micro_batch_manifest_idempotent(spark, tiny_corpus, tmp_path):
 def test_micro_batch_commit_probes_the_spark_filesystem(
     spark, tiny_corpus, tmp_path, monkeypatch
 ):
-    """Whether a micro-batch wrote anything is asked of the filesystem
-    Spark writes to (the Hadoop-FS probe), not of the driver's local
-    disk, which never holds an hdfs:// or s3a:// output: a probe that
-    reports the batch partition missing means no manifest row."""
+    """Whether a micro-batch committed any document is known from the
+    metrics its merge tasks folded, so the stream commit never asks a
+    filesystem (the test keeps its name from when it asked the Spark
+    filesystem for the batch partition): a micro-batch that commits no
+    document writes no manifest row, one that does gets its rows."""
     in_path = str(tmp_path / "in.parquet")
     out_dir = str(tmp_path / "out")
     pq.write_table(corpus_to_arrow(tiny_corpus[:4]), in_path)
@@ -132,10 +132,14 @@ def test_micro_batch_commit_probes_the_spark_filesystem(
         return True
 
     monkeypatch.setattr(checkpoint, "_path_missing", missing)
-    _commit_micro_batch(spark.read.parquet(in_path), 3, out_dir, 4, in_path)
-    assert probed == [os.path.join(_spans_dir(out_dir), "ingest_batch=3")]
-    assert os.path.isdir(probed[0])
+    docs = spark.read.parquet(in_path)
+    _commit_micro_batch(docs.limit(0), 2, out_dir, 4, in_path)
     assert not os.path.exists(_manifest_dir(out_dir))
+    _commit_micro_batch(docs, 3, out_dir, 4, in_path)
+    assert probed == []
+    rows = spark.read.parquet(_manifest_dir(out_dir)).collect()
+    assert {r.ingest_batch for r in rows} == {3}
+    assert sum(r.docs for r in rows) == 4
 
 
 def _commit_files(spark, tmp_path, docs, batch_ids):
