@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
-"""Headline benchmark harness (driver contract).
+"""Headline benchmark harness.
 
 Runs the flagship extraction pipeline plus the heaviest SURVEY-stage
-queries from the driver registry at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]``, then the
+queries from the registry at ``$SPARK_GRAFT_SF_DIR`` (default
+``/root/testdata/sf0.1``) on ``local[nproc]``, then the
 streaming-ingest curve and one big extraction run with peak heap, and
 prints exactly ONE JSON line::
 
@@ -13,12 +13,15 @@ prints exactly ONE JSON line::
 Plans execute end-to-end via the ``noop`` DSv2 sink (full computation,
 no collect-to-driver, no disk write), so the timing measures scan +
 shuffle + UDF + aggregation — the same path a cluster run takes.
+Executor run time and peak heap come from Spark's REST API through
+``perfbench.sparkstats.Rest``.
 
-The extraction headline also reports ``docs_per_sec`` — the
-BASELINE.json target metric — over the deterministic skewed corpus
-(FIXTURES.md): many 1-pagers, a heavy tail of 100+-page documents.
-Scaling-efficiency evidence (local[8] vs local[32]) lives in
-``scripts/bench_scaling.py`` / ``BENCH/BASELINE.md``.
+The extraction headline also reports ``docs_per_sec`` over the
+deterministic skewed corpus (FIXTURES.md): many 1-pagers, a heavy tail
+of 100+-page documents. The benchmark of record, with per-layer
+executor seconds, is ``perfbench/run.py`` (``--trace 1``); N -> 4N
+scaling efficiency, with N derived from nproc, is
+``scripts/bench_scaling.py``.
 """
 
 from __future__ import annotations
@@ -31,7 +34,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = os.cpu_count() or 1
 # documents in the deterministic extraction corpus (seeded, skewed).
 # 8000 amortizes the ~12s fixed job overhead (stage barriers, worker
 # pool spin-up) that dominates smaller corpora at local[32]; the 16k
@@ -53,51 +56,34 @@ def _run(df) -> float:
     return time.perf_counter() - t0
 
 
-_SPARK_FOR_METRICS = None
-
-
-def _executor_run_time_ms() -> int | None:
-    """Total executorRunTime (ms) over all completed stages, via the
-    UI REST API (bench enables the UI; retainedStages is raised so no
-    stage is evicted mid-delta). Executor CPU-side run time is stable
-    on this 2-3x-wall-noisy shared VM, so per-query regression triage
-    uses deltas of this figure, not wall."""
+def _executor_run_time_ms(rest) -> int | None:
+    """Total executorRunTime (ms) over all completed stages (bench
+    enables the UI; retainedStages is raised so no stage is evicted
+    mid-delta). Executor CPU-side run time is stable on a
+    wall-clock-noisy shared host, so per-query regression triage uses
+    deltas of this figure, not wall."""
     try:
-        import json as _json
-        import urllib.request
-
-        sc = _SPARK_FOR_METRICS.sparkContext
-        url = (
-            f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
-            "/stages?status=complete"
+        return sum(
+            st.get("executorRunTime", 0)
+            for st in rest.get("stages?status=complete")
         )
-        with urllib.request.urlopen(url, timeout=10) as r:
-            return sum(st.get("executorRunTime", 0) for st in _json.load(r))
-    except Exception:
+    except (OSError, ValueError):  # UI unreachable or a bad reply
         return None
 
 
-def _peak_jvm_heap() -> int | None:
+def _peak_jvm_heap(rest) -> int | None:
     """Peak JVM heap (bytes) across executors (the local-mode driver),
-    from the executors REST endpoint's peakMemoryMetrics."""
+    from the executors endpoint's peakMemoryMetrics."""
     try:
-        import json as _json
-        import urllib.request
-
-        sc = _SPARK_FOR_METRICS.sparkContext
-        url = (
-            f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/executors"
+        return max(
+            e.get("peakMemoryMetrics", {}).get("JVMHeapMemory", 0)
+            for e in rest.get("executors")
         )
-        with urllib.request.urlopen(url, timeout=10) as r:
-            return max(
-                e.get("peakMemoryMetrics", {}).get("JVMHeapMemory", 0)
-                for e in _json.load(r)
-            )
-    except Exception:
+    except (OSError, ValueError):  # UI unreachable or a bad reply
         return None
 
 
-def _run_best(df, reps: int = 2, warmup: int = 1) -> tuple[float, float | None]:
+def _run_best(df, rest, reps: int = 2, warmup: int = 1) -> tuple[float, float | None]:
     """``warmup`` unrecorded executions (first-scan footer reads +
     whole-stage-codegen JIT are one-time costs a long-running cluster
     never re-pays), then best of ``reps`` measured runs — the sandbox
@@ -114,9 +100,9 @@ def _run_best(df, reps: int = 2, warmup: int = 1) -> tuple[float, float | None]:
     walls: list[float] = []
     execs: list[float] = []
     for _ in range(reps):
-        e0 = _executor_run_time_ms()
+        e0 = _executor_run_time_ms(rest)
         walls.append(_run(df))
-        e1 = _executor_run_time_ms()
+        e1 = _executor_run_time_ms(rest)
         if e0 is not None and e1 is not None:
             execs.append((e1 - e0) / 1000.0)
     return min(walls), (min(execs) if execs else None)
@@ -136,6 +122,7 @@ def main() -> None:
     from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
     from pdf_to_xls_vision_spark.plans.queries import QUERIES
     from pdf_to_xls_vision_spark.session import get_spark
+    from perfbench.sparkstats import Rest
 
     spark = get_spark(
         "bench",
@@ -151,8 +138,8 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    global _SPARK_FOR_METRICS
-    _SPARK_FOR_METRICS = spark
+    # the REST client reads executor run time and peak heap
+    rest = Rest(spark.sparkContext.uiWebUrl)
 
     # corpus generation happens outside the timed region
     corpus_path = os.path.join(
@@ -170,7 +157,7 @@ def main() -> None:
 
     _log("extraction pipeline")
     spark.catalog.clearCache()
-    t_ext, e_ext = _run_best(run_extraction(corpus))
+    t_ext, e_ext = _run_best(run_extraction(corpus), rest)
     timings["extraction_pipeline"] = round(t_ext, 3)
     exec_secs["extraction_pipeline"] = (
         round(e_ext, 3) if e_ext is not None else None
@@ -179,7 +166,7 @@ def main() -> None:
 
     for name in HEADLINE:
         _log(f"query {name}")
-        w, e = _run_best(QUERIES[name](spark, SF_DIR))
+        w, e = _run_best(QUERIES[name](spark, SF_DIR), rest)
         timings[name] = round(w, 3)
         exec_secs[name] = round(e, 3) if e is not None else None
 
@@ -262,7 +249,7 @@ def main() -> None:
         spark.catalog.clearCache()
         t_big = _run(run_extraction(big_corpus))
         spark.catalog.clearCache()
-        peak = _peak_jvm_heap()
+        peak = _peak_jvm_heap(rest)
         big = {
             "big_run_docs": big_docs,
             "big_run_sec": round(t_big, 3),

@@ -181,6 +181,18 @@ def _vision_backend(args):
     return AnthropicVisionBackend(media_loader=loader)
 
 
+def _committed_counts(committed) -> dict:
+    """``docs`` and ``span_rows`` of a committed result (one row per
+    document, its spans in an array), in one Spark job."""
+    from pyspark.sql import functions as F
+
+    row = committed.agg(
+        F.countDistinct("doc_id").alias("docs"),
+        F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("span_rows"),
+    ).first()
+    return {"docs": row.docs, "span_rows": row.span_rows}
+
+
 def _run_stream(spark, args) -> int:
     import os
 
@@ -207,8 +219,7 @@ def _run_stream(spark, args) -> int:
         json.dumps(
             {
                 "mode": "stream",
-                "docs": committed.select("doc_id").distinct().count(),
-                "span_rows": committed.count(),
+                **_committed_counts(committed),
                 "output": args.output,
                 "checkpoint": ckpt,
             }
@@ -300,8 +311,7 @@ def main(argv: list[str] | None = None) -> int:
                     {
                         "mode": "read-snapshot",
                         "as_of_batch": args.read_snapshot,
-                        "docs": snap.select("doc_id").distinct().count(),
-                        "span_rows": snap.count(),
+                        **_committed_counts(snap),
                         "output": args.output,
                     }
                 )
@@ -344,6 +354,11 @@ def main(argv: list[str] | None = None) -> int:
     except KeyboardInterrupt:
         print("interrupted", file=sys.stderr)
         return 1
+    except ValueError as exc:
+        # a maintenance mode pointed at the other sink's table layout
+        if args.compact or args.read_snapshot is not None:
+            raise SystemExit(str(exc)) from exc
+        raise
     finally:
         if owns_session:
             spark.stop()

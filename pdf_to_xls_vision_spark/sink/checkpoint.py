@@ -423,8 +423,16 @@ def _read_committed(
     """The one committed-read gate: span rows whose partition ``keys``
     have a manifest row (data written without its manifest commit is
     invisible — snapshot isolation by a left-semi join against the
-    broadcast manifest keys). ``where`` bounds both sides alike."""
+    broadcast manifest keys). ``where`` bounds both sides alike.
+    Raises ``ValueError`` when the span table is not partitioned by
+    ``keys`` (a batch table read as a stream table)."""
     spans = spark.read.parquet(_spans_dir(out_dir))
+    missing = [k for k in keys if k not in spans.columns]
+    if missing:
+        raise ValueError(
+            f"{_spans_dir(out_dir)} has no {', '.join(missing)} partitions: "
+            f"it is not a span table committed under ({', '.join(keys)})"
+        )
     manifest = spark.read.schema(schema).parquet(_manifest_dir(out_dir))
     if where is not None:
         spans, manifest = spans.where(where), manifest.where(where)

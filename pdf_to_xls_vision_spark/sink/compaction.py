@@ -62,7 +62,12 @@ def _compactions_dir(out_dir: str) -> str:
 def list_bucket_files(spark: SparkSession, out_dir: str) -> dict[int, list[tuple[str, int]]]:
     """``{bucket: [(file_path, bytes), ...]}`` for the span table —
     one driver-side Hadoop FS listing (works on local disk and on
-    HDFS/S3A alike), no Spark job."""
+    HDFS/S3A alike), no Spark job.
+
+    Raises ``ValueError`` when the table is not partitioned by
+    ``bucket`` at its top level (the stream's ``ingest_batch=``
+    layout): its files would go unlisted and the pass would report
+    nothing to compact."""
     spans = _spans_dir(out_dir)
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(spans)
@@ -72,9 +77,15 @@ def list_bucket_files(spark: SparkSession, out_dir: str) -> dict[int, list[tuple
         return out
     for st in fs.listStatus(jpath):
         name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("bucket=")):
+        if not (st.isDirectory() and "=" in name):
             continue
-        bucket = int(name.split("=", 1)[1])
+        key, value = name.split("=", 1)
+        if key != "bucket":
+            raise ValueError(
+                f"{spans} is partitioned by {key}, not bucket: "
+                "compaction rewrites the batch span table only"
+            )
+        bucket = int(value)
         files = []
         for f in fs.listStatus(st.getPath()):
             fname = f.getPath().getName()

@@ -2,7 +2,9 @@
 ``pdf_to_xls_vision_spark`` package, nor the driver entry point, imports
 the operator zoo; it has one commit protocol, in
 ``sink/checkpoint.py``; and its grid kernels have no pandas-frame
-twins."""
+twins. Its tools measure through one instrument: only ``perfbench/``
+talks to Spark's REST API, and ``bench.py`` and ``scripts/`` import
+only public engine and perfbench names."""
 
 import ast
 import os
@@ -19,9 +21,18 @@ def _imported_modules(path):
             yield node.module
 
 
-def _engine_modules():
-    for root, _dirs, files in os.walk(os.path.join(REPO, "pdf_to_xls_vision_spark")):
+def _py_files(top):
+    for root, _dirs, files in os.walk(os.path.join(REPO, top)):
         yield from (os.path.join(root, f) for f in files if f.endswith(".py"))
+
+
+def _engine_modules():
+    yield from _py_files("pdf_to_xls_vision_spark")
+
+
+def _tools():
+    yield os.path.join(REPO, "bench.py")
+    yield from _py_files("scripts")
 
 
 def test_engine_does_not_import_operator_zoo():
@@ -58,4 +69,71 @@ def test_grid_kernels_do_not_import_pandas():
         for m in _imported_modules(os.path.join(core, name))
         if m.split(".")[0] == "pandas"
     ]
+    assert offenders == []
+
+
+def test_one_spark_rest_client():
+    """Spark's REST API is read through ``perfbench/sparkstats.Rest``
+    only, not through URLs rebuilt in each tool."""
+    # split so that a text search for the route does not match this file
+    route = "api/v1/" + "applications"
+    offenders = sorted(
+        os.path.relpath(p, REPO)
+        for p in [*_tools(), *_engine_modules()]
+        if route in open(p, encoding="utf-8").read()
+    )
+    assert offenders == []
+    assert route in open(
+        os.path.join(REPO, "perfbench", "sparkstats.py"), encoding="utf-8"
+    ).read()
+
+
+def _module_names(module):
+    """Top-level names a repo module defines (its functions, classes,
+    assignments and imports), plus its submodules if it is a package."""
+    base = os.path.join(REPO, *module.split("."))
+    if os.path.isdir(base):
+        path = os.path.join(base, "__init__.py")
+        names = {
+            f[:-3] if f.endswith(".py") else f
+            for f in os.listdir(base)
+            if f.endswith(".py") or os.path.isdir(os.path.join(base, f))
+        }
+    else:
+        path, names = base + ".py", set()
+    tree = ast.parse(open(path, encoding="utf-8").read(), filename=path)
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update(
+                n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)
+            )
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+    return names
+
+
+def test_tools_import_public_names():
+    """``bench.py`` and the scripts use the engine and perfbench through
+    names that exist and are public, never a private helper that can
+    change under them."""
+    offenders = []
+    for path in _tools():
+        tree = ast.parse(open(path, encoding="utf-8").read(), filename=path)
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and node.module
+                and node.module.split(".")[0]
+                in ("pdf_to_xls_vision_spark", "perfbench")
+            ):
+                continue
+            defined = _module_names(node.module)
+            offenders.extend(
+                (os.path.relpath(path, REPO), node.module, a.name)
+                for a in node.names
+                if a.name.startswith("_") or a.name not in defined
+            )
     assert offenders == []

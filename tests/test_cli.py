@@ -156,6 +156,11 @@ def test_cli_stream_mode(spark, tiny_corpus, tmp_path):
     summary = json.loads(buf.getvalue().strip().splitlines()[-1])
     assert summary["mode"] == "stream"
     assert summary["docs"] == 12
+    # span_rows counts the committed spans, not the per-document rows
+    from tests.oracle import oracle_corpus
+
+    want = oracle_corpus(tiny_corpus[:12])
+    assert summary["span_rows"] == sum(len(v) for v in want.values())
 
     pq.write_table(corpus_to_arrow(tiny_corpus[12:20]), f"{in_dir}/f2.parquet")
     buf = io.StringIO()
@@ -178,3 +183,9 @@ def test_cli_stream_mode(spark, tiny_corpus, tmp_path):
         rc = main([in_dir, "-o", out_dir, "--read-snapshot", "99"])
     assert rc == 0
     assert json.loads(buf.getvalue().strip().splitlines()[-1])["docs"] == 20
+
+    # compaction rewrites the batch layout only: on the stream's
+    # (ingest_batch, bucket) table it refuses instead of reporting an
+    # empty pass
+    with pytest.raises(SystemExit, match="ingest_batch"):
+        main([in_dir, "-o", out_dir, "--compact"])

@@ -136,3 +136,6 @@ def test_cli_compact_mode(spark, populated, capsys):
     # --no-resume would delete the table being maintained: refused
     with pytest.raises(SystemExit):
         main(["ignored-input", "-o", out, "--compact", "--no-resume"])
+    # a batch table has no ingest_batch partitions to read a snapshot of
+    with pytest.raises(SystemExit, match="ingest_batch"):
+        main(["ignored-input", "-o", out, "--read-snapshot", "0"])
