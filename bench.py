@@ -192,9 +192,6 @@ def main() -> None:
 
     stream_docs = min(BENCH_DOCS, 2000)
     stream_in = tempfile.mkdtemp(prefix="ptxv_stream_bench_in_")
-    corpus.limit(stream_docs).repartition(8).write.mode("overwrite").parquet(
-        stream_in
-    )
 
     def _stream_run(mfpt: int) -> float:
         base = tempfile.mkdtemp(prefix="ptxv_stream_bench_")
@@ -212,11 +209,17 @@ def main() -> None:
         return elapsed
 
     _log("streaming curve")
-    _stream_run(8)  # warm-up (worker pool + sink-path JIT)
-    stream_curve = {
-        f"files{mfpt}": round(stream_docs / _stream_run(mfpt), 2)
-        for mfpt in (1, 2, 4, 8)
-    }
+    try:
+        corpus.limit(stream_docs).repartition(8).write.mode("overwrite").parquet(
+            stream_in
+        )
+        _stream_run(8)  # warm-up (worker pool + sink-path JIT)
+        stream_curve = {
+            f"files{mfpt}": round(stream_docs / _stream_run(mfpt), 2)
+            for mfpt in (1, 2, 4, 8)
+        }
+    finally:
+        shutil.rmtree(stream_in, ignore_errors=True)
     t_stream = stream_docs / stream_curve["files1"]
 
     # One 64k-doc extraction run (8x the headline corpus): evidences

@@ -6,9 +6,9 @@ Shape (SURVEY.md §4.3)::
       -> route = classifier exprs (no UDF)
       -> explode(spans) -> pages                    (pages are the work unit)
       -> repartition(pages)                         (skew leveler: round-robin)
-      -> [route=text]   mapInPandas(layout parse)   T1-T4, Q1-Q6
-         [route=vision] mapInPandas(vision stage)   V1-V7, C1-C3
-      -> unionByName
+      -> mapInPandas(route dispatch)                one page stage:
+           route=text   -> layout parse             T1-T4, Q1-Q6
+           route=vision -> vision stage             V1-V7, C1-C3
       -> repartition(doc_id) + sortWithinPartitions(doc_id)
       -> mapInPandas(R2 decision, inline vision retry, merge + serialize)
                                     R2 (converter.py:117-132), M1, A1/A3, W1
@@ -157,6 +157,45 @@ _MERGE_COLS = [
     "doc_id", "page", "table_id", "media_ref", "grid",
     "rotation_corrected", "is_table", "page_numbers",
 ]
+
+#: what the page stage emits: the kernels' rows plus the two bits the
+#: R2 decision reads. `quality` collapses to one "any issue" bit in
+#: Python, so the issue lists never cross the Arrow boundary.
+_PAGE_SCHEMA = (
+    EXTRACTION_SCHEMA.replace("quality array<string>, ", "")
+    + ", has_issue boolean, is_vision boolean"
+)
+
+
+def make_page_dispatch(text_parse, vision_extract):
+    """Build the page stage's ``mapInPandas`` function: split each
+    batch by ``route``, run the text rows through ``text_parse`` and
+    the vision rows through ``vision_extract`` (each called once per
+    non-empty part), and emit ``_PAGE_SCHEMA`` rows, the text part's
+    rows first."""
+
+    def _run(kernel, part: pd.DataFrame, is_vision: bool) -> pd.DataFrame:
+        out = pd.concat(kernel(iter([part])), ignore_index=True)
+        return out[_MERGE_COLS].assign(
+            has_issue=[len(q) > 0 for q in out["quality"]],
+            is_vision=is_vision,
+        )
+
+    def extract_pages(batches):
+        for batch in batches:
+            text = (batch["route"] == "text").to_numpy()
+            parts = [
+                _run(kernel, batch[mask].reset_index(drop=True), is_vision)
+                for kernel, mask, is_vision in (
+                    (text_parse, text, False),
+                    (vision_extract, ~text, True),
+                )
+                if mask.any()
+            ]
+            if parts:
+                yield pd.concat(parts, ignore_index=True)
+
+    return extract_pages
 
 
 def _merge_doc_arrays(
@@ -363,13 +402,21 @@ def run_extraction(
     result's last column, and the merge UDF adds every document's
     manifest metrics to ``fold``. Without it the plan is unchanged.
 
-    One linear DAG: pages are parsed (text route) or run through the
-    vision stage (vision route), the two outputs meet in one doc-keyed
-    exchange, and the merge UDF makes the R2 retry decision from each
-    document's own rows. A retried document's text pages run through
-    the vision stage inside its merge task, once. So every UDF runs
-    once per input row per plan execution, with no aggregate, join or
-    cache on the side.
+    One linear DAG: one page stage parses the text-route pages and runs
+    the vision-route pages through the vision stage, dispatching each
+    Arrow batch by ``route`` (``make_page_dispatch``), and the merge
+    UDF makes the R2 retry decision from each document's own rows. A
+    retried document's text pages run through the vision stage inside
+    its merge task, once. So every UDF runs once per input row per plan
+    execution, with no aggregate, join or cache on the side.
+
+    **Why one page stage**: with one ``mapInPandas`` per route over a
+    ``route`` filter, Catalyst pushed each filter below the round-robin
+    ``repartition``. The input was scanned twice, each branch had its own
+    page exchange, and each plan execution ran two sets of ``n_parts``
+    Python tasks, plus a ``Union``. The dispatching stage reads one scan
+    through one page exchange in ``n_parts`` tasks; a Python task's
+    fixed cost, not its kernel, dominates small jobs.
 
     **Why every page shuffles** (SURVEY.md §4.2 — AQE cannot see UDF
     compute skew, so the leveling is ours): the round-robin
@@ -408,23 +455,13 @@ def run_extraction(
     # resolved through this module's names at plan-build time, so a
     # caller can wrap either stage here (probes, tests)
     vision_extractor = make_vision_extractor(backend)
-    pages = explode_pages(docs, force_vision).repartition(n_parts)
-
-    def _extract(route: str, udf) -> DataFrame:
-        # `quality` collapses to one "any issue" bit before the
-        # exchange: the R2 decision needs nothing more of it
-        return (
-            pages.filter(F.col("route") == route)
-            .mapInPandas(udf, EXTRACTION_SCHEMA)
-            .select(
-                *_MERGE_COLS,
-                (F.size("quality") > 0).alias("has_issue"),
-                F.lit(route == "vision").alias("is_vision"),
-            )
+    extracted = (
+        explode_pages(docs, force_vision)
+        .repartition(n_parts)
+        .mapInPandas(
+            make_page_dispatch(extract_text_pages, vision_extractor),
+            _PAGE_SCHEMA,
         )
-
-    extracted = _extract("text", extract_text_pages).unionByName(
-        _extract("vision", vision_extractor)
     )
     schema, passthrough = _RAW_RESULT_SCHEMA, ()
     if fold is not None:

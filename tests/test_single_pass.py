@@ -143,6 +143,40 @@ def test_fold_merge_runs_in_the_writes_result_stage(spark, tiny_corpus_path):
         assert _exchange_above_merge(plan) == [False]
 
 
+def _plan_nodes(node) -> list[str]:
+    """``simpleString`` of every node under the physical plan ``node``."""
+    children = [node.children().apply(i) for i in range(node.children().size())]
+    return [node.simpleString(100), *(s for c in children for s in _plan_nodes(c))]
+
+
+@pytest.mark.parametrize("with_fold", [False, True], ids=["plain", "fold"])
+def test_one_scan_one_page_exchange_one_page_stage(
+    spark, tiny_corpus, tmp_path, with_fold
+):
+    """The page stage dispatches by route inside one ``mapInPandas``:
+    the input is scanned once and shuffled through one round-robin
+    exchange, with no per-route branch and no ``Union``. A ``route``
+    filter per branch would be pushed below the repartition and scan
+    the input once per branch. The corpus gets its own path, so no
+    relation another test cached stands in for the plan."""
+    path = str(tmp_path / "plan.parquet")
+    pq.write_table(corpus_to_arrow(tiny_corpus), path)
+    docs = spark.read.parquet(path)
+    fold = ManifestFold(spark, 8) if with_fold else None
+    plan = run_extraction(docs, fold=fold)._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    nodes = _plan_nodes(plan)
+
+    def count(prefix: str, needle: str = "") -> int:
+        return sum(1 for n in nodes if n.startswith(prefix) and needle in n)
+
+    assert count("FileScan") == 1, nodes
+    assert count("Exchange", "RoundRobinPartitioning") == 1, nodes
+    assert count("Union") == 0, nodes
+    assert count("MapInPandas") == 2, nodes
+
+
 def _multi_page(doc_id: str, *pages: dict) -> tuple:
     return (
         doc_id,
