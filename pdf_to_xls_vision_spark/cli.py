@@ -86,20 +86,22 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--report",
         action="store_true",
-        help="print the per-bucket validation/metrics report (X7) after the run",
+        help="print the per-bucket validation/metrics report (X7) after the "
+        "batch run",
     )
     p.add_argument(
         "--stream",
         action="store_true",
         help="treat INPUT as a continuously-growing directory: run the "
         "Structured Streaming ingest (exactly-once per-micro-batch "
-        "commits) instead of the batch job; --force-vision, --partitions "
-        "and --commit-group-size are batch-only",
+        "commits) instead of the batch job; --force-vision, --partitions, "
+        "--commit-group-size and --report are batch-only",
     )
     p.add_argument(
         "--stream-checkpoint",
         default=None,
-        help="streaming checkpoint dir (default: <output>/_stream_checkpoint)",
+        help="with --stream: streaming checkpoint dir "
+        "(default: <output>/_stream_checkpoint)",
     )
     p.add_argument(
         "--continuous",
@@ -243,22 +245,33 @@ def main(argv: list[str] | None = None) -> int:
             "--compact maintains the existing output table; "
             "--no-resume would delete it first"
         )
-    if args.stream:
-        ignored = [
-            flag
-            for flag, given in (
-                ("--force-vision", args.force_vision),
-                ("--partitions", args.partitions is not None),
-                ("--commit-group-size", args.commit_group_size is not None),
-            )
-            if given
-        ]
-        if ignored:
-            raise SystemExit(
-                f"--stream does not support {', '.join(ignored)}: "
-                "each micro-batch commits as one group over the default "
-                "routing and page partitioning"
-            )
+    batch = "the batch job"
+    mode = (
+        "--compact" if args.compact
+        else "--read-snapshot" if args.read_snapshot is not None
+        else "--stream" if args.stream
+        else batch
+    )
+    ignored = [
+        flag
+        for flag, given, used_by in (
+            ("--force-vision", args.force_vision, batch),
+            ("--partitions", args.partitions is not None, batch),
+            ("--commit-group-size", args.commit_group_size is not None, batch),
+            ("--report", args.report, batch),
+            ("--continuous", args.continuous, "--stream"),
+            ("--stream-checkpoint", args.stream_checkpoint is not None, "--stream"),
+        )
+        if given and mode != used_by
+    ]
+    if ignored:
+        raise SystemExit(
+            f"{mode} does not support {', '.join(ignored)}: --force-vision, "
+            "--partitions, --commit-group-size and --report are batch-only "
+            "(each micro-batch commits as one group over the default routing "
+            "and page partitioning); --continuous and --stream-checkpoint "
+            "need --stream"
+        )
     if args.read_snapshot is not None and args.no_resume:
         raise SystemExit(
             "--read-snapshot reads the existing output table; "

@@ -30,10 +30,12 @@ class GridRecord:
     """One extracted table: the reference's ``{'dataframe','page','table'}``
     dict (table_extraction.py:184-188) with ``header``/``rows`` of
     ``str | None`` cells in place of the frame, plus engine-side
-    provenance. The extraction UDFs already carry tables in this shape
-    across the Arrow boundary, and per-table pandas construction
-    dominated the merge stage's profile, so the merge stays on grids
-    (``pipeline._merge_doc_arrays``)."""
+    provenance. The page stage already carries each page's tables in
+    this shape across the Arrow boundary (one row per page, its grids
+    as one JSON list), and per-table pandas construction dominated the
+    merge stage's profile, so the merge stays on grids
+    (``pipeline._merge_doc_arrays`` numbers a page's tables from 1 in
+    list order)."""
 
     header: list
     rows: list

@@ -82,7 +82,7 @@ def serialize_grid_spans(tables) -> list[dict]:
     row-major cells and end, then the trailing notes.
 
     Hot path: one dict literal per span built in extend() generators
-    (grid cells are ``str | None`` by the :func:`encode_grid` contract,
+    (grid cells are ``str | None`` by the :func:`encode_tables` contract,
     so the ``type(v) is str`` fast path covers virtually every cell;
     anything else falls back to the spec :func:`cell_text`), with the
     global ``order`` counter assigned in a single enumerate pass — the

@@ -7,17 +7,20 @@ cluster (the reference burns 15-25 minutes on such a file sequentially,
 README.md:327), and no ``groupBy`` happens until after extraction when
 per-page results are small.
 
-Output is a uniform "extraction row" relation::
+Both emit the page relation ``PAGE_SCHEMA``, exactly one row per input
+page::
 
-    doc_id, page, table_id, media_ref,
-    header: array<string>, rows: array<array<string>>,
-    quality: array<string>, rotation_corrected: int, is_table: boolean
+    doc_id, page, media_ref, tables: string, has_issue: boolean,
+    rotation_corrected: int, page_numbers: array<string>, is_vision: boolean
 
-with one sentinel row per page (``is_table=false``) so page-level
-metrics (pages_parsed, rotation_corrections) survive pages that yield
-no table, plus one row per extracted table. A text page's sentinel also
-carries the page's source ``media_ref`` and validation numbers, which is
-all the merge needs to re-run that page through the vision stage (R2).
+``tables`` holds the page's ``(header, rows)`` grids in table order
+(``encode_tables``; ``[]`` for a page with none), so a table's number is
+its 1-based place in that list. ``has_issue`` is true when any of a
+text page's tables has a quality issue, the one bit the R2 decision
+reads. A vision row carries the ref it was inferred from; a text row
+carries the page's source ``media_ref`` and validation numbers, which
+is all the merge needs to re-run that page through the vision stage
+(R2).
 """
 
 from __future__ import annotations
@@ -44,37 +47,32 @@ from pdf_to_xls_vision_spark.core.vision import (
     stub_pixels,
 )
 
-#: The table payload travels as ONE compact JSON string column
-#: (``grid`` = {"h": header, "r": rows}) instead of nested
-#: array<string> / array<array<string>> columns: a measured A/B on the
-#: doc_id exchange + applyInPandas hop put the nested-array form at
-#: ~3x the executor cost of the single string (Arrow/pandas build one
+#: The tables travel as ONE compact JSON string column instead of
+#: nested array<string> / array<array<string>> columns: a measured A/B
+#: on the doc_id exchange + applyInPandas hop put the nested-array form
+#: at ~3x the executor cost of the single string (Arrow/pandas build one
 #: Python object per cell for nested arrays; a string column is one
-#: buffer). json round-trips str|None cells exactly, and the merge
-#: side decodes once per table row.
-EXTRACTION_SCHEMA = (
-    "doc_id string, page int, table_id int, media_ref string, "
-    "grid string, "
-    "quality array<string>, rotation_corrected int, is_table boolean, "
-    "page_numbers array<string>"
+#: buffer). json round-trips str|None cells exactly, and the merge side
+#: decodes once per page.
+PAGE_SCHEMA = (
+    "doc_id string, page int, media_ref string, tables string, "
+    "has_issue boolean, rotation_corrected int, "
+    "page_numbers array<string>, is_vision boolean"
 )
 
-_COLS = [
-    "doc_id", "page", "table_id", "media_ref",
-    "grid", "quality", "rotation_corrected", "is_table",
-    "page_numbers",
+PAGE_COLS = [
+    "doc_id", "page", "media_ref", "tables",
+    "has_issue", "rotation_corrected", "page_numbers", "is_vision",
 ]
 
 
-def encode_grid(header: list, rows: list) -> str:
-    return json.dumps(
-        {"h": header, "r": rows}, ensure_ascii=False, separators=(",", ":")
-    )
+def encode_tables(grids: list) -> str:
+    """A page's ``(header, rows)`` grids, in table order, as one JSON list."""
+    return json.dumps(grids, ensure_ascii=False, separators=(",", ":"))
 
 
-def decode_grid(grid: str) -> tuple[list, list]:
-    d = json.loads(grid)
-    return d["h"], d["r"]
+def decode_tables(tables: str) -> list:
+    return json.loads(tables)
 
 
 def _stringify(v) -> str | None:
@@ -125,19 +123,14 @@ def _page_text(words: list) -> str:
     return " ".join(w.get("t", "") for w in words)
 
 
-def _sentinel(
-    doc_id: str, page: int, rot: int, page_numbers: list[str], media_ref: str = ""
-) -> list:
-    return [doc_id, page, 0, media_ref, None, [], rot, False, page_numbers]
-
-
 def extract_text_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Text-path layout parse per page (table_extraction.py:402-474).
 
-    Quality heuristics run per table here (T4); the document-level
-    retry decision is made in the doc-keyed merge. Non-text spans inside a
-    text-routed document yield no tables — a scanned page gives
-    pdfplumber nothing, matching reference behavior.
+    Quality heuristics run per table here (T4) and reduce to the page's
+    ``has_issue`` bit; the document-level retry decision is made in the
+    doc-keyed merge. Non-text spans inside a text-routed document yield
+    no tables — a scanned page gives pdfplumber nothing, matching
+    reference behavior.
     """
     for batch in batches:
         out = []
@@ -145,30 +138,50 @@ def extract_text_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
             batch["doc_id"], batch["page"], batch["kind"], batch["text"],
             batch["media_ref"],
         ):
-            page = int(page)
             # decode the payload ONCE per page; the word list feeds both
             # the validation text/number pass and the layout parse (the
-            # double json.loads was ~18% of this kernel's profile)
-            words = _page_words(kind, text)
-            out.append(
-                _sentinel(
-                    doc_id, page, 0, extract_numbers(_page_text(words)), media_ref
-                )
-            )
-            if not words:
-                continue
+            # double json.loads was ~18% of this kernel's profile).
             # list-form kernels: the grid is already str|None cells, so
             # no pandas frame is built on this (the hot) path — see
             # core/layout.prune_grid for the measured rationale.
-            for t_idx, (header, rows) in enumerate(
-                parse_words_to_grids(words), start=1
-            ):
-                issues = grid_quality_issues(header, rows)
-                out.append(
-                    [doc_id, page, t_idx, "", encode_grid(header, rows),
-                     issues, 0, True, []]
-                )
-        yield pd.DataFrame(out, columns=_COLS)
+            words = _page_words(kind, text)
+            grids = parse_words_to_grids(words) if words else []
+            out.append([
+                doc_id, int(page), media_ref, encode_tables(grids),
+                any(grid_quality_issues(h, r) for h, r in grids), 0,
+                extract_numbers(_page_text(words)), False,
+            ])
+        yield pd.DataFrame(out, columns=PAGE_COLS)
+
+
+def _vision_grid(csv: str) -> tuple[list, list] | None:
+    """One vision response to the page's cleaned grid, or ``None`` when
+    it holds no table.
+
+    Grid fast path first (csv.reader + proven dtype-inference mimicry,
+    tests/test_vision_fastpath.py); content outside its grammar runs
+    the spec pandas ladder, which stays the semantic definition.
+    Stringify once, then prune + clean on the grid: _stringify maps
+    exactly the isna set to None, so the list-form prune_grid
+    (rows-then-columns) reproduces dropna(how='all') twice at a
+    fraction of the pandas frame cost; cleaning rules are identity on
+    digit-only strings, so stringify-then-clean matches clean-then-
+    stringify; uncleanable frames pass dirty, mirroring the reference's
+    exception swallow."""
+    grid = parse_vision_grid_fast(csv)
+    if grid is VISION_FALLBACK:
+        df = parse_vision_csv(csv)
+        grid = None if df is None else _frame_payload(df)
+    if grid is None:
+        return None
+    header, rows = grid
+    pruned = prune_grid([header, *rows])
+    if pruned is None:
+        return None
+    header, rows = pruned
+    if grid_cleanable(header):
+        rows = clean_vision_grid_rows(header, rows)
+    return (header, rows) if rows else None
 
 
 def make_vision_extractor(backend: VisionBackend | None = None):
@@ -180,7 +193,8 @@ def make_vision_extractor(backend: VisionBackend | None = None):
     the batch out to an endpoint). Rotation detection + gated
     correction (image_processing.py:140-148,205-215) precedes
     inference; response parsing and cleaning follow
-    table_extraction.py:136-182 exactly.
+    table_extraction.py:136-182 exactly. Rows come out in input order,
+    one per page.
     """
     backend = backend or VisionBackend()
 
@@ -188,59 +202,25 @@ def make_vision_extractor(backend: VisionBackend | None = None):
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            doc_ids = list(batch["doc_id"])
-            pages = [int(p) for p in batch["page"]]
             refs = [
                 mr if mr else f"img://{d}/{p}"
-                for d, p, mr in zip(doc_ids, pages, batch["media_ref"])
+                for d, p, mr in zip(batch["doc_id"], batch["page"], batch["media_ref"])
             ]
-            rotations = []
-            for ref in refs:
-                pixels, _expected = stub_pixels(ref)
-                _img, applied = correct_rotation(pixels)
-                rotations.append(1 if applied != 0 else 0)
+            rotations = [
+                int(correct_rotation(stub_pixels(ref)[0])[1] != 0) for ref in refs
+            ]
             responses = backend.infer_batch(refs)
-            page_texts = [
-                _page_text(_page_words(k, t))
-                for k, t in zip(batch["kind"], batch["text"])
-            ]
-
             out = []
-            for doc_id, page, ref, rot, csv, ptext in zip(
-                doc_ids, pages, refs, rotations, responses, page_texts
+            for doc_id, page, ref, rot, csv, kind, text in zip(
+                batch["doc_id"], batch["page"], refs, rotations, responses,
+                batch["kind"], batch["text"],
             ):
-                out.append(_sentinel(doc_id, page, rot, extract_numbers(ptext)))
-                # grid fast path first (csv.reader + proven dtype-
-                # inference mimicry, tests/test_vision_fastpath.py);
-                # content outside its grammar runs the spec pandas
-                # ladder, which stays the semantic definition
-                grid = parse_vision_grid_fast(csv)
-                if grid is VISION_FALLBACK:
-                    df = parse_vision_csv(csv)
-                    grid = None if df is None else _frame_payload(df)
-                if grid is None:
-                    continue
-                # stringify once, then prune + clean on the grid:
-                # _stringify maps exactly the isna set to None, so the
-                # list-form prune_grid (rows-then-columns) reproduces
-                # dropna(how='all') twice at a fraction of the pandas
-                # frame cost; cleaning rules are identity on digit-only
-                # strings, so stringify-then-clean matches clean-then-
-                # stringify; uncleanable frames pass dirty, mirroring
-                # the reference's exception swallow
-                header, rows = grid
-                pruned = prune_grid([header, *rows])
-                if pruned is None:
-                    continue
-                header, rows = pruned
-                if grid_cleanable(header):
-                    rows = clean_vision_grid_rows(header, rows)
-                if not rows:
-                    continue
-                out.append(
-                    [doc_id, page, 1, ref, encode_grid(header, rows),
-                     [], 0, True, []]
-                )
-            yield pd.DataFrame(out, columns=_COLS)
+                grid = _vision_grid(csv)
+                out.append([
+                    doc_id, int(page), ref,
+                    encode_tables([] if grid is None else [grid]), False, rot,
+                    extract_numbers(_page_text(_page_words(kind, text))), True,
+                ])
+            yield pd.DataFrame(out, columns=PAGE_COLS)
 
     return extract_vision_pages

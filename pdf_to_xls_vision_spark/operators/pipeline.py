@@ -38,8 +38,9 @@ from pdf_to_xls_vision_spark.core.spans import (
 )
 from pdf_to_xls_vision_spark.operators.classify import route_expr
 from pdf_to_xls_vision_spark.operators.extract import (
-    EXTRACTION_SCHEMA,
-    decode_grid,
+    PAGE_SCHEMA,
+    decode_tables,
+    encode_tables,
     extract_text_pages,
     make_vision_extractor,
 )
@@ -61,8 +62,8 @@ RESULT_SCHEMA = (
 )
 #: what the merge UDF actually emits: the span sequence travels the
 #: Python->JVM Arrow boundary as ONE compact JSON string per document
-#: and is decoded JVM-side with from_json (same physics as the `grid`
-#: input column, operators/extract.EXTRACTION_SCHEMA: Arrow/pandas
+#: and is decoded JVM-side with from_json (same physics as the `tables`
+#: input column, operators/extract.PAGE_SCHEMA: Arrow/pandas
 #: materialize one Python object per nested element, a string column
 #: is one buffer; measured ~3x on the input hop at 600k cells/2k docs)
 _RAW_RESULT_SCHEMA = RESULT_SCHEMA.replace(
@@ -149,48 +150,21 @@ def _doc_validation(page_number_lists, grids) -> dict:
     }
 
 
-#: extraction-row columns the merge consumes (flat — nested-struct
-#: collect_list was measured 4x slower through Arrow->pandas; the
-#: table payload itself travels as the single JSON `grid` string, see
-#: operators/extract.EXTRACTION_SCHEMA for the measured rationale)
-_MERGE_COLS = [
-    "doc_id", "page", "table_id", "media_ref", "grid",
-    "rotation_corrected", "is_table", "page_numbers",
-]
-
-#: what the page stage emits: the kernels' rows plus the two bits the
-#: R2 decision reads. `quality` collapses to one "any issue" bit in
-#: Python, so the issue lists never cross the Arrow boundary.
-_PAGE_SCHEMA = (
-    EXTRACTION_SCHEMA.replace("quality array<string>, ", "")
-    + ", has_issue boolean, is_vision boolean"
-)
-
-
 def make_page_dispatch(text_parse, vision_extract):
     """Build the page stage's ``mapInPandas`` function: split each
     batch by ``route``, run the text rows through ``text_parse`` and
     the vision rows through ``vision_extract`` (each called once per
-    non-empty part), and emit ``_PAGE_SCHEMA`` rows, the text part's
-    rows first."""
-
-    def _run(kernel, part: pd.DataFrame, is_vision: bool) -> pd.DataFrame:
-        out = pd.concat(kernel(iter([part])), ignore_index=True)
-        return out[_MERGE_COLS].assign(
-            has_issue=[len(q) > 0 for q in out["quality"]],
-            is_vision=is_vision,
-        )
+    non-empty part), and emit their ``PAGE_SCHEMA`` rows, the text
+    part's rows first."""
 
     def extract_pages(batches):
         for batch in batches:
             text = (batch["route"] == "text").to_numpy()
             parts = [
-                _run(kernel, batch[mask].reset_index(drop=True), is_vision)
-                for kernel, mask, is_vision in (
-                    (text_parse, text, False),
-                    (vision_extract, ~text, True),
-                )
+                out
+                for kernel, mask in ((text_parse, text), (vision_extract, ~text))
                 if mask.any()
+                for out in kernel(iter([batch[mask].reset_index(drop=True)]))
             ]
             if parts:
                 yield pd.concat(parts, ignore_index=True)
@@ -198,48 +172,32 @@ def make_page_dispatch(text_parse, vision_extract):
     return extract_pages
 
 
-def _merge_doc_arrays(
-    cols: dict,
-    s: int,
-    e: int,
-    quality_retried: int = 0,
-    page_numbers: list | None = None,
-) -> dict:
-    """Per-document reduce over column-array slices [s:e): rebuild
-    table records, M1-merge, serialize the ordered span sequence, and
-    compute per-doc metrics. ``page_numbers`` overrides the sentinels'
-    validation numbers (one list per page)."""
-    is_table = cols["is_table"]
-    sent_idx = [i for i in range(s, e) if not is_table[i]]
-    pages_parsed = len(sent_idx)
-    rotation_corrections = int(
-        sum(cols["rotation_corrected"][i] for i in sent_idx)
-    )
-    if page_numbers is None:
-        page_numbers = [cols["page_numbers"][i] for i in sent_idx]
-
-    tbl_idx = sorted(
-        (i for i in range(s, e) if is_table[i]),
-        key=lambda i: (int(cols["page"][i]), int(cols["table_id"][i])),
-    )
-    records = []
-    for i in tbl_idx:
-        header, rows = decode_grid(cols["grid"][i])
-        records.append(
-            GridRecord(
-                header=header,
-                rows=rows,
-                page=int(cols["page"][i]),
-                table_id=int(cols["table_id"][i]),
-                media_ref=cols["media_ref"][i],
-            )
+def _merge_doc_arrays(cols: dict, s: int, e: int, quality_retried: int = 0) -> dict:
+    """Per-document reduce over the page rows [s:e): rebuild the table
+    records in page order (a page's tables numbered from 1 in list
+    order), M1-merge, serialize the ordered span sequence, and compute
+    per-doc metrics. A table's span carries its page's ``media_ref``
+    on vision rows and ``""`` on text rows."""
+    pages = sorted(range(s, e), key=lambda i: int(cols["page"][i]))
+    records = [
+        GridRecord(
+            header=header,
+            rows=rows,
+            page=int(cols["page"][i]),
+            table_id=t_id,
+            media_ref=cols["media_ref"][i] if cols["is_vision"][i] else "",
         )
+        for i in pages
+        for t_id, (header, rows) in enumerate(
+            decode_tables(cols["tables"][i]), start=1
+        )
+    ]
     merged = merge_grid_continuations(records)
     spans = serialize_grid_spans(merged)
     rollups = sum(grid_rollup_rows(r.header, r.rows) for r in merged)
     notes = sum(len(grid_notes(r.header, r.rows)) for r in merged)
     validation = _doc_validation(
-        [list(p) for p in page_numbers],
+        [list(p) for p in cols["page_numbers"][s:e]],
         [(r.header, r.rows) for r in merged],
     )
     return {
@@ -248,13 +206,16 @@ def _merge_doc_arrays(
             spans, ensure_ascii=False, separators=(",", ":")
         ),
         "n_tables": len(merged),
-        "pages_parsed": pages_parsed,
-        "rotation_corrections": rotation_corrections,
+        "pages_parsed": e - s,
+        "rotation_corrections": int(cols["rotation_corrected"][s:e].sum()),
         "quality_retried": quality_retried,
         "rollup_rows": int(rollups),
         "n_notes": int(notes),
         **validation,
     }
+
+
+_NO_TABLES = encode_tables([])
 
 
 def _needs_retry(cols: dict, s: int, e: int) -> bool:
@@ -263,37 +224,35 @@ def _needs_retry(cols: dict, s: int, e: int) -> bool:
     issue or when it yields no table at all."""
     if cols["is_vision"][s]:
         return False
-    return bool(cols["has_issue"][s:e].any()) or not cols["is_table"][s:e].any()
+    return bool(cols["has_issue"][s:e].any()) or all(
+        t == _NO_TABLES for t in cols["tables"][s:e]
+    )
 
 
 def _retry_doc(cols: dict, s: int, e: int, vision_extractor) -> dict:
     """Re-extract a retried document's text pages through the vision
     stage, as one batch, and merge that output instead of the parse's.
 
-    Each text page's sentinel brings the page's source ``media_ref``
-    (the vision stage's input) and its validation numbers. The page
-    text itself does not cross the exchange: the vision stage would
-    derive the same numbers from the same word tokens, so the
-    sentinels' ``page_numbers`` are used as they are."""
-    sent_idx = [i for i in range(s, e) if not cols["is_table"][i]]
+    Each text page row brings the page's source ``media_ref`` (the
+    vision stage's input) and its validation numbers. The page text
+    itself does not cross the exchange: the vision stage would derive
+    the same numbers from the same word tokens, so the text rows'
+    ``page_numbers`` replace the vision rows' (one row per page, in
+    input order)."""
     batch = pd.DataFrame(
         {
-            "doc_id": cols["doc_id"][sent_idx],
+            "doc_id": cols["doc_id"][s:e],
             "route": "text",
-            "page": cols["page"][sent_idx],
+            "page": cols["page"][s:e],
             "kind": None,
             "text": None,
-            "media_ref": cols["media_ref"][sent_idx],
+            "media_ref": cols["media_ref"][s:e],
         }
     )
     out = pd.concat(vision_extractor(iter([batch])), ignore_index=True)
-    return _merge_doc_arrays(
-        {c: out[c].to_numpy() for c in _MERGE_COLS},
-        0,
-        len(out),
-        quality_retried=1,
-        page_numbers=[cols["page_numbers"][i] for i in sent_idx],
-    )
+    retried = {c: out[c].to_numpy() for c in out.columns}
+    retried["page_numbers"] = cols["page_numbers"][s:e]
+    return _merge_doc_arrays(retried, 0, len(out), quality_retried=1)
 
 
 def _make_merge_kernel(vision_extractor):
@@ -460,7 +419,7 @@ def run_extraction(
         .repartition(n_parts)
         .mapInPandas(
             make_page_dispatch(extract_text_pages, vision_extractor),
-            _PAGE_SCHEMA,
+            PAGE_SCHEMA,
         )
     )
     schema, passthrough = _RAW_RESULT_SCHEMA, ()

@@ -1,8 +1,8 @@
-"""Bad count parameters fail before any work: a bucket count,
-commit-group size or partition width below 1 would otherwise plan no
-commit (``range(0, n, -1)`` is empty) and report success, and a
-compaction target below 1 would divide by zero or rewrite every bucket
-to one file."""
+"""Bad parameters fail before any work: a bucket count, commit-group
+size or partition width below 1 would otherwise plan no commit
+(``range(0, n, -1)`` is empty) and report success, a compaction target
+below 1 would divide by zero or rewrite every bucket to one file, and a
+CLI flag the chosen mode ignores would be dropped without a word."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import os
 
 import pytest
 
-from pdf_to_xls_vision_spark.cli import build_parser
+from pdf_to_xls_vision_spark.cli import build_parser, main
 from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
 from pdf_to_xls_vision_spark.sink.checkpoint import run_checkpointed_extraction
 from pdf_to_xls_vision_spark.sink.compaction import compact_spans
@@ -81,3 +81,28 @@ def test_cli_accepts_positive_counts():
          "--commit-group-size", "2", "--partitions", "3"]
     )
     assert (args.buckets, args.commit_group_size, args.partitions) == (1, 2, 3)
+
+
+@pytest.mark.parametrize(
+    "flags,ignored",
+    [
+        (["--continuous"], "--continuous"),
+        (["--stream-checkpoint", "ckpt"], "--stream-checkpoint"),
+        (["--stream", "--report"], "--report"),
+        (["--compact", "--report"], "--report"),
+        (["--read-snapshot", "0", "--report"], "--report"),
+    ],
+    ids=["continuous", "stream_checkpoint", "stream_report", "compact_report",
+         "read_snapshot_report"],
+)
+def test_cli_rejects_flags_the_mode_ignores(flags, ignored, tmp_path, monkeypatch):
+    """A flag the chosen mode does not read is an error, raised before
+    a session starts."""
+    from pdf_to_xls_vision_spark import session
+
+    def ran(*args, **kwargs):
+        raise AssertionError("the job started")
+
+    monkeypatch.setattr(session, "get_spark", ran)
+    with pytest.raises(SystemExit, match=ignored):
+        main([str(tmp_path / "in"), "-o", str(tmp_path / "out"), *flags])

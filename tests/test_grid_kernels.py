@@ -23,7 +23,7 @@ from pdf_to_xls_vision_spark.core.spans import (
 )
 from pdf_to_xls_vision_spark.operators.extract import (
     _page_words,
-    decode_grid,
+    decode_tables,
     make_vision_extractor,
 )
 from tests.oracle import (
@@ -156,10 +156,11 @@ def test_vision_cleaning_parity():
         }
     )
     (out,) = make_vision_extractor()(iter([batch]))
+    assert list(out["media_ref"]) == refs
     engine = {
-        ref: decode_grid(grid)
-        for ref, grid, is_table in zip(out["media_ref"], out["grid"], out["is_table"])
-        if is_table
+        ref: tuple(grid)
+        for ref, tables in zip(out["media_ref"], out["tables"])
+        for grid in decode_tables(tables)
     }
     oracle = {}
     for ref in refs:

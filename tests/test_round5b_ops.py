@@ -565,11 +565,11 @@ def test_streaming_heavy_hitters_rejects_bad_min_count(spark):
 # conversion labels — leakage rules pinned against crafted timelines
 # ---------------------------------------------------------------------------
 
-def test_conversion_labels_leakage_and_window_rules(spark):
+def test_conversion_labels_leakage_and_window_rules(spark, tmp_path):
     from operator_zoo.queries import (
         q_events_conversion_labels,
     )
-    import tempfile, os
+    import os
     from pyspark.sql import functions as SF
 
     day = 86400
@@ -589,7 +589,7 @@ def test_conversion_labels_leakage_and_window_rules(spark):
         # u6: no signup -> not in output at all
         (6, 10 * day, "purchase"),
     ]
-    base = tempfile.mkdtemp(prefix="ptxv_convlab_")
+    base = str(tmp_path)
     df = spark.createDataFrame(
         rows, "user_id long, epoch long, event_type string"
     ).select(
