@@ -1,4 +1,4 @@
-"""Document classification / routing — pure column expressions (S2, S4, R1).
+"""Document classification / routing — one column expression (S2, S4, R1).
 
 The reference's routing predicates probe only the first 3 pages
 (pdf_detection.py:18,38 — a LIMIT-3 sampling pushdown); here they are
@@ -15,28 +15,22 @@ from pyspark.sql import functions as F
 #: pdf_detection.py:18,38 — both probes look at the first 3 pages only.
 PROBE_PAGES = 3
 
-
-def all_image_expr(spans: str = "spans") -> Column:
-    """True when every span is an image — the reference's "image file"
-    input class (converter.py:17-27 via extension; here via content)."""
-    return F.forall(F.col(spans), lambda s: s["kind"] == F.lit("image"))
-
-
-def is_image_based_expr(spans: str = "spans") -> Column:
-    """``pdf_is_image_based`` (pdf_detection.py:27-49): any embedded
-    image among the first 3 pages. This — not ``pdf_has_text`` — is the
-    routing predicate (converter.py:94)."""
-    return F.exists(
-        F.slice(F.col(spans), 1, PROBE_PAGES),
-        lambda s: s["kind"] == F.lit("image"),
-    )
+#: Extraction dispatch (converter.py:78-114): image docs (every span an
+#: image — the reference's "image file" input class, converter.py:17-27
+#: via extension; here via content) and image-based PDFs
+#: (``pdf_is_image_based``, pdf_detection.py:27-49: an embedded image
+#: among the first 3 pages — this, not ``pdf_has_text``, is the routing
+#: predicate, converter.py:94) go to the vision stage; everything else
+#: to the text-layout parser (with a later quality-retry hop, R2). One
+#: SQL string, so building it is one JVM round trip.
+_ROUTE_SQL = (
+    "CASE WHEN forall(spans, s -> s.kind = 'image') "
+    f"OR exists(slice(spans, 1, {PROBE_PAGES}), s -> s.kind = 'image') "
+    "THEN 'vision' ELSE 'text' END"
+)
 
 
-def route_expr(force_vision: bool = False, spans: str = "spans") -> Column:
-    """Extraction dispatch (converter.py:78-114): image docs and
-    image-based PDFs go to the vision stage; everything else to the
-    text-layout parser (with a later quality-retry hop, R2)."""
-    vision = all_image_expr(spans) | is_image_based_expr(spans)
-    if force_vision:
-        vision = vision | F.lit(True)
-    return F.when(vision, F.lit("vision")).otherwise(F.lit("text"))
+def route_expr(force_vision: bool = False) -> Column:
+    """A document's route, ``'vision'`` or ``'text'``, from its
+    ``spans``; every document is ``'vision'`` under ``force_vision``."""
+    return F.lit("vision") if force_vision else F.expr(_ROUTE_SQL)

@@ -236,13 +236,18 @@ def _manifest_rows(
 
 
 def _delete_partitions(spark: SparkSession, path: str, buckets) -> None:
-    """Remove the ``bucket=`` partitions of ``path`` for ``buckets``,
-    present or not, through the Hadoop FileSystem Spark writes to."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    for bucket in buckets:
-        part = jvm.org.apache.hadoop.fs.Path(os.path.join(path, f"bucket={bucket}"))
-        part.getFileSystem(conf).delete(part, True)
+    """Remove the ``bucket=`` partitions of ``path`` for ``buckets``
+    that exist, through the Hadoop FileSystem Spark writes to: one
+    ``globStatus`` over ``bucket={…}`` finds them, so a fresh output
+    costs one listing, not a delete per bucket."""
+    if not buckets:
+        return
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(
+        os.path.join(path, "bucket={%s}" % ",".join(map(str, buckets)))
+    )
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    for status in fs.globStatus(pattern) or []:
+        fs.delete(status.getPath(), True)
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:

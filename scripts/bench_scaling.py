@@ -8,9 +8,13 @@ reports docs/sec at both plus
 
     efficiency = throughput(4N) / (4 * throughput(N)).
 
-Each measurement is a fresh process (fresh JVM + Python worker pool);
-the best of ``--repeats`` runs per level is kept, since the minimum is
-the least-contended run on a noisy host.
+Each measurement is a fresh process (fresh JVM + Python worker pool)
+pinned with ``os.sched_setaffinity`` to the first N or 4N CPUs it may
+use before it starts the JVM, so the JVM, its GC and Arrow threads and
+the Python workers inherit the pin: unpinned, ``local[N]`` also runs
+its JVM threads on the idle cores and reads as too fast. Each level's
+throughput comes from the median of its ``--repeats`` runs (at least 3
+for a recorded figure).
 
 Usage::
 
@@ -26,6 +30,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -33,7 +38,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-N_LOW = max(1, (os.cpu_count() or 1) // 4)
+N_LOW = max(1, len(os.sched_getaffinity(0)) // 4)
 LEVELS = (N_LOW, 4 * N_LOW)
 
 
@@ -44,7 +49,9 @@ def corpus_path(n_docs: int) -> str:
 
 
 def run_job(cpus: int, n_docs: int) -> None:
-    """One measurement: full extraction pipeline at local[cpus]."""
+    """One measurement: full extraction pipeline at local[cpus], this
+    process and every process it starts pinned to ``cpus`` CPUs."""
+    os.sched_setaffinity(0, sorted(os.sched_getaffinity(0))[:cpus])
     from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
     from pdf_to_xls_vision_spark.session import get_spark
 
@@ -96,7 +103,7 @@ def main() -> None:
             results[cpus].append(sec)
             print(f"rep {rep} local[{cpus}]: {sec}s", file=sys.stderr)
 
-    thr = {c: args.docs / min(v) for c, v in results.items()}
+    thr = {c: args.docs / statistics.median(v) for c, v in results.items()}
     print(json.dumps({
         "docs": args.docs,
         "repeats": args.repeats,
