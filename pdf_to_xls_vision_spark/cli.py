@@ -7,6 +7,15 @@ cluster-job flags the north rule requires (``--partitions``,
 The reference's per-file/recursive dispatch disappears: the input is a
 table of span documents, not a directory tree.
 
+Four modes: the batch job, or one of ``--stream``, ``--compact`` and
+``--read-snapshot`` (argparse refuses two). ``MODES`` names each
+mode's runner and the flags it reads besides INPUT, ``-o`` and
+``--master``; any other flag given on the command line stops the job
+before a session starts, as does a bad vision backend (a missing key,
+``--media-dir`` without the live backend). A new flag goes into the
+rows of the modes that read it, and defaults to None (or False) so
+that giving it shows.
+
 Usage::
 
     spark-submit --py-files pdf_to_xls_vision_spark.zip \
@@ -15,11 +24,11 @@ Usage::
     python -m pdf_to_xls_vision_spark.cli corpus.parquet -o /tmp/out
 
 Resume is the default: committed buckets (per the output manifest) are
-pruned from the input scan before any extraction work runs. The job
-prints one JSON summary line (the reference's batch summary,
-``converter.py:257-265``) from the run's own sums: the resumed buckets'
-from the resume's manifest read, the new ones' from their commits.
-Only ``--report`` reads the manifest again.
+pruned from the input scan before any extraction work runs. Every mode
+prints one JSON summary line; the batch job's is the reference's batch
+summary (``converter.py:257-265``), from the run's own sums: the
+resumed buckets' from the resume's manifest read, the new ones' from
+their commits. Only ``--report`` reads the manifest again.
 """
 
 from __future__ import annotations
@@ -56,16 +65,14 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--partitions",
         type=_positive_int,
-        default=None,
         help="page-relation repartition width (default: 2x parallelism)",
     )
     p.add_argument(
-        "--buckets", type=_positive_int, default=64, help="commit buckets"
+        "--buckets", type=_positive_int, help="commit buckets (default: 64)"
     )
     p.add_argument(
         "--commit-group-size",
         type=_positive_int,
-        default=None,
         help="buckets per atomic commit (default: all pending in one)",
     )
     p.add_argument(
@@ -75,13 +82,11 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--master",
-        default=None,
         help="spark master (default: the launcher's, e.g. spark-submit --master)",
     )
     p.add_argument(
         "--snapshot",
-        default="",
-        help="input snapshot id recorded in commit lineage",
+        help="input snapshot id recorded in commit lineage (default: INPUT)",
     )
     p.add_argument(
         "--report",
@@ -89,17 +94,16 @@ def build_parser() -> argparse.ArgumentParser:
         help="print the per-bucket validation/metrics report (X7) after the "
         "batch run",
     )
-    p.add_argument(
+    modes = p.add_mutually_exclusive_group()
+    modes.add_argument(
         "--stream",
         action="store_true",
         help="treat INPUT as a continuously-growing directory: run the "
         "Structured Streaming ingest (exactly-once per-micro-batch "
-        "commits) instead of the batch job; --force-vision, --partitions, "
-        "--commit-group-size and --report are batch-only",
+        "commits) instead of the batch job",
     )
     p.add_argument(
         "--stream-checkpoint",
-        default=None,
         help="with --stream: streaming checkpoint dir "
         "(default: <output>/_stream_checkpoint)",
     )
@@ -109,16 +113,15 @@ def build_parser() -> argparse.ArgumentParser:
         help="with --stream: keep running for new files instead of "
         "draining what's present and stopping (availableNow)",
     )
-    p.add_argument(
+    modes.add_argument(
         "--read-snapshot",
         type=int,
-        default=None,
         metavar="BATCH",
         help="read-only mode: report the streaming output table as of "
         "ingest batch BATCH (Iceberg time-travel analog); no "
         "extraction runs and the input path is ignored",
     )
-    p.add_argument(
+    modes.add_argument(
         "--compact",
         action="store_true",
         help="maintenance mode: bin-pack small parquet files in the "
@@ -128,21 +131,18 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--target-file-mb",
         type=_positive_int,
-        default=128,
-        help="with --compact: target output file size in MiB",
+        help="with --compact: target output file size in MiB (default: 128)",
     )
     p.add_argument(
         "--vision-backend",
         choices=["stub", "anthropic"],
-        default="stub",
-        help="vision-inference backend: 'stub' (deterministic, no "
-        "network) or 'anthropic' (live Messages API — reference "
-        "table_extraction.py:46-133; needs ANTHROPIC_API_KEY and "
-        "--media-dir)",
+        help="vision-inference backend: 'stub' (the default: "
+        "deterministic, no network) or 'anthropic' (live Messages API — "
+        "reference table_extraction.py:46-133; needs ANTHROPIC_API_KEY "
+        "and --media-dir)",
     )
     p.add_argument(
         "--media-dir",
-        default=None,
         help="with --vision-backend anthropic: directory holding the "
         "rendered page rasters, one file per media_ref",
     )
@@ -153,7 +153,12 @@ def _vision_backend(args):
     """None (-> stub) or a live AnthropicVisionBackend resolving
     media refs against --media-dir. Fails fast on missing key/dir —
     never a silently-empty extraction."""
-    if args.vision_backend == "stub":
+    if args.vision_backend in (None, "stub"):
+        if args.media_dir is not None:
+            raise SystemExit(
+                "--media-dir is read only with --vision-backend anthropic; "
+                "the stub backend reads no rasters"
+            )
         return None
     if not args.media_dir:
         raise SystemExit(
@@ -195,92 +200,140 @@ def _committed_counts(committed) -> dict:
     return {"docs": row.docs, "span_rows": row.span_rows}
 
 
-def _run_stream(spark, args) -> int:
+def _run_batch(spark, args, backend) -> dict:
+    from pdf_to_xls_vision_spark.sink import checkpoint
+    from pdf_to_xls_vision_spark.sources.span_docs import read_span_docs
+
+    summary = checkpoint.run_checkpointed_extraction(
+        read_span_docs(spark, args.input),
+        args.output,
+        n_buckets=args.buckets or checkpoint.DEFAULT_BUCKETS,
+        commit_group_size=args.commit_group_size,
+        input_snapshot=args.snapshot or args.input,
+        force_vision=args.force_vision,
+        backend=backend,
+        page_partitions=args.partitions,
+    )
+    return {
+        "committed_buckets": len(summary["committed"]),
+        "resumed_buckets": len(summary["skipped"]),
+        "attempt": summary["attempt"],
+        **summary["totals"],
+        "output": args.output,
+    }
+
+
+def _run_stream(spark, args, backend) -> dict:
     import os
 
-    from pdf_to_xls_vision_spark.streaming.ingest import (
-        read_stream_committed,
-        stream_extraction,
-    )
+    from pdf_to_xls_vision_spark.sink import checkpoint
+    from pdf_to_xls_vision_spark.streaming.ingest import stream_extraction
 
-    ckpt = args.stream_checkpoint or os.path.join(
-        args.output, "_stream_checkpoint"
-    )
-    q = stream_extraction(
+    ckpt = args.stream_checkpoint or os.path.join(args.output, "_stream_checkpoint")
+    stream_extraction(
         spark,
         args.input,
         args.output,
         ckpt,
-        n_buckets=args.buckets,
+        n_buckets=args.buckets or checkpoint.DEFAULT_BUCKETS,
         available_now=not args.continuous,
-        backend=_vision_backend(args),
+        backend=backend,
+    ).awaitTermination()
+    committed = checkpoint.read_stream_committed(spark, args.output)
+    return {
+        "mode": "stream",
+        **_committed_counts(committed),
+        "output": args.output,
+        "checkpoint": ckpt,
+    }
+
+
+def _run_compact(spark, args, _backend) -> dict:
+    from pdf_to_xls_vision_spark.sink import compaction
+
+    mb = args.target_file_mb
+    res = compaction.compact_spans(
+        spark,
+        args.output,
+        target_file_bytes=compaction.DEFAULT_TARGET_FILE_BYTES if mb is None
+        else mb * 1024 * 1024,
     )
-    q.awaitTermination()
-    committed = read_stream_committed(spark, args.output)
-    print(
-        json.dumps(
-            {
-                "mode": "stream",
-                **_committed_counts(committed),
-                "output": args.output,
-                "checkpoint": ckpt,
-            }
-        )
+    return {
+        "mode": "compact",
+        "output": args.output,
+        "compacted_buckets": sorted(res["compacted"]),
+        "skipped_buckets": res["skipped"],
+        "files_rewritten": sum(c["files_before"] for c in res["compacted"].values()),
+    }
+
+
+def _run_read_snapshot(spark, args, _backend) -> dict:
+    from pdf_to_xls_vision_spark.sink import checkpoint
+
+    snap = checkpoint.read_stream_committed(
+        spark, args.output, as_of_batch=args.read_snapshot
     )
-    return 0
+    return {
+        "mode": "read-snapshot",
+        "as_of_batch": args.read_snapshot,
+        **_committed_counts(snap),
+        "output": args.output,
+    }
+
+
+#: mode -> (runner, the flags it reads besides INPUT, -o and --master).
+#: A mode other than the batch job is chosen by the flag of its name;
+#: a runner gets the session, the arguments and the vision backend.
+MODES = {
+    "batch": (_run_batch, (
+        "--force-vision", "--partitions", "--buckets", "--commit-group-size",
+        "--no-resume", "--snapshot", "--report", "--vision-backend",
+        "--media-dir",
+    )),
+    "stream": (_run_stream, (
+        "--stream", "--buckets", "--no-resume", "--stream-checkpoint",
+        "--continuous", "--vision-backend", "--media-dir",
+    )),
+    "compact": (_run_compact, ("--compact", "--target-file-mb")),
+    "read-snapshot": (_run_read_snapshot, ("--read-snapshot",)),
+}
+
+
+def _given_flags(parser: argparse.ArgumentParser, args) -> list[str]:
+    """The options given on the command line, by their long name. Every
+    option defaults to None or False, so any other value was given;
+    compared with ``is``, since ``--read-snapshot 0`` is given and
+    ``0 == False``."""
+    return [
+        a.option_strings[-1]
+        for a in parser._actions
+        if a.option_strings and a.default is not argparse.SUPPRESS
+        and getattr(args, a.dest) is not None
+        and getattr(args, a.dest) is not False
+    ]
 
 
 def main(argv: list[str] | None = None) -> int:
-    args = build_parser().parse_args(argv)
-
-    from pdf_to_xls_vision_spark.session import get_spark
-    from pdf_to_xls_vision_spark.sink.checkpoint import (
-        read_manifest,
-        run_checkpointed_extraction,
-    )
-    from pdf_to_xls_vision_spark.sources.span_docs import read_span_docs
-
-    if args.compact and args.no_resume:
-        raise SystemExit(
-            "--compact maintains the existing output table; "
-            "--no-resume would delete it first"
-        )
-    batch = "the batch job"
-    mode = (
-        "--compact" if args.compact
-        else "--read-snapshot" if args.read_snapshot is not None
-        else "--stream" if args.stream
-        else batch
-    )
-    ignored = [
-        flag
-        for flag, given, used_by in (
-            ("--force-vision", args.force_vision, batch),
-            ("--partitions", args.partitions is not None, batch),
-            ("--commit-group-size", args.commit_group_size is not None, batch),
-            ("--report", args.report, batch),
-            ("--continuous", args.continuous, "--stream"),
-            ("--stream-checkpoint", args.stream_checkpoint is not None, "--stream"),
-        )
-        if given and mode != used_by
-    ]
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    given = _given_flags(parser, args)
+    mode = next((m for m in MODES if f"--{m}" in given), "batch")
+    run, reads = MODES[mode]
+    ignored = [f for f in given if f not in ("--output", "--master", *reads)]
     if ignored:
         raise SystemExit(
-            f"{mode} does not support {', '.join(ignored)}: --force-vision, "
-            "--partitions, --commit-group-size and --report are batch-only "
-            "(each micro-batch commits as one group over the default routing "
-            "and page partitioning); --continuous and --stream-checkpoint "
-            "need --stream"
+            f"the {mode} mode does not read {', '.join(ignored)}; "
+            f"it reads {', '.join(reads)}"
         )
-    if args.read_snapshot is not None and args.no_resume:
-        raise SystemExit(
-            "--read-snapshot reads the existing output table; "
-            "--no-resume would delete it first"
-        )
+    # a bad key or --media-dir must fail before --no-resume wipes the
+    # output and before a JVM starts
+    backend = _vision_backend(args)
     if args.no_resume:
         shutil.rmtree(args.output, ignore_errors=True)
 
     from pyspark.sql import SparkSession
+
+    from pdf_to_xls_vision_spark.session import get_spark
 
     # only stop the session on exit if this invocation created it —
     # embedded callers (tests, notebooks) keep theirs alive
@@ -288,74 +341,11 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("pdf_to_xls_vision_spark.cli", master=args.master)
     spark.sparkContext.setLogLevel("WARN")
     try:
-        if args.compact:
-            from pdf_to_xls_vision_spark.sink.compaction import compact_spans
-
-            res = compact_spans(
-                spark,
-                args.output,
-                target_file_bytes=args.target_file_mb * 1024 * 1024,
-            )
-            print(
-                json.dumps(
-                    {
-                        "mode": "compact",
-                        "output": args.output,
-                        "compacted_buckets": sorted(res["compacted"]),
-                        "skipped_buckets": res["skipped"],
-                        "files_rewritten": sum(
-                            info["files_before"]
-                            for info in res["compacted"].values()
-                        ),
-                    }
-                )
-            )
-            return 0
-        if args.read_snapshot is not None:
-            from pdf_to_xls_vision_spark.streaming.ingest import (
-                read_stream_committed,
-            )
-
-            snap = read_stream_committed(
-                spark, args.output, as_of_batch=args.read_snapshot
-            )
-            print(
-                json.dumps(
-                    {
-                        "mode": "read-snapshot",
-                        "as_of_batch": args.read_snapshot,
-                        **_committed_counts(snap),
-                        "output": args.output,
-                    }
-                )
-            )
-            return 0
-        if args.stream:
-            return _run_stream(spark, args)
-        summary = run_checkpointed_extraction(
-            read_span_docs(spark, args.input),
-            args.output,
-            n_buckets=args.buckets,
-            commit_group_size=args.commit_group_size,
-            input_snapshot=args.snapshot or args.input,
-            force_vision=args.force_vision,
-            backend=_vision_backend(args),
-            page_partitions=args.partitions,
-        )
-        print(
-            json.dumps(
-                {
-                    "committed_buckets": len(summary["committed"]),
-                    "resumed_buckets": len(summary["skipped"]),
-                    "attempt": summary["attempt"],
-                    **summary["totals"],
-                    "output": args.output,
-                }
-            )
-        )
+        print(json.dumps(run(spark, args, backend)))
         if args.report:
-            manifest = read_manifest(spark, args.output)
-            for row in manifest.orderBy("bucket").collect():
+            from pdf_to_xls_vision_spark.sink.checkpoint import read_manifest
+
+            for row in read_manifest(spark, args.output).orderBy("bucket").collect():
                 print(
                     f"bucket {row.bucket:>4}: docs={row.docs} "
                     f"pages={row.pages_parsed} tables={row.tables_found} "
@@ -369,7 +359,7 @@ def main(argv: list[str] | None = None) -> int:
         return 1
     except ValueError as exc:
         # a maintenance mode pointed at the other sink's table layout
-        if args.compact or args.read_snapshot is not None:
+        if mode in ("compact", "read-snapshot"):
             raise SystemExit(str(exc)) from exc
         raise
     finally:

@@ -38,44 +38,6 @@ MIN_WORDS_VERTICAL = 3
 MIN_TABLE_ROWS = 2  # header + at least one data row
 
 
-def band_rows(words: list[dict]) -> list[list[dict]]:
-    """Group word boxes into row bands by ``top`` with snap tolerance."""
-    ordered = sorted(words, key=lambda w: (w["top"], w["x0"], w["t"]))
-    bands: list[list[dict]] = []
-    anchor = None
-    for w in ordered:
-        if anchor is None or w["top"] - anchor > SNAP_TOLERANCE:
-            bands.append([w])
-            anchor = w["top"]
-        else:
-            bands[-1].append(w)
-    return bands
-
-
-def detect_columns(words: list[dict]) -> list[float]:
-    """Cluster word left edges into column anchors; keep clusters with
-    >= MIN_WORDS_VERTICAL aligned words (the text-strategy seam rule)."""
-    xs = sorted(w["x0"] for w in words)
-    anchors: list[float] = []
-    counts: list[int] = []
-    cur_anchor = None
-    for x in xs:
-        if cur_anchor is None or x - cur_anchor > SNAP_TOLERANCE:
-            anchors.append(x)
-            counts.append(1)
-            cur_anchor = x
-        else:
-            counts[-1] += 1
-    return [a for a, c in zip(anchors, counts) if c >= MIN_WORDS_VERTICAL]
-
-
-def _column_of(x0: float, anchors: list[float]) -> int | None:
-    for j, a in enumerate(anchors):
-        if abs(x0 - a) <= SNAP_TOLERANCE:
-            return j
-    return None
-
-
 def parse_page_words(words: list[dict]) -> list[list[list[str | None]]]:
     """Parse one page's word boxes into raw tables.
 
@@ -88,13 +50,14 @@ def parse_page_words(words: list[dict]) -> list[list[list[str | None]]]:
     Fused hot path (the most-executed kernel in the engine — once per
     text page): one tuple sort replaces the dict-key sorts, banding and
     cell assembly run in the same sweep, and column lookup is a bisect
-    over the ascending anchors instead of a linear scan. Semantics are
-    identical to the spec composition ``band_rows`` + ``detect_columns``
-    + ``_column_of`` (kept above, exercised by tests/test_layout.py):
-    consecutive surviving anchors differ by
-    more than SNAP_TOLERANCE (the greedy cluster rule), so at most the
-    two anchors flanking ``x0`` can match, and the lower index — the
-    spec's first match — is checked first.
+    over the ascending anchors instead of a linear scan. The steps are
+    the module docstring's 1-3, as the sequential oracle
+    (``tests/oracle._parse_words``, compared in
+    tests/test_grid_kernels.py) runs them one after another:
+    consecutive surviving anchors differ by more than SNAP_TOLERANCE
+    (the greedy cluster rule), so at most the two anchors flanking
+    ``x0`` can match, and the lower index — the oracle's first match —
+    is checked first.
     """
     if not words:
         return []

@@ -52,23 +52,22 @@ if TYPE_CHECKING:
 _SPANS_TYPE = (
     "array<struct<kind string, text string, media_ref string, order int>>"
 )
-RESULT_SCHEMA = (
-    "doc_id string, "
-    f"spans {_SPANS_TYPE}, "
+#: the per-document metric columns, in result order: declared once for
+#: the public schema, the merge UDF's raw schema and the select between
+_METRICS = (
     "n_tables int, pages_parsed long, rotation_corrections long, "
     "quality_retried int, rollup_rows long, n_notes long, "
     "validation_status string, pdf_numbers long, table_numbers long, "
     "matched_numbers long, accuracy_pct double, n_missing int, n_extra int"
 )
+RESULT_SCHEMA = f"doc_id string, spans {_SPANS_TYPE}, {_METRICS}"
 #: what the merge UDF actually emits: the span sequence travels the
 #: Python->JVM Arrow boundary as ONE compact JSON string per document
 #: and is decoded JVM-side with from_json (same physics as the `tables`
 #: input column, operators/extract.PAGE_SCHEMA: Arrow/pandas
 #: materialize one Python object per nested element, a string column
 #: is one buffer; measured ~3x on the input hop at 600k cells/2k docs)
-_RAW_RESULT_SCHEMA = RESULT_SCHEMA.replace(
-    f"spans {_SPANS_TYPE}", "spans_json string"
-)
+_RAW_RESULT_SCHEMA = f"doc_id string, spans_json string, {_METRICS}"
 
 
 def _finish_result(raw: DataFrame, *passthrough: str) -> DataFrame:
@@ -86,16 +85,10 @@ def _finish_result(raw: DataFrame, *passthrough: str) -> DataFrame:
     gen). Callers should keep this select in the same stage as the
     merge UDF, never in a cache-scan/union-only stage. ``passthrough``
     columns follow the result columns unchanged."""
-    scalars = [
-        "n_tables", "pages_parsed", "rotation_corrections",
-        "quality_retried", "rollup_rows", "n_notes",
-        "validation_status", "pdf_numbers", "table_numbers",
-        "matched_numbers", "accuracy_pct", "n_missing", "n_extra",
-    ]
     return raw.selectExpr(
         "doc_id",
         f"from_json(spans_json, '{_SPANS_TYPE}') AS spans",
-        *scalars,
+        *(col.split()[0] for col in _METRICS.split(", ")),
         *passthrough,
     )
 

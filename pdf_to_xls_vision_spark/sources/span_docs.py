@@ -8,8 +8,8 @@ text+media span documents (BASELINE.json input_hint):
     spans  : array<struct<kind string, text string,
                           media_ref string, offset int>>
 
-``read_span_docs`` is the batch scan (parquet now, Iceberg when the
-runtime jar is present — the format string is the only switch);
+``read_span_docs`` is the batch scan of a parquet table (an Iceberg
+table would need its runtime jar and a format switch here);
 ``stream_span_docs`` is the unbounded variant for continuously-arriving
 corpora (new parquet files under the path become micro-batches; Spark's
 streaming checkpoint tracks processed files, giving exactly-once file
@@ -47,27 +47,24 @@ SPAN_DOC_SCHEMA = StructType(
 )
 
 
-def read_span_docs(
-    spark: SparkSession, path: str, fmt: str = "parquet"
-) -> DataFrame:
+def read_span_docs(spark: SparkSession, path: str) -> DataFrame:
     """Batch scan of the span-document corpus. The declared schema
     reads only (doc_id, spans) however wide the physical table is, and
     spares the footer-inference job Spark would otherwise run before
     the first stage."""
-    return spark.read.schema(SPAN_DOC_SCHEMA).format(fmt).load(path)
+    return spark.read.schema(SPAN_DOC_SCHEMA).format("parquet").load(path)
 
 
 def stream_span_docs(
     spark: SparkSession,
     path: str,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Unbounded scan: files appearing under ``path`` feed micro-batches.
 
     ``max_files_per_trigger`` bounds per-batch work (the streaming
     analogue of the commit-group size)."""
-    reader = spark.readStream.schema(SPAN_DOC_SCHEMA).format(fmt)
+    reader = spark.readStream.schema(SPAN_DOC_SCHEMA).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(path).select("doc_id", "spans")

@@ -91,9 +91,19 @@ def test_cli_accepts_positive_counts():
         (["--stream", "--report"], "--report"),
         (["--compact", "--report"], "--report"),
         (["--read-snapshot", "0", "--report"], "--report"),
+        (["--compact", "--buckets", "8"], "--buckets"),
+        (["--stream", "--snapshot", "s1"], "--snapshot"),
+        (["--read-snapshot", "0", "--vision-backend", "anthropic"],
+         "--vision-backend"),
+        (["--target-file-mb", "64"], "--target-file-mb"),
+        (["--media-dir", "media"], "--media-dir"),
+        (["--stream", "--vision-backend", "stub", "--media-dir", "media"],
+         "--media-dir"),
     ],
     ids=["continuous", "stream_checkpoint", "stream_report", "compact_report",
-         "read_snapshot_report"],
+         "read_snapshot_report", "compact_buckets", "stream_snapshot",
+         "read_snapshot_vision_backend", "batch_target_file_mb",
+         "batch_media_dir_stub", "stream_media_dir_stub"],
 )
 def test_cli_rejects_flags_the_mode_ignores(flags, ignored, tmp_path, monkeypatch):
     """A flag the chosen mode does not read is an error, raised before
@@ -106,3 +116,57 @@ def test_cli_rejects_flags_the_mode_ignores(flags, ignored, tmp_path, monkeypatc
     monkeypatch.setattr(session, "get_spark", ran)
     with pytest.raises(SystemExit, match=ignored):
         main([str(tmp_path / "in"), "-o", str(tmp_path / "out"), *flags])
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [["--compact", "--stream"], ["--read-snapshot", "0", "--compact"]],
+    ids=["compact_stream", "read_snapshot_compact"],
+)
+def test_cli_rejects_two_modes(flags, capsys, monkeypatch):
+    """At most one mode flag: argparse refuses a second one."""
+    from pdf_to_xls_vision_spark import session
+
+    def ran(*args, **kwargs):
+        raise AssertionError("the job started")
+
+    monkeypatch.setattr(session, "get_spark", ran)
+    with pytest.raises(SystemExit) as exc:
+        main(["in.parquet", "-o", "out", *flags])
+    assert exc.value.code == 2
+    assert "--compact" in capsys.readouterr().err
+
+
+def test_cli_every_option_is_read_by_a_mode():
+    """The mode table covers the parser: an option no mode reads would
+    be rejected everywhere, and one whose default is neither None nor
+    False could be given without the check seeing it."""
+    from pdf_to_xls_vision_spark.cli import MODES
+
+    read = {"--output", "--master"}
+    for _run, flags in MODES.values():
+        read.update(flags)
+    options = [a for a in build_parser()._actions
+               if a.option_strings and a.dest != "help"]
+    assert {a.option_strings[-1] for a in options} == read
+    for a in options:
+        assert a.default is None or a.default is False, a.option_strings
+
+
+
+def test_cli_missing_key_fails_before_the_job(tmp_path, monkeypatch):
+    """The live backend's key is checked before --no-resume wipes the
+    output and before a session starts."""
+    from pdf_to_xls_vision_spark import session
+
+    def ran(*args, **kwargs):
+        raise AssertionError("the job started")
+
+    monkeypatch.setattr(session, "get_spark", ran)
+    monkeypatch.delenv("ANTHROPIC_API_KEY", raising=False)
+    out = tmp_path / "out"
+    out.mkdir()
+    with pytest.raises(ValueError, match="ANTHROPIC_API_KEY"):
+        main([str(tmp_path / "in"), "-o", str(out), "--no-resume",
+              "--vision-backend", "anthropic", "--media-dir", str(tmp_path)])
+    assert out.exists()

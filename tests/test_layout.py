@@ -3,8 +3,6 @@
 import json
 
 from pdf_to_xls_vision_spark.core.layout import (
-    band_rows,
-    detect_columns,
     parse_page_words,
     parse_words_to_grids,
     prune_grid,
@@ -47,7 +45,7 @@ def test_column_needs_three_aligned_words():
     # only 2 words align at x=300 -> no seam there
     words = _grid_words(["A", "B"], [["1", "2"], ["3", "4"]])
     words += [_w("stray", 300, 72), _w("stray2", 300, 86)]
-    assert detect_columns(words) == [36.0, 121.0]
+    assert parse_page_words(words) == [[["A", "B"], ["1", "2"], ["3", "4"]]]
 
 
 def test_prose_dropped():
@@ -93,6 +91,7 @@ def test_malformed_payload_isolated():
 
 
 def test_band_rows_tie_breaks_stable():
-    words = [_w("b", 50, 72.0), _w("a", 50, 72.0), _w("c", 40, 72.0)]
-    bands = band_rows(words)
-    assert [w["t"] for w in bands[0]] == ["c", "a", "b"]
+    # words of one band join in (x0, text) order, whatever their input order
+    words = _grid_words(["H1", "H2"], [["1", "2"], ["3", "4"]])
+    words += [_w("b", 38, 72.0), _w("a", 38, 72.0), _w("c", 37, 72.0)]
+    assert parse_page_words(words)[0][0] == ["H1 c a b", "H2"]
