@@ -10,11 +10,14 @@ table of span documents, not a directory tree.
 Four modes: the batch job, or one of ``--stream``, ``--compact`` and
 ``--read-snapshot`` (argparse refuses two). ``MODES`` names each
 mode's runner and the flags it reads besides INPUT, ``-o`` and
-``--master``; any other flag given on the command line stops the job
-before a session starts, as does a bad vision backend (a missing key,
-``--media-dir`` without the live backend). A new flag goes into the
-rows of the modes that read it, and defaults to None (or False) so
-that giving it shows.
+``--master``. ``main`` parses; rejects any other flag given on the
+command line; resolves the vision backend (a missing key, or
+``--media-dir`` without the live backend, stops the job); starts the
+session; and only then, for ``--no-resume``, wipes ``-o`` and the
+stream checkpoint on the filesystem Spark writes to
+(``sink/checkpoint.wipe``: an ``hdfs://``, ``s3a://`` or ``file://``
+output alike). A new flag goes into the rows of the modes that read
+it, and defaults to None (or False) so that giving it shows.
 
 Usage::
 
@@ -35,7 +38,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import shutil
 import sys
 
 
@@ -78,7 +80,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--no-resume",
         action="store_true",
-        help="wipe the output dir instead of resuming from its manifest",
+        help="wipe the output dir and the stream checkpoint instead of "
+        "resuming from them",
     )
     p.add_argument(
         "--master",
@@ -239,10 +242,14 @@ def _run_stream(spark, args, backend) -> dict:
         available_now=not args.continuous,
         backend=backend,
     ).awaitTermination()
-    committed = checkpoint.read_stream_committed(spark, args.output)
+    counts = {"docs": 0, "span_rows": 0}  # no micro-batch committed a doc
+    if checkpoint.path_exists(spark, checkpoint._manifest_dir(args.output)):
+        counts = _committed_counts(
+            checkpoint.read_stream_committed(spark, args.output)
+        )
     return {
         "mode": "stream",
-        **_committed_counts(committed),
+        **counts,
         "output": args.output,
         "checkpoint": ckpt,
     }
@@ -325,15 +332,14 @@ def main(argv: list[str] | None = None) -> int:
             f"the {mode} mode does not read {', '.join(ignored)}; "
             f"it reads {', '.join(reads)}"
         )
-    # a bad key or --media-dir must fail before --no-resume wipes the
-    # output and before a JVM starts
+    # a bad key or --media-dir must fail before a JVM starts and
+    # before --no-resume wipes anything
     backend = _vision_backend(args)
-    if args.no_resume:
-        shutil.rmtree(args.output, ignore_errors=True)
 
     from pyspark.sql import SparkSession
 
     from pdf_to_xls_vision_spark.session import get_spark
+    from pdf_to_xls_vision_spark.sink import checkpoint
 
     # only stop the session on exit if this invocation created it —
     # embedded callers (tests, notebooks) keep theirs alive
@@ -341,11 +347,16 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("pdf_to_xls_vision_spark.cli", master=args.master)
     spark.sparkContext.setLogLevel("WARN")
     try:
+        if args.no_resume:
+            # on the filesystem Spark writes to; a kept stream checkpoint
+            # would mark every input file processed and commit nothing
+            checkpoint.wipe(
+                spark, *[p for p in (args.output, args.stream_checkpoint) if p]
+            )
         print(json.dumps(run(spark, args, backend)))
         if args.report:
-            from pdf_to_xls_vision_spark.sink.checkpoint import read_manifest
-
-            for row in read_manifest(spark, args.output).orderBy("bucket").collect():
+            rows = checkpoint.read_manifest(spark, args.output).orderBy("bucket")
+            for row in rows.collect():
                 print(
                     f"bucket {row.bucket:>4}: docs={row.docs} "
                     f"pages={row.pages_parsed} tables={row.tables_found} "

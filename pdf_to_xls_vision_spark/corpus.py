@@ -31,8 +31,6 @@ from pdf_to_xls_vision_spark.core.vision import stub_csv, stub_pixels
 
 SEED = 42
 
-SCALES = {"tiny": 64, "small": 2_000, "bench": 50_000}
-
 # layout grid constants (FIXTURES.md §2): rows >=10pt apart vs snap
 # tolerance 3; columns >=25pt apart; +-1pt jitter keeps banding honest.
 _ROW_PITCH = 14.0

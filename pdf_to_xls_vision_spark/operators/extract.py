@@ -60,10 +60,7 @@ PAGE_SCHEMA = (
     "page_numbers array<string>, is_vision boolean"
 )
 
-PAGE_COLS = [
-    "doc_id", "page", "media_ref", "tables",
-    "has_issue", "rotation_corrected", "page_numbers", "is_vision",
-]
+PAGE_COLS = [col.split()[0] for col in PAGE_SCHEMA.split(", ")]
 
 
 def encode_tables(grids: list) -> str:

@@ -23,7 +23,6 @@ extra exchange, aggregate or join.
 from __future__ import annotations
 
 import json
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -45,9 +44,7 @@ from pdf_to_xls_vision_spark.operators.extract import (
     make_vision_extractor,
 )
 from pdf_to_xls_vision_spark.core.vision import VisionBackend
-
-if TYPE_CHECKING:
-    from pdf_to_xls_vision_spark.sink.checkpoint import ManifestFold
+from pdf_to_xls_vision_spark.sink.checkpoint import ManifestFold, require_positive
 
 _SPANS_TYPE = (
     "array<struct<kind string, text string, media_ref string, order int>>"
@@ -400,8 +397,7 @@ def run_extraction(
     to 23 partitions on the 8000-doc corpus (33 MB looks tiny to AQE,
     but the stage cost is Python compute, not bytes).
     """
-    if page_partitions is not None and page_partitions < 1:
-        raise ValueError(f"page_partitions must be >= 1, got {page_partitions}")
+    require_positive(page_partitions=page_partitions)
     spark = docs.sparkSession
     n_parts = page_partitions or spark.sparkContext.defaultParallelism * 2
     # resolved through this module's names at plan-build time, so a

@@ -24,7 +24,12 @@ must be idempotent and resumable. This module:
   written without its manifest row is invisible;
 - resumes by anti-filtering committed buckets: only the manifest — a
   tiny table — is read on restart, and commit groups bound the work
-  lost to a mid-run failure (the ``save_every`` analogue).
+  lost to a mid-run failure (the ``save_every`` analogue);
+- reaches the output's files outside Spark's reads and writes (the
+  resume probe, the CLI's ``--no-resume`` wipe, the empty-bucket
+  delete, compaction's listing) through one Hadoop FileSystem lookup,
+  so an ``hdfs://``, ``s3a://`` or ``file://`` output is seen as Spark
+  writes it.
 
 An Iceberg runtime jar is not bundled with this sandbox's PySpark; the
 sink's parquet layout reproduces the snapshot-isolation property needed
@@ -39,7 +44,6 @@ import os
 import time
 
 from pyspark.accumulators import AccumulatorParam
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -96,21 +100,29 @@ def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     return df.withColumn("bucket", bucket_of(n_buckets))
 
 
-def _path_missing(spark: SparkSession, path: str) -> bool:
-    """True when ``path`` does not exist on the filesystem Spark will
-    actually read — probed via the Hadoop FileSystem API, so a
-    scheme-less path resolves against ``fs.defaultFS`` (HDFS/S3A on a
-    cluster, local in tests) instead of assuming the driver's local
-    disk. Avoids an expected-but-noisy AnalysisException on the first
-    run against a fresh out_dir; on any probe error we report "not
-    missing" and fall through to the guarded read attempt."""
-    try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return not fs.exists(jpath)
-    except Exception:
-        return False
+def _filesystem(spark: SparkSession, path: str):
+    """The Hadoop FileSystem Spark reads and writes ``path`` through,
+    and the path on it: a scheme-less path resolves against
+    ``fs.defaultFS`` (HDFS/S3A on a cluster, local in tests), a URI
+    (``hdfs://``, ``s3a://``, ``file://``) against its own scheme —
+    never the driver's local disk by assumption. Every access to the
+    output's files outside a Spark read or write goes through here."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    fs, jpath = _filesystem(spark, path)
+    return fs.exists(jpath)
+
+
+def wipe(spark: SparkSession, *paths: str) -> None:
+    """Delete each of ``paths`` recursively; a missing one is no error.
+    A path is taken literally, not as a glob pattern: wiping ``out[1]``
+    never deletes ``out1``."""
+    for path in paths:
+        fs, jpath = _filesystem(spark, path)
+        fs.delete(jpath, True)
 
 
 def overwrite_partitions(df: DataFrame, path: str, *keys: str) -> None:
@@ -240,14 +252,11 @@ def _delete_partitions(spark: SparkSession, path: str, buckets) -> None:
     that exist, through the Hadoop FileSystem Spark writes to: one
     ``globStatus`` over ``bucket={…}`` finds them, so a fresh output
     costs one listing, not a delete per bucket."""
-    if not buckets:
-        return
-    pattern = spark._jvm.org.apache.hadoop.fs.Path(
-        os.path.join(path, "bucket={%s}" % ",".join(map(str, buckets)))
-    )
-    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
-    for status in fs.globStatus(pattern) or []:
-        fs.delete(status.getPath(), True)
+    if buckets:
+        fs, pattern = _filesystem(
+            spark, os.path.join(path, "bucket={%s}" % ",".join(map(str, buckets)))
+        )
+        wipe(spark, *(str(st.getPath()) for st in fs.globStatus(pattern) or []))
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -259,20 +268,17 @@ def _resume_state(spark: SparkSession, out_dir: str) -> tuple[set[int], int, dic
     rows' ``MANIFEST_SUMS`` totals, from one read of the manifest (none,
     1 and zeros on a fresh ``out_dir``)."""
     fresh = set(), 1, dict.fromkeys(MANIFEST_SUMS, 0)
-    if _path_missing(spark, _manifest_dir(out_dir)):
+    if not path_exists(spark, _manifest_dir(out_dir)):
         return fresh
-    try:
-        rows = (
-            read_manifest(spark, out_dir)
-            .groupBy("bucket")
-            .agg(
-                F.max("lineage.attempt").alias("attempt"),
-                *(F.sum(name).alias(name) for name in MANIFEST_SUMS),
-            )
-            .collect()
+    rows = (
+        read_manifest(spark, out_dir)
+        .groupBy("bucket")
+        .agg(
+            F.max("lineage.attempt").alias("attempt"),
+            *(F.sum(name).alias(name) for name in MANIFEST_SUMS),
         )
-    except AnalysisException:  # missing after all: the probe failed
-        return fresh
+        .collect()
+    )
     return (
         {r.bucket for r in rows},
         1 + max((r.attempt or 0 for r in rows), default=0),
@@ -429,8 +435,14 @@ def _read_committed(
     have a manifest row (data written without its manifest commit is
     invisible — snapshot isolation by a left-semi join against the
     broadcast manifest keys). ``where`` bounds both sides alike.
-    Raises ``ValueError`` when the span table is not partitioned by
-    ``keys`` (a batch table read as a stream table)."""
+    Raises ``ValueError`` when ``out_dir`` holds no span table or no
+    manifest (nothing committed), or when the span table is not
+    partitioned by ``keys`` (a batch table read as a stream table)."""
+    for path in (_spans_dir(out_dir), _manifest_dir(out_dir)):
+        if not path_exists(spark, path):
+            raise ValueError(
+                f"{path} does not exist: {out_dir} holds no committed span table"
+            )
     spans = spark.read.parquet(_spans_dir(out_dir))
     missing = [k for k in keys if k not in spans.columns]
     if missing:

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_to_xls_vision_spark.sink.checkpoint import (
+    _filesystem,
     _spans_dir,
     overwrite_partitions,
     require_positive,
@@ -61,17 +62,16 @@ def _compactions_dir(out_dir: str) -> str:
 
 def list_bucket_files(spark: SparkSession, out_dir: str) -> dict[int, list[tuple[str, int]]]:
     """``{bucket: [(file_path, bytes), ...]}`` for the span table —
-    one driver-side Hadoop FS listing (works on local disk and on
-    HDFS/S3A alike), no Spark job.
+    one driver-side listing on the FileSystem Spark writes the table
+    through (``checkpoint._filesystem``: local disk, HDFS or S3A
+    alike), no Spark job.
 
     Raises ``ValueError`` when the table is not partitioned by
     ``bucket`` at its top level (the stream's ``ingest_batch=``
     layout): its files would go unlisted and the pass would report
     nothing to compact."""
     spans = _spans_dir(out_dir)
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(spans)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _filesystem(spark, spans)
     out: dict[int, list[tuple[str, int]]] = {}
     if not fs.exists(jpath):
         return out

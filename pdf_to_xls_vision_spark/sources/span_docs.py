@@ -67,4 +67,4 @@ def stream_span_docs(
     reader = spark.readStream.schema(SPAN_DOC_SCHEMA).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(path).select("doc_id", "spans")
+    return reader.load(path)

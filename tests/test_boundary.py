@@ -1,7 +1,7 @@
 """The extraction engine stands alone: no module of the
 ``pdf_to_xls_vision_spark`` package, nor the driver entry point, imports
 the operator zoo; it has one commit protocol, in
-``sink/checkpoint.py``; and its grid kernels have no pandas-frame
+``sink/checkpoint.py``, which alone reaches the output's filesystem; and its grid kernels have no pandas-frame
 twins. Its tools measure through one instrument: only ``perfbench/``
 talks to Spark's REST API, and ``bench.py`` and ``scripts/`` import
 only public engine and perfbench names."""
@@ -56,6 +56,26 @@ def test_only_the_commit_protocol_overwrites_partitions():
         if "partitionOverwriteMode" in open(p, encoding="utf-8").read()
     )
     assert writers == [os.path.join("sink", "checkpoint.py")]
+
+
+def test_only_the_commit_protocol_reaches_the_output_filesystem():
+    """Every wipe, existence probe and listing of the output goes
+    through ``sink/checkpoint.py``'s one Hadoop FileSystem lookup, so it
+    sees the filesystem Spark writes to (HDFS, S3A, a ``file://`` URI),
+    never the driver's local disk by assumption."""
+    engine = os.path.join(REPO, "pdf_to_xls_vision_spark")
+    callers = sorted(
+        os.path.relpath(p, engine)
+        for p in _engine_modules()
+        if "getFileSystem" in open(p, encoding="utf-8").read()
+    )
+    assert callers == [os.path.join("sink", "checkpoint.py")]
+    local_disk = [
+        os.path.relpath(p, engine)
+        for p in _engine_modules()
+        if "shutil" in (m.split(".")[0] for m in _imported_modules(p))
+    ]
+    assert local_disk == []
 
 
 def test_grid_kernels_do_not_import_pandas():

@@ -328,3 +328,15 @@ def test_fold_counts_only_the_committed_task_attempt(
     assert_manifest_matches_spans(
         read_manifest(spark, out_dir).collect(), committed, ["bucket"]
     )
+
+
+def test_wipe_takes_paths_literally(spark, tmp_path):
+    """``wipe`` deletes the named path, a file:// URI included, never
+    what it would match as a glob pattern, and a missing path is no
+    error."""
+    for name in ("out[1]", "out1", "kept"):
+        (tmp_path / name / "spans").mkdir(parents=True)
+    checkpoint.wipe(spark, f"file://{tmp_path}/out[1]", str(tmp_path / "gone"))
+    assert sorted(os.listdir(tmp_path)) == ["kept", "out1"]
+    checkpoint.wipe(spark, str(tmp_path / "kept"))
+    assert sorted(os.listdir(tmp_path)) == ["out1"]

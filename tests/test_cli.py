@@ -1,9 +1,12 @@
-"""CLI entry point (G2): end-to-end run, resume no-op, --no-resume,
-and argument errors. Runs main() in-process against tmp dirs."""
+"""CLI entry point (G2): end-to-end run, resume no-op, --no-resume
+(on a ``file://`` output and with an outside stream checkpoint), reads
+of an output with nothing committed, and argument errors. Runs main()
+in-process against tmp dirs."""
 
 from __future__ import annotations
 
 import json
+import re
 
 import pyarrow.parquet as pq
 import pytest
@@ -46,6 +49,64 @@ def test_cli_run_and_resume(spark, small_corpus_path, tmp_path, capsys):
     fresh = json.loads(capsys.readouterr().out.strip().splitlines()[0])
     assert fresh["committed_buckets"] == 4
     assert fresh["docs"] == summary["docs"]
+
+
+def _summary(capsys) -> dict:
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+@pytest.mark.slow
+def test_cli_no_resume_wipes_a_uri_output(
+    spark, small_corpus_path, tmp_path, capsys
+):
+    """--no-resume wipes through the filesystem Spark writes to, so an
+    output given as a ``file://`` URI is recommitted, not resumed."""
+    argv = [small_corpus_path, "-o", (tmp_path / "out").as_uri(), "--buckets", "4"]
+    assert main(argv) == 0
+    first = _summary(capsys)
+    assert main([*argv, "--no-resume"]) == 0
+    fresh = _summary(capsys)
+    assert (fresh["committed_buckets"], fresh["resumed_buckets"]) == (4, 0)
+    assert fresh["attempt"] == 1
+    assert fresh["docs"] == first["docs"]
+
+
+@pytest.mark.slow
+def test_cli_stream_no_resume_wipes_the_stream_checkpoint(
+    spark, tiny_corpus, tmp_path, capsys
+):
+    """--stream --no-resume with a --stream-checkpoint outside -o wipes
+    the checkpoint too: kept, it would mark the input processed and the
+    rerun would commit nothing."""
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    pq.write_table(corpus_to_arrow(tiny_corpus[:6]), str(in_dir / "f1.parquet"))
+    argv = [str(in_dir), "-o", str(tmp_path / "out"), "--stream", "--buckets", "4",
+            "--stream-checkpoint", str(tmp_path / "ckpt")]
+    assert main(argv) == 0
+    assert _summary(capsys)["docs"] == 6
+    assert main([*argv, "--no-resume"]) == 0
+    assert _summary(capsys)["docs"] == 6
+
+
+@pytest.mark.slow
+def test_cli_stream_over_an_empty_input_dir(spark, tmp_path, capsys):
+    """A stream that commits no document reports zero, not a read of a
+    span table that was never written."""
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    assert main([str(in_dir), "-o", str(tmp_path / "out"), "--stream"]) == 0
+    summary = _summary(capsys)
+    assert (summary["docs"], summary["span_rows"]) == (0, 0)
+
+
+def test_cli_read_snapshot_without_a_span_table(spark, tmp_path):
+    """--read-snapshot on an output that holds no span table exits with
+    a message naming the missing path."""
+    out = tmp_path / "out"
+    out.mkdir()
+    with pytest.raises(SystemExit, match=re.escape(str(out / "spans"))):
+        main([str(tmp_path / "in"), "-o", str(out), "--read-snapshot", "0"])
 
 
 def test_cli_arg_errors():

