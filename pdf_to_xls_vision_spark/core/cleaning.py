@@ -21,8 +21,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-
 _OPEN_SPACE = re.compile(r"\(\s+")
 _SPACE_CLOSE = re.compile(r"\s+\)")
 _OPEN_RUN = re.compile(r"\(+")
@@ -63,7 +61,8 @@ def _cascade_pass(cells: list) -> bool:
     data_cleaning.py:102-163: for each adjacent (curr, next) pair the
     values are captured once, then two rules run against those captured
     values (the reference reads ``curr_val``/``next_val`` before either
-    rule fires, so rule 2 sees the *pre-rule-1* snapshot).
+    rule fires, so rule 2 sees the *pre-rule-1* snapshot). Cells are
+    ``str | None``, so the reference's ``pd.notna`` is ``is not None``.
     """
     changed = False
     n = len(cells)
@@ -73,11 +72,11 @@ def _cascade_pass(cells: list) -> bool:
 
         # Rule 1: current cell ends with '(' — that paren belongs to the
         # next cell (data_cleaning.py:109-146).
-        if pd.notna(curr_val):
+        if curr_val is not None:
             curr_str = str(curr_val).strip()
             if curr_str.endswith("("):
                 donor = curr_str[:-1].strip()
-                if pd.notna(next_val):
+                if next_val is not None:
                     next_str = str(next_val).strip()
                     m = _NUM_CLOSE_OPEN.match(next_str)
                     if m:
@@ -100,11 +99,11 @@ def _cascade_pass(cells: list) -> bool:
         # closes the *previous* cell (data_cleaning.py:148-163). Uses the
         # captured snapshot, so it is skipped whenever rule 1 just fired
         # (the stale curr still ends with '(').
-        if pd.notna(next_val):
+        if next_val is not None:
             next_str = str(next_val).strip()
             m = _NUM_CLOSE_OPEN.match(next_str)
             if m:
-                curr_str = str(curr_val).strip() if pd.notna(curr_val) else ""
+                curr_str = str(curr_val).strip() if curr_val is not None else ""
                 if not curr_str.endswith("("):
                     cells[i] = (curr_str + ")") if curr_str else ")"
                     cells[i + 1] = f"({m.group(1)})("
@@ -127,7 +126,7 @@ def cascade_row(cells: list) -> list:
 
 
 def _strip_pct_artifact(x):
-    if pd.notna(x) and isinstance(x, str):
+    if isinstance(x, str):
         return _PCT_TRAILING_OPEN.sub(r"\1", x.strip())
     return x
 

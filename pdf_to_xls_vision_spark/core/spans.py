@@ -17,26 +17,9 @@ sequence per document (FIXTURES.md §4):
 
 from __future__ import annotations
 
-import pandas as pd
-
 ROLLUP_FALLBACK_MARKERS = (
     "total", "gross", "effective", "net operating income", "noi",
 )  # excel_writer.py:125
-
-
-def cell_text(value) -> str:
-    """Canonical textualization of a cell for span output.
-
-    Nulls render as '' (the Excel writer emits empty cells for NaN);
-    everything else is ``str(value)``. Grid cells are ``str | None``, so
-    the span writer only falls back to this for a null or non-str
-    cell; the test oracle renders cells the same way in its own ``_txt``.
-    """
-    if value is None or (isinstance(value, float) and value != value):
-        return ""
-    if pd.isna(value):
-        return ""
-    return str(value)
 
 
 def grid_rollup_rows(header: list, rows: list) -> int:
@@ -68,7 +51,7 @@ def grid_notes(header: list, rows: list) -> list[str]:
         return []
     jn, jr = header.index("Notes"), header.index("Row_Type")
     return [
-        cell_text(r[jn])
+        r[jn]
         for r in rows
         if r[jn] is not None
         and r[jr] is not None
@@ -81,14 +64,15 @@ def serialize_grid_spans(tables) -> list[dict]:
     over ``GridRecord`` values: per table its start, header cells,
     row-major cells and end, then the trailing notes.
 
-    Hot path: one dict literal per span built in extend() generators
-    (grid cells are ``str | None`` by the :func:`encode_tables` contract,
-    so the ``type(v) is str`` fast path covers virtually every cell;
-    anything else falls back to the spec :func:`cell_text`), with the
-    global ``order`` counter assigned in a single enumerate pass — the
-    per-span closure this replaces was the largest single cost in the
-    merge-stage kernel profile (~16% of merge CPU at 600k spans/2k
-    docs)."""
+    Grid cells are ``str | None`` (the :func:`encode_tables` contract);
+    a null cell renders as ``''``, as the Excel writer emits an empty
+    cell for NaN, and the test oracle's ``_txt`` does the same.
+
+    Hot path: one dict literal per span built in extend() generators,
+    with the global ``order`` counter assigned in a single enumerate
+    pass — the per-span closure this replaces was the largest single
+    cost in the merge-stage kernel profile (~16% of merge CPU at 600k
+    spans/2k docs)."""
     spans: list[dict] = []
     append = spans.append
     extend = spans.extend
@@ -108,7 +92,7 @@ def serialize_grid_spans(tables) -> list[dict]:
         extend(
             {
                 "kind": "header_cell",
-                "text": c if type(c) is str else cell_text(c),
+                "text": "" if c is None else c,
                 "media_ref": ref,
                 "order": 0,
             }
@@ -117,7 +101,7 @@ def serialize_grid_spans(tables) -> list[dict]:
         extend(
             {
                 "kind": "cell",
-                "text": v if type(v) is str else cell_text(v),
+                "text": "" if v is None else v,
                 "media_ref": ref,
                 "order": 0,
             }

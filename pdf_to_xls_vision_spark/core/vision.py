@@ -29,6 +29,7 @@ from io import StringIO
 
 import numpy as np
 import pandas as pd
+from pandas._libs.parsers import STR_NA_VALUES
 
 MAX_IMAGE_B64_BYTES = 5 * 1024 * 1024  # image_processing.py:12
 ROTATION_CONFIDENCE_GATE = 1.0  # image_processing.py:141,206
@@ -155,10 +156,9 @@ def stub_csv(media_ref: str) -> str | None:
     return body
 
 
-def parse_vision_csv(csv_content: str | None) -> pd.DataFrame | None:
-    """Fence strip + 3-level read_csv fallback ladder
-    (table_extraction.py:136-160). Returns None when unparseable or
-    empty — the caller skips the page and continues."""
+def _unfenced(csv_content: str | None) -> str | None:
+    """The stripped response with a markdown code fence (its first and
+    last line) removed, or ``None`` when it is empty."""
     if not csv_content or not csv_content.strip():
         return None
     content = csv_content.strip()
@@ -166,6 +166,16 @@ def parse_vision_csv(csv_content: str | None) -> pd.DataFrame | None:
         lines = content.split("\n")
         if len(lines) > 2:
             content = "\n".join(lines[1:-1])
+    return content
+
+
+def parse_vision_csv(csv_content: str | None) -> pd.DataFrame | None:
+    """Fence strip + 3-level read_csv fallback ladder
+    (table_extraction.py:136-160). Returns None when unparseable or
+    empty — the caller skips the page and continues."""
+    content = _unfenced(csv_content)
+    if content is None:
+        return None
     df = None
     try:
         df = pd.read_csv(StringIO(content))
@@ -193,15 +203,8 @@ class VISION_FALLBACK:  # noqa: N801 - sentinel, never instantiated
     reference and ``is`` identity survives the executor-side
     closure unpickling."""
 
-try:  # pandas' own default NA token set, so the fast path can't drift
-    from pandas._libs.parsers import STR_NA_VALUES as _NA_TOKENS
-except Exception:  # pragma: no cover - pinned-pandas fallback copy
-    _NA_TOKENS = {
-        "", "#N/A", "#N/A N/A", "#NA", "-1.#IND", "-1.#QNAN", "-NaN",
-        "-nan", "1.#IND", "1.#QNAN", "<NA>", "N/A", "NA", "NULL", "NaN",
-        "None", "n/a", "nan", "null",
-    }
-_NA_TOKENS = frozenset(_NA_TOKENS)
+# pandas' own default NA token set, so the fast path can't drift
+_NA_TOKENS = frozenset(STR_NA_VALUES)
 
 # ASCII-only digit classes: Python's \d (and int()) accept Unicode
 # digits like '٣', which pandas' C parser leaves as strings
@@ -282,13 +285,9 @@ def parse_vision_grid_fast(
     stringified grid (operators/extract._frame_payload), so dtype
     inference matters exactly as far as it changes ``str()`` output.
     """
-    if not csv_content or not csv_content.strip():
+    content = _unfenced(csv_content)
+    if content is None:
         return None
-    content = csv_content.strip()
-    if content.startswith("```"):
-        fence_lines = content.split("\n")
-        if len(fence_lines) > 2:
-            content = "\n".join(fence_lines[1:-1])
     if "\r" in content:
         return VISION_FALLBACK
     lines = [ln for ln in content.split("\n") if ln != ""]

@@ -434,19 +434,10 @@ def corpus_to_arrow(docs: list[tuple[str, list[dict]]]):
     )
 
 
-def write_corpus_parquet(
-    path: str,
-    n_docs: int,
-    seed: int = SEED,
-    col_range: tuple[int, int] | None = None,
-) -> str:
+def write_corpus_parquet(path: str, n_docs: int, seed: int = SEED) -> str:
     """Materialize the corpus as parquet (Spark-readable, oracle-readable)."""
     import pyarrow.parquet as pq
 
-    table = corpus_to_arrow(
-        generate_corpus(
-            n_docs, seed, include_pinned=col_range is None, col_range=col_range
-        )
-    )
+    table = corpus_to_arrow(generate_corpus(n_docs, seed))
     pq.write_table(table, path, compression="zstd")
     return path

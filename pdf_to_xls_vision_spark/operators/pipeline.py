@@ -9,7 +9,7 @@ Shape (SURVEY.md §4.3)::
       -> mapInPandas(route dispatch)                one page stage:
            route=text   -> layout parse             T1-T4, Q1-Q6
            route=vision -> vision stage             V1-V7, C1-C3
-      -> repartition(doc_id) + sortWithinPartitions(doc_id)
+      -> repartition(doc_id) + sortWithinPartitions(doc_id, page)
       -> mapInPandas(R2 decision, inline vision retry, merge + serialize)
                                     R2 (converter.py:117-132), M1, A1/A3, W1
       -> from_json(spans_json)
@@ -27,6 +27,7 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+import numpy as np
 import pandas as pd
 
 from pdf_to_xls_vision_spark.core.merge import GridRecord, merge_grid_continuations
@@ -163,12 +164,11 @@ def make_page_dispatch(text_parse, vision_extract):
 
 
 def _merge_doc_arrays(cols: dict, s: int, e: int, quality_retried: int = 0) -> dict:
-    """Per-document reduce over the page rows [s:e): rebuild the table
-    records in page order (a page's tables numbered from 1 in list
-    order), M1-merge, serialize the ordered span sequence, and compute
-    per-doc metrics. A table's span carries its page's ``media_ref``
-    on vision rows and ``""`` on text rows."""
-    pages = sorted(range(s, e), key=lambda i: int(cols["page"][i]))
+    """Per-document reduce over the page rows [s:e), which arrive in
+    page order: rebuild the table records (a page's tables numbered
+    from 1 in list order), M1-merge, serialize the ordered span
+    sequence, and compute per-doc metrics. A table's span carries its
+    page's ``media_ref`` on vision rows and ``""`` on text rows."""
     records = [
         GridRecord(
             header=header,
@@ -177,7 +177,7 @@ def _merge_doc_arrays(cols: dict, s: int, e: int, quality_retried: int = 0) -> d
             table_id=t_id,
             media_ref=cols["media_ref"][i] if cols["is_vision"][i] else "",
         )
-        for i in pages
+        for i in range(s, e)
         for t_id, (header, rows) in enumerate(
             decode_tables(cols["tables"][i]), start=1
         )
@@ -208,20 +208,12 @@ def _merge_doc_arrays(cols: dict, s: int, e: int, quality_retried: int = 0) -> d
 _NO_TABLES = encode_tables([])
 
 
-def _needs_retry(cols: dict, s: int, e: int) -> bool:
-    """R2 (converter.py:117-132) from the doc's own rows: a text-routed
-    document goes back through vision when any table has a quality
-    issue or when it yields no table at all."""
-    if cols["is_vision"][s]:
-        return False
-    return bool(cols["has_issue"][s:e].any()) or all(
-        t == _NO_TABLES for t in cols["tables"][s:e]
-    )
-
-
-def _retry_doc(cols: dict, s: int, e: int, vision_extractor) -> dict:
-    """Re-extract a retried document's text pages through the vision
-    stage, as one batch, and merge that output instead of the parse's.
+def _merge_doc(cols: dict, s: int, e: int, vision_extractor) -> dict:
+    """R2 (converter.py:117-132) from the document's own rows, then the
+    merge. A text-routed document goes back through vision when any
+    table has a quality issue or when it yields no table at all: its
+    text pages run through ``vision_extractor`` as one batch, and that
+    output is merged instead of the parse's.
 
     Each text page row brings the page's source ``media_ref`` (the
     vision stage's input) and its validation numbers. The page text
@@ -229,6 +221,11 @@ def _retry_doc(cols: dict, s: int, e: int, vision_extractor) -> dict:
     the same numbers from the same word tokens, so the text rows'
     ``page_numbers`` replace the vision rows' (one row per page, in
     input order)."""
+    if cols["is_vision"][s] or not (
+        cols["has_issue"][s:e].any()
+        or all(t == _NO_TABLES for t in cols["tables"][s:e])
+    ):
+        return _merge_doc_arrays(cols, s, e)
     batch = pd.DataFrame(
         {
             "doc_id": cols["doc_id"][s:e],
@@ -245,74 +242,45 @@ def _retry_doc(cols: dict, s: int, e: int, vision_extractor) -> dict:
     return _merge_doc_arrays(retried, 0, len(out), quality_retried=1)
 
 
-def _make_merge_kernel(vision_extractor):
-    """The per-document merge kernel: R2 decision, inline vision retry
-    for the documents that need it, then merge + serialize."""
+def make_merge(vision_extractor, fold=None):
+    """Build the merge stage's ``mapInPandas`` function. Rows arrive
+    hash-partitioned by doc_id and sorted by (doc_id, page) within the
+    partition, so each document is a contiguous run in page order. Arrow
+    batches don't respect those runs: each batch's document boundaries
+    are found once, its complete documents are merged (``_merge_doc``),
+    and its last, possibly incomplete, document is held back and
+    stitched onto the next batch; a 3000-row document simply
+    accumulates across batches until its run ends. This replaces a
+    groupBy().applyInPandas whose pandas-frame-per-group overhead
+    (~13ms/doc x one frame per document) dominated the merge stage's
+    executor time. With ``fold``, each output frame gets its
+    documents' ``bucket`` and is added to ``fold``."""
 
-    def merge_doc(cols: dict, s: int, e: int) -> dict:
-        if _needs_retry(cols, s, e):
-            return _retry_doc(cols, s, e, vision_extractor)
-        return _merge_doc_arrays(cols, s, e)
-
-    return merge_doc
-
-
-def _merge_frame(b: pd.DataFrame, kernel) -> pd.DataFrame:
-    """Merge every complete document group in one pandas frame whose
-    rows are contiguous by doc_id; a ``bucket`` column passes through,
-    one value per document."""
-    import numpy as np
-
-    ids = b["doc_id"].to_numpy()
-    bounds = np.flatnonzero(ids[1:] != ids[:-1]) + 1
-    starts = [0, *bounds.tolist()]
-    ends = [*bounds.tolist(), len(ids)]
-    cols = {c: b[c].to_numpy() for c in b.columns}
-    out = pd.DataFrame([kernel(cols, s, e) for s, e in zip(starts, ends)])
-    if "bucket" in cols:
-        out["bucket"] = cols["bucket"][starts]
-    return out
-
-
-def _make_merge_partition(kernel, fold=None):
-    """Build the per-partition merge driver: rows arrive
-    hash-partitioned by doc_id and sorted within the partition, so
-    each document is a contiguous run — but Arrow batches don't
-    respect group boundaries, so the trailing (possibly incomplete)
-    group of every batch is held back and stitched onto the next
-    batch; a 3000-row document simply accumulates across batches until
-    its run ends. This replaces a groupBy().applyInPandas whose
-    pandas-frame-per-group overhead (~13ms/doc x one frame per
-    document) dominated the merge stage's executor time. Each emitted
-    frame is added to ``fold`` when there is one."""
-
-    def _merged(body: pd.DataFrame) -> pd.DataFrame:
-        out = _merge_frame(body, kernel)
+    def merged(cols: dict, starts: list, ends: list) -> pd.DataFrame:
+        out = pd.DataFrame(
+            [_merge_doc(cols, s, e, vision_extractor) for s, e in zip(starts, ends)]
+        )
         if fold is not None:
+            out["bucket"] = cols["bucket"][starts]
             fold.add(out)
         return out
 
-    def _merge_partition(batches) -> pd.DataFrame:
-        pending: pd.DataFrame | None = None
+    def merge_partition(batches):
+        pending = None
         for b in batches:
             if pending is not None:
                 b = pd.concat([pending, b], ignore_index=True)
-                pending = None
-            if len(b) == 0:
-                continue
-            import numpy as np
-
-            ids = b["doc_id"].to_numpy()
-            nz = np.flatnonzero(ids != ids[-1])
-            start_last = int(nz[-1]) + 1 if len(nz) else 0
-            pending = b.iloc[start_last:]
-            body = b.iloc[:start_last]
-            if len(body):
-                yield _merged(body)
+            cols = {c: b[c].to_numpy() for c in b.columns}
+            ids = cols["doc_id"]
+            starts = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1).tolist()]
+            pending = b.iloc[starts[-1]:]
+            if len(starts) > 1:
+                yield merged(cols, starts[:-1], starts[1:])
         if pending is not None and len(pending):
-            yield _merged(pending)
+            cols = {c: pending[c].to_numpy() for c in pending.columns}
+            yield merged(cols, [0], [len(pending)])
 
-    return _merge_partition
+    return merge_partition
 
 
 def explode_pages(docs: DataFrame, force_vision: bool = False) -> DataFrame:
@@ -417,10 +385,7 @@ def run_extraction(
         schema, passthrough = f"{schema}, bucket int", ("bucket",)
     merged = (
         extracted.repartition(n_parts, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .mapInPandas(
-            _make_merge_partition(_make_merge_kernel(vision_extractor), fold),
-            schema,
-        )
+        .sortWithinPartitions("doc_id", "page")
+        .mapInPandas(make_merge(vision_extractor, fold), schema)
     )
     return _finish_result(merged, *passthrough)

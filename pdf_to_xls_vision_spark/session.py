@@ -2,13 +2,17 @@
 
 Only settings that differ from Spark's own defaults are set (AQE, with
 partition coalescing and skew-join splitting, and 128 MiB input splits
-are already Spark's). Chosen for the 100 TB design point and exercised
-locally:
+are already Spark's, and so are the shuffle writer and AQE's coalescing
+floor: the engine's two exchanges are ``repartition(n, ...)``, which AQE
+does not coalesce). Each remaining setting is exercised locally:
 
 - Arrow on for every pandas UDF exchange,
 - bounded Arrow batch size so Python workers never hold more than a
   few hundred pages of payload at once (the reference's 5 MB-per-image
   cap, image_processing.py:12, becomes our batch-memory bound),
+- zstd parquet output, UTC session time, the UI off, and a driver heap
+  sized from the machine (local mode hosts every executor in it),
+- PySpark's DataFrame debugging off (a serial cost before each job),
 - shuffle partitions sized by the caller (the tests use 8).
 """
 
@@ -62,26 +66,6 @@ def get_spark(
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS)
         )
-        # Always use the sort-based (single-spill-file) shuffle writer.
-        # With shuffle partitions <= 200 Spark silently switches to the
-        # bypass-merge writer, which opens R partition files PER MAP
-        # TASK (32x32 files per shuffle at local[32]) — a code path a
-        # production job with thousands of reduce partitions never
-        # takes, and one this host's filesystem punishes: bisected at
-        # ~150-300 ms of executor time per task, 3-6x the whole
-        # aggregate stage (see OPTIMIZATION_r06.md "shuffle writer").
-        # Forcing the sort writer aligns local runs with the at-scale
-        # path and removes the per-task file-fanout tax.
-        .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-        # AQE partition coalescing keeps parallelism-first semantics
-        # (target = total/parallelism), but its 1 MB minPartitionSize
-        # floor serializes CPU-heavy reduces over byte-small data
-        # (e.g. a hash aggregate of 10^6 60-bit keys compresses to
-        # ~1 MB and was coalesced to ONE task). At scale
-        # total/parallelism >> 64k so this floor never binds; locally
-        # it restores reduce-side parallelism for compute-bound
-        # aggregates.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config(
             "spark.driver.memory",

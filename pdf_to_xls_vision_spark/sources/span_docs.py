@@ -19,31 +19,10 @@ pickup across restarts).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-SPAN_DOC_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField(
-            "spans",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("kind", StringType()),
-                        StructField("text", StringType()),
-                        StructField("media_ref", StringType()),
-                        StructField("offset", IntegerType()),
-                    ]
-                )
-            ),
-        ),
-    ]
+SPAN_DOC_SCHEMA = (
+    "doc_id string, "
+    "spans array<struct<kind string, text string, media_ref string, offset int>>"
 )
 
 

@@ -145,6 +145,36 @@ def test_fold_merge_runs_in_the_writes_result_stage(spark, tiny_corpus_path):
         assert _exchange_above_merge(plan) == [False]
 
 
+def _merge_sort_keys(node) -> list:
+    """For each merge ``MapInPandas`` (the one reading a ``Sort``) under
+    the physical plan ``node``: the columns that ``Sort`` orders by."""
+    children = [node.children().apply(i) for i in range(node.children().size())]
+    sorts = [c for c in children if c.nodeName() == "Sort"]
+    if node.nodeName() == "MapInPandas" and sorts:
+        order = sorts[0].sortOrder()
+        return [[order.apply(i).child().name() for i in range(order.size())]]
+    return [keys for c in children for keys in _merge_sort_keys(c)]
+
+
+@pytest.mark.parametrize("with_fold", [False, True], ids=["plain", "fold"])
+def test_merge_reads_each_document_in_page_order(
+    spark, tiny_corpus, tmp_path, with_fold
+):
+    """The merge builds a document's table records in the order its
+    rows arrive, so the doc-keyed exchange's in-partition sort must put
+    them in page order: by ``doc_id``, then ``page``. The corpus gets
+    its own path, so no relation another test cached stands in for the
+    plan."""
+    path = str(tmp_path / "order.parquet")
+    pq.write_table(corpus_to_arrow(tiny_corpus), path)
+    docs = spark.read.parquet(path)
+    fold = ManifestFold(spark, 8) if with_fold else None
+    plan = run_extraction(docs, fold=fold)._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    assert _merge_sort_keys(plan) == [["doc_id", "page"]]
+
+
 def _plan_nodes(node) -> list[str]:
     """``simpleString`` of every node under the physical plan ``node``."""
     children = [node.children().apply(i) for i in range(node.children().size())]
